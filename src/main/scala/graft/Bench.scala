@@ -323,21 +323,6 @@ object Bench {
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // BoundedCollectSet buffers are capped, so the ObjectHashAggregate
-      // sort-based fallback (default threshold 128 keys/partition) only
-      // costs time, never protects memory — keep hash aggregation
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "10000000")
-      // the default 100-entry codegen class cache thrashes under the
-      // interleaved sweep (202 queries x several codegen units between
-      // a query's timed runs), re-billing Janino compilation to every
-      // run — at scale a plan compiles once per executor and amortizes
-      // over minutes, so steady-state timing is the honest number.
-      // Static conf: must be set before the first session in this JVM.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config(Tables.sessionConf)
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -15,8 +15,6 @@ object Explain {
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
       .config(Tables.sessionConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

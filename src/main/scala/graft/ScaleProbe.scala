@@ -155,12 +155,6 @@ object ScaleProbe {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "10000000")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config(Tables.sessionConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

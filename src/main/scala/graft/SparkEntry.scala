@@ -243,6 +243,63 @@ object SparkEntry {
         col("cur_rank"))
   }
 
+  // ---- the ingest family ---------------------------------------------
+  // `documents` splits into a stored corpus (doc_id % 5 != 0) and
+  // arriving docs; stage 4 decontaminates against the corpus's eval
+  // slice (doc_id % 50 == 1).
+
+  private def ingestCorpus(docs: DataFrame): DataFrame =
+    docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
+
+  private def ingestEvalGrams(corpus: DataFrame): DataFrame =
+    ops.IngestOps.gramSet(
+      corpus.filter(pmod(col("doc_id"), lit(50)) === 1), "text")
+
+  /** Per-stage accounting of one gated batch: survivors and their id
+    * sum after each stage — the rows the ingest oracle replays. */
+  private def ingestReport(incoming: DataFrame,
+      st: ops.IngestOps.IngestStages): DataFrame =
+    Seq("0_incoming" -> incoming, "1_exact" -> st.s1,
+        "2_segments" -> st.s2, "3_quality" -> st.s3, "4_decon" -> st.s4)
+      .map { case (name, df) => df
+        .agg(count(lit(1)).as("n_docs"),
+          coalesce(sum(col("doc_id")), lit(0L)).as("id_sum"))
+        .select(lit(name).as("stage"), col("n_docs"), col("id_sum"))
+      }
+      .reduce(_ unionByName _)
+      .orderBy(col("stage"))
+
+  /** One run of an ingest-loop query: the corpus's eval-gram set,
+    * pinned once (the loop joins it every batch; a lazy set would be
+    * re-derived from corpus text per batch), a run-private clone of
+    * the once-per-corpus cached inventory (the loop merges into its
+    * inventory, so each run pays a hash-file directory copy instead of
+    * a corpus re-derivation), and the frozen tokenizer models (cached
+    * per source bytes). */
+  private final class IngestLoopRun(s: SparkSession, d: String,
+      prefix: String) {
+    private val src = s"$d/documents.parquet"
+    val docs: DataFrame = t(s, d, "documents")
+    private val corpus = ingestCorpus(docs)
+    val evalGrams: DataFrame = ingestEvalGrams(corpus).localCheckpoint(true)
+    val run: String = java.util.UUID.randomUUID().toString.take(12)
+    val key: String = s"${prefix}_$run"
+    ops.IngestOps.cloneInventory(ops.IngestOps.cachedInventory(s, src,
+      "ingsbase", corpus, "text"), key)
+    lazy val wp: graft.functions.WordPieceModel =
+      ops.WordPieceOps.cachedTrain(s, src, docs, col("text"), numMerges = 64)
+    lazy val bpe: graft.functions.BpeModel =
+      BpeOps.cachedTrain(s, src, docs, col("text"), numMerges = 64)
+
+    /** The two arriving batches in order. b1 re-delivers half of b0
+      * (doc_id % 20 == 0), the at-least-once reality of any ingest
+      * feed, so some b1 docs die against b0's merges. */
+    def arrivals: Seq[(String, DataFrame)] = Seq(
+      "b0" -> docs.filter(pmod(col("doc_id"), lit(10)) === 0),
+      "b1" -> docs.filter(pmod(col("doc_id"), lit(10)) === 5 ||
+        pmod(col("doc_id"), lit(20)) === 0))
+  }
+
   // ------------------------------------------------------------------
   // Queries. Signature: (session, sfDir) => DataFrame.
   // ------------------------------------------------------------------
@@ -4747,6 +4804,164 @@ object SparkEntry {
         minLen = 24, maxLen = 128, numParts = 8)
     }),
 
+    // INCREMENTAL ingest of a new shard against an existing corpus —
+    // the flow a live 100-TB pipeline runs per arriving batch, as one
+    // declared query with per-stage accounting: (1) exact dedup, both
+    // within the batch (first occurrence wins) and against the corpus
+    // md5 set; (2) SEGMENT EXCISION against the corpus's 16-token
+    // segment inventory (the batch twin of the streaming
+    // segmentGateStream — survivors keep only corpus-novel segments,
+    // docs cleaned to nothing drop); (3) quality gate on the CLEANED
+    // text (token floor + mean-word-length band); (4) n-gram
+    // decontamination of the cleaned text against the eval slice.
+    // Every stage is exact, so the whole composition — including the
+    // per-stage survivor counts and id sums — is replayed by the
+    // oracle. Wire discipline: the corpus sides reduce to md5/segment
+    // hash SETS before any join; the only text-shaped work is
+    // row-local segmentation and reassembly. The gate is
+    // IngestOps.gateBatch, run here against hash sets derived from the
+    // corpus text on every call. The stages stay lazy: the five
+    // accounting branches share their gating prefix through exchange
+    // reuse in one plan, which costs fewer jobs than pinning stages.
+    "pipeline_ingest" -> ((s, d) => {
+      val docs = t(s, d, "documents")
+      val corpus = ingestCorpus(docs)
+      val incoming = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
+      ingestReport(incoming, ops.IngestOps.gateBatch(incoming,
+        ops.IngestOps.docMd5s(corpus, "text"),
+        ops.IngestOps.docSegments(corpus, "text"), "doc_id", "text",
+        Some(ingestEvalGrams(corpus))))
+    }),
+
+    // The SAME ingest composition against the PERSISTED inventory
+    // artifact (ops.IngestOps): the corpus md5 set and 16-token
+    // segment inventory are built ONCE per corpus bytes (content-
+    // signature-keyed parquet under the 0700 scratch root) and every
+    // later batch reads only hash-compact inventory files plus the
+    // batch itself — no stored corpus text is re-scanned
+    // (IngestOpsSpec gates the second batch's inputFiles against the
+    // corpus source). Results are identical to the full-recompute
+    // pipeline_ingest by construction, so this entry shares its
+    // DuckDB oracle — the cross-engine check certifies the artifact
+    // path end-to-end.
+    "pipeline_ingest_incr" -> ((s, d) => {
+      val docs = t(s, d, "documents")
+      val corpus = ingestCorpus(docs)
+      val incoming = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
+      val key = ops.IngestOps.cachedInventory(s,
+        s"$d/documents.parquet", "ing5", corpus, "text")
+      ingestReport(incoming, ops.IngestOps.ingestBatch(s, key, incoming,
+        "doc_id", "text", Some(ingestEvalGrams(corpus)),
+        materializeStages = true))
+    }),
+
+    // ★ r10: the STREAMING END-TO-END ingest loop as a declared,
+    // oracle-replayed query — ONE continuous Structured Streaming
+    // query (file source, Trigger.AvailableNow, maxFilesPerTrigger=1)
+    // drains two arriving batches through
+    // [[graft.streaming.IngestLoop]]: each micro-batch is gated
+    // through all four ingest stages against the PERSISTED
+    // inventories, its accepted docs are MERGED before the next batch
+    // arrives, and per-batch stage accounting is emitted. Batch b1
+    // RE-DELIVERS half of batch b0, so at EVERY scale factor some b1
+    // docs are accepted-in-b0 re-arrivals that die against the merged
+    // inventory — the DuckDB oracle replays both batches sequentially
+    // against the states the merges left behind, so it certifies the
+    // composition (gate → merge → gate), not the stages in isolation.
+    // The inventory is cloned per run (the loop mutates it); batch
+    // inputs are content-signature-cached with strictly increasing
+    // mtimes so the file source's timestamp order delivers them as two
+    // micro-batches in arrival order (a mixed batch fails loud via the
+    // loop's tag-purity check on the `arrival` column).
+    "pipeline_ingest_stream" -> ((s, d) => {
+      val r = new IngestLoopRun(s, d, "ingstream")
+      val sig = ops.StorageOps.contentSignature(s, s"$d/documents.parquet")
+      val inDir = ops.StorageOps.scratchPath(
+        s"ingstream_v2_${java.lang.Long.toHexString(sig)}")
+      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(inDir))) {
+        val tmp = inDir + ".build-" + java.util.UUID.randomUUID().toString
+        val t0 = System.currentTimeMillis() - 120000
+        r.arrivals.zipWithIndex.foreach { case ((tag, b), i) =>
+          b.withColumn("arrival", lit(tag))
+            .coalesce(1).write.parquet(s"$tmp/$tag")
+          new java.io.File(s"$tmp/$tag").listFiles()
+            .filter(_.getName.endsWith(".parquet"))
+            .foreach(_.setLastModified(t0 + 60000L * i))
+        }
+        try java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
+          java.nio.file.Paths.get(inDir),
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        catch { case _: java.nio.file.FileAlreadyExistsException |
+                     _: java.nio.file.DirectoryNotEmptyException =>
+          org.apache.commons.io.FileUtils.deleteDirectory(
+            new java.io.File(tmp))
+        }
+      }
+      val loop = new graft.streaming.IngestLoop(s, r.key, "doc_id", "text",
+        Some(r.evalGrams), wp = Some(r.wp), bpe = Some(r.bpe))
+      val ckpt = ops.StorageOps.scratchPath(s"ingstream_ckpt_${r.run}")
+      val streamSchema = org.apache.spark.sql.types.StructType(
+        r.docs.schema.fields :+ org.apache.spark.sql.types.StructField(
+          "arrival", org.apache.spark.sql.types.StringType))
+      val stream = s.readStream.schema(streamSchema)
+        .option("maxFilesPerTrigger", "1").parquet(s"$inDir/b*")
+      val q = loop.start(stream, col("arrival"), ckpt)
+      q.awaitTermination()
+      // reports are driver-local bounded rows; the per-run mutable
+      // artifacts (merged inventory, stream checkpoint) are garbage
+      // once the loop ends — drop them so repeated runs don't pile up
+      ops.IngestOps.dropInventory(r.key)
+      org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(ckpt))
+      loop.stageReport.orderBy(col("batch"), col("stage"))
+    }),
+
+    // ★ r10: the ingest loop's DRIFT EMISSION as its own
+    // oracle-certified query — the same two-batch loop (batch-twin
+    // processBatch calls: identical code path, spec-gated equal to
+    // the streaming run) reporting the tokenizer-drift metrics over
+    // each batch's ACCEPTED text under the shipped frozen models.
+    // The oracle composes the ingest-stream replay (which re-derives
+    // the accepted clean text per batch against the merged inventory
+    // states) with the tokenizer-drift machinery — certifying the
+    // loop's third output end-to-end: gate, merge, AND drift.
+    "pipeline_ingest_drift" -> ((s, d) => {
+      val r = new IngestLoopRun(s, d, "ingdrift")
+      val loop = new graft.streaming.IngestLoop(s, r.key, "doc_id", "text",
+        Some(r.evalGrams), wp = Some(r.wp), bpe = Some(r.bpe))
+      r.arrivals.foreach { case (tag, b) => loop.processBatch(b, tag) }
+      ops.IngestOps.dropInventory(r.key)
+      loop.driftReport.orderBy(col("batch"))
+    }),
+
+    // ★ r10: INCREMENTAL PACK MANIFEST from the ingest loop — each
+    // accepted batch extends the global token stream at the stored
+    // total (the restart-safe driver long recovered from the artifact
+    // itself), so arriving data gets training-block offsets with
+    // batch-sized work: no corpus re-read, no re-offsetting of the
+    // existing manifest, ever. Same two-batch loop as
+    // pipeline_ingest_drift (the merge between batches shapes WHICH
+    // docs get offsets); the oracle composes the full ingest replay
+    // (accepted clean text per batch against the merged inventory
+    // states) with the BPE merge-table replay for per-doc piece counts
+    // and the (batch, doc_id)-ordered cumsum — certifying gate ->
+    // merge -> gate -> tokenize -> offset as ONE composition.
+    "pipeline_pack_incr" -> ((s, d) => {
+      val r = new IngestLoopRun(s, d, "packincr")
+      val packDir = ops.StorageOps.scratchPath(s"packincr_${r.run}")
+      val loop = new graft.streaming.IngestLoop(s, r.key, "doc_id", "text",
+        Some(r.evalGrams), bpe = Some(r.bpe),
+        packManifestDir = Some(packDir))
+      r.arrivals.foreach { case (tag, b) => loop.processBatch(b, tag) }
+      // pin the manifest before the per-run artifacts are dropped
+      val res = loop.packManifest
+        .orderBy(col("batch"), col("doc_id")).localCheckpoint(true)
+      ops.IngestOps.dropInventory(r.key)
+      org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(packDir))
+      res
+    }),
+
     // The COMPOSED end-to-end pipeline: quality gate → exact dedup →
     // eval-set decontamination → PII redaction → deterministic mixture
     // sampling → per-language shard packing, as one declared query.
@@ -4769,354 +4984,6 @@ object SparkEntry {
     // unreferenced — the deliberate trade for running stages 1-2
     // exactly once per build; callers that only want the plan
     // (Explain) pay the stage-1/2 cost too.
-    // INCREMENTAL ingest of a new shard against an existing corpus —
-    // the flow a live 100-TB pipeline runs per arriving batch, as one
-    // declared query with per-stage accounting: (1) exact dedup, both
-    // within the batch (first occurrence wins) and against the corpus
-    // md5 set; (2) SEGMENT EXCISION against the corpus's 16-token
-    // segment inventory (the batch twin of the streaming
-    // segmentGateStream — survivors keep only corpus-novel segments,
-    // docs cleaned to nothing drop); (3) quality gate on the CLEANED
-    // text (token floor + mean-word-length band); (4) n-gram
-    // decontamination of the cleaned text against the eval slice.
-    // Every stage is exact, so the whole composition — including the
-    // per-stage survivor counts and id sums — is replayed by the
-    // oracle. Wire discipline: the corpus sides reduce to md5/segment
-    // hash SETS before any join; the only text-shaped work is
-    // row-local segmentation and reassembly.
-    "pipeline_ingest" -> ((s, d) => {
-      val segLen = 16
-      val docs = t(s, d, "documents")
-      val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
-      val incoming = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-      // stage 1: exact dedup (in-batch first-wins + corpus md5 set).
-      // r15: s1 and s2 are PINNED — the five per-stage accounting
-      // branches below union into ONE plan, and without the pins each
-      // branch re-derived its whole gating prefix (the corpus md5 set
-      // three times, the corpus segment-md5 explosion twice: ~3x the
-      // necessary corpus-text kernel work in one action). Pinned, the
-      // chain runs once and every branch reads 16-byte-ish rows.
-      val wH = Window.partitionBy(col("h")).orderBy(col("doc_id"))
-      val s1 = incoming.withColumn("h", md5(col("text")))
-        .withColumn("rn", row_number().over(wH))
-        .filter(col("rn") === 1)
-        .join(corpus.select(md5(col("text")).as("h")).distinct(),
-          Seq("h"), "left_anti")
-        .select(col("doc_id"), col("text"))
-        .localCheckpoint(true)
-      // stage 2: segment excision vs the corpus segment inventory
-      val segText: Column => Column = i =>
-        array_join(slice(col("w"), i * segLen + 1, lit(segLen)), " ")
-      val nSegs = graft.ops.DedupOps.idiv(
-        size(col("w")) + lit(segLen - 1), lit(segLen)).cast("int")
-      val corpusSegs = corpus
-        .select(split(lower(col("text")), " ").as("w"))
-        .select(explode(transform(sequence(lit(0), nSegs - 1),
-          i => md5(segText(i)))).as("sh"))
-        .distinct()
-      // r15 plan shape (mirrors IngestOps.ingestBatch): segment rows
-      // carry their own text slice, so the clean text reassembles in
-      // the SAME aggregation that keeps novel segments — no join-back
-      // to s1, one less exchange; identical output strings.
-      val segRows = s1
-        .select(col("doc_id"), split(lower(col("text")), " ").as("w"))
-        .select(col("doc_id"),
-          posexplode(transform(sequence(lit(0), nSegs - 1), segText)))
-        .select(col("doc_id"), col("pos").as("seg_idx"),
-          md5(col("col")).as("sh"), col("col").as("seg"))
-      val s2 = segRows.join(corpusSegs, Seq("sh"), "left_anti")
-        .groupBy(col("doc_id")) // inner-shaped: fully-excised docs drop
-        .agg(array_join(transform(
-          sort_array(collect_list(struct(col("seg_idx"), col("seg")))),
-          x => x.getField("seg")), " ").as("clean"))
-        .filter(col("clean") =!= "")
-        .localCheckpoint(true)
-      // stage 3: quality on the cleaned text
-      val s3 = s2
-        .withColumn("n_tok", size(split(col("clean"), " ")))
-        .withColumn("n_ch",
-          length(regexp_replace(col("clean"), " ", "")))
-        .filter(col("n_tok") >= 24 &&
-          col("n_ch") * lit(10) >= col("n_tok") * lit(20) &&
-          col("n_ch") * lit(10) <= col("n_tok") * lit(100))
-        .select(col("doc_id"), col("clean"))
-      // stage 4: decontamination (distinct shared 3-gram strings with
-      // the eval slice >= 3 drops the doc)
-      val evalSet = corpus.filter(pmod(col("doc_id"), lit(50)) === 1)
-      def grams(c: Column): Column = {
-        val w = split(lower(c), " ")
-        when(size(w) >= 3, transform(sequence(lit(0), size(w) - 3),
-          i => concat_ws(" ", element_at(w, i + 1),
-            element_at(w, i + 2), element_at(w, i + 3))))
-          .otherwise(array(array_join(w, " ")))
-      }
-      val evalGrams = evalSet
-        .select(explode(array_distinct(grams(col("text")))).as("g"))
-        .distinct()
-      val hot = s3
-        .select(col("doc_id"),
-          explode(array_distinct(grams(col("clean")))).as("g"))
-        .join(evalGrams, Seq("g"))
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("n_shared"))
-        .filter(col("n_shared") >= 3)
-      val s4 = s3.join(hot, Seq("doc_id"), "left_anti")
-      // per-stage accounting
-      def stage(name: String, df: DataFrame) = df
-        .agg(count(lit(1)).as("n_docs"),
-          coalesce(sum(col("doc_id")), lit(0L)).as("id_sum"))
-        .select(lit(name).as("stage"), col("n_docs"), col("id_sum"))
-      stage("0_incoming", incoming)
-        .unionByName(stage("1_exact", s1))
-        .unionByName(stage("2_segments", s2))
-        .unionByName(stage("3_quality", s3))
-        .unionByName(stage("4_decon", s4))
-        .orderBy(col("stage"))
-    }),
-
-    // The SAME ingest composition against the PERSISTED inventory
-    // artifact (ops.IngestOps): the corpus md5 set and 16-token
-    // segment inventory are built ONCE per corpus bytes (content-
-    // signature-keyed parquet under the 0700 scratch root) and every
-    // later batch reads only hash-compact inventory files plus the
-    // batch itself — no stored corpus text is re-scanned
-    // (IngestOpsSpec gates the second batch's inputFiles against the
-    // corpus source). Results are identical to the full-recompute
-    // pipeline_ingest by construction, so this entry shares its
-    // DuckDB oracle — the cross-engine check certifies the artifact
-    // path end-to-end.
-    "pipeline_ingest_incr" -> ((s, d) => {
-      val segLen = 16
-      val docs = t(s, d, "documents")
-      val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
-      val incoming = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-      val key = ops.IngestOps.cachedInventory(s,
-        s"$d/documents.parquet", "ing5", corpus, "text", segLen)
-      val evalSet = corpus.filter(pmod(col("doc_id"), lit(50)) === 1)
-      def grams(c: Column): Column = {
-        val w = split(lower(c), " ")
-        when(size(w) >= 3, transform(sequence(lit(0), size(w) - 3),
-          i => concat_ws(" ", element_at(w, i + 1),
-            element_at(w, i + 2), element_at(w, i + 3))))
-          .otherwise(array(array_join(w, " ")))
-      }
-      val evalGrams = evalSet
-        .select(explode(array_distinct(grams(col("text")))).as("g"))
-        .distinct()
-      // r15: materializeStages pins s1/s2 so the five accounting
-      // branches below read the gating chain's outputs instead of
-      // re-deriving the chain per branch (same fix as pipeline_ingest;
-      // the loop always ran this way)
-      val st = ops.IngestOps.ingestBatch(s, key, incoming, "doc_id",
-        "text", Some(evalGrams), segLen, materializeStages = true)
-      def stage(name: String, df: DataFrame) = df
-        .agg(count(lit(1)).as("n_docs"),
-          coalesce(sum(col("doc_id")), lit(0L)).as("id_sum"))
-        .select(lit(name).as("stage"), col("n_docs"), col("id_sum"))
-      stage("0_incoming", incoming)
-        .unionByName(stage("1_exact", st.s1))
-        .unionByName(stage("2_segments", st.s2))
-        .unionByName(stage("3_quality", st.s3))
-        .unionByName(stage("4_decon", st.s4))
-        .orderBy(col("stage"))
-    }),
-
-    // ★ r10: the STREAMING END-TO-END ingest loop as a declared,
-    // oracle-replayed query — ONE continuous Structured Streaming
-    // query (file source, Trigger.AvailableNow, maxFilesPerTrigger=1)
-    // drains two arriving batches through
-    // [[graft.streaming.IngestLoop]]: each micro-batch is gated
-    // through all four ingest stages against the PERSISTED
-    // inventories, its accepted docs are MERGED before the next batch
-    // arrives, and per-batch stage accounting is emitted. Batch b1
-    // RE-DELIVERS half of batch b0 (doc_id%20==0, the at-least-once
-    // reality of any ingest feed), so at EVERY scale factor some b1
-    // docs are accepted-in-b0 re-arrivals that die against the merged
-    // inventory — the DuckDB oracle replays both batches sequentially
-    // against the states the merges left behind, so it certifies the
-    // composition (gate → merge → gate), not the stages in isolation.
-    // The inventory is built fresh per run (the loop mutates it);
-    // batch inputs are content-signature-cached with strictly
-    // increasing mtimes so the file source's timestamp order delivers
-    // them as two micro-batches in arrival order (a mixed batch fails
-    // loud via the loop's tag-purity check on the `arrival` column).
-    "pipeline_ingest_stream" -> ((s, d) => {
-      val segLen = 16
-      val docs = t(s, d, "documents")
-      val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
-      val sig = ops.StorageOps.contentSignature(s, s"$d/documents.parquet")
-      val inDir = ops.StorageOps.scratchPath(
-        s"ingstream_v2_${java.lang.Long.toHexString(sig)}")
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(inDir))) {
-        val tmp = inDir + ".build-" + java.util.UUID.randomUUID().toString
-        docs.filter(pmod(col("doc_id"), lit(10)) === 0)
-          .withColumn("arrival", lit("b0"))
-          .coalesce(1).write.parquet(s"$tmp/b0")
-        docs.filter(pmod(col("doc_id"), lit(10)) === 5 ||
-            pmod(col("doc_id"), lit(20)) === 0)
-          .withColumn("arrival", lit("b1"))
-          .coalesce(1).write.parquet(s"$tmp/b1")
-        def stamp(sub: String, ts: Long): Unit =
-          new java.io.File(s"$tmp/$sub").listFiles()
-            .filter(_.getName.endsWith(".parquet"))
-            .foreach(_.setLastModified(ts))
-        val t0 = System.currentTimeMillis() - 120000
-        stamp("b0", t0); stamp("b1", t0 + 60000)
-        try java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
-          java.nio.file.Paths.get(inDir),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch { case _: java.nio.file.FileAlreadyExistsException |
-                     _: java.nio.file.DirectoryNotEmptyException =>
-          org.apache.commons.io.FileUtils.deleteDirectory(
-            new java.io.File(tmp))
-        }
-      }
-      def grams(c: Column): Column = {
-        val w = split(lower(c), " ")
-        when(size(w) >= 3, transform(sequence(lit(0), size(w) - 3),
-          i => concat_ws(" ", element_at(w, i + 1),
-            element_at(w, i + 2), element_at(w, i + 3))))
-          .otherwise(array(array_join(w, " ")))
-      }
-      // materialized ONCE: the loop's per-batch gate joins this set
-      // every batch — without the checkpoint each batch re-derives it
-      // from the corpus (and the per-batch plan would read corpus text)
-      val evalGrams = corpus.filter(pmod(col("doc_id"), lit(50)) === 1)
-        .select(explode(array_distinct(grams(col("text")))).as("g"))
-        .distinct().localCheckpoint(true)
-      // the loop MERGES into its inventory, so each run gets a private
-      // clone of the once-per-corpus cached base (a hash-file dir copy,
-      // not a corpus re-derivation)
-      val run = java.util.UUID.randomUUID().toString.take(12)
-      val key = s"ingstream_$run"
-      val baseKey = ops.IngestOps.cachedInventory(s,
-        s"$d/documents.parquet", "ingsbase", corpus, "text", segLen)
-      ops.IngestOps.cloneInventory(baseKey, key)
-      val src = s"$d/documents.parquet"
-      val wp = ops.WordPieceOps.cachedTrain(s, src, docs, col("text"),
-        numMerges = 64)
-      val bpe = BpeOps.cachedTrain(s, src, docs, col("text"),
-        numMerges = 64)
-      val loop = new graft.streaming.IngestLoop(s, key, "doc_id", "text",
-        Some(evalGrams), segLen, Some(wp), Some(bpe))
-      val ckpt = ops.StorageOps.scratchPath(s"ingstream_ckpt_$run")
-      val streamSchema = org.apache.spark.sql.types.StructType(
-        docs.schema.fields :+ org.apache.spark.sql.types.StructField(
-          "arrival", org.apache.spark.sql.types.StringType))
-      val stream = s.readStream.schema(streamSchema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$inDir/b*")
-      val q = loop.start(stream, col("arrival"), ckpt)
-      q.awaitTermination()
-      // reports are driver-local bounded rows; the per-run mutable
-      // artifacts (merged inventory, stream checkpoint) are garbage
-      // once the loop ends — drop them so repeated runs don't pile up
-      ops.IngestOps.dropInventory(key)
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(ckpt))
-      loop.stageReport.orderBy(col("batch"), col("stage"))
-    }),
-
-    // ★ r10: the ingest loop's DRIFT EMISSION as its own
-    // oracle-certified query — the same two-batch loop (batch-twin
-    // processBatch calls: identical code path, spec-gated equal to
-    // the streaming run) reporting the tokenizer-drift metrics over
-    // each batch's ACCEPTED text under the shipped frozen models.
-    // The oracle composes the ingest-stream replay (which re-derives
-    // the accepted clean text per batch against the merged inventory
-    // states) with the tokenizer-drift machinery — certifying the
-    // loop's third output end-to-end: gate, merge, AND drift.
-    "pipeline_ingest_drift" -> ((s, d) => {
-      val segLen = 16
-      val docs = t(s, d, "documents")
-      val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
-      def grams(c: Column): Column = {
-        val w = split(lower(c), " ")
-        when(size(w) >= 3, transform(sequence(lit(0), size(w) - 3),
-          i => concat_ws(" ", element_at(w, i + 1),
-            element_at(w, i + 2), element_at(w, i + 3))))
-          .otherwise(array(array_join(w, " ")))
-      }
-      // materialized ONCE: the loop's per-batch gate joins this set
-      // every batch — without the checkpoint each batch re-derives it
-      // from the corpus (and the per-batch plan would read corpus text)
-      val evalGrams = corpus.filter(pmod(col("doc_id"), lit(50)) === 1)
-        .select(explode(array_distinct(grams(col("text")))).as("g"))
-        .distinct().localCheckpoint(true)
-      val run = java.util.UUID.randomUUID().toString.take(12)
-      val key = s"ingdrift_$run"
-      val baseKey = ops.IngestOps.cachedInventory(s,
-        s"$d/documents.parquet", "ingsbase", corpus, "text", segLen)
-      ops.IngestOps.cloneInventory(baseKey, key)
-      val src = s"$d/documents.parquet"
-      val wp = ops.WordPieceOps.cachedTrain(s, src, docs, col("text"),
-        numMerges = 64)
-      val bpe = BpeOps.cachedTrain(s, src, docs, col("text"),
-        numMerges = 64)
-      val loop = new graft.streaming.IngestLoop(s, key, "doc_id",
-        "text", Some(evalGrams), segLen, Some(wp), Some(bpe))
-      loop.processBatch(
-        docs.filter(pmod(col("doc_id"), lit(10)) === 0), "b0")
-      loop.processBatch(
-        docs.filter(pmod(col("doc_id"), lit(10)) === 5 ||
-          pmod(col("doc_id"), lit(20)) === 0), "b1")
-      ops.IngestOps.dropInventory(key)
-      loop.driftReport.orderBy(col("batch"))
-    }),
-
-    // ★ r10: INCREMENTAL PACK MANIFEST from the ingest loop — each
-    // accepted batch extends the global token stream at the stored
-    // total (the restart-safe driver long recovered from the artifact
-    // itself), so arriving data gets training-block offsets with
-    // batch-sized work: no corpus re-read, no re-offsetting of the
-    // existing manifest, ever. Same two-batch loop as
-    // pipeline_ingest_drift (b1 re-delivers half of b0, so the merge
-    // between batches shapes WHICH docs get offsets); the oracle
-    // composes the full ingest replay (accepted clean text per batch
-    // against the merged inventory states) with the BPE merge-table
-    // replay for per-doc piece counts and the (batch, doc_id)-ordered
-    // cumsum — certifying gate -> merge -> gate -> tokenize -> offset
-    // as ONE composition.
-    "pipeline_pack_incr" -> ((s, d) => {
-      val segLen = 16
-      val docs = t(s, d, "documents")
-      val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
-      def grams(c: Column): Column = {
-        val w = split(lower(c), " ")
-        when(size(w) >= 3, transform(sequence(lit(0), size(w) - 3),
-          i => concat_ws(" ", element_at(w, i + 1),
-            element_at(w, i + 2), element_at(w, i + 3))))
-          .otherwise(array(array_join(w, " ")))
-      }
-      // materialized ONCE: the loop's per-batch gate joins this set
-      // every batch — without the checkpoint each batch re-derives it
-      // from the corpus (and the per-batch plan would read corpus text)
-      val evalGrams = corpus.filter(pmod(col("doc_id"), lit(50)) === 1)
-        .select(explode(array_distinct(grams(col("text")))).as("g"))
-        .distinct().localCheckpoint(true)
-      val run = java.util.UUID.randomUUID().toString.take(12)
-      val key = s"packincr_$run"
-      val baseKey = ops.IngestOps.cachedInventory(s,
-        s"$d/documents.parquet", "ingsbase", corpus, "text", segLen)
-      ops.IngestOps.cloneInventory(baseKey, key)
-      val bpe = BpeOps.cachedTrain(s, s"$d/documents.parquet", docs,
-        col("text"), numMerges = 64)
-      val packDir = ops.StorageOps.scratchPath(s"packincr_$run")
-      val loop = new graft.streaming.IngestLoop(s, key, "doc_id",
-        "text", Some(evalGrams), segLen, wp = None, bpe = Some(bpe),
-        packManifestDir = Some(packDir))
-      loop.processBatch(
-        docs.filter(pmod(col("doc_id"), lit(10)) === 0), "b0")
-      loop.processBatch(
-        docs.filter(pmod(col("doc_id"), lit(10)) === 5 ||
-          pmod(col("doc_id"), lit(20)) === 0), "b1")
-      // pin the manifest before the per-run artifacts are dropped
-      val res = loop.packManifest
-        .orderBy(col("batch"), col("doc_id")).localCheckpoint(true)
-      ops.IngestOps.dropInventory(key)
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(packDir))
-      res
-    }),
-
     "pipeline_full" -> ((s, d) => {
       val evalSet = t(s, d, "documents")
         .filter(pmod(col("doc_id"), lit(50)) === 0)

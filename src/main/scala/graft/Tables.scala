@@ -16,11 +16,26 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Session conf every graft session needs. `nanosAsLong` keeps
+  /** Session conf every graft session needs; builders add only their
+    * master, shuffle partitions and log level. `nanosAsLong` keeps
     * TIMESTAMP(NANOS) parquet layouts readable (older driver testdata);
     * micros-precision layouts are unaffected by it and are normalized in
     * [[events]]. Set once at session build — loaders are pure. */
   val sessionConf: Map[String, String] = Map(
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false",
+    // BoundedCollectSet buffers are capped, so the ObjectHashAggregate
+    // sort-based fallback (default threshold 128 keys/partition) only
+    // costs time, never protects memory — keep hash aggregation
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" ->
+      "10000000",
+    // the default 100-entry codegen class cache thrashes under a
+    // many-query sweep, re-billing Janino compilation to every run —
+    // at scale a plan compiles once per executor and amortizes over
+    // minutes. Static conf: must be set before the first session in
+    // this JVM.
+    "spark.sql.codegen.cache.maxEntries" -> "5000",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     // custom planner surface (as-of join strategy + pruning rule)
     "spark.sql.extensions" -> "graft.plans.GraftExtensions")

@@ -15,16 +15,6 @@ object Verify {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // BoundedCollectSet buffers are capped, so the ObjectHashAggregate
-      // sort-based fallback (default threshold 128 keys/partition) only
-      // costs time, never protects memory — keep hash aggregation
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "10000000")
-      // see Bench: the 100-entry default recompiles codegen classes
-      // across a 200-query sweep
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config(Tables.sessionConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -94,9 +94,6 @@ object GraftContext {
       .master(s"local[$cores]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config(graft.Tables.sessionConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -44,21 +44,38 @@ object IngestOps {
   private def md5Dir(key: String): String = s"${invRoot(key)}/md5"
   private def segDir(key: String): String = s"${invRoot(key)}/seg"
 
-  /** The 16-token tiling shared with [[DedupOps.segmentDedup]] and
-    * `pipeline_ingest`: lowercased whitespace tokens, `segLen`-token
-    * slices joined with single spaces. */
-  private def segmentStrings(docs: DataFrame, textCol: String,
-      segLen: Int): DataFrame = {
+  /** The 16-token tiling shared with [[DedupOps.segmentDedup]]:
+    * lowercased whitespace tokens, `segLen`-token slices joined with
+    * single spaces. One row per segment: the `keep` columns, the
+    * segment's position `seg_idx` and its text `seg`. */
+  private def segmentRows(docs: DataFrame, keep: Seq[String],
+      textCol: String, segLen: Int): DataFrame = {
     val segText: Column => Column = i =>
       array_join(slice(col("__w"), i * segLen + 1, lit(segLen)), " ")
+    val nSegs = DedupOps.idiv(
+      size(col("__w")) + lit(segLen - 1), lit(segLen)).cast("int")
     docs
-      .select(DedupOps.tokens(col(textCol)).as("__w"))
-      .select(explode(transform(
-        sequence(lit(0),
-          DedupOps.idiv(size(col("__w")) + lit(segLen - 1), lit(segLen))
-            .cast("int") - 1),
-        segText)).as("s"))
+      .select(keep.map(col) :+ DedupOps.tokens(col(textCol)).as("__w"): _*)
+      .select(keep.map(col) :+
+        posexplode(transform(sequence(lit(0), nSegs - 1), segText))
+          .as(Seq("seg_idx", "seg")): _*)
   }
+
+  /** Word 3-grams of a text (lowercased, single-space tokens); a text
+    * of fewer than three tokens is its own single gram. */
+  private def trigrams(c: Column): Column = {
+    val w = split(lower(c), " ")
+    when(size(w) >= 3, transform(sequence(lit(0), size(w) - 3),
+      i => concat_ws(" ", element_at(w, i + 1),
+        element_at(w, i + 2), element_at(w, i + 3))))
+      .otherwise(array(array_join(w, " ")))
+  }
+
+  /** Distinct 3-gram strings `g` of a document set — the `evalGrams`
+    * side of the decontamination stage. */
+  def gramSet(docs: DataFrame, textCol: String): DataFrame =
+    docs.select(explode(array_distinct(trigrams(col(textCol)))).as("g"))
+      .distinct()
 
   /** Distinct doc-text md5s of a corpus — the stage-1 inventory. */
   def docMd5s(docs: DataFrame, textCol: String): DataFrame =
@@ -69,8 +86,8 @@ object IngestOps {
     * oracle replay, xxhash64 for the streaming bloom gate). */
   def docSegments(docs: DataFrame, textCol: String,
       segLen: Int = 16): DataFrame =
-    segmentStrings(docs, textCol, segLen)
-      .select(md5(col("s")).as("sh"), xxhash64(col("s")).as("sx"))
+    segmentRows(docs, Nil, textCol, segLen)
+      .select(md5(col("seg")).as("sh"), xxhash64(col("seg")).as("sx"))
       .distinct()
 
   /** Build and atomically publish the inventory for a stored corpus
@@ -125,18 +142,6 @@ object IngestOps {
     org.apache.commons.io.FileUtils.copyDirectory(
       new java.io.File(invRoot(srcKey)), new java.io.File(invRoot(dstKey)))
 
-  /** Threshold-triggered inventory compaction — the
-    * [[AnnOps.compactIndexIfNeeded]] story applied to the OTHER
-    * append-accumulating artifact: every [[mergeAccepted]] lands
-    * batch-sized parquet files under `md5/` and `seg/`, and a
-    * long-running ingest loop degrades its own gating joins through
-    * file-listing/open cost. When either subdir exceeds
-    * `maxFiles`, both rewrite to byte-derived right-sized files
-    * ([[StorageOps.compact]]) and swap in atomically — content is
-    * untouched (set-equality spec-gated), so gating results cannot
-    * move; the inventory's content signature changes, which correctly
-    * invalidates the cached segment bloom. Metadata-only check when
-    * under threshold. Returns whether a compaction ran. */
   private def parquetCount(dir: String): Int = {
     val d = new java.io.File(dir)
     if (!d.exists()) 0
@@ -178,6 +183,18 @@ object IngestOps {
     needs
   }
 
+  /** Threshold-triggered inventory compaction — the
+    * [[AnnOps.compactIndexIfNeeded]] story applied to the OTHER
+    * append-accumulating artifact: every [[mergeAccepted]] lands
+    * batch-sized parquet files under `md5/` and `seg/`, and a
+    * long-running ingest loop degrades its own gating joins through
+    * file-listing/open cost. When either subdir exceeds
+    * `maxFiles`, both rewrite to byte-derived right-sized files
+    * ([[StorageOps.compact]]) and swap in atomically — content is
+    * untouched (set-equality spec-gated), so gating results cannot
+    * move; the inventory's content signature changes, which correctly
+    * invalidates the cached segment bloom. Metadata-only check when
+    * under threshold. Returns whether a compaction ran. */
   def compactInventoryIfNeeded(spark: SparkSession, key: String,
       maxFiles: Int = 16,
       targetFileBytes: Long = 128L * 1024 * 1024): Boolean = {
@@ -326,76 +343,57 @@ object IngestOps {
   def inventorySegments(spark: SparkSession, key: String): DataFrame =
     spark.read.parquet(segDir(key))
 
-  /** The four ingest stages of `pipeline_ingest`, with every
-    * corpus-derived side read from the PERSISTED inventory instead of
-    * recomputed from corpus text. Identical semantics (the declared
-    * `pipeline_ingest_incr` query shares `pipeline_ingest`'s DuckDB
-    * oracle): s1 = in-batch first-occurrence dedup + anti-join vs the
-    * md5 inventory; s2 = segment excision vs the segment inventory
-    * (fully-excised docs drop); s3 = quality band on the cleaned
-    * text; s4 = optional n-gram decontamination against `evalGrams`
-    * (a one-column frame of gram strings `g`). */
-  /** `sourceFiles` (r15) lists the files behind the ACTUAL leaf frames
-    * composed into the stage plans — the batch's own files plus the
-    * two inventory dirs (plus nothing else, by construction). It is
-    * the loop's per-batch no-corpus-text-read audit surface: reading
-    * it here costs four trivial-plan `inputFiles` calls instead of the
-    * full-chain analysis the loop previously re-planned per batch
-    * (~0.35 s of pure driver planning each) just to ask the composed
-    * s4 the same question. The composed-plan property itself stays
-    * spec-gated op-level (IngestOpsSpec analyzes a real lazy s4). */
+  /** The four stages of one ingest batch. `sourceFiles` lists the
+    * files behind every frame composed into them — the batch, both
+    * inventories and `evalGrams` — so it is the per-batch
+    * no-corpus-text-read audit surface without planning `s4` again. */
   case class IngestStages(s1: DataFrame, s2: DataFrame, s3: DataFrame,
       s4: DataFrame, sourceFiles: Array[String] = Array.empty)
 
-  /** `materializeStages = true` localCheckpoints s2 so later stages
-    * (and per-stage accounting actions) reuse it instead of
-    * re-deriving the gating chain per action — what the ingest LOOP
-    * wants (it runs several actions per batch; at scale these are the
-    * persisted stage outputs between pipeline jobs). The lazy default
-    * keeps the full lineage visible for `inputFiles` plan gates. */
+  /** [[gateBatch]] against the PERSISTED inventory under `key`: every
+    * corpus-derived side is read from hash-compact parquet instead of
+    * recomputed from corpus text. */
   def ingestBatch(spark: SparkSession, key: String, batch: DataFrame,
+      idCol: String, textCol: String, evalGrams: Option[DataFrame] = None,
+      segLen: Int = 16, materializeStages: Boolean = false): IngestStages =
+    gateBatch(batch, inventoryMd5s(spark, key), inventorySegments(spark, key),
+      idCol, textCol, evalGrams, segLen, materializeStages)
+
+  /** The four-stage ingest gate against two hash sets of the stored
+    * corpus: `md5s` (column `h`, see [[docMd5s]]) and `segments`
+    * (column `sh`, see [[docSegments]]). s1 = in-batch first-occurrence
+    * dedup + anti-join vs `md5s`; s2 = segment excision vs `segments`
+    * (fully-excised docs drop); s3 = quality band on the cleaned text;
+    * s4 = optional n-gram decontamination against `evalGrams` (a
+    * one-column frame of gram strings `g`, see [[gramSet]]).
+    *
+    * `materializeStages = true` localCheckpoints s2 so later stages and
+    * per-stage accounting actions reuse it instead of re-deriving the
+    * gating chain per action. s1 stays lazy: its one in-plan consumer
+    * is the segment explode, so it fuses into s2's checkpoint job, and
+    * an accounting branch re-deriving it pays one batch-sized window
+    * pass. The lazy default keeps the full lineage visible for
+    * `inputFiles` plan gates. */
+  def gateBatch(batch: DataFrame, md5s: DataFrame, segments: DataFrame,
       idCol: String, textCol: String, evalGrams: Option[DataFrame] = None,
       segLen: Int = 16, materializeStages: Boolean = false): IngestStages = {
     def mat(df: DataFrame): DataFrame =
       if (materializeStages) df.localCheckpoint(true) else df
-    val segText: Column => Column = i =>
-      array_join(slice(col("w"), i * segLen + 1, lit(segLen)), " ")
-    val nSegs = DedupOps.idiv(
-      size(col("w")) + lit(segLen - 1), lit(segLen)).cast("int")
-    // the leaf frames, captured once: composed into the stage plans
-    // below AND reported as the sourceFiles audit surface
-    val invM = inventoryMd5s(spark, key)
-    val invS = inventorySegments(spark, key)
-    // stage 1: exact dedup (in-batch first-wins + inventory md5 set).
-    // NOT pinned even under materializeStages (r15): since the stage-2
-    // rewrite below, s1 has exactly ONE in-plan consumer (the segment
-    // explode), so it fuses into s2's checkpoint job; a caller's
-    // accounting branch re-deriving it pays one batch-sized window
-    // pass inside an off-critical-path job instead of a blocking
-    // checkpoint action per batch.
+    // stage 1: exact dedup (in-batch first-wins + corpus md5 set)
     val wH = Window.partitionBy(col("h")).orderBy(col(idCol))
     val s1 = batch.withColumn("h", md5(col(textCol)))
       .withColumn("rn", row_number().over(wH))
       .filter(col("rn") === 1)
-      .join(invM, Seq("h"), "left_anti")
+      .join(md5s, Seq("h"), "left_anti")
       .select(col(idCol), col(textCol))
-    // stage 2: segment excision vs the persisted segment inventory.
-    // r15 plan shape: each exploded segment row carries ITS OWN text
-    // slice (total bytes across rows = the doc text, nothing
-    // duplicated), so the clean text reassembles inside the same
-    // aggregation that collects the surviving indices — the old
-    // join-back to s1 (one more exchange of the batch, and the reason
-    // s1 had to be pinned for the loop) is gone. Output strings are
-    // identical: same segments, same seg_idx order, same single-space
-    // joins.
-    val segRows = s1
-      .select(col(idCol), DedupOps.tokens(col(textCol)).as("w"))
-      .select(col(idCol),
-        posexplode(transform(sequence(lit(0), nSegs - 1), segText)))
-      .select(col(idCol), col("pos").as("seg_idx"),
-        md5(col("col")).as("sh"), col("col").as("seg"))
+    // stage 2: segment excision vs the corpus segment set. Each
+    // exploded segment row carries its own text slice, so the clean
+    // text reassembles inside the same aggregation that keeps the
+    // novel segments — no join back to s1.
+    val segRows = segmentRows(s1, Seq(idCol), textCol, segLen)
+      .withColumn("sh", md5(col("seg")))
     val s2 = mat(segRows
-      .join(invS.select(col("sh")),
+      .join(segments.select(col("sh")),
         Seq("sh"), "left_anti") // docs with no novel segment drop here
       .groupBy(col(idCol))
       .agg(array_join(transform(
@@ -414,36 +412,23 @@ object IngestOps {
     val s4 = evalGrams match {
       case None => s3
       case Some(eg) =>
-        def grams(c: Column): Column = {
-          val w = split(lower(c), " ")
-          when(size(w) >= 3, transform(sequence(lit(0), size(w) - 3),
-            i => concat_ws(" ", element_at(w, i + 1),
-              element_at(w, i + 2), element_at(w, i + 3))))
-            .otherwise(array(array_join(w, " ")))
-        }
         // NOT fanned out (measured r15): redistributing the clean text
         // ahead of the gram explode pushed batch taskSums 2.5 s → 9-11 s
         // (32 tiny tasks per per-batch stage) for zero wall win — the
         // r14 rejected-fan-out rule holds for every per-batch stage
         val hot = s3
           .select(col(idCol),
-            explode(array_distinct(grams(col("clean")))).as("g"))
+            explode(array_distinct(trigrams(col("clean")))).as("g"))
           .join(eg, Seq("g"))
           .groupBy(col(idCol)).agg(count(lit(1)).as("n_shared"))
           .filter(col("n_shared") >= 3)
         s3.join(hot, Seq(idCol), "left_anti")
     }
     IngestStages(s1, s2, s3, s4,
-      (batch.inputFiles ++ invM.inputFiles ++ invS.inputFiles).distinct)
+      (Seq(batch, md5s, segments) ++ evalGrams).flatMap(_.inputFiles)
+        .distinct.toArray)
   }
 
-  /** MERGE an accepted batch (its FINAL stored text) into the
-    * inventory: append the batch's doc md5s and its inventory-novel
-    * segment hashes as batch-sized parquet files. The anti-join keeps
-    * the segment inventory a SET (the reassembled clean text re-tiles,
-    * so a batch segment can coincide with a stored one); the md5 side
-    * is novel by construction (stage 1 anti-joined it) but is
-    * anti-joined too so a caller merging anything else stays safe. */
   /** The merge's segment-side delta, PINNED, plus its row count — the
     * pure COMPUTE half of [[mergeAccepted]] (reads the pre-merge
     * inventory, mutates nothing), split out (r15) so the loop can run
@@ -459,6 +444,13 @@ object IngestOps {
     (d, d.count())
   }
 
+  /** MERGE an accepted batch (its FINAL stored text) into the
+    * inventory: append the batch's doc md5s and its inventory-novel
+    * segment hashes as batch-sized parquet files. The anti-join keeps
+    * the segment inventory a SET (the reassembled clean text re-tiles,
+    * so a batch segment can coincide with a stored one); the md5 side
+    * is novel by construction (stage 1 anti-joined it) but is
+    * anti-joined too so a caller merging anything else stays safe. */
   def mergeAccepted(spark: SparkSession, key: String, accepted: DataFrame,
       textCol: String, segLen: Int = 16,
       rowsPerFile: Long = 4000000L,

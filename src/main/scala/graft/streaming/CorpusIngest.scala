@@ -292,6 +292,20 @@ final class IngestLoop(spark: SparkSession, key: String, idCol: String,
     * the loop here and replays the batch). */
   private[graft] var crashAfterManifestWrite = false
 
+  /** Env-gated phase timing (SPARK_GRAFT_LOOP_PROFILE=1): prints each
+    * per-batch phase's wall so the loop's cost structure is measurable
+    * without a debugger — reads nothing, changes nothing. */
+  private val profileLoop =
+    sys.env.get("SPARK_GRAFT_LOOP_PROFILE").contains("1")
+  private def timed[A](name: String)(body: => A): A =
+    if (!profileLoop) body
+    else {
+      val t0 = System.nanoTime()
+      val r = body
+      println(f"      [loop] $name%-24s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
+      r
+    }
+
   /** Gate + account + merge ONE batch. The accepted frame is
     * `localCheckpoint`ed BEFORE [[graft.ops.IngestOps.mergeAccepted]]
     * runs: the stage plans read the inventory listings lazily, so an
@@ -315,20 +329,6 @@ final class IngestLoop(spark: SparkSession, key: String, idCol: String,
     * truthful for that run (it did accept nothing; the artifacts
     * already had it), and in-run redelivery REPLACES the tag's
     * accounting rows rather than duplicating them. */
-  /** Env-gated phase timing (SPARK_GRAFT_LOOP_PROFILE=1): prints each
-    * per-batch phase's wall so the loop's cost structure is measurable
-    * without a debugger — reads nothing, changes nothing. */
-  private val profileLoop =
-    sys.env.get("SPARK_GRAFT_LOOP_PROFILE").contains("1")
-  private def timed[A](name: String)(body: => A): A =
-    if (!profileLoop) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"      [loop] $name%-24s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      r
-    }
-
   def processBatch(batch: DataFrame, tag: String): Unit = synchronized {
     // Exactly-once replay guard WITH tag-reuse detection: a committed
     // tag's marker stores the batch's content fingerprint, so a true
@@ -474,74 +474,83 @@ final class IngestLoop(spark: SparkSession, key: String, idCol: String,
             .cast("long").as("n_tok"))
           .localCheckpoint(true)
       }(scala.concurrent.ExecutionContext.global)
-    // join the accounting before anything reads stageBuf
-    val counted = timed("await accounting") {
-      scala.concurrent.Await.result(countedFuture,
-        scala.concurrent.duration.Duration.Inf)
-    }
-    stageNames.foreach { case (nm, _) =>
-      val (n, sm) = counted.getOrElse(nm, (0L, 0L))
-      stageBuf += ((tag, nm, n, sm))
-    }
-    for (dir <- packManifestDir; mF <- manifestPinFuture) timed("manifest") {
-      // nAccepted comes from the already-collected stage accounting
-      // (the "4_decon" row) — no extra job
-      val nAccepted = stageBuf
-        .collectFirst { case (`tag`, "4_decon", n, _) => n }.getOrElse(0L)
-      // replay of a tag whose previous write crashed mid-window: the
-      // recovery base must EXCLUDE the tag's own half-landed rows
-      val replay = graft.ops.IngestOps.taggedDeltaExists(dir, tag)
-      val base =
-        if (replay) packTotalExcluding(dir, tag)
-        else packTotalStored(dir)
-      if (nAccepted > 0) {
-        val m = scala.concurrent.Await.result(mF,
+    // A failure below must not leave the batch's other jobs running
+    // against the inventory dirs: every future is waited for before
+    // processBatch returns or rethrows (the first failure propagates;
+    // the others' outcomes are dropped).
+    val pending = Seq(countedFuture, segDeltaFuture) ++ driftFuture ++
+      manifestPinFuture
+    try {
+      // join the accounting before anything reads stageBuf
+      val counted = timed("await accounting") {
+        scala.concurrent.Await.result(countedFuture,
           scala.concurrent.duration.Duration.Inf)
-        // the offset scan and everything after it read only the pinned
-        // manifest rows; the write replays one broadcast join over
-        // them — no third materialization. Partition count derives
-        // from the batch's OWN row count (parts = 1 for ordinary
-        // batches skips the range sampler's job); the new stored
-        // total is the offset scan's own grand total — the old
-        // post-write max() aggregate re-derived a number the driver
-        // had just finished adding up.
-        val (off, batchTokens) = graft.ops.PackOps
-          .withGlobalOffsetAndTotal(m, "doc_id", "n_tok", "__off",
-            parts = graft.ops.PackOps.partsFor(nAccepted))
-        val out = off
-          .select(lit(tag).as("batch"), col("doc_id"), col("n_tok"),
-            (col("__off") + lit(base)).as("tok_start"))
-        // idempotent overwrite-by-tag (see the processBatch scaladoc);
-        // delta parallelism scales with the batch row count
-        graft.ops.IngestOps.overwriteTagged(spark, out, dir, tag,
-          graft.ops.IngestOps.deltaFileCount(nAccepted))
-        packTotal = Some(base + batchTokens)
-      } else if (replay) {
-        // post-merge replay gated to empty: the stored delta rows ARE
-        // the truth — keep them; invalidate the cached total so the
-        // next batch recovers it from the artifact
-        packTotal = None
-      } else packTotal = Some(base)
-    }
-    if (crashAfterManifestWrite)
-      throw new IllegalStateException("injected crash (test hook): " +
-        "manifest delta written, inventory merge not committed")
-    timed("merge") {
-      graft.ops.IngestOps.mergeAccepted(spark, key, accepted, "clean",
-        segLen, nDocsKnown = stageBuf
-          .collectFirst { case (`tag`, "4_decon", n, _) => n },
-        segDeltaKnown = Some(scala.concurrent.Await.result(segDeltaFuture,
-          scala.concurrent.duration.Duration.Inf)))
-    }
-    // join the concurrent drift job BEFORE the commit marker: a drift
-    // failure leaves the tag uncommitted (exactly the crash window the
-    // replay protocol already covers — a committed-artifact replay is
-    // a structural no-op), and the report buffer is complete before
-    // the method returns.
-    timed("await drift") {
-      driftFuture.foreach(f => scala.concurrent.Await.result(f,
-        scala.concurrent.duration.Duration.Inf))
-    }
+      }
+      stageNames.foreach { case (nm, _) =>
+        val (n, sm) = counted.getOrElse(nm, (0L, 0L))
+        stageBuf += ((tag, nm, n, sm))
+      }
+      for (dir <- packManifestDir; mF <- manifestPinFuture) timed("manifest") {
+        // nAccepted comes from the already-collected stage accounting
+        // (the "4_decon" row) — no extra job
+        val nAccepted = stageBuf
+          .collectFirst { case (`tag`, "4_decon", n, _) => n }.getOrElse(0L)
+        // replay of a tag whose previous write crashed mid-window: the
+        // recovery base must EXCLUDE the tag's own half-landed rows
+        val replay = graft.ops.IngestOps.taggedDeltaExists(dir, tag)
+        val base =
+          if (replay) packTotalExcluding(dir, tag)
+          else packTotalStored(dir)
+        if (nAccepted > 0) {
+          val m = scala.concurrent.Await.result(mF,
+            scala.concurrent.duration.Duration.Inf)
+          // the offset scan and everything after it read only the pinned
+          // manifest rows; the write replays one broadcast join over
+          // them — no third materialization. Partition count derives
+          // from the batch's OWN row count (parts = 1 for ordinary
+          // batches skips the range sampler's job); the new stored
+          // total is the offset scan's own grand total — the old
+          // post-write max() aggregate re-derived a number the driver
+          // had just finished adding up.
+          val (off, batchTokens) = graft.ops.PackOps
+            .withGlobalOffsetAndTotal(m, "doc_id", "n_tok", "__off",
+              parts = graft.ops.PackOps.partsFor(nAccepted))
+          val out = off
+            .select(lit(tag).as("batch"), col("doc_id"), col("n_tok"),
+              (col("__off") + lit(base)).as("tok_start"))
+          // idempotent overwrite-by-tag (see the processBatch scaladoc);
+          // delta parallelism scales with the batch row count
+          graft.ops.IngestOps.overwriteTagged(spark, out, dir, tag,
+            graft.ops.IngestOps.deltaFileCount(nAccepted))
+          packTotal = Some(base + batchTokens)
+        } else if (replay) {
+          // post-merge replay gated to empty: the stored delta rows ARE
+          // the truth — keep them; invalidate the cached total so the
+          // next batch recovers it from the artifact
+          packTotal = None
+        } else packTotal = Some(base)
+      }
+      if (crashAfterManifestWrite)
+        throw new IllegalStateException("injected crash (test hook): " +
+          "manifest delta written, inventory merge not committed")
+      timed("merge") {
+        graft.ops.IngestOps.mergeAccepted(spark, key, accepted, "clean",
+          segLen, nDocsKnown = stageBuf
+            .collectFirst { case (`tag`, "4_decon", n, _) => n },
+          segDeltaKnown = Some(scala.concurrent.Await.result(segDeltaFuture,
+            scala.concurrent.duration.Duration.Inf)))
+      }
+      // join the concurrent drift job BEFORE the commit marker: a drift
+      // failure leaves the tag uncommitted (exactly the crash window the
+      // replay protocol already covers — a committed-artifact replay is
+      // a structural no-op), and the report buffer is complete before
+      // the method returns.
+      timed("await drift") {
+        driftFuture.foreach(f => scala.concurrent.Await.result(f,
+          scala.concurrent.duration.Duration.Inf))
+      }
+    } finally pending.foreach(f => scala.util.Try(
+      scala.concurrent.Await.ready(f, scala.concurrent.duration.Duration.Inf)))
     // the atomic commit point: both artifacts are now consistent.
     // The marker stores the INCOMING batch's fingerprint (already in
     // the stage accounting — no extra job) for tag-reuse detection.

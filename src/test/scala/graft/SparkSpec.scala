@@ -9,9 +9,6 @@ trait SparkSpec extends AnyFunSuite {
     .master("local[4]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
     .config(Tables.sessionConf)
     .getOrCreate()
 

@@ -166,6 +166,25 @@ class IngestOpsSpec extends SparkSpec {
       "compacted inventory sits below the threshold")
   }
 
+  test("sourceFiles lists every frame composed into the stages, " +
+      "a lazy parquet-backed evalGrams included") {
+    val corpus = docs.filter(pmod(col("doc_id"), lit(5)).isin(1, 2, 3))
+    val batch = docs.filter(pmod(col("doc_id"), lit(5)) === 4)
+      .localCheckpoint(true)
+    val key = s"src_${java.util.UUID.randomUUID().toString.take(8)}"
+    IngestOps.buildInventory(spark, key, corpus, "text")
+    // lazy: planned from the documents parquet, never materialized
+    val evalGrams = docs.filter(pmod(col("doc_id"), lit(50)) === 1)
+      .select(explode(split(lower(col("text")), " ")).as("g")).distinct()
+    val st = IngestOps.ingestBatch(spark, key, batch, "doc_id", "text",
+      Some(evalGrams))
+    assert(st.sourceFiles.exists(_.contains("documents.parquet")),
+      s"the evalGrams leaf is missing: ${st.sourceFiles.mkString(", ")}")
+    assert(st.sourceFiles.toSet == st.s4.inputFiles.toSet,
+      "sourceFiles must equal the files the composed s4 plan reads")
+    IngestOps.dropInventory(key)
+  }
+
   test("pipeline_ingest_incr equals pipeline_ingest (artifact path == recompute)") {
     val full = graft.SparkEntry.queries("pipeline_ingest")(spark, Sf0001)
       .collect().map(_.toSeq).toSeq

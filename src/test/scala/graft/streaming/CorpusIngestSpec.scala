@@ -649,4 +649,37 @@ class CorpusIngestSpec extends SparkSpec {
 
     graft.ops.IngestOps.dropInventory(key)
   }
+
+  test("a failed batch job leaves none of the batch's concurrent jobs " +
+      "running, and processBatch rethrows its error") {
+    val docs = graft.Tables.documents(spark, Sf0001)
+    val key = s"fail_${java.util.UUID.randomUUID().toString.take(6)}"
+    graft.ops.IngestOps.buildInventory(spark, key,
+      docs.filter(lit(false)), "text")
+    // string ids: the gate only partitions, orders and groups by the
+    // id, so the batch gates cleanly; the stage-accounting job casts
+    // it to long and fails (ANSI) on the one non-numeric id while the
+    // drift and segment-delta jobs of the same batch are running
+    val minId = docs.agg(min(col("doc_id"))).head.getLong(0)
+    val batch = docs.select(
+      when(col("doc_id") === minId, lit("bad-id"))
+        .otherwise(col("doc_id").cast("string")).as("doc_id"),
+      col("text"))
+    val wcounts = (corpusText + " " + corpusText).split(" ")
+      .groupBy(identity).map { case (w, xs) => (w, xs.length.toLong) }
+      .toArray.sortBy { case (w, n) => (-n, w) }
+    val loop = new IngestLoop(spark, key, "doc_id", "text", None, 16,
+      Some(graft.ops.WordPieceOps.trainVocab(wcounts, numMerges = 16)),
+      Some(graft.ops.BpeOps.trainMerges(wcounts, numMerges = 16)))
+    val ex = intercept[Exception] { loop.processBatch(batch, "b0") }
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("bad-id")),
+      s"the accounting job's cast error must propagate: $ex")
+    org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
+    val active = spark.sparkContext.statusTracker.getActiveJobIds
+    assert(active.isEmpty,
+      s"jobs still running after the failed batch: ${active.mkString(",")}")
+    assert(!graft.ops.IngestOps.batchCommitted(key, "b0"))
+    graft.ops.IngestOps.dropInventory(key)
+  }
 }
