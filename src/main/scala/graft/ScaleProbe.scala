@@ -84,12 +84,8 @@ object ScaleProbe {
 
   def deriveScaled(spark: SparkSession, baseDir: String,
       factor: Int): String = {
-    val sig = graft.ops.StorageOps.contentSignature(spark, baseDir)
-    val out = graft.ops.StorageOps.scratchPath(
-      s"scaleprobe_${factor}x_${java.lang.Long.toHexString(sig)}")
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(out)))
-      return out
-    val tmp = out + ".build-" + java.util.UUID.randomUUID().toString
+    val out = graft.ops.StorageOps.artifactPath(spark, baseDir,
+      s"scaleprobe_${factor}x")
     val copies = spark.range(factor.toLong).toDF("copy")
     def scaled(name: String): DataFrame = {
       val base = Tables.load(spark, baseDir, name)
@@ -133,17 +129,10 @@ object ScaleProbe {
         case _ => base
       }
     }
-    Tables.names.foreach { name =>
-      scaled(name).write.mode("overwrite").parquet(s"$tmp/$name.parquet")
-    }
-    try java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
-      java.nio.file.Paths.get(out),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch { case _: java.nio.file.FileAlreadyExistsException |
-                 _: java.nio.file.DirectoryNotEmptyException =>
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(tmp))
-    }
+    graft.ops.StorageOps.publish(out)(tmp =>
+      Tables.names.foreach { name =>
+        scaled(name).write.mode("overwrite").parquet(s"$tmp/$name.parquet")
+      })
     out
   }
 

@@ -3376,22 +3376,15 @@ object SparkEntry {
 
     // Same IVF search against the PERSISTED cell-partitioned index:
     // probe cells resolve to a static partition filter, so the scan
-    // reads only nprobe/nlist of the files. The cache path is keyed on
-    // a CONTENT signature of the source parquet (names + lengths +
-    // mtimes) PLUS the build params and format version — regenerated
-    // data, a parameter change, or an algorithm bump each get a fresh
-    // index; the write is atomic (scratch dir + rename) so a crashed
-    // or concurrent writer can never leave a partial artifact that
-    // exists() would then trust. Rows-only.
+    // reads only nprobe/nlist of the files. The index is a published
+    // artifact of the source parquet (ops.StorageOps). Rows-only.
     "ann_ivf_index" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
-      val model = ops.AnnOps.cachedIvf(s, s"$d/embeddings.parquet", emb,
+      val src = s"$d/embeddings.parquet"
+      val model = ops.AnnOps.cachedIvf(s, src, emb,
         "vec_id", "embedding", nlist = 8)
-      val sig = ops.StorageOps.contentSignature(s, s"$d/embeddings.parquet")
-      val path = ops.StorageOps.scratchPath(
-        s"ivf-index-${ops.AnnOps.ModelFormatVersion}_n8_" +
-          java.lang.Long.toHexString(sig))
-      ops.AnnOps.ensureIndex(path)(tmp =>
+      val path = ops.StorageOps.artifactPath(s, src, "ivf-index_n8")
+      ops.StorageOps.publish(path)(tmp =>
         ops.AnnOps.writeIvfIndex(emb, "vec_id", "embedding", model, tmp))
       ops.AnnOps.ivfTopKFromIndex(s, path, emb.filter(col("vec_id") < 5),
         "vec_id", "embedding", model, k = 10, nprobe = 3)
@@ -3403,12 +3396,9 @@ object SparkEntry {
     // cell, a probe is a partition-pruned scan of nprobe/nlist cell
     // directories reading m code ints per candidate, and the refine*k
     // shortlist fetches true vectors from the CORPUS by id. Index and
-    // models are keyed on the content signature + build params +
-    // format version, and the index write is atomic (scratch dir +
-    // rename) — regenerated data, changed params, an algorithm bump,
-    // or a crashed writer can never serve a stale or partial layout.
-    // Rows-only (recall gated in AnnOpsSpec, equality-vs-in-memory
-    // too).
+    // models are published artifacts of the source parquet
+    // (ops.StorageOps). Rows-only (recall gated in AnnOpsSpec,
+    // equality-vs-in-memory too).
     "ann_ivfpq_index" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
       val src = s"$d/embeddings.parquet"
@@ -3416,11 +3406,8 @@ object SparkEntry {
         nlist = 8)
       val pq = ops.AnnOps.cachedPq(s, src, emb, "vec_id", "embedding",
         m = 8, k = 64)
-      val sig = ops.StorageOps.contentSignature(s, src)
-      val path = ops.StorageOps.scratchPath(
-        s"ivfpq-index-${ops.AnnOps.ModelFormatVersion}_n8_m8_k64_" +
-          java.lang.Long.toHexString(sig))
-      ops.AnnOps.ensureIndex(path)(tmp =>
+      val path = ops.StorageOps.artifactPath(s, src, "ivfpq-index_n8_m8_k64")
+      ops.StorageOps.publish(path)(tmp =>
         ops.AnnOps.writeIvfPqIndex(emb, "vec_id", "embedding", ivf, pq, tmp))
       ops.AnnOps.ivfPqTopKFromIndex(s, path, emb,
         emb.filter(col("vec_id") < 5), "vec_id", "embedding", ivf, pq,
@@ -4790,8 +4777,8 @@ object SparkEntry {
 
     // General-L repeated-span report answered from the PERSISTED
     // suffix-array artifact: cachedSuffixArray stores (doc_id, off,
-    // sa_rank) as parquet keyed by the corpus content signature (the
-    // BPE/IVF cache discipline), so every call after the first — and
+    // sa_rank) as a parquet artifact of the corpus (ops.StorageOps),
+    // so every call after the first — and
     // every new L — is a parquet scan plus one boundary-exchange
     // adjacency pass, ZERO prefix-doubling jobs (job-count-gated in
     // SuffixArraySpec). Rows-only: span content reports as md5.
@@ -4835,8 +4822,8 @@ object SparkEntry {
 
     // The SAME ingest composition against the PERSISTED inventory
     // artifact (ops.IngestOps): the corpus md5 set and 16-token
-    // segment inventory are built ONCE per corpus bytes (content-
-    // signature-keyed parquet under the 0700 scratch root) and every
+    // segment inventory are built ONCE per corpus bytes (a parquet
+    // artifact, ops.StorageOps) and every
     // later batch reads only hash-compact inventory files plus the
     // batch itself — no stored corpus text is re-scanned
     // (IngestOpsSpec gates the second batch's inputFiles against the
@@ -4875,11 +4862,9 @@ object SparkEntry {
     // loop's tag-purity check on the `arrival` column).
     "pipeline_ingest_stream" -> ((s, d) => {
       val r = new IngestLoopRun(s, d, "ingstream")
-      val sig = ops.StorageOps.contentSignature(s, s"$d/documents.parquet")
-      val inDir = ops.StorageOps.scratchPath(
-        s"ingstream_v2_${java.lang.Long.toHexString(sig)}")
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(inDir))) {
-        val tmp = inDir + ".build-" + java.util.UUID.randomUUID().toString
+      val inDir = ops.StorageOps.artifactPath(s, s"$d/documents.parquet",
+        "ingstream")
+      ops.StorageOps.publish(inDir) { tmp =>
         val t0 = System.currentTimeMillis() - 120000
         r.arrivals.zipWithIndex.foreach { case ((tag, b), i) =>
           b.withColumn("arrival", lit(tag))
@@ -4887,14 +4872,6 @@ object SparkEntry {
           new java.io.File(s"$tmp/$tag").listFiles()
             .filter(_.getName.endsWith(".parquet"))
             .foreach(_.setLastModified(t0 + 60000L * i))
-        }
-        try java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
-          java.nio.file.Paths.get(inDir),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch { case _: java.nio.file.FileAlreadyExistsException |
-                     _: java.nio.file.DirectoryNotEmptyException =>
-          org.apache.commons.io.FileUtils.deleteDirectory(
-            new java.io.File(tmp))
         }
       }
       val loop = new graft.streaming.IngestLoop(s, r.key, "doc_id", "text",

@@ -616,7 +616,7 @@ object AnnOps {
     * under. Callers append batches ONLY through this path, so frozen
     * centroids and stored cells stay consistent by construction. */
   def ivfIndexPath(base: String, model: IvfModel): String =
-    s"${base}_${ModelFormatVersion}_g${modelGeneration(model)}"
+    s"${base}_${StorageOps.ArtifactVersion}_g${modelGeneration(model)}"
 
   /** INCREMENTAL APPEND to a persisted IVF index: assign the new batch
     * to its nearest FROZEN centroids and append the rows under the
@@ -642,45 +642,22 @@ object AnnOps {
     * `repartitionByRange(cid, id)` keeps each output task on a
     * contiguous cell range, so the hive-partitioned rewrite emits
     * one right-sized file per (task, cell) — the per-cell floor for a
-    * partitioned layout — while file COUNT is derived from on-disk
-    * bytes exactly like [[StorageOps.compact]]. Content is untouched
+    * partitioned layout — while file COUNT is [[StorageOps.compact]]'s
+    * byte-derived count. Content is untouched
     * (row-identical rewrite, spec-gated probe equality), and the path
     * — which embeds the model generation via [[ivfIndexPath]] — does
     * not change, so the content-signature discipline of every reader
     * keeps working: a compaction changes the layout's file listing,
     * any signature-keyed derived artifact rebuilds, and the frozen
     * model stays valid because assignments never move. The rewrite
-    * lands in a temp dir and swaps in atomically; a crashed compaction
-    * leaves the original layout untouched. */
+    * swaps in through [[StorageOps.swapInPlace]]. */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val df = spark.read.parquet(path)
-    val totalBytes = df.inputFiles.map { f =>
-      val p = new org.apache.hadoop.fs.Path(new java.net.URI(f))
-      p.getFileSystem(hconf).getFileStatus(p).getLen
-    }.sum
-    val nFiles = math.max(1, (totalBytes / targetFileBytes).toInt +
-      (if (totalBytes % targetFileBytes > 0) 1 else 0))
-    val run = java.util.UUID.randomUUID().toString
-    val tmp = s"$path.compact-$run"
-    df.repartitionByRange(nFiles, col("cid"), col("neighbor_id"))
-      .write.mode("overwrite").partitionBy("cid").parquet(tmp)
-    val old = s"$path.old-$run"
-    java.nio.file.Files.move(java.nio.file.Paths.get(path),
-      java.nio.file.Paths.get(old),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    try java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
-      java.nio.file.Paths.get(path),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch { case e: Throwable =>
-      // restore the original layout before propagating
-      java.nio.file.Files.move(java.nio.file.Paths.get(old),
-        java.nio.file.Paths.get(path),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      throw e
-    }
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(old))
+    val nFiles = StorageOps.compactedFileCount(spark, path, targetFileBytes)
+    StorageOps.swapInPlace(path)(tmp =>
+      spark.read.parquet(path)
+        .repartitionByRange(nFiles, col("cid"), col("neighbor_id"))
+        .write.mode("overwrite").partitionBy("cid").parquet(tmp))
   }
 
   /** Threshold-triggered [[compactIndex]] — the hook an append-heavy
@@ -850,119 +827,33 @@ object AnnOps {
 
   // ---- model cache -------------------------------------------------
 
-  /** Persist/load the kilobyte ANN models (IVF centroids, PQ
-    * codebooks) keyed by a CONTENT signature of the source parquet
-    * plus the build parameters: index construction is offline at
-    * scale, so a query run should load the artifact, not re-run
-    * Lloyd. Stale-proof exactly like the IVF layout cache
-    * ([[StorageOps.contentSignature]]): regenerated source data gets
-    * a new signature and a fresh build. Plain-text float lines
-    * (Float.toString round-trips exactly), temp-file + atomic rename
-    * so concurrent JVMs never read a half-written model.
-    *
-    * The cache lives under [[StorageOps.scratchPath]]'s per-user 0700
-    * root (the root's mode protects every artifact beneath it — one
-    * hardening site, not two) so another local user can neither read
-    * the models nor pre-plant files this framework would trust; each
-    * cache key carries a `_v1` format token so a change to the build
-    * algorithm or line format bumps the version and can never
-    * deserialize a stale-layout file. */
-  private def modelCacheDir = StorageOps.scratchPath("model-cache")
-
-  /** Bump when buildIvf/buildPq or the model line format changes.
-    * Persisted index layouts embed it in their paths too, so an
-    * algorithm change can never be served a stale on-disk index. */
-  private[graft] val ModelFormatVersion = "v1"
-
-  /** Materialize a persisted index layout at `path` exactly once,
-    * ATOMICALLY: the layout is written to a scratch sibling and
-    * directory-renamed into place, so a crashed writer can never
-    * leave a partial artifact that `exists()` would then trust
-    * forever, and two concurrent JVMs cannot overwrite-vs-scan race
-    * (the rename loser just discards its copy) — the same discipline
-    * as the model cache's temp-file + atomic rename. */
-  def ensureIndex(path: String)(write: String => Unit): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val target = Paths.get(path)
-    if (!Files.exists(target)) {
-      val tmp = path + ".tmp-" + java.util.UUID.randomUUID().toString
-      write(tmp)
-      try Files.move(Paths.get(tmp), target,
-        StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case (_: java.nio.file.FileAlreadyExistsException) |
-             (_: java.nio.file.DirectoryNotEmptyException) |
-             (_: java.nio.file.AccessDeniedException) =>
-          // another JVM won the race; discard our copy
-          Files.walk(Paths.get(tmp))
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => Files.deleteIfExists(f))
-      }
-    }
-  }
-
-  private def modelFile(key: String) =
-    java.nio.file.Paths.get(modelCacheDir, s"$key.txt")
-
-  private[ops] def saveRows(key: String, rows: Seq[String]): Unit = {
-    val dir = java.nio.file.Paths.get(modelCacheDir)
-    java.nio.file.Files.createDirectories(dir)
-    val tmp = java.nio.file.Files.createTempFile(dir, key, ".tmp")
-    java.nio.file.Files.write(tmp,
-      rows.mkString("\n").getBytes("UTF-8"))
-    try java.nio.file.Files.move(tmp, modelFile(key),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch { case _: java.nio.file.FileAlreadyExistsException =>
-      java.nio.file.Files.deleteIfExists(tmp) // another JVM won the race
-    }
-  }
-
-  private[ops] def loadRows(key: String): Option[Seq[String]] = {
-    val f = modelFile(key)
-    if (java.nio.file.Files.exists(f))
-      Some(new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-        .split("\n").toSeq)
-    else None
-  }
-
-  /** [[buildIvf]] behind the content-signature cache. */
+  /** [[buildIvf]] behind the artifact store
+    * ([[StorageOps.cachedRows]]); one centroid per line. */
   def cachedIvf(spark: org.apache.spark.sql.SparkSession,
       srcPath: String, corpus: DataFrame, idCol: String, vecCol: String,
       nlist: Int, iters: Int = 2): IvfModel = {
-    val sig = StorageOps.contentSignature(spark, srcPath)
-    val key = s"ivf_${ModelFormatVersion}_${nlist}_${iters}_${java.lang.Long.toHexString(sig)}"
-    loadRows(key) match {
-      case Some(rows) =>
-        IvfModel(rows.map(_.split(",").map(_.toFloat)).toArray)
-      case None =>
-        val m = buildIvf(corpus, idCol, vecCol, nlist, iters)
-        saveRows(key, m.centroids.toSeq.map(_.mkString(",")))
-        m
-    }
+    val rows = StorageOps.cachedRows(spark, srcPath, s"ivf_${nlist}_$iters")(
+      buildIvf(corpus, idCol, vecCol, nlist, iters)
+        .centroids.toSeq.map(_.mkString(",")))
+    IvfModel(rows.map(_.split(",").map(_.toFloat)).toArray)
   }
 
-  /** [[buildPq]] behind the content-signature cache. */
+  /** [[buildPq]] behind the artifact store; line format
+    * "<mi>;f0,f1,..." — mi-major, one codeword per line. */
   def cachedPq(spark: org.apache.spark.sql.SparkSession,
       srcPath: String, corpus: DataFrame, idCol: String, vecCol: String,
       m: Int = 8, k: Int = 64, iters: Int = 2): PqModel = {
-    val sig = StorageOps.contentSignature(spark, srcPath)
-    val key = s"pq_${ModelFormatVersion}_${m}_${k}_${iters}_${java.lang.Long.toHexString(sig)}"
-    loadRows(key) match {
-      case Some(rows) =>
-        // line format: "<mi>;f0,f1,..." — mi-major, codeword per line
-        val books = rows.map { line =>
-          val Array(mi, cw) = line.split(";", 2)
-          (mi.toInt, cw.split(",").map(_.toFloat))
-        }.groupBy(_._1).toSeq.sortBy(_._1)
-          .map(_._2.map(_._2).toArray).toArray
-        PqModel(books(0)(0).length, books)
-      case None =>
-        val model = buildPq(corpus, idCol, vecCol, m, k, iters)
-        saveRows(key, model.codebooks.zipWithIndex.toSeq.flatMap {
-          case (book, mi) => book.toSeq.map(cw => s"$mi;${cw.mkString(",")}")
+    val rows = StorageOps.cachedRows(spark, srcPath, s"pq_${m}_${k}_$iters")(
+      buildPq(corpus, idCol, vecCol, m, k, iters).codebooks.zipWithIndex
+        .toSeq.flatMap { case (book, mi) =>
+          book.toSeq.map(cw => s"$mi;${cw.mkString(",")}")
         })
-        model
-    }
+    val books = rows.map { line =>
+      val Array(mi, cw) = line.split(";", 2)
+      (mi.toInt, cw.split(",").map(_.toFloat))
+    }.groupBy(_._1).toSeq.sortBy(_._1)
+      .map(_._2.map(_._2).toArray).toArray
+    PqModel(books(0)(0).length, books)
   }
 
   /** (mi, book) rows — one per subspace, each carrying the codebook as

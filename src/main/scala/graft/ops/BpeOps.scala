@@ -114,33 +114,25 @@ object BpeOps {
   def encode(text: Column, model: BpeModel): Column =
     BpeFunctions.bpeEncode(text, model)
 
-  /** [[train]] behind the content-signature model cache (same
-    * discipline as AnnOps.cachedIvf: per-user 0700 scratch dir,
-    * format-version + params + corpus-content key, atomic-rename
-    * race-safe) — the tokenizer is THE pipeline artifact every
-    * training run versions; re-tokenizing with a silently different
-    * model is the classic corpus bug, and the content key makes it
-    * structurally impossible. Line format: one merge per line,
-    * "left right" (symbols never contain whitespace). */
+  /** [[train]] behind the artifact store
+    * ([[StorageOps.cachedRows]]) — the tokenizer is THE pipeline
+    * artifact every training run versions; re-tokenizing with a
+    * silently different model is the classic corpus bug, and the
+    * content key makes it structurally impossible. Line format: one
+    * merge per line, "left right" (symbols never contain whitespace). */
   def cachedTrain(spark: org.apache.spark.sql.SparkSession,
       srcPath: String, docs: DataFrame, text: Column, numMerges: Int,
       maxTypes: Int = 100000): BpeModel = {
-    val sig = StorageOps.contentSignature(spark, srcPath)
-    val key = s"bpe_${AnnOps.ModelFormatVersion}_${numMerges}_${maxTypes}_" +
-      java.lang.Long.toHexString(sig)
-    AnnOps.loadRows(key) match {
-      case Some(rows) =>
-        val pairs = rows.filter(_.nonEmpty).map { line =>
-          val i = line.indexOf(' ')
-          (line.substring(0, i), line.substring(i + 1))
-        }
-        new BpeModel(pairs.map(_._1).toArray, pairs.map(_._2).toArray)
-      case None =>
-        val m = train(docs, text, numMerges, maxTypes)
-        AnnOps.saveRows(key,
-          m.lefts.zip(m.rights).toSeq.map { case (l, r) => s"$l $r" })
-        m
+    val rows = StorageOps.cachedRows(spark, srcPath,
+      s"bpe_${numMerges}_$maxTypes") {
+      val m = train(docs, text, numMerges, maxTypes)
+      m.lefts.zip(m.rights).toSeq.map { case (l, r) => s"$l $r" }
     }
+    val pairs = rows.filter(_.nonEmpty).map { line =>
+      val i = line.indexOf(' ')
+      (line.substring(0, i), line.substring(i + 1))
+    }
+    new BpeModel(pairs.map(_._1).toArray, pairs.map(_._2).toArray)
   }
 
   /** Reference single-string encode for tests/oracles. */

@@ -694,22 +694,32 @@ object DedupOps {
     * codegen'd); exactness vs raw-shingle ground truth is
     * ContaminationAndPiiSpec-gated. */
   def evalOverlap(corpus: DataFrame, evalSet: DataFrame, idCol: String,
-      textCol: String, shingleN: Int = 3, minOverlap: Int = 2): DataFrame = {
-    def grams(df: DataFrame) =
-      HashFunctions.shingleHashes(tokens(col(textCol)), shingleN)
-    val corpusGrams = corpus.select(col(idCol),
-      explode(grams(corpus)).as("g")) // kernel output is already distinct
-    val evalGrams = evalSet.select(explode(grams(evalSet)).as("g"))
-      .distinct()
-    val overlap = corpusGrams.join(broadcast(evalGrams), Seq("g"))
+      textCol: String, shingleN: Int = 3, minOverlap: Int = 2): DataFrame =
+    overlapReport(corpus, corpusShingleGrams(corpus, idCol, textCol, shingleN),
+      evalShingleGrams(evalSet, textCol, shingleN), idCol, minOverlap)
+
+  /** The shingle-hash gram array of `textCol` — the one gram expression
+    * both sides of every decontamination variant use. */
+  private def shingleGrams(textCol: String, shingleN: Int): Column =
+    HashFunctions.shingleHashes(tokens(col(textCol)), shingleN)
+
+  /** (id, g) per corpus document and distinct gram (the kernel output
+    * is already distinct per document). */
+  private def corpusShingleGrams(corpus: DataFrame, idCol: String,
+      textCol: String, shingleN: Int): DataFrame =
+    corpus.select(col(idCol), explode(shingleGrams(textCol, shingleN)).as("g"))
+
+  /** Per corpus document: how many of its (id, g) `candidates` hit the
+    * exact eval gram set, and the contamination flag at `minOverlap`. */
+  private def overlapReport(corpus: DataFrame, candidates: DataFrame,
+      evalGrams: DataFrame, idCol: String, minOverlap: Int): DataFrame = {
+    val overlap = candidates.join(broadcast(evalGrams), Seq("g"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_overlap"))
+    val n = coalesce(col("n_overlap"), lit(0L))
     corpus.select(col(idCol))
       .join(overlap, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
-        (coalesce(col("n_overlap"), lit(0L)) >= minOverlap)
-          .as("contaminated"))
+      .select(col(idCol), n.as("n_overlap"), (n >= minOverlap).as("contaminated"))
   }
 
   /** [[evalOverlap]] with a BLOOM-GATED first stage — the
@@ -729,31 +739,18 @@ object DedupOps {
       idCol: String, textCol: String, shingleN: Int = 3,
       minOverlap: Int = 2, fpp: Double = 0.01,
       bloomBytes: Option[Array[Byte]] = None): DataFrame = {
-    def grams(df: DataFrame) =
-      HashFunctions.shingleHashes(tokens(col(textCol)), shingleN)
-    val evalGrams = evalSet.select(explode(grams(evalSet)).as("g"))
-      .distinct()
+    val evalGrams = evalShingleGrams(evalSet, textCol, shingleN)
       .localCheckpoint(true) // referenced twice: filter build + exact join
-    val candidates = corpus
-      .select(col(idCol), explode(grams(corpus)).as("g"))
+    val candidates = corpusShingleGrams(corpus, idCol, textCol, shingleN)
       .filter(bloomMightContain(
         bloomBytes.getOrElse(buildEvalBloom(evalGrams, fpp)), col("g")))
-    val overlap = candidates.join(broadcast(evalGrams), Seq("g"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_overlap"))
-    corpus.select(col(idCol))
-      .join(overlap, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
-        (coalesce(col("n_overlap"), lit(0L)) >= minOverlap)
-          .as("contaminated"))
+    overlapReport(corpus, candidates, evalGrams, idCol, minOverlap)
   }
 
   /** Serialized bloom filter over a one-column frame of gram hashes —
-    * the reusable per-eval-release decontamination artifact. Persist
-    * the bytes once (e.g. under [[StorageOps.scratchPath]] keyed by
-    * the eval set's content signature) and probe every later corpus
-    * batch with [[bloomMightContain]] without re-reading the eval
+    * the reusable per-eval-release decontamination artifact
+    * ([[cachedEvalBloom]] persists it): every later corpus batch
+    * probes it with [[bloomMightContain]] without re-reading the eval
     * set. */
   def buildEvalBloom(evalGrams: DataFrame, fpp: Double = 0.01,
       col0: String = "g"): Array[Byte] = {
@@ -769,33 +766,22 @@ object DedupOps {
     * construction to the [[evalOverlapBloom]] probe side. */
   def evalShingleGrams(evalSet: DataFrame, textCol: String,
       shingleN: Int = 3): DataFrame =
-    evalSet.select(explode(HashFunctions.shingleHashes(
-      tokens(col(textCol)), shingleN)).as("g")).distinct()
+    evalSet.select(explode(shingleGrams(textCol, shingleN)).as("g"))
+      .distinct()
 
-  /** [[buildEvalBloom]] behind the content-signature artifact cache —
-    * the persisted per-eval-release flow: the filter bytes are built
-    * ONCE per eval-set release (keyed by format version, fpp, a caller
-    * tag and the eval source's content signature) and every later
-    * corpus batch probes the loaded bytes with no eval re-read. Same
-    * discipline as the ANN/BPE model caches: per-user 0700 scratch
-    * dir, atomic-rename race-safe, content key makes serving a stale
-    * filter structurally impossible. Bytes travel base64, one line. */
+  /** [[buildEvalBloom]] behind the artifact store
+    * ([[StorageOps.cachedRows]], keyed by a caller tag and fpp) — the
+    * persisted per-eval-release flow: the filter bytes are built ONCE
+    * per eval-set release and every later corpus batch probes the
+    * loaded bytes with no eval re-read. Bytes travel base64, one line. */
   def cachedEvalBloom(spark: org.apache.spark.sql.SparkSession,
       srcPath: String, tag: String, evalGrams: DataFrame,
-      fpp: Double = 0.01): Array[Byte] = {
-    val sig = StorageOps.contentSignature(spark, srcPath)
-    val key = s"bloom_${AnnOps.ModelFormatVersion}_${tag}_" +
-      s"${math.round(fpp * 1e6)}_${java.lang.Long.toHexString(sig)}"
-    AnnOps.loadRows(key) match {
-      case Some(rows) =>
-        java.util.Base64.getDecoder.decode(rows.head)
-      case None =>
-        val bytes = buildEvalBloom(evalGrams, fpp)
-        AnnOps.saveRows(key,
-          Seq(java.util.Base64.getEncoder.encodeToString(bytes)))
-        bytes
-    }
-  }
+      fpp: Double = 0.01): Array[Byte] =
+    java.util.Base64.getDecoder.decode(
+      StorageOps.cachedRows(spark, srcPath,
+        s"bloom_${tag}_${math.round(fpp * 1e6)}")(Seq(
+        java.util.Base64.getEncoder.encodeToString(
+          buildEvalBloom(evalGrams, fpp)))).head)
 
   /** Codegen'd membership probe of a long column against serialized
     * bloom bytes (Catalyst's own BloomFilterMightContain — the same

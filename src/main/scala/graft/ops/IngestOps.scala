@@ -11,9 +11,8 @@ import org.apache.spark.sql.functions._
   * corpus's doc-md5 set and 16-token segment inventory from the full
   * corpus text on every batch. At 100 TB that is a full-corpus scan
   * per arriving shard. This object persists both inventories ONCE
-  * (parquet under the content-signature-keyed 0700 scratch root — the
-  * [[SuffixArrayOps.cachedSuffixArray]] / [[DedupOps.cachedEvalBloom]]
-  * discipline) and MERGES each accepted batch in, so batch N+1 reads
+  * (parquet in the [[StorageOps.artifactPath]] store) and MERGES each
+  * accepted batch in, so batch N+1 reads
   * only (a) the batch itself and (b) the hash-compact inventories —
   * never stored corpus text (IngestOpsSpec gates `inputFiles` of the
   * second batch's plan against the corpus source path).
@@ -36,10 +35,8 @@ import org.apache.spark.sql.functions._
   */
 object IngestOps {
 
-  private val FormatVersion = "v1"
-
-  private def invRoot(key: String): String =
-    StorageOps.scratchPath(s"inv_${FormatVersion}_$key")
+  private[graft] def invRoot(key: String): String =
+    StorageOps.scratchPath(s"inv_$key")
 
   private def md5Dir(key: String): String = s"${invRoot(key)}/md5"
   private def segDir(key: String): String = s"${invRoot(key)}/seg"
@@ -90,36 +87,21 @@ object IngestOps {
       .select(md5(col("seg")).as("sh"), xxhash64(col("seg")).as("sx"))
       .distinct()
 
-  /** Build and atomically publish the inventory for a stored corpus
-    * under `key` (overwrites nothing — losing a publish race to an
-    * equivalent build is harmless, the winner's bytes serve). */
+  /** Build and publish ([[StorageOps.publish]]) the inventory for a
+    * stored corpus under `key`; a no-op when it exists. */
   def buildInventory(spark: SparkSession, key: String, corpus: DataFrame,
-      textCol: String, segLen: Int = 16): Unit = {
-    val root = invRoot(key)
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(root))) return
-    val tmp = root + ".build-" + java.util.UUID.randomUUID().toString
-    docMd5s(corpus, textCol).write.mode("overwrite").parquet(s"$tmp/md5")
-    docSegments(corpus, textCol, segLen)
-      .write.mode("overwrite").parquet(s"$tmp/seg")
-    try java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
-      java.nio.file.Paths.get(root),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch { case _: java.nio.file.FileAlreadyExistsException |
-                 _: java.nio.file.DirectoryNotEmptyException =>
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(tmp))
+      textCol: String, segLen: Int = 16): Unit =
+    StorageOps.publish(invRoot(key)) { tmp =>
+      docMd5s(corpus, textCol).write.mode("overwrite").parquet(s"$tmp/md5")
+      docSegments(corpus, textCol, segLen)
+        .write.mode("overwrite").parquet(s"$tmp/seg")
     }
-  }
 
-  /** [[buildInventory]] keyed by the SOURCE PATH's content signature
-    * (plus a caller tag for slices of the same path): first call per
-    * corpus bytes builds, every later call is a no-op returning the
-    * key. Regenerated data at the same path changes the signature and
-    * rebuilds — a stale inventory is structurally unservable. */
+  /** [[buildInventory]] under an artifact key of the source path (plus
+    * a caller tag for slices of the same path); returns the key. */
   def cachedInventory(spark: SparkSession, srcPath: String, tag: String,
       corpus: DataFrame, textCol: String, segLen: Int = 16): String = {
-    val sig = StorageOps.contentSignature(spark, srcPath)
-    val key = s"${tag}_${segLen}_${java.lang.Long.toHexString(sig)}"
+    val key = StorageOps.artifactKey(spark, srcPath, s"${tag}_$segLen")
     buildInventory(spark, key, corpus, textCol, segLen)
     key
   }
@@ -149,9 +131,8 @@ object IngestOps {
   }
 
   /** Content-preserving compact-and-swap of ONE append-accumulating
-    * parquet dir when its file count passes `maxFiles`: rewrite to
-    * byte-derived right-sized files in a temp dir, then swap in
-    * atomically (a crashed compaction leaves the original intact).
+    * parquet dir when its file count passes `maxFiles`:
+    * [[StorageOps.compact]] through [[StorageOps.swapInPlace]].
     * Returns whether a compaction ran. The shared primitive behind
     * [[compactInventoryIfNeeded]] and the ingest loop's pack-manifest
     * maintenance. */
@@ -160,26 +141,8 @@ object IngestOps {
       targetFileBytes: Long = 128L * 1024 * 1024): Boolean = {
     val n = parquetCount(dir)
     val needs = n > 0 && n > maxFiles
-    if (needs) {
-      val run = java.util.UUID.randomUUID().toString
-      val tmp = s"$dir.compact-$run"
-      StorageOps.compact(spark, dir, tmp, targetFileBytes)
-      val old = s"$dir.old-$run"
-      java.nio.file.Files.move(java.nio.file.Paths.get(dir),
-        java.nio.file.Paths.get(old),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      try java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
-        java.nio.file.Paths.get(dir),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch { case e: Throwable =>
-        java.nio.file.Files.move(java.nio.file.Paths.get(old),
-          java.nio.file.Paths.get(dir),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        throw e
-      }
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(old))
-    }
+    if (needs) StorageOps.swapInPlace(dir)(tmp =>
+      StorageOps.compact(spark, dir, tmp, targetFileBytes))
     needs
   }
 

@@ -101,33 +101,22 @@ object PcaOps {
     graft.functions.MomentsBuffer.toBytes(acc)
   }
 
-  /** [[momentsBytes]] behind the content-signature artifact cache —
+  /** [[momentsBytes]] behind the artifact store
+    * ([[StorageOps.cachedRows]], keyed by caller tag and dimension) —
     * the persisted incremental-PCA flow at 100 TB: each shard's exact
-    * integer moments are computed ONCE and stored (keyed by format
-    * version, caller tag, dimension and the shard source's content
-    * signature — the BPE/IVF/bloom cache discipline: per-user 0700
-    * dir, atomic-rename race-safe, stale serving structurally
-    * impossible). A new corpus release fits by merging the persisted
-    * artifacts with [[mergeMomentsBytes]] — nothing is re-scanned,
-    * and because the accumulators are integer sums, merge-then-fit
-    * through the cache is bit-identical to fitting the union
-    * (PcaSpec gates the identity THROUGH the cache). */
+    * integer moments are computed ONCE and stored. A new corpus
+    * release fits by merging the persisted artifacts with
+    * [[mergeMomentsBytes]] — nothing is re-scanned, and because the
+    * accumulators are integer sums, merge-then-fit through the cache
+    * is bit-identical to fitting the union (PcaSpec gates the identity
+    * THROUGH the cache). Bytes travel base64, one line. */
   def cachedMomentsBytes(spark: org.apache.spark.sql.SparkSession,
       srcPath: String, tag: String, df: DataFrame, vecCol: String,
-      d: Int): Array[Byte] = {
-    val sig = StorageOps.contentSignature(spark, srcPath)
-    val key = s"pcamom_${AnnOps.ModelFormatVersion}_${tag}_${d}_" +
-      java.lang.Long.toHexString(sig)
-    AnnOps.loadRows(key) match {
-      case Some(rows) =>
-        java.util.Base64.getDecoder.decode(rows.head)
-      case None =>
-        val bytes = momentsBytes(df, vecCol, d)
-        AnnOps.saveRows(key,
-          Seq(java.util.Base64.getEncoder.encodeToString(bytes)))
-        bytes
-    }
-  }
+      d: Int): Array[Byte] =
+    java.util.Base64.getDecoder.decode(
+      StorageOps.cachedRows(spark, srcPath, s"pcamom_${tag}_$d")(Seq(
+        java.util.Base64.getEncoder.encodeToString(
+          momentsBytes(df, vecCol, d)))).head)
 
   /** Fit from pre-aggregated moments bytes (see [[mergeMomentsBytes]]). */
   def fitFromMoments(bytes: Array[Byte], k: Int): PcaModel = {

@@ -162,8 +162,8 @@ object QualityClassifierOps {
     beta
   }
 
-  /** [[train]] behind the content-signature artifact cache (the
-    * [[BpeOps.cachedTrain]] pattern): the learned coefficients are a
+  /** [[train]] behind the artifact store
+    * ([[StorageOps.cachedRows]]): the learned coefficients are a
     * bit-deterministic function of the corpus, and `Double.toString`
     * round-trips, so the persisted beta is byte-for-byte the one a
     * fresh IRLS run would produce — queries that CONSUME the
@@ -171,18 +171,10 @@ object QualityClassifierOps {
     * training scans, while `pipeline_quality_classifier` itself keeps
     * exercising the full training path. */
   def cachedTrain(spark: org.apache.spark.sql.SparkSession,
-      srcPath: String, feats: => DataFrame): Array[Double] = {
-    val sig = StorageOps.contentSignature(spark, srcPath)
-    val key = s"qclf_${AnnOps.ModelFormatVersion}_" +
-      java.lang.Long.toHexString(sig)
-    AnnOps.loadRows(key) match {
-      case Some(rows) => rows.filter(_.nonEmpty).map(_.toDouble).toArray
-      case None =>
-        val b = train(feats)
-        AnnOps.saveRows(key, b.toSeq.map(_.toString))
-        b
-    }
-  }
+      srcPath: String, feats: => DataFrame): Array[Double] =
+    StorageOps.cachedRows(spark, srcPath, "qclf")(
+      train(feats).toSeq.map(_.toString))
+      .filter(_.nonEmpty).map(_.toDouble).toArray
 
   /** Probability-of-quality score column under trained `beta`. */
   def score(beta: Array[Double]): Column = sigmoid(zCol(beta))

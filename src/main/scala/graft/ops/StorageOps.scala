@@ -1,5 +1,9 @@
 package graft.ops
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,11 +20,40 @@ import org.apache.spark.sql.functions._
   */
 object StorageOps {
 
-  /** Per-user 0700 scratch root for derived artifacts (persisted
-    * index layouts, z-order copies). A predictable name under the
-    * shared /tmp would let another local user pre-plant an artifact
-    * the framework then trusts — the same hazard as the ANN model
-    * cache, closed the same way. */
+  // ------------------------------------------------------------------
+  // Derived artifacts
+  // ------------------------------------------------------------------
+
+  /** ARTIFACT POLICY — the one place that decides how a derived
+    * artifact (a trained model, a bloom filter, an ingest inventory,
+    * an index layout, a suffix array, a derived dataset) is stored,
+    * keyed, published and reused. Every `cached*` operator and every
+    * persisted layout goes through the functions below:
+    *  - Root: artifacts live under [[scratchPath]], a per-user 0700
+    *    directory. A predictable name under the shared /tmp would let
+    *    another local user read artifacts or pre-plant one the
+    *    framework then trusts; the root's mode closes that for every
+    *    artifact beneath it.
+    *  - Key: [[artifactPath]] is the caller's name (which carries the
+    *    build parameters), the one [[ArtifactVersion]] and the source
+    *    path's [[contentSignature]]. Regenerated source bytes, changed
+    *    parameters or a version bump each land on a new path, so a
+    *    stale artifact can never be served.
+    *  - Publish: [[publish]] builds into a temp sibling and renames it
+    *    into place atomically, so a crashed or failed builder leaves
+    *    nothing that `exists()` would trust, and no temp behind.
+    *    [[cachedRows]] is the same publish for line-encoded models.
+    *  - Races: two builders of one key produce equivalent bytes
+    *    (artifacts are pure functions of their key), so it does not
+    *    matter whose copy serves: a rename that fails because another
+    *    copy is already in place drops ours. A failed rename with no
+    *    copy in place is a real error and propagates.
+    *  - Swap: [[swapInPlace]] rewrites a mutable artifact (a
+    *    compacted index or inventory) with restore-on-failure.
+    * Bumping [[ArtifactVersion]] rebuilds every artifact once. */
+  private[graft] val ArtifactVersion = "v2"
+
+  /** The per-user 0700 scratch root, with `name` appended. */
   def scratchPath(name: String): String = {
     val root = java.nio.file.Paths.get(
       s"${sys.props("java.io.tmpdir")}/graft-scratch-${sys.props("user.name")}")
@@ -37,6 +70,64 @@ object StorageOps {
       java.nio.file.Files.createDirectories(root) // non-POSIX FS
     }
     s"$root/$name"
+  }
+
+  /** The file name an artifact built from `srcPath` lives under (see
+    * the policy above); [[artifactPath]] is its full path. */
+  private[graft] def artifactKey(spark: SparkSession, srcPath: String,
+      name: String): String =
+    s"${name}_${ArtifactVersion}_" +
+      java.lang.Long.toHexString(contentSignature(spark, srcPath))
+
+  def artifactPath(spark: SparkSession, srcPath: String,
+      name: String): String =
+    scratchPath(artifactKey(spark, srcPath, name))
+
+  /** Materialize the artifact at `path` exactly once: `write` fills a
+    * temp sibling, which is renamed into place atomically. A throwing
+    * writer leaves neither the target nor the temp behind. */
+  def publish(path: String)(write: String => Unit): Unit = {
+    val target = Paths.get(path)
+    if (Files.exists(target)) return
+    val tmp = s"$path.tmp-${java.util.UUID.randomUUID()}"
+    try {
+      write(tmp)
+      try Files.move(Paths.get(tmp), target, StandardCopyOption.ATOMIC_MOVE)
+      catch { case _: java.io.IOException if Files.exists(target) => }
+    } finally FileUtils.deleteQuietly(new java.io.File(tmp))
+  }
+
+  /** A line-encoded artifact (a model's rows) built from `srcPath`:
+    * the stored rows, or — on a miss — `build`'s rows, published and
+    * read back. Callers decode the result on both paths, so a cached
+    * model and a fresh one come from the same decoder. */
+  def cachedRows(spark: SparkSession, srcPath: String, name: String)(
+      build: => Seq[String]): Seq[String] = {
+    val path = artifactPath(spark, srcPath, name) + ".txt"
+    publish(path)(tmp =>
+      Files.write(Paths.get(tmp), build.mkString("\n").getBytes(UTF_8)))
+    new String(Files.readAllBytes(Paths.get(path)), UTF_8).split("\n").toSeq
+  }
+
+  /** Replace the directory at `path` in place with what `write` puts
+    * in a temp sibling: rename old out, rename new in, and rename old
+    * back if that fails. A failed `write` leaves `path` untouched and
+    * no temp behind. */
+  def swapInPlace(path: String)(write: String => Unit): Unit = {
+    val run = java.util.UUID.randomUUID().toString
+    val (cur, tmp, old) =
+      (Paths.get(path), Paths.get(s"$path.compact-$run"),
+        Paths.get(s"$path.old-$run"))
+    try {
+      write(tmp.toString)
+      Files.move(cur, old, StandardCopyOption.ATOMIC_MOVE)
+      try Files.move(tmp, cur, StandardCopyOption.ATOMIC_MOVE)
+      catch { case e: Throwable =>
+        Files.move(old, cur, StandardCopyOption.ATOMIC_MOVE)
+        throw e
+      }
+      FileUtils.deleteDirectory(old.toFile)
+    } finally FileUtils.deleteQuietly(tmp.toFile)
   }
 
   /** SIZE-GATED kernel-input redistribution (optimization guide §2.5,
@@ -206,16 +297,22 @@ object StorageOps {
   def compact(spark: SparkSession, inPath: String, outPath: String,
       targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
     require(outPath != inPath, "compact to a new location, then swap")
+    spark.read.parquet(inPath)
+      .repartition(compactedFileCount(spark, inPath, targetFileBytes))
+      .write.mode(SaveMode.Overwrite).parquet(outPath)
+  }
+
+  /** [[compact]]'s output file count: the dataset's on-disk bytes over
+    * `targetFileBytes`, rounded up, at least one. */
+  private[graft] def compactedFileCount(spark: SparkSession, path: String,
+      targetFileBytes: Long): Int = {
     val hconf = spark.sparkContext.hadoopConfiguration
-    val totalBytes = spark.read.parquet(inPath).inputFiles.map { f =>
+    val totalBytes = spark.read.parquet(path).inputFiles.map { f =>
       val p = new org.apache.hadoop.fs.Path(new java.net.URI(f))
       p.getFileSystem(hconf).getFileStatus(p).getLen
     }.sum
-    val nFiles = math.max(1, (totalBytes / targetFileBytes).toInt +
+    math.max(1, (totalBytes / targetFileBytes).toInt +
       (if (totalBytes % targetFileBytes > 0) 1 else 0))
-    spark.read.parquet(inPath)
-      .repartition(nFiles)
-      .write.mode(SaveMode.Overwrite).parquet(outPath)
   }
 
   /** CDC-style upsert (MERGE): rows of `updates` replace base rows
@@ -238,10 +335,7 @@ object StorageOps {
 
   /** Order-independent content signature of a dataset path: XOR of a
     * per-file hash over (name, length, mtime), resolved through the
-    * Hadoop FileSystem API. Keys derived artifacts (e.g. a persisted
-    * ANN index) to the data they were built from, so regenerated
-    * source data at the same path can never be served from a stale
-    * cache — the signature changes, the artifact rebuilds. */
+    * Hadoop FileSystem API — the source half of [[artifactKey]]. */
   def contentSignature(spark: SparkSession, path: String): Long = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -274,16 +368,9 @@ object StorageOps {
       // a table location left by a previous process is invisible to
       // this catalog and would fail the write — clear the stale copy
       // (graft-owned derived artifact, deterministically rebuilt)
-      val loc = new java.io.File(
+      FileUtils.deleteDirectory(new java.io.File(
         s"${spark.conf.get("spark.sql.warehouse.dir")
-          .stripPrefix("file:")}/$tbl")
-      if (loc.exists()) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete()
-        }
-        rm(loc)
-      }
+          .stripPrefix("file:")}/$tbl"))
       graft.Tables.load(spark, sfDir, name)
         .write.mode(SaveMode.Overwrite)
         .bucketBy(buckets, bucketCol)

@@ -285,42 +285,20 @@ object SuffixArrayOps {
         col("n_positions"))
   }
 
-  /** [[suffixArray]] behind a persisted parquet artifact keyed by the
-    * corpus CONTENT SIGNATURE (the BPE/IVF cache discipline —
-    * [[StorageOps.contentSignature]] over the source path, 0700
-    * scratch root): first call builds the array with the
-    * prefix-doubling jobs and writes (doc_id, off, sa_rank) under the
-    * signature-keyed directory; every later call on the same corpus
+  /** [[suffixArray]] as a persisted parquet artifact
+    * ([[StorageOps.publish]] under an [[StorageOps.artifactPath]] of
+    * the source path; `variant` names the slice/filter of that path):
+    * the first call builds the array with the prefix-doubling jobs and
+    * writes (doc_id, off, sa_rank); every later call on the same corpus
     * bytes is a plain parquet scan — ZERO doubling rounds
-    * (job-count-gated in SuffixArraySpec). Regenerated data at the
-    * same path changes the signature and rebuilds; a concurrent
-    * builder loses the rename race harmlessly (same-signature builds
-    * are byte-equivalent ranks). */
+    * (job-count-gated in SuffixArraySpec). */
   def cachedSuffixArray(spark: SparkSession, srcPath: String,
       variant: String, docs: DataFrame, idCol: String, textCol: String,
       maxLen: Int = 256, numParts: Int = 0): DataFrame = {
-    val sig = StorageOps.contentSignature(spark, srcPath)
-    // `variant` distinguishes different SLICES/filters of the same
-    // source path (the cachedEvalBloom discipline) — the signature
-    // alone only keys the bytes on disk
-    val dir = StorageOps.scratchPath(
-      s"sa_v1_${variant}_${maxLen}_${java.lang.Long.toHexString(sig)}")
-    val done = java.nio.file.Paths.get(dir, "_SUCCESS")
-    if (!java.nio.file.Files.exists(done)) {
-      val tmp = dir + ".build-" + java.util.UUID.randomUUID().toString
+    val dir = StorageOps.artifactPath(spark, srcPath, s"sa_${variant}_$maxLen")
+    StorageOps.publish(dir)(tmp =>
       suffixArray(docs, idCol, textCol, maxLen, numParts)
-        .write.mode("overwrite").parquet(tmp)
-      try java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
-        java.nio.file.Paths.get(dir),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: java.nio.file.FileAlreadyExistsException |
-                   _: java.nio.file.DirectoryNotEmptyException =>
-        // another build won the publish race; its artifact is
-        // equivalent (same signature -> same ranks) — drop ours
-        org.apache.commons.io.FileUtils.deleteDirectory(
-          new java.io.File(tmp))
-      }
-    }
+        .write.mode("overwrite").parquet(tmp))
     spark.read.parquet(dir)
   }
 

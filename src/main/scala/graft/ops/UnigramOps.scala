@@ -262,36 +262,28 @@ object UnigramOps {
     trainFromCounts(BpeOps.wordTypeCounts(docs, text, maxTypes),
       vocabSize, maxPieceLen, emIters)
 
-  /** [[train]] behind the content-signature model cache (same
-    * discipline as BpeOps.cachedTrain). Line format: raw IEEE-754 bits
-    * of the log-prob, a space, the piece — exact round-trip, and
-    * pieces never contain whitespace (they are pre-token substrings). */
+  /** [[train]] behind the artifact store
+    * ([[StorageOps.cachedRows]]). Line format: raw IEEE-754 bits of the
+    * log-prob, a space, the piece — exact round-trip, and pieces never
+    * contain whitespace (they are pre-token substrings). */
   def cachedTrain(spark: org.apache.spark.sql.SparkSession,
       srcPath: String, docs: DataFrame, text: Column, vocabSize: Int,
       maxTypes: Int = 100000): UnigramModel = {
-    val sig = StorageOps.contentSignature(spark, srcPath)
-    // the "p" marks the portable (product-space) E-step model format:
-    // models trained by the pre-r10 log-space E-step must not serve
-    val key = s"uni_${AnnOps.ModelFormatVersion}p_${vocabSize}_${maxTypes}_" +
-      java.lang.Long.toHexString(sig)
-    AnnOps.loadRows(key) match {
-      case Some(rows) =>
-        val entries = rows.filter(_.nonEmpty).map { line =>
-          val i = line.indexOf(' ')
-          (line.substring(i + 1),
-            java.lang.Double.longBitsToDouble(
-              java.lang.Long.parseUnsignedLong(line.substring(0, i), 16)))
-        }
-        new UnigramModel(entries.map(_._1).toArray,
-          entries.map(_._2).toArray)
-      case None =>
-        val m = train(docs, text, vocabSize, maxTypes)
-        AnnOps.saveRows(key, m.pieces.zip(m.logProbs).toSeq.map {
-          case (p, lp) => java.lang.Long.toHexString(
-            java.lang.Double.doubleToRawLongBits(lp)) + " " + p
-        })
-        m
+    val rows = StorageOps.cachedRows(spark, srcPath,
+      s"uni_${vocabSize}_$maxTypes") {
+      val m = train(docs, text, vocabSize, maxTypes)
+      m.pieces.zip(m.logProbs).toSeq.map { case (p, lp) =>
+        java.lang.Long.toHexString(
+          java.lang.Double.doubleToRawLongBits(lp)) + " " + p
+      }
     }
+    val entries = rows.filter(_.nonEmpty).map { line =>
+      val i = line.indexOf(' ')
+      (line.substring(i + 1),
+        java.lang.Double.longBitsToDouble(
+          java.lang.Long.parseUnsignedLong(line.substring(0, i), 16)))
+    }
+    new UnigramModel(entries.map(_._1).toArray, entries.map(_._2).toArray)
   }
 
   /** Viterbi pieces of `text` under `model` (codegen'd map-side

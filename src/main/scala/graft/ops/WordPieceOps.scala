@@ -117,25 +117,16 @@ object WordPieceOps {
   def encode(text: Column, model: WordPieceModel): Column =
     WordPieceFunctions.wordpieceEncode(text, model)
 
-  /** [[train]] behind the content-signature model cache (the
-    * BPE/unigram/IVF discipline: per-user 0700 scratch dir,
-    * format-version + params + corpus-content key, atomic-rename
-    * race-safe). Line format: one vocabulary piece per line, in model
-    * order (pieces never contain whitespace). */
+  /** [[train]] behind the artifact store
+    * ([[StorageOps.cachedRows]]). Line format: one vocabulary piece per
+    * line, in model order (pieces never contain whitespace). */
   def cachedTrain(spark: org.apache.spark.sql.SparkSession,
       srcPath: String, docs: DataFrame, text: Column, numMerges: Int,
       maxTypes: Int = 100000): WordPieceModel = {
-    val sig = StorageOps.contentSignature(spark, srcPath)
-    val key = s"wordpiece_${AnnOps.ModelFormatVersion}_${numMerges}_" +
-      s"${maxTypes}_" + java.lang.Long.toHexString(sig)
-    AnnOps.loadRows(key) match {
-      case Some(rows) =>
-        new WordPieceModel(rows.filter(_.nonEmpty).toArray)
-      case None =>
-        val m = train(docs, text, numMerges, maxTypes)
-        AnnOps.saveRows(key, m.vocab.toSeq)
-        m
-    }
+    val rows = StorageOps.cachedRows(spark, srcPath,
+      s"wordpiece_${numMerges}_$maxTypes")(
+      train(docs, text, numMerges, maxTypes).vocab.toSeq)
+    new WordPieceModel(rows.filter(_.nonEmpty).toArray)
   }
 
   /** Reference single-string encode for tests. */

@@ -47,9 +47,10 @@ class IngestOpsSpec extends SparkSpec {
     val stB = IngestOps.ingestBatch(spark, key, batchB, "doc_id", "text")
     val files = stB.s4.inputFiles
     assert(files.nonEmpty, "inventory reads should appear as files")
-    assert(files.forall(_.contains(s"inv_v1_$key")),
+    val inv = IngestOps.invRoot(key)
+    assert(files.forall(_.contains(inv)),
       s"second batch read a non-inventory file: " +
-        files.filterNot(_.contains(s"inv_v1_$key")).take(3).mkString(", "))
+        files.filterNot(_.contains(inv)).take(3).mkString(", "))
     assert(!files.exists(_.contains("documents.parquet")),
       "second batch must not re-scan stored corpus text")
 

@@ -1,6 +1,12 @@
 package graft.ops
 
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths}
+
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
@@ -270,5 +276,95 @@ class StorageAndSkewSpec extends SparkSpec {
       case (k, Some(v)) => conf.set(k, v)
       case (k, None) => conf.unset(k)
     }
+  }
+
+  // ---- artifact store ----------------------------------------------
+
+  private def freshArtifact(tag: String): String =
+    StorageOps.scratchPath(s"spec_${tag}_${java.util.UUID.randomUUID()}")
+
+  /** Entries next to `path` named `<path's name>.<anything>` — where
+    * a publish keeps its temp copy. */
+  private def siblings(path: String): Seq[String] = {
+    val p = Paths.get(path)
+    Files.list(p.getParent).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith(p.getFileName.toString + ".")).toSeq
+  }
+
+  private def writePart(tmp: String, content: String): Unit = {
+    Files.createDirectories(Paths.get(tmp))
+    Files.write(Paths.get(tmp, "part"), content.getBytes(UTF_8))
+  }
+
+  private def readPart(path: String): String =
+    new String(Files.readAllBytes(Paths.get(path, "part")), UTF_8)
+
+  test("publish: a throwing writer leaves neither the target nor a " +
+      "temp sibling, and the next call builds") {
+    val path = freshArtifact("publish_fail")
+    val e = intercept[IllegalStateException] {
+      StorageOps.publish(path) { tmp =>
+        writePart(tmp, "half")
+        throw new IllegalStateException("writer failed")
+      }
+    }
+    assert(e.getMessage == "writer failed")
+    assert(!Files.exists(Paths.get(path)), "a failed build must not publish")
+    assert(siblings(path).isEmpty, s"temp leaked: ${siblings(path)}")
+    StorageOps.publish(path)(writePart(_, "whole"))
+    assert(readPart(path) == "whole")
+    assert(siblings(path).isEmpty)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
+  }
+
+  test("publish: two racing publishers leave one target holding one " +
+      "writer's content and no temp sibling") {
+    val path = freshArtifact("publish_race")
+    // both writers finish writing before either renames
+    val written = new java.util.concurrent.CountDownLatch(2)
+    def publisher(content: String): Future[Unit] = Future {
+      StorageOps.publish(path) { tmp =>
+        writePart(tmp, content)
+        written.countDown()
+        assert(written.await(60, SECONDS), "the other writer never wrote")
+      }
+    }
+    Seq(publisher("a"), publisher("b")).foreach(Await.result(_, 120.seconds))
+    assert(Set("a", "b").contains(readPart(path)))
+    assert(Files.list(Paths.get(path)).iterator().asScala
+      .map(_.getFileName.toString).toSeq == Seq("part"))
+    assert(siblings(path).isEmpty, s"temp leaked: ${siblings(path)}")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
+  }
+
+  test("cachedRows: a hit does not call build, and a miss and a hit " +
+      "return equal rows") {
+    val src = s"$Sf0001/orders.parquet"
+    val name = s"spec_rows_${java.util.UUID.randomUUID()}"
+    var builds = 0
+    def build: Seq[String] = { builds += 1; Seq("1.5", "left right", "-0.0") }
+    val miss = StorageOps.cachedRows(spark, src, name)(build)
+    val hit = StorageOps.cachedRows(spark, src, name)(build)
+    assert(builds == 1, "the second call must be served from the store")
+    assert(miss == hit && miss == Seq("1.5", "left right", "-0.0"))
+    Files.delete(Paths.get(StorageOps.artifactPath(spark, src, name) + ".txt"))
+  }
+
+  test("the artifact policy has one home: no ATOMIC_MOVE or " +
+      "contentSignature( in src/main outside StorageOps.scala") {
+    val root = Paths.get("src/main")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val offenders = Files.walk(root).iterator().asScala
+      .filter(p => Files.isRegularFile(p) &&
+        p.getFileName.toString != "StorageOps.scala")
+      .flatMap { (p: Path) =>
+        Files.readAllLines(p, UTF_8).asScala.zipWithIndex.collect {
+          case (line, i) if line.contains("ATOMIC_MOVE") ||
+              line.contains("contentSignature(") => s"$p:${i + 1}: $line"
+        }
+      }.toSeq
+    assert(offenders.isEmpty,
+      "key and publish artifacts through StorageOps:\n" +
+        offenders.mkString("\n"))
   }
 }

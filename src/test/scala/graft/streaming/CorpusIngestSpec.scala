@@ -401,7 +401,8 @@ class CorpusIngestSpec extends SparkSpec {
     filesByTag.foreach { case (tag, files) =>
       assert(files.nonEmpty, s"$tag: inventory reads must show up")
       val foreign = files.filterNot(f =>
-        f.contains(s"inv_v1_$key") || f.contains(dir.stripPrefix("/")))
+        f.contains(graft.ops.IngestOps.invRoot(key)) ||
+          f.contains(dir.stripPrefix("/")))
       assert(foreign.isEmpty,
         s"$tag read non-inventory, non-batch files: " +
           foreign.take(3).mkString(", "))

@@ -51,8 +51,7 @@ class IngestSoakSpec extends SparkSpec {
     val run = java.util.UUID.randomUUID().toString.take(6)
 
     def inventoryFiles(key: String, sub: String): Int = {
-      val d = new java.io.File(
-        graft.ops.StorageOps.scratchPath(s"inv_v1_$key") + "/" + sub)
+      val d = new java.io.File(IngestOps.invRoot(key) + "/" + sub)
       if (!d.exists()) 0
       else d.listFiles().count(_.getName.endsWith(".parquet"))
     }
