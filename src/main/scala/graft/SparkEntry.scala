@@ -5968,7 +5968,7 @@ object SparkEntry {
       val path = ops.StorageOps.scratchPath(
         s"zorder_${s.sparkContext.applicationId}_${math.abs(d.hashCode.toLong)}")
       ops.StorageOps.zorderWrite(li, path, "l_partkey", "l_suppkey", 16)
-      s.read.parquet(path)
+      ops.StorageOps.parquet(s, path)
         .filter(col("l_partkey") <= 200 && col("l_suppkey") <= 20)
         .orderBy(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
           col("l_quantity"), col("l_extendedprice"))
@@ -5985,7 +5985,7 @@ object SparkEntry {
       val path = ops.StorageOps.scratchPath(
         s"hilbert_${s.sparkContext.applicationId}_${math.abs(d.hashCode.toLong)}")
       ops.StorageOps.hilbertWrite(li, path, "l_partkey", "l_suppkey", 16)
-      s.read.parquet(path)
+      ops.StorageOps.parquet(s, path)
         .filter(col("l_partkey") <= 200 && col("l_suppkey") <= 20)
         .orderBy(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
           col("l_quantity"), col("l_extendedprice"))
@@ -6060,7 +6060,7 @@ object SparkEntry {
       val path = ops.StorageOps.scratchPath(
         s"partby_${s.sparkContext.applicationId}_${math.abs(d.hashCode.toLong)}")
       docs.write.mode("overwrite").partitionBy("lang").parquet(path)
-      s.read.parquet(path)
+      ops.StorageOps.parquet(s, path)
         .filter(col("lang") === "en")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .orderBy(col("doc_id"))

@@ -4,12 +4,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, unix_micros}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
+import graft.ops.StorageOps
+
 /** Loaders for the driver-generated star-schema testdata
-  * (see /root/repo/TESTDATA.md). One parquet file per table.
+  * (see TESTDATA.md). One parquet file per table.
   *
-  * At cluster scale these would be partitioned/bucketed tables; the API
-  * deliberately stays `spark.read.parquet` so Catalyst's pushdown
-  * (PushedFilters / ReadSchema pruning) applies unchanged.
+  * Every load goes through [[StorageOps.parquet]], which resolves a
+  * table once per session and then scans it per query:
+  *  - Cached: only the metadata — the inferred schema and the file
+  *    listing. Every query still reads every byte it needs, and
+  *    Catalyst's pushdown (PushedFilters / ReadSchema pruning) applies
+  *    unchanged.
+  *  - Key: the path plus its content signature (name, length and mtime
+  *    of every file), so a regenerated table re-resolves.
+  *  - Fresh ids: each load is a new instance of the cached relation, so
+  *    self-joins behave as with two independent reads.
+  *  - Per session: entries live in the session's own bounded relation
+  *    cache; a new session resolves again.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -41,7 +52,7 @@ object Tables {
     "spark.sql.extensions" -> "graft.plans.GraftExtensions")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val raw = spark.read.parquet(s"$sfDir/$name.parquet")
+    val raw = StorageOps.parquet(spark, s"$sfDir/$name.parquet")
     if (name == "events") normalizeTs(raw) else raw
   }
 

@@ -32,7 +32,7 @@ class GraftContext(val spark: SparkSession) {
 
   /** Parquet source (beyond-reference; the driver's testdata format). */
   def parquet(path: String): GraftFrame =
-    new GraftFrame(spark.read.parquet(path))
+    new GraftFrame(graft.ops.StorageOps.parquet(spark, path))
 
   /** JSON-lines source (beyond-reference). */
   def json(path: String): GraftFrame =

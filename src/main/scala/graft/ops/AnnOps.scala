@@ -655,7 +655,7 @@ object AnnOps {
       path: String, targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
     val nFiles = StorageOps.compactedFileCount(spark, path, targetFileBytes)
     StorageOps.swapInPlace(path)(tmp =>
-      spark.read.parquet(path)
+      StorageOps.parquet(spark, path)
         .repartitionByRange(nFiles, col("cid"), col("neighbor_id"))
         .write.mode("overwrite").partitionBy("cid").parquet(tmp))
   }
@@ -709,7 +709,7 @@ object AnnOps {
       path: String, probes: DataFrame): DataFrame = {
     val probeCids = probes.select(col("cid")).distinct()
       .collect().map(_.getInt(0)).sorted
-    spark.read.parquet(path)
+    StorageOps.parquet(spark, path)
       .filter(col("cid").isin(probeCids.toIndexedSeq.map(Integer.valueOf): _*))
   }
 

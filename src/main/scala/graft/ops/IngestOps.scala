@@ -265,7 +265,7 @@ object IngestOps {
     * as files named `tag-<token>-*`, REPLACING any files this tag
     * wrote before (a foreachBatch redelivery after a crash overwrites
     * its own half-landed delta instead of appending a duplicate). The
-    * dir stays flat, so plain `spark.read.parquet(dir)` reads and
+    * dir stays flat, so plain parquet reads of `dir` and
     * [[compactDirIfNeeded]] keep working unchanged. The write goes to
     * a temp sibling first; a crash leaves the old delta, no delta,
     * the new delta, or (multi-file deltas only: a crash mid-move) a
@@ -301,10 +301,10 @@ object IngestOps {
   }
 
   def inventoryMd5s(spark: SparkSession, key: String): DataFrame =
-    spark.read.parquet(md5Dir(key))
+    StorageOps.parquet(spark, md5Dir(key))
 
   def inventorySegments(spark: SparkSession, key: String): DataFrame =
-    spark.read.parquet(segDir(key))
+    StorageOps.parquet(spark, segDir(key))
 
   /** The four stages of one ingest batch. `sourceFiles` lists the
     * files behind every frame composed into them — the batch, both

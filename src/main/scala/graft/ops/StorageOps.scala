@@ -5,7 +5,10 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.QualifiedTableName
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DatasetBridge
 
 /** Sink-side operators: partitioned and bucketed parquet layout.
   *
@@ -19,6 +22,44 @@ import org.apache.spark.sql.functions._
   *    (no shuffle on the bucketed key).
   */
 object StorageOps {
+
+  // ------------------------------------------------------------------
+  // Parquet sources
+  // ------------------------------------------------------------------
+
+  /** Open the parquet dataset at `path` — the one way graft reads
+    * parquet. A plain `spark.read.parquet` lists the files and runs a
+    * footer-reading schema-inference job before any query work; here
+    * that happens once per session and source version:
+    *  - Cached: the resolved relation only — schema and file listing.
+    *    No data is cached; every query still scans every byte it
+    *    needs, and filter/projection pushdown is unchanged.
+    *  - Key: the path plus its [[contentSignature]] (name, length and
+    *    mtime of every file), so a rewritten source re-resolves; the old
+    *    version's entry is never served again and ages out of the LRU.
+    *  - Fresh ids: each load is `newInstance()` of the cached relation,
+    *    so self-joins and `df("col")` references behave exactly as with
+    *    two independent reads.
+    *  - Scope: entries live in the session's own LRU-bounded table
+    *    relation cache, so another session never sees them, they die
+    *    with their session, and an eviction only costs a re-resolve.
+    * A missing path fails exactly as `spark.read.parquet` does. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val sig = try contentSignature(spark, path) catch {
+      case _: java.io.FileNotFoundException => return spark.read.parquet(path)
+    }
+    val cache = spark.sessionState.catalog
+    val key = QualifiedTableName("graft", "parquet_source",
+      s"$path#${java.lang.Long.toHexString(sig)}")
+    cache.getCachedTable(key) match {
+      case r: MultiInstanceRelation =>
+        DatasetBridge.ofRows(spark, r.newInstance())
+      case _ =>
+        val df = spark.read.parquet(path)
+        cache.cacheTable(key, df.queryExecution.analyzed)
+        df
+    }
+  }
 
   // ------------------------------------------------------------------
   // Derived artifacts
@@ -282,7 +323,7 @@ object StorageOps {
     * listing), not as a data filter. */
   def readPartition(spark: SparkSession, path: String,
       partitionCol: String, value: String): DataFrame =
-    spark.read.parquet(path).filter(col(partitionCol) === value)
+    parquet(spark, path).filter(col(partitionCol) === value)
 
   /** Compact a parquet dataset to ~`targetFileBytes` files — the
     * small-files fix: a 100-TB table accumulated from micro-batches or
@@ -297,20 +338,26 @@ object StorageOps {
   def compact(spark: SparkSession, inPath: String, outPath: String,
       targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
     require(outPath != inPath, "compact to a new location, then swap")
-    spark.read.parquet(inPath)
+    parquet(spark, inPath)
       .repartition(compactedFileCount(spark, inPath, targetFileBytes))
       .write.mode(SaveMode.Overwrite).parquet(outPath)
   }
 
   /** [[compact]]'s output file count: the dataset's on-disk bytes over
-    * `targetFileBytes`, rounded up, at least one. */
+    * `targetFileBytes`, rounded up, at least one. The bytes come from
+    * one Hadoop FileSystem listing (no Spark job), skipping the
+    * `_`/`.`-prefixed names a parquet scan skips too (`_SUCCESS`,
+    * `.crc`, staging dirs); `k=v` partition dirs are data. */
   private[graft] def compactedFileCount(spark: SparkSession, path: String,
       targetFileBytes: Long): Int = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val totalBytes = spark.read.parquet(path).inputFiles.map { f =>
-      val p = new org.apache.hadoop.fs.Path(new java.net.URI(f))
-      p.getFileSystem(hconf).getFileStatus(p).getLen
-    }.sum
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def hidden(name: String) =
+      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+    def bytes(p: org.apache.hadoop.fs.Path): Long =
+      fs.listStatus(p).iterator.filterNot(st => hidden(st.getPath.getName))
+        .map(st => if (st.isDirectory) bytes(st.getPath) else st.getLen).sum
+    val totalBytes = bytes(root)
     math.max(1, (totalBytes / targetFileBytes).toInt +
       (if (totalBytes % targetFileBytes > 0) 1 else 0))
   }

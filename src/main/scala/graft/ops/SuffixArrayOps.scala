@@ -299,7 +299,7 @@ object SuffixArrayOps {
     StorageOps.publish(dir)(tmp =>
       suffixArray(docs, idCol, textCol, maxLen, numParts)
         .write.mode("overwrite").parquet(tmp))
-    spark.read.parquet(dir)
+    StorageOps.parquet(spark, dir)
   }
 
   /** General-L repeated-span report off a (possibly persisted) suffix

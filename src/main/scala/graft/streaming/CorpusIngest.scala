@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.functions.HashFunctions
-import graft.ops.DedupOps
+import graft.ops.{DedupOps, StorageOps}
 
 /** Streaming corpus-ingest quality gates: continuous document streams
   * checked against PERSISTED corpus artifacts at micro-batch latency.
@@ -617,7 +617,7 @@ final class IngestLoop(spark: SparkSession, key: String, idCol: String,
   def quarantineReport: DataFrame = quarantineDir match {
     case Some(dir)
         if java.nio.file.Files.exists(java.nio.file.Paths.get(dir)) =>
-      spark.read.parquet(dir)
+      StorageOps.parquet(spark, dir)
     case _ =>
       import spark.implicits._
       Seq.empty[(String, Long, String)]
@@ -638,7 +638,7 @@ final class IngestLoop(spark: SparkSession, key: String, idCol: String,
     * not double-bump the base it is about to be rewritten against). */
   private def packTotalExcluding(dir: String, tag: String): Long =
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dir))) 0L
-    else spark.read.parquet(dir)
+    else StorageOps.parquet(spark, dir)
       .filter(col("batch") =!= lit(tag))
       .agg(coalesce(max(col("tok_start") + col("n_tok")), lit(0L)))
       .collect()(0).getLong(0)
@@ -650,7 +650,7 @@ final class IngestLoop(spark: SparkSession, key: String, idCol: String,
   private def packTotalStored(dir: String): Long = packTotal.getOrElse {
     val t =
       if (java.nio.file.Files.exists(java.nio.file.Paths.get(dir)))
-        spark.read.parquet(dir)
+        StorageOps.parquet(spark, dir)
           .agg(coalesce(max(col("tok_start") + col("n_tok")), lit(0L)))
           .collect()(0).getLong(0)
       else 0L
@@ -663,7 +663,7 @@ final class IngestLoop(spark: SparkSession, key: String, idCol: String,
   def packManifest: DataFrame = packManifestDir match {
     case Some(dir)
         if java.nio.file.Files.exists(java.nio.file.Paths.get(dir)) =>
-      spark.read.parquet(dir)
+      StorageOps.parquet(spark, dir)
     case _ =>
       import spark.implicits._
       Seq.empty[(String, Long, Long, Long)]

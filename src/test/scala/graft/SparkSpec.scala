@@ -12,6 +12,22 @@ trait SparkSpec extends AnyFunSuite {
     .config(Tables.sessionConf)
     .getOrCreate()
 
+  /** statusTracker counts lag the (async) listener bus; poll until the
+    * count is stable so the gate never races event delivery. */
+  def jobsInGroup(group: String): Int = {
+    var prev = -1
+    var cur = spark.sparkContext.statusTracker
+      .getJobIdsForGroup(group).length
+    var spins = 0
+    while (cur != prev && spins < 50) {
+      prev = cur; Thread.sleep(100)
+      cur = spark.sparkContext.statusTracker
+        .getJobIdsForGroup(group).length
+      spins += 1
+    }
+    cur
+  }
+
   def resource(name: String): String =
     getClass.getResource(s"/$name").getPath
 

@@ -367,4 +367,22 @@ class StorageAndSkewSpec extends SparkSpec {
       "key and publish artifacts through StorageOps:\n" +
         offenders.mkString("\n"))
   }
+
+  test("one way to open parquet: no read.parquet( in src/main outside " +
+      "StorageOps.scala") {
+    val root = Paths.get("src/main")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val offenders = Files.walk(root).iterator().asScala
+      .filter(p => Files.isRegularFile(p) &&
+        p.getFileName.toString != "StorageOps.scala")
+      .flatMap { (p: Path) =>
+        Files.readAllLines(p, UTF_8).asScala.zipWithIndex.collect {
+          case (line, i) if line.contains("read.parquet(") =>
+            s"$p:${i + 1}: $line"
+        }
+      }.toSeq
+    assert(offenders.isEmpty,
+      "open parquet sources through StorageOps.parquet:\n" +
+        offenders.mkString("\n"))
+  }
 }

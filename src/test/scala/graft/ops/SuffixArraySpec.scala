@@ -125,22 +125,6 @@ class SuffixArraySpec extends SparkSpec {
     assert(actual.toSeq == expected.toSeq)
   }
 
-  /** statusTracker counts lag the (async) listener bus; poll until the
-    * count is stable so the gate never races event delivery. */
-  private def jobsInGroup(group: String): Int = {
-    var prev = -1
-    var cur = spark.sparkContext.statusTracker
-      .getJobIdsForGroup(group).length
-    var spins = 0
-    while (cur != prev && spins < 50) {
-      prev = cur; Thread.sleep(100)
-      cur = spark.sparkContext.statusTracker
-        .getJobIdsForGroup(group).length
-      spins += 1
-    }
-    cur
-  }
-
   test("cached suffix array: repeat call answers with no doubling jobs") {
     import spark.implicits._
     val docs = Seq(1L -> "banana", 2L -> "bandana",
