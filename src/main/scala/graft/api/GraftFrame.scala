@@ -107,10 +107,6 @@ class GraftFrame private[api] (val df: DataFrame) {
 
   // ---- inspection / execution -------------------------------------
 
-  /** The reference's `format(plan)` pretty-printer analogue
-    * (logical_plan/mod.rs:34-45): the optimized logical plan. */
-  def explainLogical(): String = df.queryExecution.optimizedPlan.toString
-
   /** Physical plan string (reference physical_plan/mod.rs:32-43). */
   def explainPhysical(): String = df.queryExecution.executedPlan.toString
 

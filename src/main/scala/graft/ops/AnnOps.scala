@@ -462,29 +462,6 @@ object AnnOps {
         round(col("sim"), 4).as("sim"))
   }
 
-  /** Embedding-cosine near-duplicate pairs: hyperplane-LSH banded
-    * blocking over the corpus against itself, then exact cosine
-    * verification at `threshold`. The embedding-space analogue of
-    * [[DedupOps.minhashPairs]]. */
-  def embeddingDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
-      threshold: Double = 0.95, nbits: Int = 16,
-      maxBucket: Int = 1000): DataFrame = {
-    require(nbits % 8 == 0, "nbits must be a multiple of 8")
-    val banded = bandedBits(corpus, idCol, vecCol, nbits)
-    // capped bucket expansion (8-bit band values have only 256 buckets
-    // per band — uncapped, candidate volume would be ~N²/256)
-    val pairs = DedupOps.bucketPairs(banded,
-      Seq(col("band_id"), col("band_val")), idCol, minN = 2, maxN = maxBucket)
-    val vecs = corpus.select(col(idCol), col(vecCol))
-    pairs
-      .join(vecs.select(col(idCol).as("a"), col(vecCol).as("vec_a")), Seq("a"))
-      .join(vecs.select(col(idCol).as("b"), col(vecCol).as("vec_b")), Seq("b"))
-      .withColumn("cosine", VectorFunctions.cosineSim(col("vec_a"),
-        col("vec_b")))
-      .filter(col("cosine") >= threshold)
-      .select(col("a"), col("b"), round(col("cosine"), 4).as("cosine"))
-  }
-
   /** IVF (inverted-file) index model: nlist centroid vectors. Built
     * with deterministic seeding (hash-ordered sample) + a few Lloyd
     * iterations, so every build over the same corpus yields the same

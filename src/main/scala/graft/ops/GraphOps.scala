@@ -41,9 +41,37 @@ object GraphOps {
     * conventional [0, 1] rank. `dampingPct` is the damping factor in
     * integer percent (85 = the canonical 0.85). */
   def pagerank(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int = 12, dampingPct: Int = 85): DataFrame = {
+      iters: Int = 12, dampingPct: Int = 85): DataFrame =
+    rankLoop(edges, srcCol, dstCol, None, iters, dampingPct)
+
+  /** Personalized PageRank (Page et al. 1999 §6; the random walker
+    * teleports to the SEED SET instead of uniformly) — the
+    * graph-proximity score behind recommend-from-here and
+    * seed-expansion retrieval. Same fixed-point integer discipline as
+    * [[pagerank]], differing only in the teleport vector: rank₀ and the
+    * per-round base concentrate on the seeds (Unit15 / |S| each), and
+    * any dangling mass returns to the seeds rather than the whole
+    * node set. Deterministic end-to-end, so the oracle unrolls the
+    * rounds as CTEs exactly like PageRank's. */
+  def personalizedPagerank(edges: DataFrame, srcCol: String,
+      dstCol: String, seeds: Seq[Long], iters: Int = 12,
+      dampingPct: Int = 85): DataFrame = {
+    require(seeds.nonEmpty, "personalized pagerank needs seeds")
+    rankLoop(edges, srcCol, dstCol, Some(seeds), iters, dampingPct)
+  }
+
+  /** The power iteration behind [[pagerank]] and
+    * [[personalizedPagerank]]. Each node's state row carries a `seed`
+    * flag next to its out-degree: the teleport set. `seeds = None` is
+    * uniform PageRank, where every node is a seed and |S| = n; rank₀,
+    * the per-round base and any dangling mass all go to the seeds,
+    * Unit15 / |S| each. Ranks are longs summing to ~1e15, shares use
+    * `div` not `/`, one co-keyed shuffle pair per round, one
+    * checkpoint per round. */
+  private def rankLoop(edges: DataFrame, srcCol: String, dstCol: String,
+      seeds: Option[Seq[Long]], iters: Int, dampingPct: Int): DataFrame = {
     require(iters >= 1 && dampingPct >= 0 && dampingPct <= 100)
-    val spark = edges.sparkSession
+    val what = if (seeds.isEmpty) "pagerank" else "personalized pagerank"
     // the projected (src, dst) pairs are read every iteration: pay the
     // source scan/parse once, keep only two longs per edge
     val e = edges.select(col(srcCol).cast("long").as("src"),
@@ -54,7 +82,18 @@ object GraphOps {
       .distinct()
       .localCheckpoint() // node domain: bounded, reused every round
     val n = nodes.count()
-    require(n > 0, "pagerank over an empty edge list")
+    require(n > 0, s"$what over an empty edge list")
+    // a seed absent from the node set would silently drop its
+    // Unit15/|S| share of teleport mass (its rank row never exists),
+    // quietly diverging from the PPR definition — fail loud instead.
+    // One bounded filter-count against the checkpointed node table.
+    seeds.foreach { ss =>
+      val seedsPresent = nodes.filter(col("node").isin(ss: _*)).count()
+      require(seedsPresent == ss.distinct.length,
+        s"personalized pagerank: ${ss.distinct.length - seedsPresent} " +
+          s"seed(s) not present in the graph's node set — teleport mass " +
+          "would silently vanish")
+    }
     val outDeg = e.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg"))
       .localCheckpoint()
@@ -63,16 +102,20 @@ object GraphOps {
     // skips the per-round dangling-mass aggregate, which is otherwise
     // the only blocking driver round-trip in the loop (12 jobs → 1)
     val hasDangling = outDeg.count() < n
-    val basePerNode = (100 - dampingPct) * (Unit15 / n) / 100
+    val sCount = seeds.fold(n)(_.length.toLong)
+    val rInit = Unit15 / sCount
+    val basePerSeed = (100 - dampingPct) * rInit / 100
+    val isSeed = seeds.fold(lit(true))(ss => col("node").isin(ss: _*))
     // r15: the rank state CARRIES the (static) out-degree — deg is a
     // property of the node, so riding it through the per-round
     // checkpoint replaces the per-round ranks⋈outDeg join (one AQE
     // broadcast stage per round, 12 jobs across the loop) with a
     // row-local filter, and the dangling-mass aggregate's anti-join
-    // with a null-check on the same rows. Arithmetic is unchanged:
-    // same shares, same contributions, same integer division.
+    // with a null-check on the same rows. The seed flag rides the same
+    // way, so the teleport test is row-local too.
     var ranks = nodes.join(outDeg, Seq("node"), "left")
-      .select(col("node"), col("deg"), lit(Unit15 / n).as("rank_f"))
+      .select(col("node"), col("deg"), isSeed.as("seed"))
+      .withColumn("rank_f", when(col("seed"), lit(rInit)).otherwise(lit(0L)))
     var iter = 0
     while (iter < iters) {
       // per-source share (integer division) — row-local on the carried
@@ -84,18 +127,19 @@ object GraphOps {
       val contribs = e.join(shares, Seq("src"))
         .groupBy(col("dst").as("node"))
         .agg(sum(col("share")).as("contrib_f"))
-      // dangling mass: rank held by nodes with no outgoing edges is
-      // redistributed uniformly (structurally zero when the graph is
+      // dangling mass: rank held by nodes with no outgoing edges goes
+      // back to the seeds (structurally zero when the graph is
       // symmetrized — skipped entirely then, see hasDangling)
       val danglingF = if (!hasDangling) 0L
         else ranks.filter(col("deg").isNull)
           .agg(coalesce(sum(col("rank_f")), lit(0L))).collect()(0).getLong(0)
-      val redistributed = dampingPct * (danglingF / n) / 100
+      val seedMass = basePerSeed + dampingPct * (danglingF / sCount) / 100
       val next = ranks
         .join(contribs, Seq("node"), "left")
-        .selectExpr("node", "deg",
-          s"$basePerNode + ($dampingPct * coalesce(contrib_f, 0)) div 100" +
-            s" + $redistributed AS rank_f")
+        .selectExpr("node", "deg", "seed",
+          s"CASE WHEN seed THEN ${seedMass}L ELSE 0L END" +
+            s" + ($dampingPct * coalesce(contrib_f, 0)) div 100" +
+            " AS rank_f")
         // one job per round either way, with a round-sized plan each
         // time: dangling graphs materialize lazily via the round's
         // dangling aggregate; dangling-free graphs checkpoint eagerly
@@ -107,80 +151,6 @@ object GraphOps {
       iter += 1
     }
     // force the final round's checkpoint so callers get a stable table
-    ranks.count()
-    ranks.select(col("node"), col("rank_f"))
-  }
-
-  /** Personalized PageRank (Page et al. 1999 §6; the random walker
-    * teleports to the SEED SET instead of uniformly) — the
-    * graph-proximity score behind recommend-from-here and
-    * seed-expansion retrieval. Same fixed-point integer discipline as
-    * [[pagerank]] (ranks are longs summing to ~1e15, `div` not `/`,
-    * one co-keyed shuffle pair per round, one eager checkpoint per
-    * round), differing only in the teleport vector: rank₀ and the
-    * per-round base concentrate on the seeds (Unit15 / |S| each), and
-    * any dangling mass returns to the seeds rather than the whole
-    * node set. Deterministic end-to-end, so the oracle unrolls the
-    * rounds as CTEs exactly like PageRank's. */
-  def personalizedPagerank(edges: DataFrame, srcCol: String,
-      dstCol: String, seeds: Seq[Long], iters: Int = 12,
-      dampingPct: Int = 85): DataFrame = {
-    require(seeds.nonEmpty, "personalized pagerank needs seeds")
-    require(iters >= 1 && dampingPct >= 0 && dampingPct <= 100)
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-      .localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint()
-    val n = nodes.count()
-    require(n > 0, "personalized pagerank over an empty edge list")
-    // a seed absent from the node set would silently drop its
-    // Unit15/|S| share of teleport mass (its rank row never exists),
-    // quietly diverging from the PPR definition — fail loud instead.
-    // One bounded filter-count against the checkpointed node table.
-    val seedsPresent = nodes
-      .filter(col("node").isin(seeds: _*)).count()
-    require(seedsPresent == seeds.distinct.length,
-      s"personalized pagerank: ${seeds.distinct.length - seedsPresent} " +
-        s"seed(s) not present in the graph's node set — teleport mass " +
-        "would silently vanish")
-    val outDeg = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    val hasDangling = outDeg.count() < n
-    val sCount = seeds.length
-    val rInit = Unit15 / sCount
-    val basePerSeed = (100 - dampingPct) * rInit / 100
-    val seedList = seeds.mkString(",")
-    // deg rides the rank state (see [[pagerank]] — r15): the per-round
-    // share join and the dangling anti-join become row-local
-    var ranks = nodes.join(outDeg, Seq("node"), "left")
-      .selectExpr("node", "deg",
-        s"CASE WHEN node IN ($seedList) THEN ${rInit}L ELSE 0L END" +
-          " AS rank_f")
-    var iter = 0
-    while (iter < iters) {
-      val shares = ranks.filter(col("deg").isNotNull)
-        .selectExpr("node AS src", "rank_f div deg AS share")
-      val contribs = e.join(shares, Seq("src"))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("share")).as("contrib_f"))
-      val danglingF = if (!hasDangling) 0L
-        else ranks.filter(col("deg").isNull)
-          .agg(coalesce(sum(col("rank_f")), lit(0L))).collect()(0).getLong(0)
-      val seedMass = basePerSeed + dampingPct * (danglingF / sCount) / 100
-      val next = ranks
-        .join(contribs, Seq("node"), "left")
-        .selectExpr("node", "deg",
-          s"CASE WHEN node IN ($seedList) THEN ${seedMass}L ELSE 0L END" +
-            s" + ($dampingPct * coalesce(contrib_f, 0)) div 100" +
-            " AS rank_f")
-        .localCheckpoint(eager = !hasDangling)
-      ranks = next
-      iter += 1
-    }
     ranks.count()
     ranks.select(col("node"), col("rank_f"))
   }

@@ -472,15 +472,4 @@ object IngestOps {
       fpp: Double = 0.01): Array[Byte] =
     DedupOps.buildEvalBloom(
       inventorySegments(spark, key).select(col("sx").as("g")), fpp)
-
-  /** [[segmentBloom]] behind the content-signature artifact cache:
-    * the filter bytes are keyed by the SEGMENT INVENTORY's own
-    * content signature, so a merge (new parquet files under `seg/`)
-    * changes the signature and the bloom rebuilds — a gate can never
-    * probe a pre-merge filter. Between merges, repeated stream
-    * restarts load the persisted bytes with no inventory scan. */
-  def cachedSegmentBloom(spark: SparkSession, key: String,
-      fpp: Double = 0.01): Array[Byte] =
-    DedupOps.cachedEvalBloom(spark, segDir(key), s"ingseg_$key",
-      inventorySegments(spark, key).select(col("sx").as("g")), fpp)
 }

@@ -305,10 +305,6 @@ object JpegCodec {
   private final class BitReader(bytes: Array[Byte], var pos: Int) {
     private var acc = 0
     private var n = 0
-    /** True if positioned at a marker (0xFF followed by non-stuffing). */
-    def atMarker: Boolean =
-      pos + 1 < bytes.length && (bytes(pos) & 0xff) == 0xff &&
-        bytes(pos + 1) != 0
     def readBit(): Int = {
       if (n == 0) {
         require(pos < bytes.length, "JPEG: truncated entropy stream")

@@ -985,9 +985,8 @@ object Multimodal {
     }
   }
 
-  /** The stub average-hash kernel on one payload (shared by the batch
-    * [[perceptualHashAll]] and the streaming ingest gate, so both
-    * sides of the artifact contract hash identically). */
+  /** The stub average-hash kernel on one payload, applied row by row
+    * in [[perceptualHashAll]]. */
   def phashBytes(content: Array[Byte]): Long = {
     val len = content.length
     val px = new Array[Int](64)
@@ -1007,21 +1006,6 @@ object Multimodal {
       i += 1
     }
     h
-  }
-
-  /** The persisted BLOCKING artifact for streaming multimodal ingest:
-    * every corpus image's perceptual hash exploded into its 4×16-bit
-    * bands — the table a stream-side probe equi-joins on (the image
-    * analogue of [[DedupOps.minhashBands]]). 24 bytes × 4 rows per
-    * image; any pair within Hamming 3 shares ≥1 band (pigeonhole). */
-  def phashBands(spark: SparkSession, media: DataFrame): DataFrame = {
-    val withH = perceptualHashAll(spark, media).toDF("doc_id", "phash")
-    val bandVals = (0 until 4).map(b =>
-      shiftrightunsigned(col("phash"), b * 16).bitwiseAND(lit(0xffffL)))
-    withH.select(col("doc_id"), col("phash"),
-      posexplode(array(bandVals: _*)))
-      .withColumnRenamed("pos", "band_id")
-      .withColumnRenamed("col", "band_val")
   }
 
   /** Per-image near-dup summary over perceptual hashes: 4×16-bit

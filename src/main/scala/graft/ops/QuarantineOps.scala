@@ -102,109 +102,6 @@ object QuarantineOps {
     }
   }
 
-  /** One gzip-blob decompression outcome. */
-  final case class TriedGunzip(doc_id: Long, status: String,
-      error_class: Option[String], n_raw: Option[Long],
-      text_md5: Option[String])
-
-  /** Quarantine-lane gzip ingestion: [[CompressedOps.gunzipAll]]'s
-    * witnesses for intact streams, a classed quarantine row for
-    * corrupt ones (bad magic, CRC/ISIZE mismatch, truncation, the
-    * inflation cap). */
-  def tryGunzipAll(spark: SparkSession, media: DataFrame,
-      cap: Int = 1 << 26): Dataset[TriedGunzip] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      val infl = new java.util.zip.Inflater(true)
-      Multimodal.endOnTaskCompletion(() => infl.end())
-      val md = java.security.MessageDigest.getInstance("MD5")
-      rows.map { r =>
-        attempt(CompressedOps.gunzipWith(r.content, infl, cap)) match {
-          case Right(raw) =>
-            md.reset()
-            val hex = md.digest(raw).map("%02x".format(_)).mkString
-            TriedGunzip(r.doc_id, "ok", None, Some(raw.length.toLong),
-              Some(hex))
-          case Left(cls) =>
-            TriedGunzip(r.doc_id, "quarantined", Some(cls), None, None)
-        }
-      }
-    }
-  }
-
-  /** One tar-shard walk outcome. */
-  final case class TriedTar(doc_id: Long, status: String,
-      error_class: Option[String], n_members: Option[Long],
-      tar_bytes: Option[Long])
-
-  /** Quarantine-lane shard reading: the [[TarCodec.decode]] walk under
-    * [[attempt]] — a shard with a flipped header byte (checksum), a
-    * truncated member, or a hostile size field quarantines instead of
-    * failing the scan of a million-shard corpus. */
-  def tryDecodeTarAll(spark: SparkSession,
-      media: DataFrame): Dataset[TriedTar] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.map { r =>
-        attempt(TarCodec.decode(r.content)) match {
-          case Right(members) =>
-            TriedTar(r.doc_id, "ok", None, Some(members.length.toLong),
-              Some(r.content.length.toLong))
-          case Left(cls) =>
-            TriedTar(r.doc_id, "quarantined", Some(cls), None, None)
-        }
-      }
-    }
-  }
-
-  /** One WAV decode outcome. */
-  final case class TriedAudio(doc_id: Long, status: String,
-      error_class: Option[String], n_samples: Option[Long],
-      sq_sum: Option[Long])
-
-  /** Quarantine-lane audio decode: [[AudioCodec.decodeWav]] under
-    * [[attempt]], witnessed by sample count + integer energy. */
-  def tryDecodeAudioAll(spark: SparkSession,
-      media: DataFrame): Dataset[TriedAudio] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.map { r =>
-        attempt(AudioCodec.decodeWav(r.content)) match {
-          case Right(a) =>
-            TriedAudio(r.doc_id, "ok", None,
-              Some(a.samples.length.toLong),
-              Some(AudioCodec.squareSum(a.samples)))
-          case Left(cls) =>
-            TriedAudio(r.doc_id, "quarantined", Some(cls), None, None)
-        }
-      }
-    }
-  }
-
-  /** One Y4M decode outcome. */
-  final case class TriedVideo(doc_id: Long, status: String,
-      error_class: Option[String], n_frames: Option[Long],
-      y_sum: Option[Long])
-
-  /** Quarantine-lane video decode: [[VideoCodec.decodeY4m]] under
-    * [[attempt]], witnessed by frame count + total luma. */
-  def tryDecodeVideoAll(spark: SparkSession,
-      media: DataFrame): Dataset[TriedVideo] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.map { r =>
-        attempt(VideoCodec.decodeY4m(r.content)) match {
-          case Right(v) =>
-            TriedVideo(r.doc_id, "ok", None, Some(v.frames.length.toLong),
-              Some(v.frames.iterator.map(f =>
-                VideoCodec.lumaSum(v.width, v.height, f)).sum))
-          case Left(cls) =>
-            TriedVideo(r.doc_id, "quarantined", Some(cls), None, None)
-        }
-      }
-    }
-  }
-
   /** The PLANTED-corruption image corpus the quarantine oracle runs
     * over: the clean [[Multimodal.mixedImageTable]] payload (PPM /
     * BMP / PNG by cp0 mod 3) for most docs, with one corruption class

@@ -37,11 +37,6 @@ object SelectionOps {
     pmod(conv(substring(md5(term.cast("binary")), 1, 8), 16, 10)
       .cast("long"), lit(buckets.toLong))
 
-  /** SQL mirror of [[tokenBucket]], kept adjacent so the two cannot
-    * drift. */
-  def tokenBucketSql(term: String, buckets: Int): String =
-    s"(CAST('0x' || substring(md5($term), 1, 8) AS BIGINT) % $buckets)"
-
   /** Per-document DSIR importance weight over whitespace tokens of
     * `textCol`: weight(d) = (1/|d|) Σ_{w∈d} ln(p_target(b(w)) /
     * p_raw(b(w))), with add-1 smoothed hashed-unigram models

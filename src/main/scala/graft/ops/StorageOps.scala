@@ -244,13 +244,6 @@ object StorageOps {
     else df
   }
 
-  /** Write `df` as parquet hive-partitioned by `partitionCol`. */
-  def writePartitioned(df: DataFrame, path: String,
-      partitionCol: String): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCol)
-      .parquet(path)
-
   /** Write `df` as a bucketed+sorted managed table (bucket pruning and
     * shuffle-free joins on `bucketCol` for any reader of the table). */
   def writeBucketed(df: DataFrame, table: String, bucketCol: String,
@@ -317,13 +310,6 @@ object StorageOps {
       .drop("__z")
       .write.mode(SaveMode.Overwrite).parquet(path)
   }
-
-  /** Read back a partitioned dataset with a partition predicate — the
-    * plan must show the predicate under PartitionFilters (pruned
-    * listing), not as a data filter. */
-  def readPartition(spark: SparkSession, path: String,
-      partitionCol: String, value: String): DataFrame =
-    parquet(spark, path).filter(col(partitionCol) === value)
 
   /** Compact a parquet dataset to ~`targetFileBytes` files — the
     * small-files fix: a 100-TB table accumulated from micro-batches or

@@ -121,60 +121,6 @@ object CorpusIngest {
           .as("novel_md5"))
   }
 
-  /** One arriving media row (id + event time + opaque payload). */
-  case class MediaEvent(doc_id: Long, ts: java.sql.Timestamp,
-      content: Array[Byte])
-
-  /** Streaming MULTIMODAL near-dup ingest gate — the image/audio twin
-    * of [[neardupGateStream]]: each arriving payload is perceptually
-    * hashed ROW-LOCALLY with the SAME stub average-hash kernel the
-    * batch dedup uses ([[graft.ops.Multimodal.phashBytes]] — shared
-    * code, so the artifact contract cannot skew), banded 4×16 bits,
-    * equi-joined against the persisted corpus band table
-    * ([[graft.ops.Multimodal.phashBands]]), and every corpus partner
-    * within `maxHamming` (pigeonhole: ≤3 always shares a band)
-    * emitted with its distance. Everything corpus-shaped stays
-    * STATIC; the only state is the watermarked pair-dedup collapsing
-    * multi-band hits on the same partner — the text gate's exact
-    * state discipline. On batch input the same plan runs with a plain
-    * pair-distinct (streaming==batch is the spec gate). */
-  def mediaGateStream(docs: DataFrame, corpusBands: DataFrame,
-      idCol: String, contentCol: String, tsCol: String = "ts",
-      maxHamming: Int = 3, watermark: String = "1 hour"): DataFrame = {
-    require(maxHamming <= 3,
-      "4x16-bit banding only guarantees pairs within Hamming 3")
-    val s = docs.sparkSession
-    import s.implicits._
-    val hashed = docs
-      .select(col(idCol).cast("long").as("doc_id"), col(tsCol).as("ts"),
-        col(contentCol).as("content"))
-      .as[MediaEvent]
-      .mapPartitions { rows =>
-        rows.map(e =>
-          (e.doc_id, e.ts, graft.ops.Multimodal.phashBytes(e.content)))
-      }
-      .toDF(idCol, tsCol, "phash")
-    val bandVals = (0 until 4).map(b =>
-      shiftrightunsigned(col("phash"), b * 16).bitwiseAND(lit(0xffffL)))
-    val banded = hashed.select(col(idCol), col(tsCol), col("phash"),
-      posexplode(array(bandVals: _*)))
-      .withColumnRenamed("pos", "band_id")
-      .withColumnRenamed("col", "band_val")
-    val verified = banded
-      .join(corpusBands.select(col("band_id"), col("band_val"),
-        col("doc_id").as("partner"), col("phash").as("h_b")),
-        Seq("band_id", "band_val"))
-      .filter(col(idCol) =!= col("partner"))
-      .withColumn("hamming",
-        bit_count(col("phash").bitwiseXOR(col("h_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col(tsCol), col(idCol), col("partner"), col("hamming"))
-    if (docs.isStreaming)
-      verified.withWatermark(tsCol, watermark)
-        .dropDuplicatesWithinWatermark(Seq(idCol, "partner"))
-    else verified.dropDuplicates(Seq(idCol, "partner"))
-  }
-
   /** Streaming TOKENIZER-DRIFT monitor: per event-time window, how
     * well the SHIPPED frozen tokenizer models fit the live document
     * stream — the WordPiece `[UNK]` rate (words the trained

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
   *
   * Design: the same column expressions serve batch and streaming
   * (Spark's unified model), so every streaming transform here has a
-  * batch-equivalent query in SparkEntry that the DuckDB oracle checks;
+  * batch-equivalent query in graft.queries that the DuckDB oracle checks;
   * streaming-specific semantics (watermarks, state timeouts) are
   * covered by ScalaTest with a file source + memory sink.
   *
@@ -59,22 +59,6 @@ object EventStreams {
       .select(col("win.start").as("window_start"), col("event_type"),
         col("n"), col("total_value"))
   }
-
-  /** Anomaly flags over windowed counts: |z| > threshold against a
-    * STATIC per-type baseline (mu, sd) — the stream-static monitor
-    * shape, where baselines are recomputed offline from history and
-    * broadcast while flags flow with the stream. Works on a streaming
-    * OR batch `windowed` frame (the batch mirror is `q_anomaly`,
-    * which derives its baseline from the same frame it flags). A
-    * type with sd = 0 is never flagged (z would be 0/0 = NaN, and NaN
-    * compares greater than the threshold under Spark's ordering). */
-  def anomalyFlags(windowed: DataFrame, stats: DataFrame,
-      threshold: Double = 2.0): DataFrame =
-    windowed.join(broadcast(stats), Seq("event_type"))
-      .withColumn("z", (col("n") - col("mu")) / col("sd"))
-      .filter(col("sd") > 0.0 && abs(col("z")) > threshold)
-      .select(col("window_start"), col("event_type"), col("n"),
-        round(col("z"), 4).as("z"))
 
   /** Streaming deduplication on an id column: drops repeats of
     * already-seen ids — including a retried event re-sent with a
@@ -143,46 +127,6 @@ object EventStreams {
       .select(col("click_id"), col("click_user").as("user_id"),
         col("view_id"), col("view_ts"))
   }
-
-  /** Stream-static enrichment join + segment rollup: each event picks
-    * up its user's dimension attributes from a STATIC table (broadcast
-    * into every micro-batch — the dimension is re-read per batch, so a
-    * slowly-changing dim is picked up without restarting the query),
-    * then aggregates per segment. Works identically on batch input —
-    * the streaming==batch equivalence is the correctness gate. */
-  def enrichedSegmentStats(events: DataFrame,
-      customers: DataFrame): DataFrame = {
-    val dim = broadcast(customers
-      .select(col("c_custkey"), col("c_mktsegment")))
-    events
-      .join(dim, col("user_id") === col("c_custkey"), "left")
-      .groupBy(coalesce(col("c_mktsegment"), lit("UNKNOWN")).as("segment"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
-  }
-
-  /** Idempotent micro-batch write — the `foreachBatch` half of
-    * effectively-exactly-once delivery: each batch lands in its own
-    * `batch=<id>` directory with overwrite mode, so a REPLAYED batch
-    * (task retry, query restart from checkpoint) replaces its own
-    * prior output instead of appending duplicates. Public so the
-    * idempotence contract is testable outside a running query. */
-  def writeBatchIdempotent(batch: DataFrame, path: String,
-      batchId: Long): Unit =
-    batch.write.mode("overwrite").parquet(s"$path/batch=$batchId")
-
-  /** Streaming parquet sink built on [[writeBatchIdempotent]] +
-    * checkpointing: Structured Streaming guarantees at-least-once
-    * delivery of each micro-batch to `foreachBatch`; idempotent batch
-    * output upgrades that to effectively exactly-once. */
-  def idempotentParquetSink(events: DataFrame, path: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        writeBatchIdempotent(batch.toDF(), path, batchId)
-      }
-      .start()
 
   /** One user event (typed view for stateful processing). */
   case class UserEvent(user_id: Long, ts: java.sql.Timestamp,

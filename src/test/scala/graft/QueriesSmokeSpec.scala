@@ -1,5 +1,7 @@
 package graft
 
+import graft.queries.{Query, RowsOnly}
+
 /** Every declared query must run and return rows on sf0.001 — the same
   * smoke the driver applies, kept in-tree so a regression is caught at
   * `sbt test` time rather than at round scoring. */
@@ -10,9 +12,16 @@ class QueriesSmokeSpec extends SparkSpec {
     }
   }
 
-  test("every oracle key has a matching query") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracle entries without queries: $orphans")
+  test("the registry declares each query once, with an oracle or a rows-only reason") {
+    val names = Query.all.map(_.name)
+    val dups = names.groupBy(identity).collect { case (n, v) if v.size > 1 => n }
+    assert(dups.isEmpty, s"query names declared more than once: $dups")
+    val rowsOnly = Query.all.collect { case Query(n, _, RowsOnly(r)) => n -> r }
+    assert(rowsOnly.map(_._1).toSet ==
+      Set("q_approx_agg", "q_hll_distinct", "q_sample"), rowsOnly)
+    assert(rowsOnly.forall(_._2.trim.nonEmpty), rowsOnly)
+    assert(SparkEntry.oracleSql.keySet == names.toSet -- rowsOnly.map(_._1))
+    assert(SparkEntry.queries.size == 275)
   }
 
   test("tpch flagship plans: pushed filters, broadcast dims, top-k without a full sort") {

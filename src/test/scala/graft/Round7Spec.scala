@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.queries.Shared
+
 /** Round-7 gates. */
 class Round7Spec extends SparkSpec {
 
@@ -13,7 +15,7 @@ class Round7Spec extends SparkSpec {
       3459999999L, 3460000001L, 4294967295L, 4294967296L,
       5000000000L, 1000000000000L, (1L << 62), -7L)
     val got = ids.toDF("id")
-      .select(col("id"), SparkEntry.knuthHash(col("id")).as("h"))
+      .select(col("id"), Shared.knuthHash(col("id")).as("h"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val A = BigInt(2654435761L)
     val M = BigInt(1) << 32
@@ -69,9 +71,9 @@ class Round7Spec extends SparkSpec {
     val df = ids.toDF("id")
     df.createOrReplaceTempView("khs_ids")
     val viaSql = spark.sql(
-      s"SELECT id, ${SparkEntry.knuthHashSql("id")} AS h FROM khs_ids")
+      s"SELECT id, ${Shared.knuthHashSql("id")} AS h FROM khs_ids")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaCol = df.select(col("id"), SparkEntry.knuthHash(col("id")).as("h"))
+    val viaCol = df.select(col("id"), Shared.knuthHash(col("id")).as("h"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaSql == viaCol)
   }

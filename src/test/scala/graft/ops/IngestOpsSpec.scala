@@ -64,17 +64,8 @@ class IngestOpsSpec extends SparkSpec {
       "a re-arriving accepted doc must be exact-deduped by the merged md5s")
 
     // --- streaming segment gate probes the maintained artifact:
-    // a doc made of stored segments reports zero novel segments; the
-    // cached variant is keyed by the inventory's own content
-    // signature, so the post-merge bytes equal a fresh build and a
-    // second load serves the persisted artifact ---
-    val bloom = IngestOps.cachedSegmentBloom(spark, key)
-    assert(java.util.Arrays.equals(bloom,
-      IngestOps.segmentBloom(spark, key)),
-      "cached bloom must equal a fresh post-merge build")
-    assert(java.util.Arrays.equals(bloom,
-      IngestOps.cachedSegmentBloom(spark, key)),
-      "second cached load must serve the same bytes")
+    // a doc made of stored segments reports zero novel segments ---
+    val bloom = IngestOps.segmentBloom(spark, key)
     val dupDoc = Seq((1L, firstClean, 10L)).toDF("doc_id", "text", "ts")
     val gate = graft.streaming.CorpusIngest
       .segmentGateStream(dupDoc, bloom, "doc_id", "text")

@@ -5,7 +5,7 @@ import graft.{SparkSpec, Tables}
 /** Gates for the corrupt-payload quarantine lane: planted corruption
   * lands in the right stable class, clean rows are BYTE-IDENTICAL to
   * the all-clean fail-loud path, the accounting reconciles, and every
-  * codec's try* variant quarantines its own corruption vocabulary. */
+  * codec's errors land in their own class under [[QuarantineOps.attempt]]. */
 class QuarantineSpec extends SparkSpec {
 
   private lazy val docs = Tables.documents(spark, Sf0001)
@@ -62,65 +62,54 @@ class QuarantineSpec extends SparkSpec {
       Set("bad_magic", "hostile_header", "truncated", "integrity"))
   }
 
-  test("tryGunzipAll: intact streams witness byte-exact recovery, a " +
-      "flipped payload bit quarantines as integrity") {
-    import spark.implicits._
+  test("gunzip under attempt: intact streams recover byte-exact, a " +
+      "flipped trailer bit quarantines as integrity") {
     val good = CompressedOps.gzipTable(spark, docs.limit(4))
-    val ok = QuarantineOps.tryGunzipAll(spark, good).collect()
-    assert(ok.nonEmpty && ok.forall(_.status == "ok"))
+      .collect().map(_.getAs[Array[Byte]]("content"))
+    assert(good.nonEmpty &&
+      good.forall(g => QuarantineOps.attempt(CompressedOps.gunzip(g)).isRight))
     // flip a byte in the member's stored CRC-32 trailer: the body
     // still inflates, only trailer verification catches it
+    val raw = ("xyz" * 50).getBytes("UTF-8")
     val member = {
       val out = new java.io.ByteArrayOutputStream()
       val defl = new java.util.zip.Deflater(
         java.util.zip.Deflater.BEST_SPEED, true)
-      try CompressedOps.gzipMember(("xyz" * 50).getBytes("UTF-8"),
-        defl, new java.util.zip.CRC32(), out)
+      try CompressedOps.gzipMember(raw, defl, new java.util.zip.CRC32(), out)
       finally defl.end()
       out.toByteArray
     }
+    assert(QuarantineOps.attempt(CompressedOps.gunzip(member))
+      .exists(java.util.Arrays.equals(_, raw)))
     val flippedCrc = member.clone()
     flippedCrc(member.length - 7) =
       (flippedCrc(member.length - 7) ^ 0x10).toByte
-    val bad = QuarantineOps.tryGunzipAll(spark,
-      Seq((9L, flippedCrc)).toDF("doc_id", "content")).collect()
-    assert(bad.length == 1 && bad.head.status == "quarantined")
-    assert(bad.head.error_class.contains("integrity"))
+    assert(QuarantineOps.attempt(CompressedOps.gunzip(flippedCrc)) ==
+      Left("integrity"))
   }
 
-  test("tryDecodeTarAll / tryDecodeAudioAll / tryDecodeVideoAll " +
-      "quarantine truncation and junk magic with their own classes") {
-    import spark.implicits._
-    def table(rows: Seq[(Long, Array[Byte])]) =
-      rows.toDF("doc_id", "content")
+  test("tar / audio / video decodes under attempt quarantine " +
+      "truncation and junk magic with their own classes") {
+    def cls[A](a: => A): Either[String, A] = QuarantineOps.attempt(a)
     // tar: a truncated shard and a checksum flip
     val shard = TarCodec.encode(Seq("a.txt" -> "hello".getBytes("UTF-8")))
     val flipped = shard.clone(); flipped(0) = (flipped(0) ^ 1).toByte
-    val tarGot = QuarantineOps.tryDecodeTarAll(spark, table(Seq(
-      1L -> shard, 2L -> shard.take(600), 3L -> flipped))).collect()
-      .sortBy(_.doc_id)
-    assert(tarGot(0).status == "ok" && tarGot(0).n_members.contains(1L))
-    assert(tarGot(1).error_class.contains("truncated"))
-    assert(tarGot(2).error_class.contains("integrity"))
+    assert(cls(TarCodec.decode(shard)).exists(_.length == 1))
+    assert(cls(TarCodec.decode(shard.take(600))) == Left("truncated"))
+    assert(cls(TarCodec.decode(flipped)) == Left("integrity"))
     // audio: junk magic and a truncated data chunk
     val wav = AudioCodec.encodeWav(8000, 1, Array[Short](1, -2, 3, -4))
-    val audioGot = QuarantineOps.tryDecodeAudioAll(spark, table(Seq(
-      1L -> wav, 2L -> ("JUNK" * 12).getBytes("US-ASCII"),
-      3L -> wav.take(wav.length - 2)))).collect().sortBy(_.doc_id)
-    assert(audioGot(0).status == "ok" &&
-      audioGot(0).n_samples.contains(4L))
-    assert(audioGot(1).error_class.contains("bad_magic"))
-    assert(audioGot(2).status == "quarantined")
+    assert(cls(AudioCodec.decodeWav(wav)).exists(_.samples.length == 4))
+    assert(cls(AudioCodec.decodeWav(("JUNK" * 12).getBytes("US-ASCII")))
+      == Left("bad_magic"))
+    assert(cls(AudioCodec.decodeWav(wav.take(wav.length - 2))).isLeft)
     // video: a truncated final frame
     val sz = VideoCodec.frameSize(8, 8)
     val y4m = VideoCodec.encodeY4m(8, 8, 25, 1,
       Seq(new Array[Byte](sz), new Array[Byte](sz)))
-    val videoGot = QuarantineOps.tryDecodeVideoAll(spark, table(Seq(
-      1L -> y4m, 2L -> y4m.take(y4m.length - 10)))).collect()
-      .sortBy(_.doc_id)
-    assert(videoGot(0).status == "ok" &&
-      videoGot(0).n_frames.contains(2L))
-    assert(videoGot(1).error_class.contains("truncated"))
+    assert(cls(VideoCodec.decodeY4m(y4m)).exists(_.frames.length == 2))
+    assert(cls(VideoCodec.decodeY4m(y4m.take(y4m.length - 10)))
+      == Left("truncated"))
   }
 
   test("attempt() absorbs only data errors — fatal throwables still " +

@@ -44,26 +44,6 @@ class StorageAndSkewSpec extends SparkSpec {
     } finally spark.conf.set(key, saved)
   }
 
-  test("partitioned write + partition-pruned read") {
-    val dir = Files.createTempDirectory("graft-part").toString + "/orders"
-    val orders = Tables.orders(spark, Sf0001)
-      .withColumn("status", col("o_orderstatus"))
-    StorageOps.writePartitioned(orders, dir, "status")
-
-    val pruned = StorageOps.readPartition(spark, dir, "status", "F")
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"), "scan must list PartitionFilters")
-    assert(plan.contains("isnotnull(status") || plan.contains("status#"),
-      s"partition predicate missing from scan: $plan")
-    // pruning correctness: same rows as a plain filter
-    val expected = orders.filter(col("status") === "F").count()
-    assert(pruned.count() == expected && expected > 0)
-    // and the data-level PushedFilters must NOT contain the partition
-    // predicate (it is resolved at listing time)
-    val scanLine = plan.linesIterator.find(_.contains("PartitionFilters"))
-    assert(scanLine.nonEmpty)
-  }
-
   test("bucketed table joins without a shuffle on the bucket key") {
     // warehouse + metastore live in /tmp via build.sbt javaOptions
     // (static confs); a fresh derby metastore does not know about

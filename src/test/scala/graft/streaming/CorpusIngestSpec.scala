@@ -165,70 +165,6 @@ class CorpusIngestSpec extends SparkSpec {
       "segment three"), s"novel reassembly digest mismatch: $m3")
   }
 
-  test("multimodal gate: streaming == batch, flags exact and near " +
-    "copies, one stateful operator") {
-    val mediaSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("ts", TimestampType),
-      StructField("content", BinaryType)))
-    // 64-byte payloads: every byte is sampled exactly once by the
-    // stub average-hash, so edits map 1:1 to hash bits
-    val p1: Array[Byte] = Array.tabulate(64)(i =>
-      (if (i % 2 == 0) 0x10 else 0xF0).toByte)
-    val p2: Array[Byte] = Array.tabulate(64)(i =>
-      (if (i % 3 == 0) 0x20 else 0xE0).toByte)
-    val corpus = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
-      org.apache.spark.sql.Row(100L, p1),
-      org.apache.spark.sql.Row(101L, p2))),
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("content", BinaryType))))
-    val bands = graft.ops.Multimodal.phashBands(spark, corpus)
-
-    // near copy: one low byte raised above the mean -> exactly 1 bit
-    val near1 = p1.clone(); near1(10) = 0xF0.toByte
-    // fresh: inverted parity pattern, far from both corpus hashes
-    val fresh: Array[Byte] = Array.tabulate(64)(i =>
-      (if (i % 5 == 0) 0x80 else 0x05).toByte)
-    val b = Seq(
-      org.apache.spark.sql.Row(1L, ts(0), p1),     // exact copy
-      org.apache.spark.sql.Row(2L, ts(1), near1),  // hamming 1
-      org.apache.spark.sql.Row(3L, ts(2), fresh))  // no partner
-    val dir = Files.createTempDirectory("graft-mediagate").toString
-    spark.createDataFrame(spark.sparkContext.parallelize(b), mediaSchema)
-      .write.parquet(dir + "/b1")
-
-    val stream = spark.readStream.schema(mediaSchema).parquet(dir + "/b*")
-    val q = CorpusIngest.mediaGateStream(stream, bands, "doc_id",
-        "content")
-      .writeStream.format("memory").queryName("media_gate")
-      .outputMode("append").start()
-    val streamed = try {
-      q.processAllAvailable()
-      val ops = q.lastProgress.stateOperators
-      assert(ops.length == 1,
-        s"exactly one stateful operator expected: ${ops.mkString(",")}")
-      spark.table("media_gate").orderBy(col("doc_id"), col("partner"))
-        .collect()
-    } finally q.stop()
-
-    val batchDocs = spark.createDataFrame(
-      spark.sparkContext.parallelize(b), mediaSchema)
-    val batch = CorpusIngest.mediaGateStream(batchDocs, bands, "doc_id",
-        "content")
-      .orderBy(col("doc_id"), col("partner")).collect()
-    assert(streamed.toSeq == batch.toSeq,
-      s"streaming != batch:\n${streamed.mkString("\n")}\nvs\n" +
-        batch.mkString("\n"))
-
-    val byDoc = streamed.groupBy(_.getLong(1)).map { case (k, rs) =>
-      k -> rs.map(r => (r.getLong(2), r.getInt(3).toLong)).toSet }
-    assert(byDoc.get(1L).contains(Set((100L, 0L))),
-      s"exact copy must flag partner 100 at Hamming 0: $byDoc")
-    assert(byDoc.get(2L).contains(Set((100L, 1L))),
-      s"near copy must flag partner 100 at Hamming 1: $byDoc")
-    assert(!byDoc.contains(3L), s"fresh payload must pass: $byDoc")
-  }
-
   test("tokenizer drift monitor: streaming == batch, drift raises " +
     "UNK rate and fertility, one stateful operator") {
     // frozen models trained on the in-domain corpus word counts

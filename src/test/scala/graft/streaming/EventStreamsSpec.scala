@@ -60,34 +60,6 @@ class EventStreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming anomaly flags == batch anomaly flags (static baseline)") {
-    val dir = Files.createTempDirectory("graft-anom").toString
-    batchEvents.write.mode("overwrite").parquet(dir)
-    // the static baseline: per-type mean/stddev of hourly counts,
-    // computed batch-side (the offline-recomputed history profile)
-    val stats = EventStreams.windowedStats(batchEvents)
-      .groupBy(col("event_type"))
-      .agg(avg(col("n").cast("double")).as("mu"),
-        stddev_samp(col("n").cast("double")).as("sd"))
-    val stream = spark.readStream
-      .schema(EventStreams.eventSchema)
-      .parquet(dir)
-    val q = EventStreams
-      .anomalyFlags(EventStreams.windowedStats(stream), stats)
-      .writeStream.format("memory").queryName("anom_out")
-      .outputMode("complete").start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("anom_out")
-        .orderBy(col("window_start"), col("event_type")).collect()
-      val batch = EventStreams
-        .anomalyFlags(EventStreams.windowedStats(batchEvents), stats)
-        .orderBy(col("window_start"), col("event_type")).collect()
-      assert(streamed.nonEmpty && streamed.length == batch.length)
-      streamed.zip(batch).foreach { case (s, b) => assert(s == b) }
-    } finally q.stop()
-  }
-
   test("streaming funnel stages == batch conditional-min cascade") {
     import spark.implicits._
     import EventStreams.UserEvent
@@ -515,47 +487,6 @@ class EventStreamsSpec extends SparkSpec {
       assert(n == batchEvents.count(),
         s"expected ${batchEvents.count()} unique events, got $n")
     } finally q.stop()
-  }
-
-  test("stream-static enrichment join == batch enrichment join") {
-    val dir = Files.createTempDirectory("graft-enrich").toString
-    batchEvents.write.mode("overwrite").parquet(dir)
-    val customers = Tables.customer(spark, Sf0001)
-    val stream = spark.readStream
-      .schema(EventStreams.eventSchema)
-      .parquet(dir)
-    val q = EventStreams.enrichedSegmentStats(stream, customers)
-      .writeStream.format("memory").queryName("enrich_out")
-      .outputMode("complete").start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("enrich_out")
-        .orderBy(col("segment")).collect()
-      val batch = EventStreams.enrichedSegmentStats(batchEvents, customers)
-        .orderBy(col("segment")).collect()
-      assert(streamed.length == batch.length && streamed.nonEmpty)
-      streamed.zip(batch).foreach { case (s, b) => assert(s == b) }
-    } finally q.stop()
-  }
-
-  test("idempotent foreachBatch sink: replayed batch does not duplicate") {
-    val src = Files.createTempDirectory("graft-sink-src").toString
-    val out = Files.createTempDirectory("graft-sink-out").toString
-    val ckpt = Files.createTempDirectory("graft-sink-ckpt").toString
-    batchEvents.write.mode("overwrite").parquet(src)
-    val stream = spark.readStream
-      .schema(EventStreams.eventSchema)
-      .parquet(src)
-    val q = EventStreams.idempotentParquetSink(stream, out, ckpt)
-    try q.processAllAvailable() finally q.stop()
-    val total = batchEvents.count()
-    assert(spark.read.parquet(out).count() == total)
-    // simulate at-least-once redelivery of batch 0: rewrite it
-    // (materialized first — the rewrite overwrites the files it reads)
-    val batch0 = spark.read.parquet(s"$out/batch=0").localCheckpoint(true)
-    EventStreams.writeBatchIdempotent(batch0, out, 0L)
-    assert(spark.read.parquet(out).count() == total,
-      "replayed batch must replace, not append")
   }
 
   test("stream-stream attribution join == batch join") {
