@@ -74,6 +74,21 @@ class IngestOpsSpec extends SparkSpec {
       s"stored segments must all hit the inventory bloom: $gate")
   }
 
+  test("gramSet: distinct lowercased word 3-grams, a text under three " +
+      "tokens is its own gram, a null text is one null gram") {
+    import spark.implicits._
+    def grams(text: String): Seq[Option[String]] =
+      IngestOps.gramSet(Seq(Option(text)).toDF("text"), "text")
+        .collect().map(r => Option(r.getString(0))).toSeq.sorted
+    assert(grams(null) == Seq(None))
+    assert(grams("") == Seq(Some("")))
+    assert(grams("Hello") == Seq(Some("hello")))
+    assert(grams("Hello World") == Seq(Some("hello world")))
+    assert(grams("The quick Brown fox") ==
+      Seq(Some("quick brown fox"), Some("the quick brown")))
+    assert(grams("a b a b a") == Seq(Some("a b a"), Some("b a b")))
+  }
+
   test("merge == recompute property: 5 random small corpora") {
     import org.scalacheck.{Gen, rng}
     import spark.implicits._
