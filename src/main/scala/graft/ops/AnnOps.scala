@@ -419,18 +419,13 @@ object AnnOps {
     require(probeHamming >= 0 && probeHamming <= 1,
       "probeHamming must be 0 (exact band) or 1 (flip one bit)")
     val nBands = nbits / bandBits
-    val mask = (1L << bandBits) - 1
     def withBands(df: DataFrame, side: String): DataFrame = {
       val renamed = df.select(col(idCol).as(s"${side}_id"),
         col(vecCol).as(s"${side}_vec"))
-      val bandVals = (0 until nBands).map(b =>
-        shiftrightunsigned(col("sig"), b * bandBits).bitwiseAND(lit(mask)))
-      renamed
-        .withColumn("sig", hyperplaneBits(col(s"${side}_vec"), nbits))
-        .select(col(s"${side}_id"), col(s"${side}_vec"),
-          posexplode(array(bandVals: _*)))
-        .withColumnRenamed("pos", "band_id")
-        .withColumnRenamed("col", "band_val")
+      DedupOps.explodeBands(
+        renamed.withColumn("sig", hyperplaneBits(col(s"${side}_vec"), nbits)),
+        Seq(col(s"${side}_id"), col(s"${side}_vec")),
+        DedupOps.bitBands(col("sig"), nBands, bandBits), "band_val")
     }
     val qbExact = withBands(queries, "query")
     val qbProbed =
@@ -694,14 +689,11 @@ object AnnOps {
   private def bandedBits(corpus: DataFrame, idCol: String, vecCol: String,
       nbits: Int): DataFrame = {
     require(nbits % 8 == 0, "nbits must be a multiple of 8")
-    val nBands = nbits / 8
-    val bandVals = (0 until nBands).map(b =>
-      shiftrightunsigned(col("sig"), b * 8).bitwiseAND(lit(0xffL)))
-    corpus.select(col(idCol), col(vecCol))
-      .withColumn("sig", hyperplaneBits(col(vecCol), nbits))
-      .select(col(idCol), posexplode(array(bandVals: _*)))
-      .withColumnRenamed("pos", "band_id")
-      .withColumnRenamed("col", "band_val")
+    DedupOps.explodeBands(
+      corpus.select(col(idCol), col(vecCol))
+        .withColumn("sig", hyperplaneBits(col(vecCol), nbits)),
+      Seq(col(idCol)), DedupOps.bitBands(col("sig"), nbits / 8, 8),
+      "band_val")
   }
 
   /** Per-vector near-dup summary (stable one-row-per-vector shape even
@@ -712,19 +704,12 @@ object AnnOps {
     val banded = bandedBits(corpus, idCol, vecCol, nbits)
     val pairs = DedupOps.bucketPairs(banded,
       Seq(col("band_id"), col("band_val")), idCol, minN = 2, maxN = maxBucket)
-    val vecs = corpus.select(col(idCol), col(vecCol))
-    val scored = pairs
-      .join(vecs.select(col(idCol).as("a"), col(vecCol).as("vec_a")), Seq("a"))
-      .join(vecs.select(col(idCol).as("b"), col(vecCol).as("vec_b")), Seq("b"))
+    val scored = DedupOps.joinPairEnds(pairs, corpus, idCol, vecCol,
+        "vec_a", "vec_b")
       .withColumn("cosine", VectorFunctions.cosineSim(col("vec_a"),
         col("vec_b")))
-    // pairs are a<b; explode both directions so each vector sees its
-    // candidates
-    val sym = scored.select(explode(array(
-        struct(col("a").as("id"), col("cosine")),
-        struct(col("b").as("id"), col("cosine")))).as("e"))
-      .select(col("e.id").as("id"), col("e.cosine").as("cosine"))
-    val perVec = sym.groupBy(col("id")).agg(
+    // pairs are a<b; symmetrize so each vector sees its candidates
+    val perVec = DedupOps.symmetrize(scored, "cosine").groupBy(col("id")).agg(
       count(lit(1)).as("n_candidates"),
       round(max(col("cosine")), 4).as("max_cosine"))
     corpus.select(col(idCol).as("id"))
@@ -760,10 +745,8 @@ object AnnOps {
       nearestCentroid(col(vecCol), model).as("cid"))
     val pairs = DedupOps.bucketPairs(assigned, Seq(col("cid")), idCol,
       minN = 2, maxN = maxBucket)
-    val vecs = corpus.select(col(idCol), col(vecCol))
-    val dups = pairs
-      .join(vecs.select(col(idCol).as("a"), col(vecCol).as("vec_a")), Seq("a"))
-      .join(vecs.select(col(idCol).as("b"), col(vecCol).as("vec_b")), Seq("b"))
+    val dups = DedupOps.joinPairEnds(pairs, corpus, idCol, vecCol,
+        "vec_a", "vec_b")
       .withColumn("cosine", VectorFunctions.cosineSim(col("vec_a"),
         col("vec_b")))
       .filter(col("cosine") >= threshold)

@@ -26,6 +26,21 @@ import graft.functions.HashFunctions
   * maxDf caps) so one degenerate key cannot create a quadratic task.
   * Verification joins are equi-joins on doc ids, which AQE plans as
   * broadcast or shuffle-hash depending on candidate volume.
+  *
+  * Each pipeline step is written once, here; every caller in `ops`,
+  * `queries` and `streaming` composes these and keeps only its own
+  * sketch, score expression, pins and hints:
+  *  - shingle:     [[wordShingles]] (n-word strings)
+  *  - segment:     [[segmentCount]] / [[segmentText]] (the `segLen`
+  *                 tiling of [[segmentDedup]] and the ingest inventories)
+  *  - band:        [[laneBands]] / [[bitBands]] build the per-band keys,
+  *                 [[explodeBands]] turns them into (band_id, key) rows
+  *  - block:       [[bucketPairs]] (bucket → a<b candidate pairs)
+  *  - verify:      [[verifySketches]] (sketch only candidate docs),
+  *                 [[joinPairEnds]] (attach a per-id value to both ends
+  *                 of a pair), [[setJaccard]]
+  *  - symmetrize:  [[symmetrize]] (one row per pair direction), and
+  *                 [[partnerSummary]] (per-doc dup counts over it)
   */
 object DedupOps {
 
@@ -59,12 +74,63 @@ object DedupOps {
     s"${DroppedBucketMetricPrefix}_${metricSeq.incrementAndGet()}"
 
   /** n-word shingles of a token array (single-element fallback for
-    * short docs so every doc has a non-empty shingle set). */
+    * short docs so every doc has a non-empty shingle set; a null token
+    * array yields one null shingle). */
   def wordShingles(toks: Column, n: Int): Column =
     when(size(toks) >= n,
       transform(sequence(lit(1), size(toks) - (n - 1)),
         i => concat_ws(" ", slice(toks, i, lit(n)))))
-      .otherwise(array(concat_ws(" ", toks)))
+      .otherwise(array(array_join(toks, " ")))
+
+  /** Number of `segLen`-token segments of a token array (the last one
+    * may be short; an empty array has none). */
+  private[graft] def segmentCount(toks: Column, segLen: Int): Column =
+    idiv(size(toks) + lit(segLen - 1), lit(segLen))
+
+  /** Text of 0-based segment `i` of a token array: its `segLen`
+    * tokens joined with single spaces. */
+  private[graft] def segmentText(toks: Column, segLen: Int): Column => Column =
+    i => array_join(slice(toks, i * segLen + 1, lit(segLen)), " ")
+
+  /** Per-band keys of a k-lane signature array: band `b` is lanes
+    * `b·r+1 .. b·r+r` (r = k / bands) reduced by `key`. */
+  private def laneBands(sig: Column, k: Int, bands: Int)(
+      key: Column => Column): Column = {
+    // uneven banding would silently exclude the trailing k % bands
+    // signature lanes from every band, quietly lowering LSH recall
+    require(bands > 0 && k % bands == 0,
+      s"signature length k=$k must be divisible by bands=$bands")
+    val r = k / bands
+    transform(sequence(lit(0), lit(bands - 1)),
+      b => key(slice(sig, b * lit(r) + 1, lit(r))))
+  }
+
+  /** Per-band keys of a bit signature: band `b` is bits
+    * `b·bits .. b·bits+bits-1` of the long `sig`. */
+  private[graft] def bitBands(sig: Column, nBands: Int, bits: Int): Column =
+    array((0 until nBands).map(b =>
+      shiftrightunsigned(sig, b * bits).bitwiseAND(lit((1L << bits) - 1))): _*)
+
+  /** One (keep…, band_id, `keyCol`) row per band of each input row —
+    * the blocking input [[bucketPairs]] groups by. `bandKeys` is the
+    * array of per-band keys ([[laneBands]] / [[bitBands]]). */
+  private[graft] def explodeBands(df: DataFrame, keep: Seq[Column],
+      bandKeys: Column, keyCol: String): DataFrame =
+    df.select(keep :+ posexplode(bandKeys): _*)
+      .withColumnRenamed("pos", "band_id")
+      .withColumnRenamed("col", keyCol)
+
+  /** Attach `side`'s per-id `valCol` to both ends of an (a, b) pair
+    * frame, as `aAs` and `bAs` — the verification join. */
+  private[graft] def joinPairEnds(pairs: DataFrame, side: DataFrame,
+      idCol: String, valCol: String, aAs: String, bAs: String): DataFrame =
+    pairs
+      .join(side.select(col(idCol).as("a"), col(valCol).as(aAs)), Seq("a"))
+      .join(side.select(col(idCol).as("b"), col(valCol).as(bAs)), Seq("b"))
+
+  /** Jaccard similarity of two set arrays, as a double. */
+  private[graft] def setJaccard(x: Column, y: Column): Column =
+    size(array_intersect(x, y)).cast("double") / size(array_union(x, y))
 
   /** Expand each small bucket (grouped id list) into its (a, b) pairs
     * with a<b, entirely inside ONE aggregation stage: groupBy(bucket) →
@@ -146,31 +212,13 @@ object DedupOps {
       .select(col("a"), col("b"))
   }
 
-  /** doc → (band_id, band_hash) rows for MinHash-LSH blocking. */
-  private def bandExplode(withSig: DataFrame, idCol: String, k: Int,
-      bands: Int): DataFrame = {
-    // uneven banding would silently exclude the trailing k % bands
-    // signature lanes from every band, quietly lowering LSH recall
-    require(bands > 0 && k % bands == 0,
-      s"signature length k=$k must be divisible by bands=$bands")
-    val r = k / bands
-    withSig.select(col(idCol),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => hash(slice(col("sig"), b * lit(r) + 1, lit(r))))))
-      .withColumnRenamed("pos", "band_id")
-      .withColumnRenamed("col", "band_hash")
-  }
-
   /** Candidate pairs (a < b) whose minhash signatures collide in at
     * least one LSH band. `maxBucket` caps degenerate buckets (e.g. the
     * empty document) so no single bucket goes quadratic at scale. */
   def minhashCandidates(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 64, bands: Int = 16, shingleN: Int = 3,
       maxBucket: Int = 1000): DataFrame = {
-    val withSig = docs.select(col(idCol),
-      HashFunctions.minhashSignature(tokens(col(textCol)), k, shingleN)
-        .as("sig"))
-    val bandsDf = bandExplode(withSig, idCol, k, bands)
+    val bandsDf = minhashBands(docs, idCol, textCol, k, bands, shingleN)
     // One aggregation stage: bucket → capped sorted id list → in-bucket
     // pair expansion (degenerate buckets above maxBucket are dropped —
     // they carry no near-dup signal and would expand quadratically).
@@ -218,9 +266,6 @@ object DedupOps {
   def portableMinhashPairs(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 16, bands: Int = 8, shingleN: Int = 3,
       threshold: Double = 0.7, maxBucket: Int = 1000): DataFrame = {
-    require(bands > 0 && k % bands == 0,
-      s"signature length k=$k must be divisible by bands=$bands")
-    val r = k / bands
     // signature via the native compiled kernel — shingling fused in
     // (md5 fed token bytes directly, no shingle strings allocated):
     // graft.functions.PortableMinhashSignature. The HOF spelling of
@@ -236,17 +281,14 @@ object DedupOps {
       if (docs.rdd.getNumPartitions < sc.defaultParallelism)
         docs.repartition(sc.defaultParallelism)
       else docs
-    val banded = spread
-      .select(col(idCol),
+    val banded = explodeBands(
+      spread.select(col(idCol),
         HashFunctions.portableMinhashSignature(
-          tokens(col(textCol)), k, shingleN).as("sig"))
-      .select(col(idCol),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => concat_ws("|", transform(
-            slice(col("sig"), b * lit(r) + 1, lit(r)),
-            v => v.cast("string"))))))
-      .withColumnRenamed("pos", "band_id")
-      .withColumnRenamed("col", "band_key")
+          tokens(col(textCol)), k, shingleN).as("sig")),
+      Seq(col(idCol)),
+      laneBands(col("sig"), k, bands)(lanes =>
+        concat_ws("|", transform(lanes, v => v.cast("string")))),
+      "band_key")
     // candidate list is small by construction (bucket-capped) — pin it,
     // then pay the shingle recompute ONLY for candidate docs (the
     // verifySketches discipline: without the semi-join the sketch
@@ -267,9 +309,7 @@ object DedupOps {
       .select(col(idCol),
         HashFunctions.portableShingleHashes(
           tokens(col(textCol)), shingleN).as("sd"))
-    val verified = cand
-      .join(candS.select(col(idCol).as("a"), col("sd").as("sa")), Seq("a"))
-      .join(candS.select(col(idCol).as("b"), col("sd").as("sb")), Seq("b"))
+    val verified = joinPairEnds(cand, candS, idCol, "sd", "sa", "sb")
       .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
       .withColumn("jaccard", round(col("inter") /
         (size(col("sa")) + size(col("sb")) - col("inter")), 4))
@@ -426,12 +466,7 @@ object DedupOps {
     // halves that for the price of two (id, int) joins. Sizes come
     // from `ranked` — its `n` IS each doc's distinct-shingle count —
     // instead of a third full-corpus md5 kernel pass.
-    val sizes = ranked.select(col(idCol), col("n").as("__n"))
-    val cand = candRaw
-      .join(sizes.select(col(idCol).as("a"), col("__n").as("na")),
-        Seq("a"))
-      .join(sizes.select(col(idCol).as("b"), col("__n").as("nb")),
-        Seq("b"))
+    val cand = joinPairEnds(candRaw, ranked, idCol, "n", "na", "nb")
       .filter(least(col("na"), col("nb")) * lit(tDen) >=
         lit(tNum) * greatest(col("na"), col("nb")))
       .localCheckpoint(true)
@@ -443,11 +478,7 @@ object DedupOps {
       .as(idCol)).distinct()
     val candS = sets.join(broadcast(candIds), Seq(idCol), "left_semi")
       .select(col(idCol), col("hs0").as("sd"))
-    cand
-      .join(candS.select(col(idCol).as("a"), col("sd").as("sa")),
-        Seq("a"))
-      .join(candS.select(col(idCol).as("b"), col("sd").as("sb")),
-        Seq("b"))
+    joinPairEnds(cand, candS, idCol, "sd", "sa", "sb")
       .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
       .withColumn("jaccard", round(col("inter") /
         (col("na") + col("nb") - col("inter")), 4))
@@ -472,18 +503,13 @@ object DedupOps {
       HashFunctions.portableSimhash(tokens(col(textCol)), shingleN)
         .as("sig"))
       .localCheckpoint(true) // one kernel pass, reused by band + verify
-    val banded = sigs.select(col(idCol),
-      posexplode(array((0 to 3).map(b =>
-        shiftright(col("sig"), b * 15).bitwiseAND(lit(32767L))): _*)))
-      .withColumnRenamed("pos", "band_id")
-      .withColumnRenamed("col", "band_key")
+    val banded = explodeBands(sigs, Seq(col(idCol)),
+      array((0 to 3).map(b =>
+        shiftright(col("sig"), b * 15).bitwiseAND(lit(32767L))): _*),
+      "band_key")
     val cand = bucketPairs(banded, Seq(col("band_id"), col("band_key")),
       idCol, minN = 2, maxN = maxBucket)
-    cand
-      .join(sigs.select(col(idCol).as("a"), col("sig").as("sa")),
-        Seq("a"))
-      .join(sigs.select(col(idCol).as("b"), col("sig").as("sb")),
-        Seq("b"))
+    joinPairEnds(cand, sigs, idCol, "sig", "sa", "sb")
       .withColumn("hamming",
         bit_count(col("sa").bitwiseXOR(col("sb"))).cast("long"))
       .filter(col("hamming") <= maxHamming)
@@ -519,10 +545,8 @@ object DedupOps {
       segLen: Int = 16): DataFrame = {
     require(segLen >= 1, s"segLen must be >= 1 (got $segLen)")
     val base = docs.select(col(idCol), tokens(col(textCol)).as("w"))
-      .withColumn("n_segs",
-        idiv(size(col("w")) + lit(segLen - 1), lit(segLen)).cast("long"))
-    val segText: Column => Column = i =>
-      array_join(slice(col("w"), i * segLen + 1, lit(segLen)), " ")
+      .withColumn("n_segs", segmentCount(col("w"), segLen).cast("long"))
+    val segText = segmentText(col("w"), segLen)
     val segHashes = base.select(col(idCol),
         posexplode(transform(
           sequence(lit(0), col("n_segs").cast("int") - 1),
@@ -585,27 +609,6 @@ object DedupOps {
           .as("jaccard"))
   }
 
-  /** Distinct xxhash64 segment hashes of a corpus — the one-column
-    * frame a segment-level ingest gate compresses into its bloom
-    * artifact ([[buildEvalBloom]] / [[cachedEvalBloom]] with this as
-    * the gram frame). Same `segLen`-token segmentation as
-    * [[segmentDedup]], so a stream probe and the batch compaction
-    * agree on what a segment is. */
-  def corpusSegmentHashes(docs: DataFrame, textCol: String,
-      segLen: Int = 16): DataFrame = {
-    require(segLen >= 1, s"segLen must be >= 1 (got $segLen)")
-    docs
-      .select(tokens(col(textCol)).as("w"))
-      .select(explode(transform(
-        sequence(lit(0),
-          idiv(size(col("w")) + lit(segLen - 1), lit(segLen))
-            .cast("int") - 1),
-        i => xxhash64(array_join(
-          slice(col("w"), i * segLen + 1, lit(segLen)), " "))))
-        .as("g"))
-      .distinct()
-  }
-
   /** Materialize a (small, df/bucket-capped) candidate pair list and
     * restrict an expensive per-doc sketch to the docs that actually
     * appear in a pair: without this, the sketch column is computed for
@@ -637,21 +640,15 @@ object DedupOps {
     val (candM, shingleSets) = verifySketches(cand, docs, idCol,
       HashFunctions.shingleHashes(tokens(col(textCol)), shingleN),
       "shingles")
-    candM
-      .join(shingleSets.select(col(idCol).as("a"),
-        col("shingles").as("sh_a")), Seq("a"))
-      .join(shingleSets.select(col(idCol).as("b"),
-        col("shingles").as("sh_b")), Seq("b"))
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))))
+    joinPairEnds(candM, shingleSets, idCol, "shingles", "sh_a", "sh_b")
+      .withColumn("jaccard", setJaccard(col("sh_a"), col("sh_b")))
       .select(col("a"), col("b"), col("jaccard"))
   }
 
   /** Symmetrize (a,b,score) pairs into one row per direction with a
     * single explode — a union of two selects over the same pair frame
     * would execute the whole candidate+verify pipeline twice. */
-  private[ops] def symmetrize(pairs: DataFrame, score: String): DataFrame =
+  private[graft] def symmetrize(pairs: DataFrame, score: String): DataFrame =
     pairs.select(explode(array(
         struct(col("a").as("id"), col("b").as("partner")),
         struct(col("b").as("id"), col("a").as("partner")))).as("e"),
@@ -664,12 +661,12 @@ object DedupOps {
     * 100 TB you sketch each ingest batch once, append it here, and
     * never re-read old payload text for dedup. */
   def minhashBands(docs: DataFrame, idCol: String, textCol: String,
-      k: Int = 64, bands: Int = 16, shingleN: Int = 3): DataFrame = {
-    val withSig = docs.select(col(idCol),
-      HashFunctions.minhashSignature(tokens(col(textCol)), k, shingleN)
-        .as("sig"))
-    bandExplode(withSig, idCol, k, bands)
-  }
+      k: Int = 64, bands: Int = 16, shingleN: Int = 3): DataFrame =
+    explodeBands(
+      docs.select(col(idCol),
+        HashFunctions.minhashSignature(tokens(col(textCol)), k, shingleN)
+          .as("sig")),
+      Seq(col(idCol)), laneBands(col("sig"), k, bands)(hash(_)), "band_hash")
 
   /** The (id, shingles) verification table — the persisted companion of
     * [[minhashBands]] (hashed longs, ~1/8 the corpus text width). */
@@ -833,14 +830,8 @@ object DedupOps {
     // shingles for the corpus side
     val sh = shingleSets(newDocs, idCol, textCol, shingleN)
       .union(corpusShingles)
-    cand
-      .join(sh.select(col(idCol).as("a"), col("shingles").as("sh_a")),
-        Seq("a"))
-      .join(sh.select(col(idCol).as("b"), col("shingles").as("sh_b")),
-        Seq("b"))
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))))
+    joinPairEnds(cand, sh, idCol, "shingles", "sh_a", "sh_b")
+      .withColumn("jaccard", setJaccard(col("sh_a"), col("sh_b")))
       .select(col("a"), col("b"), col("jaccard"))
   }
 
@@ -849,11 +840,16 @@ object DedupOps {
     * partner id (-1 if none). One row per input doc — stable output
     * shape for the correctness gate. */
   def minhashDedupSummary(docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.8): DataFrame = {
-    val pairs = minhashPairs(docs, idCol, textCol)
-    // symmetrize so each doc sees its partners regardless of pair order
-    val sym = symmetrize(pairs, "jaccard")
-    val perDoc = sym.groupBy(col("id")).agg(
+      threshold: Double = 0.8): DataFrame =
+    partnerSummary(docs, idCol, minhashPairs(docs, idCol, textCol), threshold)
+
+  /** One row per `docs` id over verified (a, b, jaccard) pairs: the
+    * candidate count, the partners at or above `threshold`, and the
+    * smallest such partner (-1 if none). Pairs are symmetrized, so each
+    * doc sees its partners regardless of pair order. */
+  private[graft] def partnerSummary(docs: DataFrame, idCol: String,
+      pairs: DataFrame, threshold: Double): DataFrame = {
+    val perDoc = symmetrize(pairs, "jaccard").groupBy(col("id")).agg(
       count(lit(1)).as("n_candidates"),
       sum(when(col("jaccard") >= threshold, 1L).otherwise(0L)).as("n_dups"),
       min(when(col("jaccard") >= threshold, col("partner"))).as("dup_partner"))
@@ -924,11 +920,8 @@ object DedupOps {
       val hf = withHash.groupBy(col(hashCol).as("__h"))
         .agg(count(lit(1)).as("__mult"))
         .localCheckpoint(true) // one row per distinct hash; used 3x
-      val bandVals = (0 until 4).map(b =>
-        shiftrightunsigned(col("__h"), b * 16).bitwiseAND(lit(0xffffL)))
-      val banded = hf.select(col("__h"), posexplode(array(bandVals: _*)))
-        .withColumnRenamed("pos", "band_id")
-        .withColumnRenamed("col", "band_val")
+      val banded = explodeBands(hf, Seq(col("__h")),
+        bitBands(col("__h"), 4, 16), "band_val")
       // capped bucket expansion (same machinery as minhash/ngram
       // paths); the paired "ids" ARE the hash values, so popcount
       // verification needs no re-join
@@ -955,19 +948,11 @@ object DedupOps {
         .select(col(idCol), col(hashCol),
           coalesce(col("n_near"), lit(0L)).as("n_near"))
     } else {
-      val bandVals = (0 until 4).map(b =>
-        shiftrightunsigned(col(hashCol), b * 16).bitwiseAND(lit(0xffffL)))
-      val banded = withHash.select(col(idCol),
-        posexplode(array(bandVals: _*)))
-        .withColumnRenamed("pos", "band_id")
-        .withColumnRenamed("col", "band_val")
+      val banded = explodeBands(withHash, Seq(col(idCol)),
+        bitBands(col(hashCol), 4, 16), "band_val")
       val pairs = bucketPairs(banded, Seq(col("band_id"), col("band_val")),
         idCol, minN = 2, maxN = maxBucket)
-      val near = pairs
-        .join(withHash.select(col(idCol).as("a"), col(hashCol).as("h_a")),
-          Seq("a"))
-        .join(withHash.select(col(idCol).as("b"), col(hashCol).as("h_b")),
-          Seq("b"))
+      val near = joinPairEnds(pairs, withHash, idCol, hashCol, "h_a", "h_b")
         .filter(bit_count(col("h_a").bitwiseXOR(col("h_b"))) <= maxHamming)
       val sym = near.select(explode(array(col("a"), col("b"))).as("id"))
       val counts2 = sym.groupBy(col("id")).agg(count(lit(1)).as("n_near"))
@@ -1018,14 +1003,8 @@ object DedupOps {
     // gram pass — the inverted index — instead of three)
     val (pairsM, gramsCand) = verifySketches(pairs, docs, idCol,
       HashFunctions.charNgramHashes(col(textCol), n), "grams")
-    pairsM
-      .join(gramsCand.select(col(idCol).as("a"), col("grams").as("g_a")),
-        Seq("a"))
-      .join(gramsCand.select(col(idCol).as("b"), col("grams").as("g_b")),
-        Seq("b"))
-      .withColumn("jaccard",
-        size(array_intersect(col("g_a"), col("g_b"))).cast("double") /
-          size(array_union(col("g_a"), col("g_b"))))
+    joinPairEnds(pairsM, gramsCand, idCol, "grams", "g_a", "g_b")
+      .withColumn("jaccard", setJaccard(col("g_a"), col("g_b")))
       .select(col("a"), col("b"), col("jaccard"))
   }
 

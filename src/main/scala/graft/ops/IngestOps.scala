@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,14 +24,12 @@ import org.apache.spark.sql.functions._
   *  - `md5/`: one `h` (hex md5 of the stored text) per doc;
   *  - `seg/`: per distinct 16-token segment string, `sh` (md5 — what
   *    the batch excision anti-joins and the DuckDB oracle replays) and
-  *    `sx` (xxhash64 — what [[graft.streaming.CorpusIngest
-  *    .segmentGateStream]]'s bloom probes), both over the same tiling
-  *    as [[DedupOps.segmentDedup]].
+  *    `sx` (xxhash64), both over the same tiling as
+  *    [[DedupOps.segmentDedup]].
   *
   * Scale shape: every join against an inventory moves 16-byte hashes;
   * the merge appends batch-sized parquet files (hash-only, anti-joined
-  * so the inventory stays a set); the bloom artifact for the streaming
-  * gate compresses the segment inventory without re-reading any text.
+  * so the inventory stays a set).
   */
 object IngestOps {
 
@@ -41,37 +39,28 @@ object IngestOps {
   private def md5Dir(key: String): String = s"${invRoot(key)}/md5"
   private def segDir(key: String): String = s"${invRoot(key)}/seg"
 
-  /** The 16-token tiling shared with [[DedupOps.segmentDedup]]:
-    * lowercased whitespace tokens, `segLen`-token slices joined with
-    * single spaces. One row per segment: the `keep` columns, the
-    * segment's position `seg_idx` and its text `seg`. */
+  /** The 16-token tiling shared with [[DedupOps.segmentDedup]]
+    * ([[DedupOps.segmentText]] over lowercased whitespace tokens). One
+    * row per segment: the `keep` columns, the segment's position
+    * `seg_idx` and its text `seg`. */
   private def segmentRows(docs: DataFrame, keep: Seq[String],
       textCol: String, segLen: Int): DataFrame = {
-    val segText: Column => Column = i =>
-      array_join(slice(col("__w"), i * segLen + 1, lit(segLen)), " ")
-    val nSegs = DedupOps.idiv(
-      size(col("__w")) + lit(segLen - 1), lit(segLen)).cast("int")
+    val nSegs = DedupOps.segmentCount(col("__w"), segLen).cast("int")
     docs
       .select(keep.map(col) :+ DedupOps.tokens(col(textCol)).as("__w"): _*)
       .select(keep.map(col) :+
-        posexplode(transform(sequence(lit(0), nSegs - 1), segText))
+        posexplode(transform(sequence(lit(0), nSegs - 1),
+          DedupOps.segmentText(col("__w"), segLen)))
           .as(Seq("seg_idx", "seg")): _*)
   }
 
-  /** Word 3-grams of a text (lowercased, single-space tokens); a text
-    * of fewer than three tokens is its own single gram. */
-  private def trigrams(c: Column): Column = {
-    val w = split(lower(c), " ")
-    when(size(w) >= 3, transform(sequence(lit(0), size(w) - 3),
-      i => concat_ws(" ", element_at(w, i + 1),
-        element_at(w, i + 2), element_at(w, i + 3))))
-      .otherwise(array(array_join(w, " ")))
-  }
-
-  /** Distinct 3-gram strings `g` of a document set — the `evalGrams`
-    * side of the decontamination stage. */
+  /** Distinct word 3-gram strings `g` of a document set
+    * ([[DedupOps.wordShingles]] over lowercased tokens; a text of fewer
+    * than three tokens is its own single gram) — the `evalGrams` side
+    * of the decontamination stage. */
   def gramSet(docs: DataFrame, textCol: String): DataFrame =
-    docs.select(explode(array_distinct(trigrams(col(textCol)))).as("g"))
+    docs.select(explode(array_distinct(DedupOps.wordShingles(
+      DedupOps.tokens(col(textCol)), 3))).as("g"))
       .distinct()
 
   /** Distinct doc-text md5s of a corpus — the stage-1 inventory. */
@@ -80,7 +69,7 @@ object IngestOps {
 
   /** Distinct (sh = md5, sx = xxhash64) segment hashes of a corpus —
     * the stage-2 inventory (md5 for the exact excision anti-join and
-    * oracle replay, xxhash64 for the streaming bloom gate). */
+    * oracle replay). */
   def docSegments(docs: DataFrame, textCol: String,
       segLen: Int = 16): DataFrame =
     segmentRows(docs, Nil, textCol, segLen)
@@ -155,9 +144,7 @@ object IngestOps {
     * `maxFiles`, both rewrite to byte-derived right-sized files
     * ([[StorageOps.compact]]) and swap in atomically — content is
     * untouched (set-equality spec-gated), so gating results cannot
-    * move; the inventory's content signature changes, which correctly
-    * invalidates the cached segment bloom. Metadata-only check when
-    * under threshold. Returns whether a compaction ran. */
+    * move. Metadata-only check when under threshold. Returns whether a compaction ran. */
   def compactInventoryIfNeeded(spark: SparkSession, key: String,
       maxFiles: Int = 16,
       targetFileBytes: Long = 128L * 1024 * 1024): Boolean = {
@@ -381,7 +368,8 @@ object IngestOps {
         // r14 rejected-fan-out rule holds for every per-batch stage
         val hot = s3
           .select(col(idCol),
-            explode(array_distinct(trigrams(col("clean")))).as("g"))
+            explode(array_distinct(DedupOps.wordShingles(
+              DedupOps.tokens(col("clean")), 3))).as("g"))
           .join(eg, Seq("g"))
           .groupBy(col(idCol)).agg(count(lit(1)).as("n_shared"))
           .filter(col("n_shared") >= 3)
@@ -463,13 +451,4 @@ object IngestOps {
     * writes — the intra-merge crash window whose benign degradation
     * (seg-first order) CorpusIngestSpec proves. */
   private[graft] var crashBetweenMergeWrites = false
-
-  /** Bloom over the maintained segment inventory's xxhash64 column —
-    * the artifact [[graft.streaming.CorpusIngest.segmentGateStream]]
-    * probes. Rebuilt from the inventory scan (hash-only, no corpus
-    * text); callers persist the bytes per inventory generation. */
-  def segmentBloom(spark: SparkSession, key: String,
-      fpp: Double = 0.01): Array[Byte] =
-    DedupOps.buildEvalBloom(
-      inventorySegments(spark, key).select(col("sx").as("g")), fpp)
 }

@@ -404,12 +404,8 @@ object StorageOps {
       FileUtils.deleteDirectory(new java.io.File(
         s"${spark.conf.get("spark.sql.warehouse.dir")
           .stripPrefix("file:")}/$tbl"))
-      graft.Tables.load(spark, sfDir, name)
-        .write.mode(SaveMode.Overwrite)
-        .bucketBy(buckets, bucketCol)
-        .sortBy(bucketCol)
-        .format("parquet")
-        .saveAsTable(tbl)
+      writeBucketed(graft.Tables.load(spark, sfDir, name), tbl, bucketCol,
+        buckets)
     }
     tbl
   }

@@ -120,14 +120,10 @@ object SuffixArrayOps {
     * by the key, sort within partitions, summarize each partition's
     * (first key, last key, distinct-key count) — nPartitions rows to
     * the driver — then assign global dense ranks in one more pass.
-    * Returns (doc_id, off, rank). */
-  private[ops] def denseRank(keyed: DataFrame, parts: Int): DataFrame =
-    denseRankCounted(keyed, parts)._1
-
-  /** [[denseRank]] plus the GLOBAL distinct-key count, read off the
-    * same per-partition summaries the rank-offset pass collects —
-    * callers that need the count (the doubling loop's fixed-point
-    * test) get it without a second aggregation job. */
+    * Returns (doc_id, off, rank) plus the GLOBAL distinct-key count,
+    * read off the same per-partition summaries the rank-offset pass
+    * collects — the doubling loop's fixed-point test gets it without a
+    * second aggregation job. */
   private[ops] def denseRankCounted(keyed: DataFrame,
       parts: Int): (DataFrame, Long) = {
     val spark = keyed.sparkSession
@@ -185,7 +181,7 @@ object SuffixArrayOps {
     * successor via a boundary-row exchange (the first suffix string of
     * every partition — nPartitions short strings — collects to the
     * driver and broadcasts back, the same summaries trick as
-    * [[denseRank]]). No single-partition WindowExec anywhere in the
+    * [[denseRankCounted]]). No single-partition WindowExec anywhere in the
     * plan (gated in SuffixArraySpec); suffix strings only ever move
     * inside the one range shuffle.
     *

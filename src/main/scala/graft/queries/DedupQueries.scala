@@ -831,23 +831,10 @@ object DedupQueries {
         ops.DedupOps.minhashBands(corpus, "doc_id", "text"),
         ops.DedupOps.shingleSets(corpus, "doc_id", "text"),
         "doc_id", "text")
-      // symmetrize so a new-vs-new pair credits BOTH endpoints (the
-      // final join against `fresh` drops corpus-side rows again)
-      val sym = pairs.select(explode(array(
-          struct(col("a").as("id"), col("b").as("partner")),
-          struct(col("b").as("id"), col("a").as("partner")))).as("e"),
-          col("jaccard"))
-        .select(col("e.id").as("doc_id"), col("e.partner").as("partner"),
-          col("jaccard"))
-      val perDoc = sym.filter(col("jaccard") >= 0.8)
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_dups"),
-          min(col("partner")).as("dup_partner"))
-      fresh.select(col("doc_id"))
-        .join(perDoc, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("n_dups"), lit(0L)).as("n_dups"),
-          coalesce(col("dup_partner"), lit(-1L)).as("dup_partner"))
+      // the summary symmetrizes, so a new-vs-new pair credits BOTH
+      // endpoints; keying it by `fresh` drops corpus-side rows again
+      ops.DedupOps.partnerSummary(fresh, "doc_id", pairs, 0.8)
+        .select(col("doc_id"), col("n_dups"), col("dup_partner"))
         .orderBy(col("doc_id"))
     }, Sql(incrementalMinhashOracleSql)),
 

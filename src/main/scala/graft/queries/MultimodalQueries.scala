@@ -2156,9 +2156,7 @@ object MultimodalQueries {
         .groupBy(col("a"), col("b")).agg(count(lit(1)).as("cn"))
       val nonEdge = cn.join(e0,
         cn("a") === e0("u") && cn("b") === e0("v"), "left_anti")
-      nonEdge
-        .join(deg.select(col("c").as("a"), col("d").as("deg_a")), Seq("a"))
-        .join(deg.select(col("c").as("b"), col("d").as("deg_b")), Seq("b"))
+      ops.DedupOps.joinPairEnds(nonEdge, deg, "c", "d", "deg_a", "deg_b")
         .select(col("a"), col("b"), col("cn"), col("deg_a"), col("deg_b"),
           round(col("cn").cast("double")
             / (col("deg_a") + col("deg_b") - col("cn")), 4).as("jaccard"))

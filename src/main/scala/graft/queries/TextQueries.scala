@@ -1676,8 +1676,9 @@ object TextQueries {
       }.reduce(_ unionByName _).orderBy(col("family"))
     }, Sql(tokenizerEvalOracleSql)),
 
-    // Per-SOURCE tokenizer-drift audit — the batch twin of
-    // [[graft.streaming.CorpusIngest.tokenizerDriftStream]]: for each
+    // Per-SOURCE tokenizer-drift audit — the per-source twin of the
+    // ingest loop's per-batch drift report
+    // ([[graft.streaming.IngestLoop.driftReport]]): for each
     // source, the WordPiece [UNK] rate and trained-BPE fertility under
     // the SHIPPED frozen models. A source whose fertility/[UNK] sits
     // above the corpus band is drifting away from the tokenizer — the
@@ -1837,11 +1838,8 @@ object TextQueries {
         .select(col("doc_id"), col("pos"), col("col").as("term"))
       val tri = base
         .filter(size(col("w")) >= 3)
-        .select(col("doc_id"), explode(transform(
-          sequence(lit(0), size(col("w")) - 3),
-          i => concat_ws(" ", element_at(col("w"), i + 1),
-            element_at(col("w"), i + 2), element_at(col("w"), i + 3))))
-          .as("g3"))
+        .select(col("doc_id"),
+          explode(ops.DedupOps.wordShingles(col("w"), 3)).as("g3"))
       val top3 = tri.groupBy(col("g3")).agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("g3")).limit(3)
       val words = top3.select(col("g3").as("phrase"),

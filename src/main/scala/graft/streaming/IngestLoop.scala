@@ -4,193 +4,18 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.functions.HashFunctions
-import graft.ops.{DedupOps, StorageOps}
+import graft.ops.StorageOps
 
-/** Streaming corpus-ingest quality gates: continuous document streams
-  * checked against PERSISTED corpus artifacts at micro-batch latency.
-  * The batch complement is [[graft.ops.DedupOps.incrementalMinhashPairs]]
-  * (the daily-compaction shape); this is the same artifact contract at
-  * streaming freshness — a doc flagged the moment it lands, not at the
-  * next compaction.
-  */
-object CorpusIngest {
-
-  /** Streaming MinHash near-duplicate gate: each arriving document is
-    * checked against the persisted corpus sketch tables — the band
-    * table and the hashed shingle-set table that
-    * [[graft.ops.DedupOps.minhashBands]] / [[DedupOps.shingleSets]]
-    * write — and every verified (doc, corpus partner, jaccard) match
-    * at or above `threshold` is emitted.
-    *
-    * State discipline (the property that keeps this runnable forever):
-    * everything corpus-shaped stays STATIC. The stream side computes
-    * its signature row-locally (one HOF pass, no shuffle), candidates
-    * come from a stream-static equi-join on (band_id, band_hash),
-    * verification is a second stream-static join against the shingle
-    * table plus a map-side intersect — all stateless. The ONLY state
-    * in the query is the watermarked pair-dedup that collapses
-    * multi-band hits on the same partner
-    * (`dropDuplicatesWithinWatermark` — bounded by the horizon).
-    *
-    * Contract: the gate checks stream-vs-CORPUS only. New-vs-new
-    * duplicates inside the unmerged ingest window are out of scope
-    * here and belong to the next batch compaction
-    * ([[DedupOps.incrementalMinhashPairs]] covers both directions) —
-    * splitting it this way keeps the streaming query free of
-    * stream-stream joins and their state.
-    *
-    * The stream's shingle set rides along the banded rows (bands× one
-    * int-array per doc inside a micro-batch — bounded by batch size,
-    * never by corpus size). On batch input the same plan runs with a
-    * plain pair-distinct; streaming==batch is the spec gate. */
-  def neardupGateStream(docs: DataFrame, corpusBands: DataFrame,
-      corpusShingles: DataFrame, idCol: String, textCol: String,
-      tsCol: String = "ts", threshold: Double = 0.8,
-      watermark: String = "1 hour", k: Int = 64, bands: Int = 16,
-      shingleN: Int = 3): DataFrame = {
-    val toks = DedupOps.tokens(col(textCol))
-    val withSketch = docs.select(col(idCol), col(tsCol),
-      HashFunctions.minhashSignature(toks, k, shingleN).as("sig"),
-      HashFunctions.shingleHashes(toks, shingleN).as("sh_a"))
-    require(bands > 0 && k % bands == 0,
-      s"signature length k=$k must be divisible by bands=$bands")
-    val r = k / bands
-    val banded = withSketch.select(col(idCol), col(tsCol), col("sh_a"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => hash(slice(col("sig"), b * lit(r) + 1, lit(r))))))
-      .withColumnRenamed("pos", "band_id")
-      .withColumnRenamed("col", "band_hash")
-    val verified = banded
-      .join(corpusBands.select(col("band_id"), col("band_hash"),
-        col(idCol).as("partner")), Seq("band_id", "band_hash"))
-      .filter(col(idCol) =!= col("partner"))
-      .join(corpusShingles.select(col(idCol).as("partner"),
-        col("shingles").as("sh_b")), Seq("partner"))
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))))
-      .filter(col("jaccard") >= threshold)
-      .select(col(tsCol), col(idCol), col("partner"), col("jaccard"))
-    if (docs.isStreaming)
-      verified.withWatermark(tsCol, watermark)
-        .dropDuplicatesWithinWatermark(Seq(idCol, "partner"))
-    else verified.dropDuplicates(Seq(idCol, "partner"))
-  }
-
-  /** Streaming SEGMENT-LEVEL dedup gate — the CCNet line-dedup
-    * contract of [[graft.ops.DedupOps.segmentDedup]] at ingest
-    * latency: each arriving document is segmented ROW-LOCALLY (the
-    * same `segLen`-token tiling as the batch compaction), every
-    * segment probed against the persisted corpus segment bloom
-    * (built from [[DedupOps.corpusSegmentHashes]] via the
-    * cachedEvalBloom artifact flow), and the doc emitted with its
-    * segment counts plus the md5 of the text reassembled from
-    * CORPUS-NOVEL segments only — what an ingest pipeline would
-    * actually append.
-    *
-    * Statefulness: NONE. Segmentation, the bloom probe (codegen'd
-    * BloomFilterMightContain on a broadcast literal — the filter
-    * bytes ride the task closure, no join), and reassembly are all
-    * row-local; the query plans with zero stateful operators and no
-    * watermark, so it runs forever at constant memory. The fpp
-    * misflags a novel segment as duplicate at the filter's rate — the
-    * bloom-decontamination trade; the next batch compaction
-    * ([[DedupOps.segmentDedup]], exact) reconciles. Stream-vs-corpus
-    * only, like [[neardupGateStream]]: new-vs-new duplicate segments
-    * inside the unmerged window belong to the compaction. */
-  def segmentGateStream(docs: DataFrame, bloomBytes: Array[Byte],
-      idCol: String, textCol: String, tsCol: String = "ts",
-      segLen: Int = 16): DataFrame = {
-    require(segLen >= 1, s"segLen must be >= 1 (got $segLen)")
-    val segText: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      i => array_join(slice(col("__w"), i * segLen + 1, lit(segLen)), " ")
-    docs
-      .withColumn("__w", DedupOps.tokens(col(textCol)))
-      .withColumn("__keep", filter(
-        sequence(lit(0),
-          DedupOps.idiv(size(col("__w")) + lit(segLen - 1), lit(segLen))
-            .cast("int") - 1),
-        i => !DedupOps.bloomMightContain(bloomBytes,
-          xxhash64(segText(i)))))
-      .select(col(idCol), col(tsCol),
-        DedupOps.idiv(size(col("__w")) + lit(segLen - 1), lit(segLen))
-          .cast("long").as("n_segs"),
-        size(col("__keep")).cast("long").as("n_novel"),
-        md5(array_join(transform(col("__keep"), segText), " "))
-          .as("novel_md5"))
-  }
-
-  /** Streaming TOKENIZER-DRIFT monitor: per event-time window, how
-    * well the SHIPPED frozen tokenizer models fit the live document
-    * stream — the WordPiece `[UNK]` rate (words the trained
-    * vocabulary cannot tile at all) and the trained-BPE fertility
-    * (pieces per word; rises when the stream's subword distribution
-    * leaves the training corpus). A corpus shift — a new language, a
-    * new domain, a markup burst — moves these hours before anyone
-    * inspects samples, which is exactly when a retrain
-    * ([[graft.ops.BpeOps.cachedTrain]] on the grown corpus) should be
-    * scheduled.
-    *
-    * Scale/state discipline: both models ride as KILOBYTE task
-    * references inside the codegen'd encode expressions
-    * ([[graft.functions.WordPieceEncode]]/[[graft.functions.BpeEncode]]
-    * — map-side, whole-stage codegen, nothing corpus-shaped anywhere);
-    * per-doc counts collapse map-side into ONE watermarked windowed
-    * aggregation, the query's only stateful operator. Rates divide
-    * exact long sums once at the end, so streaming and batch agree
-    * bit-for-bit (the spec gate). On batch input the identical plan
-    * runs without the watermark. */
-  def tokenizerDriftStream(docs: DataFrame,
-      wp: graft.functions.WordPieceModel,
-      bpe: graft.functions.BpeModel, textCol: String,
-      tsCol: String = "ts", windowDur: String = "10 minutes",
-      watermark: String = "1 hour"): DataFrame = {
-    val base = if (docs.isStreaming)
-      docs.withWatermark(tsCol, watermark) else docs
-    val pieces = graft.ops.WordPieceOps.encode(col(textCol), wp)
-    base
-      .select(col(tsCol),
-        size(split(col(textCol), " ")).cast("long").as("__w"),
-        size(graft.ops.BpeOps.encode(col(textCol), bpe)).cast("long")
-          .as("__bp"),
-        size(pieces).cast("long").as("__wp"),
-        // array_remove, not filter(=== "[UNK]"): ArrayFilter is a
-        // CodegenFallback HOF; the size difference counts [UNK]
-        // occurrences entirely inside codegen
-        (size(pieces) - size(array_remove(pieces, "[UNK]")))
-          .cast("long").as("__unk"))
-      .groupBy(window(col(tsCol), windowDur))
-      .agg(count(lit(1)).as("n_docs"), sum(col("__w")).as("n_words"),
-        sum(col("__bp")).as("n_bpe_pieces"),
-        sum(col("__wp")).as("n_wp_pieces"),
-        sum(col("__unk")).as("n_unk"))
-      .select(col("window.start").as("win_start"),
-        col("window.end").as("win_end"), col("n_docs"),
-        col("n_words"), col("n_bpe_pieces"), col("n_wp_pieces"),
-        col("n_unk"),
-        // guard the zero-denominator window (ANSI: 0/0 errors) — a
-        // window of only-empty docs has no pieces and rates 0.0
-        when(col("n_wp_pieces") === 0L, lit(0.0))
-          .otherwise(round(col("n_unk") / col("n_wp_pieces")
-            .cast("double"), 6)).as("unk_rate"),
-        when(col("n_words") === 0L, lit(0.0))
-          .otherwise(round(col("n_bpe_pieces") / col("n_words")
-            .cast("double"), 4)).as("bpe_fertility"))
-  }
-}
-
-/** The PRODUCTION INGEST LOOP — the end-to-end composition the gates
-  * above run alone: one foreachBatch orchestration that, per arriving
-  * micro-batch, (1) gates the batch through all four
+/** The PRODUCTION INGEST LOOP — one foreachBatch orchestration that,
+  * per arriving micro-batch, (1) gates the batch through all four
   * [[graft.ops.IngestOps.ingestBatch]] stages against the PERSISTED
   * inventories, (2) materializes the accepted docs BEFORE any
   * inventory write (the ordering that makes the loop correct — see
   * [[processBatch]]), (3) MERGES the accepted batch into the
   * inventories so the NEXT batch is gated against everything stored so
   * far, and (4) emits per-batch stage accounting plus (when the frozen
-  * tokenizer models are supplied) the [[CorpusIngest
-  * .tokenizerDriftStream]] drift metrics over the accepted text.
+  * tokenizer models are supplied) tokenizer drift metrics over the
+  * accepted text ([[driftReport]]).
   *
   * Scale shape — the whole point of the composition: per batch, the
   * loop reads (a) the batch and (b) hash-compact inventory parquet,
@@ -237,20 +62,6 @@ final class IngestLoop(spark: SparkSession, key: String, idCol: String,
     * window the commit protocol exists for (CorpusIngestSpec kills
     * the loop here and replays the batch). */
   private[graft] var crashAfterManifestWrite = false
-
-  /** Env-gated phase timing (SPARK_GRAFT_LOOP_PROFILE=1): prints each
-    * per-batch phase's wall so the loop's cost structure is measurable
-    * without a debugger — reads nothing, changes nothing. */
-  private val profileLoop =
-    sys.env.get("SPARK_GRAFT_LOOP_PROFILE").contains("1")
-  private def timed[A](name: String)(body: => A): A =
-    if (!profileLoop) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"      [loop] $name%-24s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      r
-    }
 
   /** Gate + account + merge ONE batch. The accepted frame is
     * `localCheckpoint`ed BEFORE [[graft.ops.IngestOps.mergeAccepted]]
@@ -304,8 +115,7 @@ final class IngestLoop(spark: SparkSession, key: String, idCol: String,
     // 0_incoming == 0a_decoded + 0b_quarantined.
     val decodeStages = payloadCol match {
       case Some(pc) =>
-        val decoded = timed("decode ckpt") {
-          decodePayloads(batch, pc).localCheckpoint(true) }
+        val decoded = decodePayloads(batch, pc).localCheckpoint(true)
         val bad = decoded.filter(col("__err").isNotNull)
           .select(lit(tag).as("batch"), col(idCol),
             col("__err").as("error_class"))
@@ -317,16 +127,14 @@ final class IngestLoop(spark: SparkSession, key: String, idCol: String,
       case None => None
     }
     val gateInput = decodeStages.map(_._1).getOrElse(batch)
-    val st = timed("gate s1+s2 ckpt") {
-      graft.ops.IngestOps.ingestBatch(spark, key, gateInput,
-        idCol, textCol, evalGrams, segLen, materializeStages = true)
-    }
+    val st = graft.ops.IngestOps.ingestBatch(spark, key, gateInput,
+      idCol, textCol, evalGrams, segLen, materializeStages = true)
     // per-batch no-corpus-read audit surface: the files behind the
     // gate's OWN leaf frames (r15 — previously a second, throwaway
     // ingestBatch plan was built and analyzed per batch just to ask
     // its s4 the same question: ~0.35 s of driver planning per batch)
     acceptedInputFiles += ((tag, st.sourceFiles))
-    val accepted = timed("s4 ckpt") { st.s4.localCheckpoint(true) }
+    val accepted = st.s4.localCheckpoint(true)
     // ONE action — and ONE aggregation — for all stage accountings
     // (r14: tagging rows with their stage name and aggregating once
     // replaced ~15 per-stage agg jobs), launched as a FUTURE (r15,
@@ -381,8 +189,8 @@ final class IngestLoop(spark: SparkSession, key: String, idCol: String,
           coalesce(sum(col("__bp")), lit(0L)).as("bp"),
           coalesce(sum(col("__wp")), lit(0L)).as("wpn"),
           coalesce(sum(col("__unk")), lit(0L)).as("unk"))
-        // rates via Spark's own round(), the exact arithmetic
-        // tokenizerDriftStream emits — no driver float re-derivation.
+        // rates via Spark's own round() — no driver float
+        // re-derivation.
         // Zero denominators (a batch whose every doc was gated out)
         // emit 0.0: under ANSI mode a bare 0/0 ERRORS rather than
         // returning null, so the guard must run before the division
@@ -428,15 +236,13 @@ final class IngestLoop(spark: SparkSession, key: String, idCol: String,
       manifestPinFuture
     try {
       // join the accounting before anything reads stageBuf
-      val counted = timed("await accounting") {
-        scala.concurrent.Await.result(countedFuture,
-          scala.concurrent.duration.Duration.Inf)
-      }
+      val counted = scala.concurrent.Await.result(countedFuture,
+        scala.concurrent.duration.Duration.Inf)
       stageNames.foreach { case (nm, _) =>
         val (n, sm) = counted.getOrElse(nm, (0L, 0L))
         stageBuf += ((tag, nm, n, sm))
       }
-      for (dir <- packManifestDir; mF <- manifestPinFuture) timed("manifest") {
+      for (dir <- packManifestDir; mF <- manifestPinFuture) {
         // nAccepted comes from the already-collected stage accounting
         // (the "4_decon" row) — no extra job
         val nAccepted = stageBuf
@@ -479,22 +285,18 @@ final class IngestLoop(spark: SparkSession, key: String, idCol: String,
       if (crashAfterManifestWrite)
         throw new IllegalStateException("injected crash (test hook): " +
           "manifest delta written, inventory merge not committed")
-      timed("merge") {
-        graft.ops.IngestOps.mergeAccepted(spark, key, accepted, "clean",
-          segLen, nDocsKnown = stageBuf
-            .collectFirst { case (`tag`, "4_decon", n, _) => n },
-          segDeltaKnown = Some(scala.concurrent.Await.result(segDeltaFuture,
-            scala.concurrent.duration.Duration.Inf)))
-      }
+      graft.ops.IngestOps.mergeAccepted(spark, key, accepted, "clean",
+        segLen, nDocsKnown = stageBuf
+          .collectFirst { case (`tag`, "4_decon", n, _) => n },
+        segDeltaKnown = Some(scala.concurrent.Await.result(segDeltaFuture,
+          scala.concurrent.duration.Duration.Inf)))
       // join the concurrent drift job BEFORE the commit marker: a drift
       // failure leaves the tag uncommitted (exactly the crash window the
       // replay protocol already covers — a committed-artifact replay is
       // a structural no-op), and the report buffer is complete before
       // the method returns.
-      timed("await drift") {
-        driftFuture.foreach(f => scala.concurrent.Await.result(f,
-          scala.concurrent.duration.Duration.Inf))
-      }
+      driftFuture.foreach(f => scala.concurrent.Await.result(f,
+        scala.concurrent.duration.Duration.Inf))
     } finally pending.foreach(f => scala.util.Try(
       scala.concurrent.Await.ready(f, scala.concurrent.duration.Duration.Inf)))
     // the atomic commit point: both artifacts are now consistent.
@@ -647,9 +449,10 @@ final class IngestLoop(spark: SparkSession, key: String, idCol: String,
   }
 
   /** Per-batch tokenizer drift over the ACCEPTED text (empty unless
-    * both frozen models were supplied): the [[CorpusIngest
-    * .tokenizerDriftStream]] metrics keyed by batch instead of by
-    * event-time window. */
+    * both frozen models were supplied): the WordPiece `[UNK]` rate
+    * (`[UNK]` pieces over WordPiece pieces) and the trained-BPE
+    * fertility (BPE pieces per whitespace word), from exact long sums
+    * divided once. */
   def driftReport: DataFrame = {
     import spark.implicits._
     driftBuf.toSeq.toDF("batch", "n_docs", "n_words", "n_bpe_pieces",

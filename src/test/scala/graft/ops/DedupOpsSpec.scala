@@ -1,5 +1,10 @@
 package graft.ops
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -58,5 +63,33 @@ class DedupOpsSpec extends SparkSpec {
       .select(DedupOps.wordShingles(DedupOps.tokens(col("text")), 3))
       .head.getSeq[String](0)
     assert(sh == Seq("short text"))
+  }
+
+  test("each near-dup step is written once: band explosion, segment " +
+      "tiling, set Jaccard and pair-end join only in DedupOps.scala") {
+    val root = Paths.get("src/main")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val everywhere = (_: Path) => true
+    // query bodies may hand-write a pair join that carries its own hints
+    val operators = (p: Path) => !p.toString.contains("/queries/")
+    val steps = Seq("withColumnRenamed(\"pos\", \"band_id\")" -> everywhere,
+      "segLen + 1" -> everywhere, "array_union(" -> everywhere,
+      "Seq(\"a\"))" -> operators)
+    val hits = Files.walk(root).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .flatMap { (p: Path) =>
+        Files.readAllLines(p, UTF_8).asScala.zipWithIndex.flatMap {
+          case (line, i) =>
+            steps.collect { case (st, in) if in(p) && line.contains(st) =>
+              (st, p.getFileName.toString, s"$p:${i + 1}: $line") }
+        }
+      }.toSeq
+    val outside = hits.filter(_._2 != "DedupOps.scala").map(_._3)
+    assert(outside.isEmpty,
+      "compose the DedupOps helpers instead:\n" + outside.mkString("\n"))
+    val repeated = hits.groupBy(_._1).filter(_._2.size > 1)
+    assert(repeated.isEmpty,
+      "one definition per step:\n" + repeated.values.flatten.map(_._3)
+        .mkString("\n"))
   }
 }

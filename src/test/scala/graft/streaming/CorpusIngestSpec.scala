@@ -1,241 +1,18 @@
 package graft.streaming
 
 import java.nio.file.Files
-import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.SparkSpec
-import graft.ops.DedupOps
 
 class CorpusIngestSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private val docSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("ts", TimestampType),
-    StructField("text", StringType)))
-
-  private def ts(m: Int) = Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
-
+  // word counts the frozen tokenizer models are trained on
   private val corpusText = "the quick brown fox jumps over the lazy " +
     "dog near the river bank while the sun sets slowly behind the hill"
-  private lazy val corpus = Seq(
-    (100L, corpusText),
-    (101L, "an unrelated corpus document about columnar execution " +
-      "engines with vectorized operators and late materialization"))
-    .toDF("doc_id", "text")
-  private lazy val corpusBands =
-    DedupOps.minhashBands(corpus, "doc_id", "text")
-  private lazy val corpusShingles =
-    DedupOps.shingleSets(corpus, "doc_id", "text")
-
-  // batch 1: exact copy of corpus doc + fresh doc; batch 2: near-dup
-  private val b1 = Seq(
-    (1L, ts(0), corpusText),
-    (2L, ts(1), "a completely fresh document with entirely new words " +
-      "about distributed shuffles and adaptive query execution plans"))
-  private val b2 = Seq(
-    (3L, ts(5), corpusText.replace("slowly", "quickly")))
-
-  test("streaming near-dup gate == batch gate, flags only true dups") {
-    val dir = Files.createTempDirectory("graft-ingest").toString
-    spark.createDataFrame(spark.sparkContext.parallelize(
-        b1.map(t => org.apache.spark.sql.Row(t._1, t._2, t._3))), docSchema)
-      .write.parquet(dir + "/b1")
-    spark.createDataFrame(spark.sparkContext.parallelize(
-        b2.map(t => org.apache.spark.sql.Row(t._1, t._2, t._3))), docSchema)
-      .write.parquet(dir + "/b2")
-
-    val stream = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", "1").parquet(dir + "/b*")
-    val q = CorpusIngest.neardupGateStream(stream, corpusBands,
-        corpusShingles, "doc_id", "text", threshold = 0.7)
-      .writeStream.format("memory").queryName("gate_out")
-      .outputMode("append").start()
-    val streamed = try {
-      q.processAllAvailable()
-      spark.table("gate_out").orderBy(col("doc_id"), col("partner"))
-        .collect()
-    } finally q.stop()
-
-    val batchDocs = spark.createDataFrame(spark.sparkContext.parallelize(
-      (b1 ++ b2).map(t => org.apache.spark.sql.Row(t._1, t._2, t._3))),
-      docSchema)
-    val batch = CorpusIngest.neardupGateStream(batchDocs, corpusBands,
-        corpusShingles, "doc_id", "text", threshold = 0.7)
-      .orderBy(col("doc_id"), col("partner")).collect()
-
-    assert(streamed.toSeq == batch.toSeq,
-      s"streaming != batch:\n${streamed.mkString("\n")}\nvs\n" +
-        batch.mkString("\n"))
-    val byDoc = streamed.map(r => r.getLong(1) -> (r.getLong(2),
-      r.getDouble(3))).toMap
-    assert(byDoc.contains(1L) && byDoc(1L)._1 == 100L &&
-      byDoc(1L)._2 == 1.0, s"exact copy must flag at 1.0: $byDoc")
-    assert(byDoc.contains(3L) && byDoc(3L)._1 == 100L &&
-      byDoc(3L)._2 >= 0.7, s"near-dup must flag >= 0.7: $byDoc")
-    assert(!byDoc.contains(2L), s"fresh doc must pass silently: $byDoc")
-    assert(streamed.length == 2)
-  }
-
-  test("gate plan is stateless except the pair-dedup (no stream agg)") {
-    val dir = Files.createTempDirectory("graft-ingest2").toString
-    spark.createDataFrame(spark.sparkContext.parallelize(
-        b1.map(t => org.apache.spark.sql.Row(t._1, t._2, t._3))), docSchema)
-      .write.parquet(dir + "/b1")
-    val stream = spark.readStream.schema(docSchema).parquet(dir + "/b*")
-    val q = CorpusIngest.neardupGateStream(stream, corpusBands,
-        corpusShingles, "doc_id", "text", threshold = 0.7)
-      .writeStream.format("memory").queryName("gate_plan")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val plan = q.lastProgress.sources.length +:
-        Seq.empty[Int] // one file source
-      assert(plan.head == 1)
-      // the ONLY stateful operator is the dropDuplicatesWithinWatermark
-      val ops = q.lastProgress.stateOperators
-      assert(ops.length == 1,
-        s"exactly one stateful operator expected: ${ops.mkString(",")}")
-      assert(ops.head.operatorName.toLowerCase.contains("dedupe"),
-        s"the stateful operator must be the pair-dedup: " +
-          ops.head.operatorName)
-    } finally q.stop()
-  }
-
-  test("segment gate: streaming == batch, zero stateful operators") {
-    val segLen = 8
-    // fpp tiny so the novel-count assertions below are deterministic
-    // on this hand corpus (a bloom false positive would misflag a
-    // novel segment — that's the documented production trade, not a
-    // test tolerance)
-    val bloom = DedupOps.buildEvalBloom(
-      DedupOps.corpusSegmentHashes(corpus, "text", segLen), fpp = 1e-9)
-    val w = corpusText.split(" ")
-    // 2 corpus-aligned segments + 8 novel tokens = 1 novel segment
-    val hybrid = (w.take(2 * segLen) ++ Seq("entirely", "novel",
-      "closing", "tokens", "appended", "for", "segment", "three"))
-      .mkString(" ")
-    val b = Seq(
-      (1L, ts(0), corpusText), // every segment known
-      (2L, ts(1), "a completely fresh document with entirely new " +
-        "words about distributed shuffles and adaptive query plans"),
-      (3L, ts(2), hybrid))
-    val dir = Files.createTempDirectory("graft-seggate").toString
-    spark.createDataFrame(spark.sparkContext.parallelize(
-        b.map(t => org.apache.spark.sql.Row(t._1, t._2, t._3))),
-        docSchema)
-      .write.parquet(dir + "/b1")
-    val stream = spark.readStream.schema(docSchema).parquet(dir + "/b*")
-    val q = CorpusIngest.segmentGateStream(stream, bloom,
-        "doc_id", "text", segLen = segLen)
-      .writeStream.format("memory").queryName("seg_gate")
-      .outputMode("append").start()
-    val streamed = try {
-      q.processAllAvailable()
-      val ops = q.lastProgress.stateOperators
-      assert(ops == null || ops.isEmpty,
-        s"segment gate must plan ZERO stateful operators: " +
-          (if (ops == null) "" else ops.mkString(",")))
-      spark.table("seg_gate").orderBy(col("doc_id")).collect()
-    } finally q.stop()
-    val batchDocs = spark.createDataFrame(spark.sparkContext.parallelize(
-      b.map(t => org.apache.spark.sql.Row(t._1, t._2, t._3))), docSchema)
-    val batch = CorpusIngest.segmentGateStream(batchDocs, bloom,
-      "doc_id", "text", segLen = segLen).orderBy(col("doc_id")).collect()
-    assert(streamed.toSeq == batch.toSeq, "streaming != batch")
-    val byDoc = streamed.map(r => r.getLong(0) ->
-      (r.getLong(2), r.getLong(3), r.getString(4))).toMap
-    def md5hex(s: String): String =
-      java.security.MessageDigest.getInstance("MD5").digest(s.getBytes)
-        .map("%02x".format(_)).mkString
-    val (n1, k1, m1) = byDoc(1L)
-    assert(k1 == 0L && m1 == md5hex(""),
-      s"known doc must reassemble empty: ${byDoc(1L)}")
-    val (n2, k2, _) = byDoc(2L)
-    assert(k2 == n2 && n2 > 0,
-      s"fresh doc must keep every segment: ${byDoc(2L)}")
-    val (n3, k3, m3) = byDoc(3L)
-    assert(n3 == 3L && k3 == 1L,
-      s"hybrid doc: 3 segments, 1 novel: ${byDoc(3L)}")
-    assert(m3 == md5hex("entirely novel closing tokens appended for " +
-      "segment three"), s"novel reassembly digest mismatch: $m3")
-  }
-
-  test("tokenizer drift monitor: streaming == batch, drift raises " +
-    "UNK rate and fertility, one stateful operator") {
-    // frozen models trained on the in-domain corpus word counts
-    val wcounts = (corpusText + " " + corpusText).split(" ")
-      .groupBy(identity).map { case (w, xs) => (w, xs.length.toLong) }
-      .toArray.sortBy { case (w, n) => (-n, w) }
-    val wp = graft.ops.WordPieceOps.trainVocab(wcounts, numMerges = 16)
-    val bpe = graft.ops.BpeOps.trainMerges(wcounts, numMerges = 16)
-
-    // window 1 (10:00-10:10): in-domain; window 2 (10:20-10:30):
-    // drifted — z/q/x appear in the corpus only in positions whose
-    // alphabet CLASS the drifted words violate ('z' never
-    // word-initial so bare 'z' is absent; 'q'/'x' never continue so
-    // '##q'/'##x' are absent) -> every drifted word is WordPiece
-    // [UNK], and no learned merge applies -> per-char BPE fertility
-    // jump; sentinel next day closes both windows past the watermark
-    val b1 = Seq(
-      (1L, ts(0), corpusText),
-      (2L, ts(4), "the quick fox jumps over the lazy dog"))
-    val b2 = Seq(
-      (3L, ts(21), "zzzz qqqq xxxx zzqq qqzz xxqq zzxx qqxx"),
-      (4L, ts(24), "zzzzzzzz qqqqqqqq"))
-    val sentinel = Seq(
-      (9L, Timestamp.valueOf("2024-01-02 10:00:00"), "the end"))
-
-    val dir = Files.createTempDirectory("graft-drift").toString
-    def write(rows: Seq[(Long, Timestamp, String)], name: String): Unit =
-      spark.createDataFrame(spark.sparkContext.parallelize(
-          rows.map(t => org.apache.spark.sql.Row(t._1, t._2, t._3))),
-          docSchema)
-        .write.parquet(s"$dir/$name")
-    write(b1, "b1"); write(b2, "b2"); write(sentinel, "b3")
-
-    val stream = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", "1").parquet(dir + "/b*")
-    val q = CorpusIngest.tokenizerDriftStream(stream, wp, bpe, "text")
-      .writeStream.format("memory").queryName("drift_out")
-      .outputMode("append").start()
-    val streamed = try {
-      q.processAllAvailable()
-      val ops = q.lastProgress.stateOperators
-      assert(ops.length == 1,
-        s"exactly one stateful operator expected: ${ops.mkString(",")}")
-      spark.table("drift_out").orderBy(col("win_start")).collect()
-    } finally q.stop()
-
-    // batch on the same rows computes every window; the sentinel's
-    // own window never closes in the stream, so compare the rest
-    val batchDocs = spark.createDataFrame(spark.sparkContext.parallelize(
-      (b1 ++ b2 ++ sentinel)
-        .map(t => org.apache.spark.sql.Row(t._1, t._2, t._3))),
-      docSchema)
-    val batch = CorpusIngest.tokenizerDriftStream(batchDocs, wp, bpe,
-        "text")
-      .filter(col("win_start") < lit(Timestamp.valueOf(
-        "2024-01-02 00:00:00")))
-      .orderBy(col("win_start")).collect()
-    assert(streamed.toSeq == batch.toSeq,
-      s"streaming != batch:\n${streamed.mkString("\n")}\nvs\n" +
-        batch.mkString("\n"))
-
-    assert(streamed.length == 2, streamed.mkString("\n"))
-    val Array(inDomain, drifted) = streamed.map(r =>
-      (r.getDouble(7), r.getDouble(8))) // (unk_rate, bpe_fertility)
-    assert(inDomain._1 == 0.0,
-      s"in-domain window must have zero UNK rate: $inDomain")
-    assert(drifted._1 == 1.0,
-      s"every drifted word is untileable -> UNK rate 1.0: $drifted")
-    assert(drifted._2 > inDomain._2 + 1.0,
-      s"drift must raise BPE fertility: $inDomain vs $drifted")
-  }
 
   test("ingest loop: batch 2 gated by batch 1's merges, streaming == " +
     "batch, no corpus text re-read") {
@@ -278,9 +55,8 @@ class CorpusIngestSpec extends SparkSpec {
     graft.ops.IngestOps.buildInventory(spark, key, corpus, "text")
     val loop = new IngestLoop(spark, key, "doc_id", "text", None, 16,
       Some(wp), Some(bpe))
-    val schema = StructType(b0.schema.fields)
     val q = loop.start(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+      spark.readStream.schema(b0.schema).option("maxFilesPerTrigger", "1")
         .parquet(s"$dir/b*"),
       col("arrival"), s"$dir/ckpt")
     q.awaitTermination()
