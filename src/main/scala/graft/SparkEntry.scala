@@ -21,7 +21,11 @@ import graft.queries.Shared.t
   * Determinism rules applied throughout (SURVEY §7.4 item 5):
   *   - every query ends in a total ORDER BY (row order must match);
   *   - money sums go through DecimalType(18,s) so they are exact and
-  *     shuffle-order-independent, then cast back to double;
+  *     shuffle-order-independent, then cast back to double. They run as
+  *     three long sums over limbs of the unscaled value
+  *     ([[graft.plans.DecimalSums]]), exact up to 2^42 rows per group;
+  *     a session without `graft.plans.GraftExtensions` gets the same
+  *     result from Spark's BigDecimal sum, only slower;
   *   - all computed columns are aliased identically in Spark and SQL.
   */
 object SparkEntry {

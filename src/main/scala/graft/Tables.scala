@@ -48,7 +48,8 @@ object Tables {
     // this JVM.
     "spark.sql.codegen.cache.maxEntries" -> "5000",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    // custom planner surface (as-of join strategy + pruning rule)
+    // custom planner surface (as-of join strategy + pruning rule, and
+    // exact decimal sums on long limbs); see GraftExtensions
     "spark.sql.extensions" -> "graft.plans.GraftExtensions")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {

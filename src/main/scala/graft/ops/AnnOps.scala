@@ -709,9 +709,10 @@ object AnnOps {
       .withColumn("cosine", VectorFunctions.cosineSim(col("vec_a"),
         col("vec_b")))
     // pairs are a<b; symmetrize so each vector sees its candidates
-    val perVec = DedupOps.symmetrize(scored, "cosine").groupBy(col("id")).agg(
-      count(lit(1)).as("n_candidates"),
-      round(max(col("cosine")), 4).as("max_cosine"))
+    val perVec = DedupOps.symmetrize(scored, Some("cosine"))
+      .groupBy(col("id")).agg(
+        count(lit(1)).as("n_candidates"),
+        round(max(col("cosine")), 4).as("max_cosine"))
     corpus.select(col(idCol).as("id"))
       .join(perVec, Seq("id"), "left")
       .select(col("id").as(idCol),

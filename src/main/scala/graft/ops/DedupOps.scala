@@ -645,16 +645,20 @@ object DedupOps {
       .select(col("a"), col("b"), col("jaccard"))
   }
 
-  /** Symmetrize (a,b,score) pairs into one row per direction with a
-    * single explode — a union of two selects over the same pair frame
-    * would execute the whole candidate+verify pipeline twice. */
-  private[graft] def symmetrize(pairs: DataFrame, score: String): DataFrame =
+  /** Symmetrize (a, b[, score]) pairs into one (id, partner[, score])
+    * row per direction with a single explode — a union of two selects
+    * over the same pair frame would execute the whole candidate+verify
+    * pipeline twice. */
+  private[graft] def symmetrize(pairs: DataFrame,
+      score: Option[String] = None): DataFrame = {
+    val kept = score.toSeq.map(col)
     pairs.select(explode(array(
         struct(col("a").as("id"), col("b").as("partner")),
-        struct(col("b").as("id"), col("a").as("partner")))).as("e"),
-        col(score))
-      .select(col("e.id").as("id"), col("e.partner").as("partner"),
-        col(score))
+        struct(col("b").as("id"), col("a").as("partner")))).as("e") +:
+        kept: _*)
+      .select(col("e.id").as("id") +: col("e.partner").as("partner") +:
+        kept: _*)
+  }
 
   /** The (id, band_id, band_hash) blocking table for a corpus — the
     * persistable sketch artifact an INCREMENTAL pipeline keeps: at
@@ -849,7 +853,7 @@ object DedupOps {
     * doc sees its partners regardless of pair order. */
   private[graft] def partnerSummary(docs: DataFrame, idCol: String,
       pairs: DataFrame, threshold: Double): DataFrame = {
-    val perDoc = symmetrize(pairs, "jaccard").groupBy(col("id")).agg(
+    val perDoc = symmetrize(pairs, Some("jaccard")).groupBy(col("id")).agg(
       count(lit(1)).as("n_candidates"),
       sum(when(col("jaccard") >= threshold, 1L).otherwise(0L)).as("n_dups"),
       min(when(col("jaccard") >= threshold, col("partner"))).as("dup_partner"))
@@ -929,8 +933,8 @@ object DedupOps {
         "__h", minN = 2, maxN = maxBucket)
       val near = pairs
         .filter(bit_count(col("a").bitwiseXOR(col("b"))) <= maxHamming)
-      val sym = near.select(col("a").as("__h"), col("b").as("__p"))
-        .union(near.select(col("b").as("__h"), col("a").as("__p")))
+      val sym = symmetrize(near)
+        .select(col("id").as("__h"), col("partner").as("__p"))
       val partnerMass = sym
         .join(hf.select(col("__h").as("__p"), col("__mult").as("__pm")),
           Seq("__p"))
@@ -1166,7 +1170,7 @@ object DedupOps {
   def ngramJaccardSummary(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 8, maxDf: Int = 10): DataFrame = {
     val pairs = ngramJaccardPairs(docs, idCol, textCol, n, maxDf)
-    val sym = symmetrize(pairs, "jaccard")
+    val sym = symmetrize(pairs, Some("jaccard"))
     val perDoc = sym.groupBy(col("id")).agg(
       round(max(col("jaccard")), 4).as("max_jaccard"),
       count(lit(1)).as("n_candidates"))

@@ -23,9 +23,8 @@ import org.apache.spark.sql.functions._
   * merged-vs-recomputed equality gate):
   *  - `md5/`: one `h` (hex md5 of the stored text) per doc;
   *  - `seg/`: per distinct 16-token segment string, `sh` (md5 — what
-  *    the batch excision anti-joins and the DuckDB oracle replays) and
-  *    `sx` (xxhash64), both over the same tiling as
-  *    [[DedupOps.segmentDedup]].
+  *    the batch excision anti-joins and the DuckDB oracle replays), over
+  *    the same tiling as [[DedupOps.segmentDedup]].
   *
   * Scale shape: every join against an inventory moves 16-byte hashes;
   * the merge appends batch-sized parquet files (hash-only, anti-joined
@@ -67,13 +66,12 @@ object IngestOps {
   def docMd5s(docs: DataFrame, textCol: String): DataFrame =
     docs.select(md5(col(textCol)).as("h")).distinct()
 
-  /** Distinct (sh = md5, sx = xxhash64) segment hashes of a corpus —
-    * the stage-2 inventory (md5 for the exact excision anti-join and
-    * oracle replay). */
+  /** Distinct segment md5s (`sh`) of a corpus — the stage-2 inventory,
+    * for the exact excision anti-join and oracle replay. */
   def docSegments(docs: DataFrame, textCol: String,
       segLen: Int = 16): DataFrame =
     segmentRows(docs, Nil, textCol, segLen)
-      .select(md5(col("seg")).as("sh"), xxhash64(col("seg")).as("sx"))
+      .select(md5(col("seg")).as("sh"))
       .distinct()
 
   /** Build and publish ([[StorageOps.publish]]) the inventory for a

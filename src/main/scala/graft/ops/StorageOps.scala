@@ -92,7 +92,7 @@ object StorageOps {
     *  - Swap: [[swapInPlace]] rewrites a mutable artifact (a
     *    compacted index or inventory) with restore-on-failure.
     * Bumping [[ArtifactVersion]] rebuilds every artifact once. */
-  private[graft] val ArtifactVersion = "v2"
+  private[graft] val ArtifactVersion = "v3"
 
   /** The per-user 0700 scratch root, with `name` appended. */
   def scratchPath(name: String): String = {

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, BindReferences, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project}
@@ -186,16 +186,6 @@ case class AsofJoinExec(
   override protected def withNewChildrenInternal(
       newLeft: SparkPlan, newRight: SparkPlan): AsofJoinExec =
     copy(left = newLeft, right = newRight)
-}
-
-/** Session extension registration — `spark.sql.extensions =
-  * graft.plans.GraftExtensions` (set in Tables.sessionConf, so every
-  * graft session builder picks it up). */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => AsofJoinRightPruning)
-    e.injectPlannerStrategy(_ => AsofJoinStrategy)
-  }
 }
 
 object AsofJoin {

@@ -223,10 +223,9 @@ object CustomJoinQueries {
       tk(s, d, "lineitem")
         .groupBy(col("l_returnflag"))
         .agg(
-          sum(round(sqrt(col("l_quantity")), 6).cast(DecimalType(18, 6)))
-            .cast("double").as("sum_sqrt"),
-          sum(round(pow(lit(1.0) + col("l_discount"), 2), 6)
-            .cast(DecimalType(18, 6))).cast("double").as("sum_pow"),
+          dsum(round(sqrt(col("l_quantity")), 6), 6).as("sum_sqrt"),
+          dsum(round(pow(lit(1.0) + col("l_discount"), 2), 6), 6)
+            .as("sum_pow"),
           max(round(log(col("l_extendedprice")), 6)).as("max_ln"),
           min(abs(col("l_discount") - 0.05)).as("min_absdev"))
         .orderBy(col("l_returnflag"))

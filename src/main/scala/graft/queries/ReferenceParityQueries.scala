@@ -2,7 +2,6 @@ package graft
 package queries
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import Shared._
 
@@ -33,8 +32,7 @@ object ReferenceParityQueries {
           min(col("l_quantity")).as("min_qty"),
           max(col("l_quantity")).as("max_qty"),
           count(lit(1)).as("n_rows"),
-          round(sum(col("l_quantity").cast(DecimalType(18, 2))).cast("double")
-            / count(lit(1)), 4).as("avg_qty"))
+          round(dsum(col("l_quantity")) / count(lit(1)), 4).as("avg_qty"))
         .orderBy(col("l_returnflag"), col("l_linestatus"))
     }, Sql(
       s"""SELECT l_returnflag, l_linestatus,

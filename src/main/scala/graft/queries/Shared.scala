@@ -28,7 +28,11 @@ private[graft] object Shared {
     ops.StorageOps.fanOutForKernel(Tables.load(s, dir, name))
 
   /** Exact, order-independent sum of a double column: route through
-    * decimal so 100-TB shuffles cannot produce run-to-run float drift. */
+    * decimal so 100-TB shuffles cannot produce run-to-run float drift.
+    * It executes on longs, not BigDecimal: [[graft.plans.DecimalSums]]
+    * converts each double straight to its unscaled long, rounded as
+    * Spark's cast rounds, sums three 21-bit limbs of it and rebuilds
+    * the exact `decimal(28, scale)` once per group. */
   def dsum(c: Column, scale: Int = 2): Column =
     sum(c.cast(DecimalType(18, scale))).cast("double")
 

@@ -1,7 +1,14 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+import org.apache.spark.sql.graftbridge.DatasetBridge
+
+import graft.plans.DecimalSums
+import graft.plans.DecimalSumSpec.decimalSums
 
 /** Whole-suite structural anti-pattern gate: builds EVERY declared
   * query and rejects the two scale-killers a plan can silently grow —
@@ -113,5 +120,46 @@ class PlanAuditSpec extends SparkSpec {
     }
     assert(offenders.isEmpty,
       s"structural anti-patterns found:\n${offenders.mkString("\n")}")
+  }
+
+  /** The optimized plan of `df`'s analyzed plan, with
+    * [[graft.plans.DecimalSums]] and with it excluded. */
+  private def optimizedBothWays(df: DataFrame): (LogicalPlan, LogicalPlan) = {
+    val analyzed = df.queryExecution.analyzed
+    def optimized = DatasetBridge.ofRows(spark, analyzed)
+      .queryExecution.optimizedPlan
+    (optimized, withConf("spark.sql.optimizer.excludedRules" ->
+      DecimalSums.ruleName)(optimized))
+  }
+
+  test("a session built from Tables.sessionConf runs DecimalSums") {
+    assert(Tables.sessionConf("spark.sql.extensions") ==
+      classOf[graft.plans.GraftExtensions].getName)
+    val optimizer = spark.asInstanceOf[classic.SparkSession]
+      .sessionState.optimizer
+    assert(optimizer.extendedOperatorOptimizationRules.contains(DecimalSums),
+      "without the extension every dsum silently falls back to " +
+        "Spark's BigDecimal sum")
+  }
+
+  test("no Sum over a decimal(p <= 18) input is left in the tpch " +
+      "workload's aggregates") {
+    for (name <- Seq("q1_agg", "q_tpch3", "q_tpch5", "q_tpch6")) {
+      val (withRule, without) =
+        optimizedBothWays(SparkEntry.queries(name)(spark, Sf0001))
+      assert(decimalSums(without).nonEmpty, s"$name sums no decimal")
+      assert(decimalSums(withRule).isEmpty, s"$name:\n$withRule")
+    }
+  }
+
+  test("the pipelines workload plans the same with and without " +
+      "DecimalSums") {
+    for (name <- Seq("dedup_setsim_exact", "dedup_minhash",
+        "pipeline_ingest_stream")) {
+      val (withRule, without) =
+        optimizedBothWays(SparkEntry.queries(name)(spark, Sf0001))
+      assert(withRule.canonicalized == without.canonicalized,
+        s"$name:\n$withRule\n---\n$without")
+    }
   }
 }

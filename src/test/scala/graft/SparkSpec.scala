@@ -28,6 +28,16 @@ trait SparkSpec extends AnyFunSuite {
     cur
   }
 
+  /** Run `f` with the given session confs set, then restore them. */
+  def withConf[T](kv: (String, String)*)(f: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   def resource(name: String): String =
     getClass.getResource(s"/$name").getPath
 

@@ -139,7 +139,7 @@ class IngestOpsSpec extends SparkSpec {
     def md5Set = IngestOps.inventoryMd5s(spark, key)
       .collect().map(_.getString(0)).toSet
     def segSet = IngestOps.inventorySegments(spark, key)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+      .collect().map(_.getAs[String]("sh")).toSet
     val (before, md5Before, segBefore) = (nFiles, md5Set, segSet)
     assert(before >= 20, s"10 merges must accumulate files: $before")
     assert(!IngestOps.compactInventoryIfNeeded(spark, key,
