@@ -43,11 +43,13 @@ import org.apache.spark.sql.types.{DataType, Decimal, DecimalType, DoubleType, L
   *  - |u| < 10^18 < 2^60, so a limb sum stays exact up to 2^42 rows per
   *    group (the low limbs reach 2^21 per row). Spark's own long
   *    rewrite accepts ~9·10^10 rows (`p + 10 ≤ 18` digits per sum).
-  *  - Spark's legacy `Sum` checks its `decimal(p+10)` buffer after every
-  *    row, so past ~10^10 rows per group a running total that leaves
-  *    the range and comes back gives null. The limbs check only the
-  *    final total, which stays exact. Results agree whenever Spark's
-  *    sum is non-null.
+  *  - Spark's `Sum` checks its `decimal(p+10)` buffer after every row,
+  *    so past ~10^10 rows per group a running total that leaves the
+  *    range and comes back gives null in legacy mode and the overflow
+  *    error in ANSI mode, even when the final total fits. The limbs
+  *    check only the final total, which stays exact, so there the rule
+  *    returns that total. Results agree whenever Spark's sum neither
+  *    errors nor is null.
   */
 object DecimalSums extends Rule[LogicalPlan] {
   private val LimbBits = 21
@@ -128,23 +130,14 @@ object DecimalSums extends Rule[LogicalPlan] {
     if (r >= limit) Long.MinValue else if (d < 0) -r else r
   }
 
-  /** `l0 + l1·2^21 + l2·2^42`, exact, at `scale`. Tagged
-    * `decimal(precision, scale)` when it fits a long; otherwise it may
-    * exceed `precision`, which `CheckOverflowInSum` then rejects, as it
-    * does for Spark's own decimal `Sum`. */
-  def combine(l0: Long, l1: Long, l2: Long, precision: Int,
-      scale: Int): Decimal = {
-    if (l0 >= 0 && l0 < (1L << 60) && l1 >= 0 && l1 < (1L << 40) &&
-        Math.abs(l2) < (1L << 19)) {
-      // |total| < 2^60 + 2^61 + 2^61 fits a long, and precision ≥ 19
-      // holds every long
-      Decimal(l0 + (l1 << LimbBits) + (l2 << 2 * LimbBits), precision, scale)
-    } else {
-      Decimal(new JBigDecimal(BigInteger.valueOf(l2).shiftLeft(2 * LimbBits)
-        .add(BigInteger.valueOf(l1).shiftLeft(LimbBits))
-        .add(BigInteger.valueOf(l0)), scale))
-    }
-  }
+  /** `l0 + l1·2^21 + l2·2^42`, exact, at `scale`. It may exceed the
+    * sum's precision, which `CheckOverflowInSum` then rejects, as it
+    * does for Spark's own decimal `Sum`. Runs once per group (per row
+    * for a window sum). */
+  def combine(l0: Long, l1: Long, l2: Long, scale: Int): Decimal =
+    Decimal(new JBigDecimal(BigInteger.valueOf(l2).shiftLeft(2 * LimbBits)
+      .add(BigInteger.valueOf(l1).shiftLeft(LimbBits))
+      .add(BigInteger.valueOf(l0)), scale))
 }
 
 /** The unscaled long of `cast(child as decimal(precision, scale))` for
@@ -212,13 +205,13 @@ case class LimbsToDecimal(first: Expression, second: Expression,
 
   override protected def nullSafeEval(a: Any, b: Any, c: Any): Any =
     DecimalSums.combine(a.asInstanceOf[Long], b.asInstanceOf[Long],
-      c.asInstanceOf[Long], dataType.precision, dataType.scale)
+      c.asInstanceOf[Long], dataType.scale)
 
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b, c) =>
       s"""${ev.value} = graft.plans.DecimalSums$$.MODULE$$.combine(
-         |  $a, $b, $c, ${dataType.precision}, ${dataType.scale});""".stripMargin)
+         |  $a, $b, $c, ${dataType.scale});""".stripMargin)
 
   override protected def withNewChildrenInternal(newFirst: Expression,
       newSecond: Expression, newThird: Expression): LimbsToDecimal =

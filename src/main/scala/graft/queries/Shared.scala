@@ -30,9 +30,12 @@ private[graft] object Shared {
   /** Exact, order-independent sum of a double column: route through
     * decimal so 100-TB shuffles cannot produce run-to-run float drift.
     * It executes on longs, not BigDecimal: [[graft.plans.DecimalSums]]
-    * converts each double straight to its unscaled long, rounded as
-    * Spark's cast rounds, sums three 21-bit limbs of it and rebuilds
-    * the exact `decimal(28, scale)` once per group. */
+    * sums three 21-bit limbs of each row's unscaled long and rebuilds
+    * the exact `decimal(28, scale)` once per group. When the cast sits
+    * directly under the `Sum`, the rule converts each double straight
+    * to that long, rounded as Spark's cast rounds; otherwise (a window
+    * sum, or `dsum(when(…))` without `otherwise`) the limbs come from
+    * `UnscaledValue` of Spark's own cast. */
   def dsum(c: Column, scale: Int = 2): Column =
     sum(c.cast(DecimalType(18, scale))).cast("double")
 
