@@ -47,6 +47,15 @@ object Tables {
     // minutes. Static conf: must be set before the first session in
     // this JVM.
     "spark.sql.codegen.cache.maxEntries" -> "5000",
+    // that cache is keyed by (context classloader, source), and with
+    // artifact isolation on (the default) executors run each session's
+    // tasks under the session's own classloader. Every
+    // writeStream.start() runs in a cloned session with a new id, so
+    // with isolation each stream start compiles all of its plans again
+    // (64 classes per pipeline_ingest_stream run). graft adds no
+    // per-session jars or files, so isolation buys nothing. Read when
+    // a session is built.
+    "spark.sql.artifact.isolation.enabled" -> "false",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     // custom planner surface (as-of join strategy + pruning rule, and
     // exact decimal sums on long limbs); see GraftExtensions

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** PERSISTED incremental-ingest inventories — the artifact flow that
   * makes per-batch ingest cost BATCH-sized instead of corpus-sized.
@@ -285,11 +286,17 @@ object IngestOps {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
   }
 
+  // Each merge lands a new inventory version, so a read that inferred
+  // the schema would run a footer-reading job per version; the one
+  // column of each side is fixed by docMd5s and docSegments.
+  private def hashColumn(name: String) =
+    Some(new StructType().add(name, StringType))
+
   def inventoryMd5s(spark: SparkSession, key: String): DataFrame =
-    StorageOps.parquet(spark, md5Dir(key))
+    StorageOps.parquet(spark, md5Dir(key), hashColumn("h"))
 
   def inventorySegments(spark: SparkSession, key: String): DataFrame =
-    StorageOps.parquet(spark, segDir(key))
+    StorageOps.parquet(spark, segDir(key), hashColumn("sh"))
 
   /** The four stages of one ingest batch. `sourceFiles` lists the
     * files behind every frame composed into them — the batch, both

@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.QualifiedTableName
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.DatasetBridge
+import org.apache.spark.sql.types.StructType
 
 /** Sink-side operators: partitioned and bucketed parquet layout.
   *
@@ -43,10 +44,16 @@ object StorageOps {
     *  - Scope: entries live in the session's own LRU-bounded table
     *    relation cache, so another session never sees them, they die
     *    with their session, and an eviction only costs a re-resolve.
+    *  - Schema: a caller that knows the source's schema passes it, and
+    *    the first load of each version skips the footer-reading job.
+    *    The key does not include it: a path is read with one schema.
     * A missing path fails exactly as `spark.read.parquet` does. */
-  def parquet(spark: SparkSession, path: String): DataFrame = {
+  def parquet(spark: SparkSession, path: String,
+      schema: Option[StructType] = None): DataFrame = {
+    def read: DataFrame =
+      schema.fold(spark.read)(s => spark.read.schema(s)).parquet(path)
     val sig = try contentSignature(spark, path) catch {
-      case _: java.io.FileNotFoundException => return spark.read.parquet(path)
+      case _: java.io.FileNotFoundException => return read
     }
     val cache = spark.sessionState.catalog
     val key = QualifiedTableName("graft", "parquet_source",
@@ -55,7 +62,7 @@ object StorageOps {
       case r: MultiInstanceRelation =>
         DatasetBridge.ofRows(spark, r.newInstance())
       case _ =>
-        val df = spark.read.parquet(path)
+        val df = read
         cache.cacheTable(key, df.queryExecution.analyzed)
         df
     }

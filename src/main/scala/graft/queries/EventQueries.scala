@@ -3035,13 +3035,14 @@ object EventQueries {
         .option("maxFilesPerTrigger", "1").parquet(s"$inDir/b*")
       val q = loop.start(stream, col("arrival"), ckpt)
       q.awaitTermination()
-      // reports are driver-local bounded rows; the per-run mutable
+      // reports are driver-local bounded rows, already sorted by
+      // (batch, stage), so no orderBy plans a sort; the per-run mutable
       // artifacts (merged inventory, stream checkpoint) are garbage
       // once the loop ends — drop them so repeated runs don't pile up
       ops.IngestOps.dropInventory(r.key)
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(ckpt))
-      loop.stageReport.orderBy(col("batch"), col("stage"))
+      loop.stageReport
     },
       // the streaming loop replayed batch-by-batch against the merged
       // inventory states — see ingestStreamOracleSql; its drift
@@ -3063,7 +3064,7 @@ object EventQueries {
         Some(r.evalGrams), wp = Some(r.wp), bpe = Some(r.bpe))
       r.arrivals.foreach { case (tag, b) => loop.processBatch(b, tag) }
       ops.IngestOps.dropInventory(r.key)
-      loop.driftReport.orderBy(col("batch"))
+      loop.driftReport
     }, Sql(ingestDriftOracleSql)),
 
     // ★ r10: INCREMENTAL PACK MANIFEST from the ingest loop — each

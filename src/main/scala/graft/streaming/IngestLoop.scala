@@ -442,20 +442,24 @@ final class IngestLoop(spark: SparkSession, key: String, idCol: String,
       .start()
 
   /** Per-(batch, stage) accounting: n_docs + id_sum, the
-    * `pipeline_ingest` columns with the batch tag in front. */
+    * `pipeline_ingest` columns with the batch tag in front, ordered by
+    * (batch, stage). The rows are few and on the driver, so they are
+    * sorted here: an `orderBy` over them would plan a range-partitioned
+    * sort and run jobs. */
   def stageReport: DataFrame = {
     import spark.implicits._
-    stageBuf.toSeq.toDF("batch", "stage", "n_docs", "id_sum")
+    stageBuf.toSeq.sortBy(r => (r._1, r._2))
+      .toDF("batch", "stage", "n_docs", "id_sum")
   }
 
   /** Per-batch tokenizer drift over the ACCEPTED text (empty unless
     * both frozen models were supplied): the WordPiece `[UNK]` rate
     * (`[UNK]` pieces over WordPiece pieces) and the trained-BPE
     * fertility (BPE pieces per whitespace word), from exact long sums
-    * divided once. */
+    * divided once. Ordered by batch, driver-side as [[stageReport]]. */
   def driftReport: DataFrame = {
     import spark.implicits._
-    driftBuf.toSeq.toDF("batch", "n_docs", "n_words", "n_bpe_pieces",
-      "n_wp_pieces", "n_unk", "unk_rate", "bpe_fertility")
+    driftBuf.toSeq.sortBy(_._1).toDF("batch", "n_docs", "n_words",
+      "n_bpe_pieces", "n_wp_pieces", "n_unk", "unk_rate", "bpe_fertility")
   }
 }

@@ -6,6 +6,7 @@ import org.apache.commons.io.FileUtils
 import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 import graft.{SparkSpec, Tables}
 
@@ -86,9 +87,29 @@ class ParquetSourceSpec extends SparkSpec {
     withDir("parquet-missing") { dir =>
       val plain = intercept[Exception](spark.read.parquet(dir))
       val ours = intercept[Exception](StorageOps.parquet(spark, dir))
-      assert(ours.getClass == plain.getClass)
+      val typed = intercept[Exception](StorageOps.parquet(spark, dir,
+        Some(new StructType().add("k", LongType))))
+      assert(ours.getClass == plain.getClass &&
+        typed.getClass == plain.getClass)
       val cond = (e: Exception) => e.asInstanceOf[SparkThrowable].getCondition
-      assert(cond(ours) == cond(plain) && cond(plain) == "PATH_NOT_FOUND")
+      assert(cond(ours) == cond(plain) && cond(typed) == cond(plain) &&
+        cond(plain) == "PATH_NOT_FOUND")
+    }
+  }
+
+  test("a load given its schema starts no Spark job and reads what an " +
+      "inferred load reads") {
+    import spark.implicits._
+    withDir("parquet-schema") { dir =>
+      Seq(3L -> "c", 1L -> "a", 2L -> "b").toDF("k", "v").write.parquet(dir)
+      val schema = new StructType().add("k", LongType).add("v", StringType)
+      val (typed, jobs) =
+        withJobCount(StorageOps.parquet(spark, dir, Some(schema)))
+      assert(jobs == 0, s"a load with a known schema started $jobs jobs")
+      val inferred = spark.read.parquet(dir)
+      assert(typed.schema == inferred.schema)
+      assert(typed.collect().toSeq.sortBy(_.getLong(0)) ==
+        inferred.collect().toSeq.sortBy(_.getLong(0)))
     }
   }
 

@@ -234,7 +234,10 @@ class EventStreamsSpec extends SparkSpec {
       }.start()
     try {
       q.processAllAvailable()
-      rows(1000).toDF().write.mode("append").parquet(dir)
+      // one file, so the append lands in one rename: a multi-file job
+      // commit moves its files in one by one, and a listing between two
+      // moves splits the append over two micro-batches
+      rows(1000).toDF().coalesce(1).write.mode("append").parquet(dir)
       q.processAllAvailable()
       assert(captured.map(_._1).distinct.size == 2, "expected 2 batches")
       // final state per group = its emission in the LAST batch it saw
