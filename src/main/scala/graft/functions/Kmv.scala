@@ -104,27 +104,6 @@ object KmvBuffer {
   /** Intersection-size estimate: Jaccard × union estimate. */
   def intersection(a: Array[Byte], b: Array[Byte]): Double =
     jaccard(a, b) * estimate(union(a, b))
-
-  /** N-way θ-style intersection: fraction of the N-way union's k-min
-    * set present in EVERY sketch, scaled by the union estimate — the
-    * "rows shared by all N corpus releases" audit from N kilobyte
-    * artifacts. Pairwise [[intersection]] is the N=2 case. */
-  def intersectionN(sketches: Seq[Array[Byte]]): Double = {
-    require(sketches.nonEmpty, "no sketches")
-    if (sketches.length == 1) return estimate(sketches.head)
-    val bufs = sketches.map(fromBytes)
-    val u = bufs.head
-    bufs.tail.foreach(u.mergeIn)
-    if (u.set.isEmpty) return 0.0
-    val all = sketches.map(fromBytes)
-    var common = 0
-    val it = u.set.iterator()
-    while (it.hasNext) {
-      val h = it.next()
-      if (all.forall(_.set.contains(h))) common += 1
-    }
-    common.toDouble / u.set.size * estimate(toBytes(u))
-  }
 }
 
 case class KmvSketchAgg(

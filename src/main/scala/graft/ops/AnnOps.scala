@@ -22,35 +22,65 @@ import graft.functions.{HashFunctions, VectorFunctions}
   *    SimHash). Approximate; candidate volume drops by the bucket
   *    selectivity, which is what survives a 100-TB corpus.
   *
-  * The per-query top-k shuffles on query id. With a broadcastable query
-  * set the partial_topk → final merge is handled by Spark's window +
-  * filter over (query partitions); at extreme corpus scale swap the
-  * window for a two-phase agg (per-partition top-k then merge) — noted
-  * in BENCH notes.
+  * Every search path composes the same steps, each written once here:
+  * [[queryFront]] (the query side), [[corpusFront]] (the corpus side),
+  * [[candidates]] (their pairs minus self-pairs) and [[topK]] (the
+  * per-query window). The per-query top-k shuffles on query id. With a
+  * broadcastable query set the partial_topk → final merge is handled
+  * by Spark's window + filter over (query partitions); at extreme
+  * corpus scale the two-phase top-k is [[bruteForceTopKAgg]]
+  * (per-partition top-k, then merge).
   */
 object AnnOps {
+
+  /** (query_id, query_vec, extra…): the query side every search path
+    * joins; callers add their own broadcast hint. */
+  private[graft] def queryFront(queries: DataFrame, idCol: String,
+      vecCol: String, extra: Column*): DataFrame =
+    queries.select(Seq(col(idCol).as("query_id"),
+      col(vecCol).as("query_vec")) ++ extra: _*)
+
+  /** (neighbor_id, vec, extra…): the corpus side of a search, `vec`
+    * being the vector the caller scores against. */
+  private[graft] def corpusFront(corpus: DataFrame, idCol: String,
+      vec: Column, extra: Column*): DataFrame =
+    corpus.select(Seq(col(idCol).as("neighbor_id"), vec.as("vec")) ++
+      extra: _*)
+
+  /** Candidate pairs: corpus-side rows joined to query-side rows on the
+    * `on` columns (none: every pair), minus each query itself. */
+  private[graft] def candidates(corpusSide: DataFrame, querySide: DataFrame,
+      on: String*): DataFrame =
+    (if (on.isEmpty) corpusSide.crossJoin(querySide)
+     else corpusSide.join(querySide, on))
+      .filter(col("neighbor_id") =!= col("query_id"))
+
+  /** Each query's `k` best rows by `score` (descending, neighbor_id
+    * breaking ties), numbered 1..k as a bigint `rankCol`. */
+  private[graft] def topK(scored: DataFrame, score: String, k: Int,
+      rankCol: String = "rank"): DataFrame =
+    scored.withColumn(rankCol, row_number().over(Window
+        .partitionBy(col("query_id"))
+        .orderBy(col(score).desc, col("neighbor_id"))).cast("bigint"))
+      .filter(col(rankCol) <= k)
+
+  /** The exact-cosine top-k of candidate pairs (query_vec, vec):
+    * ranked on the unrounded sim, output (query_id, rank, neighbor_id,
+    * keep…, sim rounded to 4 dp). */
+  private[graft] def cosineTopK(cands: DataFrame, k: Int,
+      keep: Column*): DataFrame =
+    topK(cands.withColumn("sim",
+        VectorFunctions.cosineSim(col("query_vec"), col("vec"))), "sim", k)
+      .select(Seq(col("query_id"), col("rank"), col("neighbor_id")) ++
+        keep :+ round(col("sim"), 4).as("sim"): _*)
 
   /** Brute-force exact top-k cosine neighbors for each query row.
     * `queries` must be small (it is broadcast). Ties break on
     * neighbor id for full determinism. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int): DataFrame = {
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("query_vec")))
-    val scored = corpus.select(col(idCol).as("neighbor_id"),
-        col(vecCol).as("vec"))
-      .crossJoin(q)
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", VectorFunctions.cosineSim(col("query_vec"),
-        col("vec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("sim"), 4).as("sim"))
-  }
+      idCol: String, vecCol: String, k: Int): DataFrame =
+    cosineTopK(candidates(corpusFront(corpus, idCol, col(vecCol)),
+      broadcast(queryFront(queries, idCol, vecCol))), k)
 
   /** Two-stage retrieval through a PCA coarse space — the classic
     * reduce-then-rerank shape: shortlist per query by cosine in the
@@ -72,31 +102,17 @@ object AnnOps {
       shortlist: Int = 50, dim: Int = 64): DataFrame = {
     require(shortlist >= k, s"shortlist=$shortlist must be >= k=$k")
     val model = PcaOps.fit(corpus, vecCol, dim, pcaDims)
-    def proj(df: DataFrame, side: String): DataFrame =
+    def proj(df: DataFrame): DataFrame =
       PcaOps.project(df.select(col(idCol), col(vecCol)), vecCol, model)
-        .select(col(idCol).as(s"${side}_id"),
-          col(vecCol).as(s"${side}_vec"),
-          array((1 to pcaDims).map(i => col(s"pc$i")): _*)
-            .cast("array<float>").as(s"${side}_pvec"))
-    val q = broadcast(proj(queries, "query"))
-    val coarse = proj(corpus, "neighbor")
-      .crossJoin(q)
-      .filter(col("neighbor_id") =!= col("query_id"))
+    val pvec = array((1 to pcaDims).map(i => col(s"pc$i")): _*)
+      .cast("array<float>")
+    val q = broadcast(queryFront(proj(queries), idCol, vecCol,
+      pvec.as("query_pvec")))
+    val coarse = candidates(corpusFront(proj(corpus), idCol, col(vecCol),
+        pvec.as("pvec")), q)
       .withColumn("coarse_sim",
-        VectorFunctions.cosineSim(col("query_pvec"), col("neighbor_pvec")))
-    val wCoarse = Window.partitionBy(col("query_id"))
-      .orderBy(col("coarse_sim").desc, col("neighbor_id"))
-    val wExact = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    coarse
-      .withColumn("crank", row_number().over(wCoarse))
-      .filter(col("crank") <= shortlist)
-      .withColumn("sim",
-        VectorFunctions.cosineSim(col("query_vec"), col("neighbor_vec")))
-      .withColumn("rank", row_number().over(wExact).cast("bigint"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("sim"), 4).as("sim"))
+        VectorFunctions.cosineSim(col("query_pvec"), col("pvec")))
+    cosineTopK(topK(coarse, "coarse_sim", shortlist, "crank"), k)
   }
 
   /** Hard-negative mining for contrastive training: for each query
@@ -111,20 +127,12 @@ object AnnOps {
   def hardNegatives(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       lo: Double, hi: Double): DataFrame = {
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("query_vec")))
-    val scored = corpus.select(col(idCol).as("neighbor_id"),
-        col(vecCol).as("vec"))
-      .crossJoin(q)
-      .filter(col("neighbor_id") =!= col("query_id"))
+    val scored = candidates(corpusFront(corpus, idCol, col(vecCol)),
+        broadcast(queryFront(queries, idCol, vecCol)))
       .withColumn("sim", round(VectorFunctions.cosineSim(
         col("query_vec"), col("vec")), 4))
       .filter(col("sim") >= lo && col("sim") < hi)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
+    topK(scored, "sim", k)
       .select(col("query_id"), col("rank"), col("neighbor_id"),
         col("sim"))
   }
@@ -146,23 +154,18 @@ object AnnOps {
   def retrievalEval(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, labelCol: String,
       k: Int): DataFrame = {
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("query_vec"), col(labelCol).as("query_label")))
+    val q = broadcast(queryFront(queries, idCol, vecCol,
+      col(labelCol).as("query_label")))
     val labelCounts = broadcast(corpus
       .groupBy(col(labelCol).as("lbl"))
       .agg(count(lit(1)).as("lbl_n")))
-    val scored = corpus.select(col(idCol).as("neighbor_id"),
-        col(vecCol).as("vec"), col(labelCol).as("n_label"))
-      .crossJoin(q)
-      .filter(col("neighbor_id") =!= col("query_id"))
+    val scored = candidates(corpusFront(corpus, idCol, col(vecCol),
+        col(labelCol).as("n_label")), q)
       .withColumn("sim", round(VectorFunctions.cosineSim(
         col("query_vec"), col("vec")), 4))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
     val dcgTerm = round(lit(1.0) / log2(col("rank") + 1), 12)
       .cast(org.apache.spark.sql.types.DecimalType(28, 14))
-    scored.withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
+    topK(scored, "sim", k)
       .join(labelCounts, col("query_label") === col("lbl"))
       .withColumn("n_rel", col("lbl_n") - 1)
       .withColumn("rel", (col("n_label") === col("query_label"))
@@ -199,12 +202,8 @@ object AnnOps {
       idCol: String, vecCol: String, k: Int): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("query_vec")))
-    val scored = corpus.select(col(idCol).as("neighbor_id"),
-        col(vecCol).as("vec"))
-      .crossJoin(q)
-      .filter(col("neighbor_id") =!= col("query_id"))
+    val scored = candidates(corpusFront(corpus, idCol, col(vecCol)),
+        broadcast(queryFront(queries, idCol, vecCol)))
       .select(col("query_id"),
         VectorFunctions.cosineSim(col("query_vec"), col("vec")).as("sim"),
         col("neighbor_id"))
@@ -243,38 +242,28 @@ object AnnOps {
     * score_e5 / 10⁵ — one double division, no rounding. */
   def mmrTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, shortlist: Int = 20,
-      lamE1: Long = 7, muE1: Long = 3): DataFrame = {
+      lamE1: Long = 7, muE1: Long = 3): DataFrame =
+    mmrSelect(candidates(corpusFront(corpus, idCol, col(vecCol)),
+      broadcast(queryFront(queries, idCol, vecCol))),
+      k, shortlist, lamE1, muE1)
+
+  /** Shared MMR shortlist and tail: candidate pairs (query_vec, vec) →
+    * per-query shortlist on round(sim·10⁴) longs → greedy selection via
+    * the bounded [[graft.functions.Aggregators.MmrSelect]] typed
+    * aggregator. */
+  private def mmrSelect(cands: DataFrame, k: Int, shortlist: Int,
+      lamE1: Long, muE1: Long): DataFrame = {
     require(shortlist >= k, s"shortlist=$shortlist must be >= k=$k")
-    val spark = corpus.sparkSession
+    val spark = cands.sparkSession
     import spark.implicits._
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("query_vec")))
-    val scored = corpus.select(col(idCol).as("neighbor_id"),
-        col(vecCol).as("vec"))
-      .crossJoin(q)
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("simq_e4",
-        round(VectorFunctions.cosineSim(col("query_vec"), col("vec"))
-          * 10000).cast("long"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("simq_e4").desc, col("neighbor_id"))
-    val short = scored
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= shortlist)
+    val scored = cands.withColumn("simq_e4",
+      round(VectorFunctions.cosineSim(col("query_vec"), col("vec"))
+        * 10000).cast("long"))
+    val sel = new graft.functions.Aggregators.MmrSelect(k, lamE1, muE1)
+    topK(scored, "simq_e4", shortlist)
       .select(col("query_id"), col("neighbor_id"), col("simq_e4"),
         col("vec"))
-    mmrTail(short, k, lamE1, muE1)
-  }
-
-  /** Shared MMR tail: shortlist rows (query_id, neighbor_id, simq_e4,
-    * vec) → greedy selection via the bounded
-    * [[graft.functions.Aggregators.MmrSelect]] typed aggregator. */
-  private def mmrTail(short: DataFrame, k: Int, lamE1: Long,
-      muE1: Long): DataFrame = {
-    val spark = short.sparkSession
-    import spark.implicits._
-    val sel = new graft.functions.Aggregators.MmrSelect(k, lamE1, muE1)
-    short.as[(Long, Long, Long, Seq[Float])]
+      .as[(Long, Long, Long, Seq[Float])]
       .groupByKey(_._1)
       .mapValues(r => (r._2, r._3, r._4))
       .agg(sel.toColumn.name("sel"))
@@ -290,31 +279,16 @@ object AnnOps {
     * retrieval stack runs: candidates come from the query's `nprobe`
     * probed cells (corpus/nlist × nprobe of the data, the index-scale
     * path), the per-query shortlist ranks on the same round(sim·10⁴)
-    * longs, and the greedy diversification tail is [[mmrTail]]
+    * longs, and the greedy diversification tail is [[mmrSelect]]
     * verbatim. The oracle composes the certified IVF
     * assignment/probe CTEs with the certified MMR lockstep recursion
     * over embedded centroid literals. */
   def ivfMmrTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, model: IvfModel, k: Int, nprobe: Int = 3,
-      shortlist: Int = 20, lamE1: Long = 7, muE1: Long = 3): DataFrame = {
-    require(shortlist >= k, s"shortlist=$shortlist must be >= k=$k")
-    val assigned = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).as("vec"), nearestCentroid(col(vecCol), model).as("cid"))
-    val probes = probeRows(queries, idCol, vecCol, model, nprobe)
-    val cand = assigned.join(broadcast(probes), Seq("cid"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("simq_e4",
-        round(VectorFunctions.cosineSim(col("query_vec"), col("vec"))
-          * 10000).cast("long"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("simq_e4").desc, col("neighbor_id"))
-    val short = cand
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= shortlist)
-      .select(col("query_id"), col("neighbor_id"), col("simq_e4"),
-        col("vec"))
-    mmrTail(short, k, lamE1, muE1)
-  }
+      shortlist: Int = 20, lamE1: Long = 7, muE1: Long = 3): DataFrame =
+    mmrSelect(candidates(ivfRows(corpus, idCol, vecCol, model),
+      broadcast(probeRows(queries, idCol, vecCol, model, nprobe)), "cid"),
+      k, shortlist, lamE1, muE1)
 
   /** Scalar-quantized (SQ8) brute-force top-k — the 4×-memory-cut
     * complement of [[pqTopK]]'s 32×: each dimension quantizes
@@ -366,22 +340,9 @@ object AnnOps {
             round((x.cast("double") - mn) * lit(255.0) / (mx - mn)))))
         mn + code * (mx - mn) / lit(255.0)
       }).cast("array<float>")
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("query_vec")))
-    val scored = corpus
-      .select(col(idCol).as("neighbor_id"),
-        reconstruct(col(vecCol)).as("rvec"))
-      .crossJoin(q)
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", VectorFunctions.cosineSim(col("query_vec"),
-        col("rvec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("sim"), 4).as("sim"))
+    cosineTopK(candidates(
+      corpusFront(corpus, idCol, reconstruct(col(vecCol))),
+      broadcast(queryFront(queries, idCol, vecCol))), k)
   }
 
   /** Deterministic random-hyperplane sign bits for a vector — one fused
@@ -419,15 +380,13 @@ object AnnOps {
     require(probeHamming >= 0 && probeHamming <= 1,
       "probeHamming must be 0 (exact band) or 1 (flip one bit)")
     val nBands = nbits / bandBits
-    def withBands(df: DataFrame, side: String): DataFrame = {
-      val renamed = df.select(col(idCol).as(s"${side}_id"),
-        col(vecCol).as(s"${side}_vec"))
+    def withBands(df: DataFrame, id: String, vec: String): DataFrame =
       DedupOps.explodeBands(
-        renamed.withColumn("sig", hyperplaneBits(col(s"${side}_vec"), nbits)),
-        Seq(col(s"${side}_id"), col(s"${side}_vec")),
+        df.withColumn("sig", hyperplaneBits(col(vec), nbits)),
+        Seq(col(id), col(vec)),
         DedupOps.bitBands(col("sig"), nBands, bandBits), "band_val")
-    }
-    val qbExact = withBands(queries, "query")
+    val qbExact = withBands(queryFront(queries, idCol, vecCol),
+      "query_id", "query_vec")
     val qbProbed =
       if (probeHamming == 0) qbExact
       else {
@@ -439,22 +398,12 @@ object AnnOps {
         qbExact.select(col("query_id"), col("query_vec"), col("band_id"),
           explode(probeVals).as("band_val"))
       }
-    val qb = broadcast(qbProbed)
-    val cb = withBands(corpus, "neighbor")
-    val candidates = cb.join(qb, Seq("band_id", "band_val"))
-      .filter(col("neighbor_id") =!= col("query_id"))
+    val cb = withBands(corpusFront(corpus, idCol, col(vecCol)),
+      "neighbor_id", "vec")
+    cosineTopK(candidates(cb, broadcast(qbProbed), "band_id", "band_val")
       .select(col("query_id"), col("query_vec"), col("neighbor_id"),
-        col("neighbor_vec"))
-      .distinct()
-      .withColumn("sim", VectorFunctions.cosineSim(col("query_vec"),
-        col("neighbor_vec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    candidates
-      .withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("sim"), 4).as("sim"))
+        col("vec"))
+      .distinct(), k)
   }
 
   /** IVF (inverted-file) index model: nlist centroid vectors. Built
@@ -510,8 +459,7 @@ object AnnOps {
       (-VectorFunctions.cosineSim(col("query_vec"), typedlit(
         model.centroids(i).toSeq))).as("negsim"),
       lit(i).as("cid"))): _*)
-    queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("query_vec"))
+    queryFront(queries, idCol, vecCol)
       .withColumn("probe_cids", transform(
         slice(array_sort(probeStructs), 1, nprobe),
         s => s.getField("cid")))
@@ -519,21 +467,18 @@ object AnnOps {
         explode(col("probe_cids")).as("cid"))
   }
 
-  /** Shared probe→score→top-k tail of the IVF paths. */
+  /** (neighbor_id, vec, cid) rows: the corpus side assigned to its
+    * IVF cells — what the IVF probes join and the IVF index stores. */
+  private def ivfRows(corpus: DataFrame, idCol: String, vecCol: String,
+      model: IvfModel): DataFrame =
+    corpusFront(corpus, idCol, col(vecCol),
+      nearestCentroid(col(vecCol), model).as("cid"))
+
+  /** Probe → score → top-k tail of the IVF paths over (neighbor_id,
+    * vec, cid) rows. */
   private def ivfTail(assigned: DataFrame, probes: DataFrame,
-      k: Int): DataFrame = {
-    val candidates = assigned.join(broadcast(probes), Seq("cid"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", VectorFunctions.cosineSim(col("query_vec"),
-        col("vec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    candidates
-      .withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("sim"), 4).as("sim"))
-  }
+      k: Int): DataFrame =
+    cosineTopK(candidates(assigned, broadcast(probes), "cid"), k)
 
   /** (id, cid) cell assignment under a trained IVF model — the same
     * first-max argmax every probe path uses, exposed for corpus-level
@@ -551,11 +496,9 @@ object AnnOps {
     * corpus (see [[writeIvfIndex]] for the persisted layout where the
     * assignment is a partition key). */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, model: IvfModel, k: Int, nprobe: Int = 2): DataFrame = {
-    val assigned = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).as("vec"), nearestCentroid(col(vecCol), model).as("cid"))
-    ivfTail(assigned, probeRows(queries, idCol, vecCol, model, nprobe), k)
-  }
+      vecCol: String, model: IvfModel, k: Int, nprobe: Int = 2): DataFrame =
+    ivfTail(ivfRows(corpus, idCol, vecCol, model),
+      probeRows(queries, idCol, vecCol, model, nprobe), k)
 
   /** Persist the IVF index as a CELL-PARTITIONED parquet layout: each
     * vector lives under its centroid's partition directory. A probe
@@ -564,101 +507,8 @@ object AnnOps {
     * index actually ships with. */
   def writeIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
       model: IvfModel, path: String): Unit =
-    corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("vec"),
-      nearestCentroid(col(vecCol), model).as("cid"))
+    ivfRows(corpus, idCol, vecCol, model)
       .write.mode("overwrite").partitionBy("cid").parquet(path)
-
-  /** Deterministic generation token of an IVF model — a hash of the
-    * exact centroid bytes. Persisted index paths embed it (see
-    * [[ivfIndexPath]]) so an index whose cells were assigned under
-    * centroid generation G can never be probed, appended to, or
-    * compared under any other generation: a retrain changes the token
-    * and the layout rebuilds instead of silently mixing assignments
-    * from two models. */
-  def modelGeneration(model: IvfModel): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val bb = java.nio.ByteBuffer.allocate(4)
-    model.centroids.foreach(_.foreach { f =>
-      bb.clear(); bb.putFloat(f); md.update(bb.array())
-    })
-    md.digest().map("%02x".format(_)).mkString.take(16)
-  }
-
-  /** The generation-versioned path a persisted IVF/IVF-PQ layout lives
-    * under. Callers append batches ONLY through this path, so frozen
-    * centroids and stored cells stay consistent by construction. */
-  def ivfIndexPath(base: String, model: IvfModel): String =
-    s"${base}_${StorageOps.ArtifactVersion}_g${modelGeneration(model)}"
-
-  /** INCREMENTAL APPEND to a persisted IVF index: assign the new batch
-    * to its nearest FROZEN centroids and append the rows under the
-    * cell partition directories — no retrain, no rewrite of existing
-    * cells, batch-sized I/O. This is the 100-TB freshness path: the
-    * index stays a partition-pruned layout (new files land inside the
-    * probed-or-not cell dirs), and because [[nearestCentroid]] is a
-    * pure function of (vector, centroids), append-then-query equals
-    * rebuild-at-the-same-centroids exactly (AnnOpsSpec gate). Callers
-    * pass a [[ivfIndexPath]]-derived path so the frozen model and the
-    * layout can never diverge. */
-  def appendIvfIndex(batch: DataFrame, idCol: String, vecCol: String,
-      model: IvfModel, path: String): Unit =
-    batch.select(col(idCol).as("neighbor_id"), col(vecCol).as("vec"),
-      nearestCentroid(col(vecCol), model).as("cid"))
-      .write.mode("append").partitionBy("cid").parquet(path)
-
-  /** Compact a cell-partitioned index layout ([[writeIvfIndex]] /
-    * [[writeIvfPqIndex]] + their appends) IN PLACE: many small
-    * per-append files per cell directory degrade every probe (listing
-    * + open cost, tiny row groups), so periodically rewrite the
-    * layout with each cell's rows coalesced into full-sized files.
-    * `repartitionByRange(cid, id)` keeps each output task on a
-    * contiguous cell range, so the hive-partitioned rewrite emits
-    * one right-sized file per (task, cell) — the per-cell floor for a
-    * partitioned layout — while file COUNT is [[StorageOps.compact]]'s
-    * byte-derived count. Content is untouched
-    * (row-identical rewrite, spec-gated probe equality), and the path
-    * — which embeds the model generation via [[ivfIndexPath]] — does
-    * not change, so the content-signature discipline of every reader
-    * keeps working: a compaction changes the layout's file listing,
-    * any signature-keyed derived artifact rebuilds, and the frozen
-    * model stays valid because assignments never move. The rewrite
-    * swaps in through [[StorageOps.swapInPlace]]. */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
-    val nFiles = StorageOps.compactedFileCount(spark, path, targetFileBytes)
-    StorageOps.swapInPlace(path)(tmp =>
-      StorageOps.parquet(spark, path)
-        .repartitionByRange(nFiles, col("cid"), col("neighbor_id"))
-        .write.mode("overwrite").partitionBy("cid").parquet(tmp))
-  }
-
-  /** Threshold-triggered [[compactIndex]] — the hook an append-heavy
-    * ingest calls after each [[appendIvfIndex]]/[[appendIvfPqIndex]]:
-    * compacts only when some cell directory has accumulated more than
-    * `maxFilesPerCell` files (a pure METADATA check — one recursive
-    * listing, no data read), so steady-state appends stay append-cost
-    * and the rewrite amortizes across batches. Returns whether a
-    * compaction ran. */
-  def compactIndexIfNeeded(spark: org.apache.spark.sql.SparkSession,
-      path: String, maxFilesPerCell: Int = 8,
-      targetFileBytes: Long = 128L * 1024 * 1024): Boolean = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(hconf)
-    if (!fs.exists(root)) return false
-    val perCell = scala.collection.mutable.Map.empty[String, Int]
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val st = it.next()
-      val parent = st.getPath.getParent.getName
-      if (parent.startsWith("cid=") &&
-          st.getPath.getName.endsWith(".parquet"))
-        perCell.updateWith(parent)(n => Some(n.getOrElse(0) + 1))
-    }
-    val needs = perCell.valuesIterator.exists(_ > maxFilesPerCell)
-    if (needs) compactIndex(spark, path, targetFileBytes)
-    needs
-  }
 
   /** Top-k over a persisted IVF index: probe cells are resolved first
     * (centroids are driver-side model metadata, probe set is
@@ -921,16 +771,21 @@ object AnnOps {
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, ivf: IvfModel, pq: PqModel, k: Int,
       nprobe: Int = 2, refine: Int = 4): DataFrame = {
-    val cells = corpus.select(col(idCol).as("neighbor_id"),
-      nearestCentroid(col(vecCol), ivf).as("cid"))
-    val encoded = pqEncode(corpus, idCol, vecCol, pq)
-      .select(col(idCol).as("neighbor_id"), col("codes"))
-      .join(cells, Seq("neighbor_id"))
     val probes = probeRows(queries, idCol, vecCol, ivf, nprobe)
       .select(col("query_id"), col("cid"))
-    adcRerank(encoded, probes, queries, idCol, vecCol, pq, corpus,
-      k, refine)
+    adcRerank(ivfPqRows(corpus, idCol, vecCol, ivf, pq), probes, queries,
+      idCol, vecCol, pq, corpus, k, refine)
   }
+
+  /** (neighbor_id, codes, cid) rows: each vector's PQ codes under its
+    * IVF cell — what the IVF-PQ probes scan and the IVF-PQ index
+    * stores. */
+  private def ivfPqRows(corpus: DataFrame, idCol: String, vecCol: String,
+      ivf: IvfModel, pq: PqModel): DataFrame =
+    pqEncode(corpus, idCol, vecCol, pq)
+      .select(col(idCol).as("neighbor_id"), col("codes"))
+      .join(corpus.select(col(idCol).as("neighbor_id"),
+        nearestCentroid(col(vecCol), ivf).as("cid")), Seq("neighbor_id"))
 
   /** Shared ADC → shortlist → exact-re-rank tail of the IVF-PQ paths:
     * score (cid, codes) candidate rows against each probing query's
@@ -939,23 +794,21 @@ object AnnOps {
   private def adcRerank(encoded: DataFrame, probes: DataFrame,
       queries: DataFrame, idCol: String, vecCol: String, pq: PqModel,
       corpus: DataFrame, k: Int, refine: Int): DataFrame = {
-    val qtabs = pqQueryTables(queries, idCol, vecCol, pq)
-    val adc = encoded
-      .join(broadcast(probes), Seq("cid"))
-      .join(broadcast(qtabs), Seq("query_id"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("adc", aggregate(
+    val cands = candidates(encoded, broadcast(probes), "cid").join(
+      broadcast(pqQueryTables(queries, idCol, vecCol, pq)), Seq("query_id"))
+    exactRerank(adcShortlist(cands, k * refine), corpus, queries, idCol,
+      vecCol, k)
+  }
+
+  /** ADC score-and-shortlist: each candidate's codes looked up in its
+    * query's `qtab` and summed, then each query's top `n` as
+    * (query_id, neighbor_id). */
+  private def adcShortlist(cands: DataFrame, n: Int): DataFrame =
+    topK(cands.withColumn("adc", aggregate(
         zip_with(col("codes"), col("qtab"),
           (c, tab) => element_at(tab, c + 1)),
-        lit(0.0), (acc, x) => acc + x))
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").desc, col("neighbor_id"))
-    val shortlist = adc
-      .withColumn("arank", row_number().over(wAdc))
-      .filter(col("arank") <= k * refine)
+        lit(0.0), (acc, x) => acc + x)), "adc", n)
       .select(col("query_id"), col("neighbor_id"))
-    exactRerank(shortlist, corpus, queries, idCol, vecCol, k)
-  }
 
   /** Persist the IVF-PQ index: (neighbor_id, codes) rows partitioned
     * by IVF cell — the production 100-TB artifact in full. Per vector
@@ -963,32 +816,9 @@ object AnnOps {
     * embedding never leaves the corpus), and the cell directory
     * structure makes a probe a partition-pruned scan. */
   def writeIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      ivf: IvfModel, pq: PqModel, path: String): Unit = {
-    val cells = corpus.select(col(idCol).as("neighbor_id"),
-      nearestCentroid(col(vecCol), ivf).as("cid"))
-    pqEncode(corpus, idCol, vecCol, pq)
-      .select(col(idCol).as("neighbor_id"), col("codes"))
-      .join(cells, Seq("neighbor_id"))
+      ivf: IvfModel, pq: PqModel, path: String): Unit =
+    ivfPqRows(corpus, idCol, vecCol, ivf, pq)
       .write.mode("overwrite").partitionBy("cid").parquet(path)
-  }
-
-  /** [[appendIvfIndex]] for the IVF-PQ layout: encode the batch with
-    * the FROZEN codebooks, assign with the FROZEN centroids, append
-    * (neighbor_id, codes) rows under the cell partitions. Both models
-    * stay fixed, so the appended layout is bit-identical to a rebuild
-    * over the union corpus at the same generation (AnnOpsSpec gate);
-    * the path should derive from [[ivfIndexPath]] (the PQ codebooks
-    * are keyed by the same source-content signature as the IVF model,
-    * so one generation token governs both). */
-  def appendIvfPqIndex(batch: DataFrame, idCol: String, vecCol: String,
-      ivf: IvfModel, pq: PqModel, path: String): Unit = {
-    val cells = batch.select(col(idCol).as("neighbor_id"),
-      nearestCentroid(col(vecCol), ivf).as("cid"))
-    pqEncode(batch, idCol, vecCol, pq)
-      .select(col(idCol).as("neighbor_id"), col("codes"))
-      .join(cells, Seq("neighbor_id"))
-      .write.mode("append").partitionBy("cid").parquet(path)
-  }
 
   /** Top-k over a persisted IVF-PQ index: probe cells resolve to a
     * STATIC partition filter (the scan lists only the probed cell
@@ -1026,20 +856,10 @@ object AnnOps {
       refine: Int = 4): DataFrame = {
     val encoded = pqEncode(corpus, idCol, vecCol, model)
       .select(col(idCol).as("neighbor_id"), col("codes"))
-    val adc = encoded.crossJoin(broadcast(
-        pqQueryTables(queries, idCol, vecCol, model)))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("adc", aggregate(
-        zip_with(col("codes"), col("qtab"),
-          (c, tab) => element_at(tab, c + 1)),
-        lit(0.0), (acc, x) => acc + x))
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").desc, col("neighbor_id"))
-    val shortlist = adc
-      .withColumn("arank", row_number().over(wAdc))
-      .filter(col("arank") <= k * refine)
-      .select(col("query_id"), col("neighbor_id"))
-    exactRerank(shortlist, corpus, queries, idCol, vecCol, k)
+    val cands = candidates(encoded,
+      broadcast(pqQueryTables(queries, idCol, vecCol, model)))
+    exactRerank(adcShortlist(cands, k * refine), corpus, queries, idCol,
+      vecCol, k)
   }
 
   /** (query_id, qtab) — each query's m x k ADC inner-product table,
@@ -1062,20 +882,9 @@ object AnnOps {
     * the PQ paths that reads full vectors. */
   private def exactRerank(shortlist: DataFrame, corpus: DataFrame,
       queries: DataFrame, idCol: String, vecCol: String,
-      k: Int): DataFrame = {
-    val exact = shortlist
-      .join(corpus.select(col(idCol).as("neighbor_id"),
-        col(vecCol).as("vec")), Seq("neighbor_id"))
-      .join(broadcast(queries.select(col(idCol).as("query_id"),
-        col(vecCol).as("query_vec"))), Seq("query_id"))
-      .withColumn("sim",
-        VectorFunctions.cosineSim(col("query_vec"), col("vec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    exact
-      .withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("sim"), 4).as("sim"))
-  }
+      k: Int): DataFrame =
+    cosineTopK(shortlist
+      .join(corpusFront(corpus, idCol, col(vecCol)), Seq("neighbor_id"))
+      .join(broadcast(queryFront(queries, idCol, vecCol)),
+        Seq("query_id")), k)
 }

@@ -134,8 +134,7 @@ object IngestOps {
     needs
   }
 
-  /** Threshold-triggered inventory compaction — the
-    * [[AnnOps.compactIndexIfNeeded]] story applied to the OTHER
+  /** Threshold-triggered inventory compaction for an
     * append-accumulating artifact: every [[mergeAccepted]] lands
     * batch-sized parquet files under `md5/` and `seg/`, and a
     * long-running ingest loop degrades its own gating joins through

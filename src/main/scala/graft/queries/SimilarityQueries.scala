@@ -470,24 +470,12 @@ object SimilarityQueries {
     // conventions (unrounded ranking, id tiebreak, round-4 output).
     Query("ann_filtered", (s, d) => {
       val emb = t(s, d, "embeddings")
-      val q = broadcast(emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"),
-          col("embedding").as("query_vec"), col("label").as("qlabel")))
-      val scored = emb
-        .select(col("vec_id").as("neighbor_id"),
-          col("embedding").as("vec"), col("label"))
-        .join(q, col("label") === col("qlabel"))
-        .filter(col("neighbor_id") =!= col("query_id"))
-        .withColumn("sim", graft.functions.VectorFunctions
-          .cosineSim(col("query_vec"), col("vec")))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("query_id"))
-        .orderBy(col("sim").desc, col("neighbor_id"))
-      scored
-        .withColumn("rank", row_number().over(w).cast("bigint"))
-        .filter(col("rank") <= 10)
-        .select(col("query_id"), col("rank"), col("neighbor_id"),
-          col("label"), round(col("sim"), 4).as("sim"))
+      val q = broadcast(ops.AnnOps.queryFront(emb.filter(col("vec_id") < 5),
+        "vec_id", "embedding", col("label")))
+      val corpus = ops.AnnOps.corpusFront(emb, "vec_id", col("embedding"),
+        col("label"))
+      ops.AnnOps.cosineTopK(ops.AnnOps.candidates(corpus, q, "label"), 10,
+          col("label"))
         .orderBy(col("query_id"), col("rank"))
     },
       // Filtered search: the label join mirrors the Spark pre-filter.

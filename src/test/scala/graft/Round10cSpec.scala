@@ -182,110 +182,6 @@ class Round10cSpec extends SparkSpec {
     }
   }
 
-  test("ann_sq8: recall@10 vs exact brute force, and reconstruction " +
-      "error bounded by half a quantization step per dimension") {
-    val brute = SparkEntry.queries("ann_brute")(spark, Sf0001).collect()
-      .map(r => (r.getLong(0), r.getLong(2))).groupBy(_._1)
-      .view.mapValues(_.map(_._2).toSet).toMap
-    val sq8 = SparkEntry.queries("ann_sq8")(spark, Sf0001).collect()
-      .map(r => (r.getLong(0), r.getLong(2))).groupBy(_._1)
-      .view.mapValues(_.map(_._2).toSet).toMap
-    assert(sq8.keySet == brute.keySet)
-    val recall = sq8.keys.toSeq.map(q =>
-      (sq8(q) intersect brute(q)).size.toDouble / brute(q).size).sum /
-      sq8.size
-    // 8-bit-per-dim quantization error is tiny even on near-uniform
-    // data; anything below this means the code assignment is wrong
-    assert(recall >= 0.9, s"recall@10 = $recall")
-
-    // driver-side replay of the quantization arithmetic: max |x - r|
-    // over every vector and dimension must be <= delta/2 (+ float
-    // rounding slack)
-    val rows = spark.read.parquet(s"$Sf0001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1))
-    val dim = rows.head._2.size
-    val mins = (0 until dim).map(i => rows.map(_._2(i)).min.toDouble)
-    val maxs = (0 until dim).map(i => rows.map(_._2(i)).max.toDouble)
-    rows.foreach { case (_, vec) =>
-      (0 until dim).foreach { i =>
-        val (mn, mx) = (mins(i), maxs(i))
-        val x = vec(i).toDouble
-        val code = if (mx == mn) 0.0
-        else math.min(255.0, math.max(0.0,
-          BigDecimal((x - mn) * 255.0 / (mx - mn))
-            .setScale(0, BigDecimal.RoundingMode.HALF_UP).toDouble))
-        val rec = (mn + code * (mx - mn) / 255.0).toFloat.toDouble
-        val halfStep = (mx - mn) / 255.0 / 2.0
-        assert(math.abs(x - rec) <= halfStep * 1.001,
-          s"dim $i: |$x - $rec| > $halfStep")
-      }
-    }
-  }
-
-  test("ann_mmr: driver-side greedy replay is exact; scores are " +
-      "non-increasing; the selection actually diversifies") {
-    val emb = spark.read.parquet(s"$Sf0001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    def toE4(v: Double): Long =
-      BigDecimal(v * 10000.0)
-        .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-    def cosE4(a: Seq[Float], b: Seq[Float]): Long = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) {
-        val x = a(i).toDouble; val y = b(i).toDouble
-        dot += x * y; na += x * x; nb += y * y; i += 1
-      }
-      toE4(dot / (math.sqrt(na) * math.sqrt(nb)))
-    }
-    val expected = (0L until 5L).flatMap { q =>
-      val qv = emb(q)
-      val short = emb.toSeq.filter(_._1 != q)
-        .map { case (i, v) => (i, cosE4(qv, v), v) }
-        .sortBy(r => (-r._2, r._1)).take(20)
-      val cands = scala.collection.mutable.ArrayBuffer(
-        short.map(r => (r._1, r._2, r._3, 0L)): _*)
-      val sel = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      while (sel.size < 10 && cands.nonEmpty) {
-        val scoredC = cands.map(c => (7 * c._2 - 3 * c._4, c._1))
-        val (bs, bid) = scoredC.minBy { case (s, i) => (-s, i) }
-        val bi = cands.indexWhere(_._1 == bid)
-        val win = cands.remove(bi)
-        sel += ((bs, win._1))
-        cands.indices.foreach { j =>
-          val c = cands(j)
-          val s = cosE4(c._3, win._3)
-          if (s > c._4) cands(j) = (c._1, c._2, c._3, s)
-        }
-      }
-      sel.zipWithIndex.map { case ((s, i), r) =>
-        (q, (r + 1).toLong, i, s.toDouble / 100000.0) }
-    }.toSet
-    val got = SparkEntry.queries("ann_mmr")(spark, Sf0001).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3))).toSet
-    assert(got == expected)
-    // scores non-increasing per query (the greedy max is over a
-    // superset with smaller-or-equal penalties each step)
-    got.groupBy(_._1).values.foreach { rows =>
-      val byRank = rows.toSeq.sortBy(_._2).map(_._4)
-      byRank.sliding(2).foreach {
-        case Seq(a, b) => assert(a >= b, s"scores increased: $a -> $b")
-        case _ =>
-      }
-    }
-    // diversification witness: for at least one query, MMR's picks
-    // differ from the plain similarity top-10
-    val brute = SparkEntry.queries("ann_brute")(spark, Sf0001).collect()
-      .map(r => (r.getLong(0), r.getLong(2))).groupBy(_._1)
-      .view.mapValues(_.map(_._2).toSet).toMap
-    val mmrSets = got.groupBy(_._1).view
-      .mapValues(_.map(_._3).toSet).toMap
-    assert(mmrSets.exists { case (q, s) => s != brute(q) },
-      "MMR never diverged from plain top-k — no diversification")
-  }
-
   test("multimodal_framesample: stride arithmetic replayed per doc") {
     val docs = spark.read.parquet(s"$Sf0001/documents.parquet")
       .select(col("doc_id"), col("text")).collect()
@@ -339,53 +235,6 @@ class Round10cSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getDouble(5))).toSet
     assert(got == expectTop)
-  }
-
-  test("ann_ivf_mmr: probing every cell equals plain MMR exactly; " +
-      "picks come from probed cells only") {
-    import graft.ops.AnnOps
-    val emb = spark.read.parquet(s"$Sf0001/embeddings.parquet")
-    val queries = emb.filter(col("vec_id") < 5)
-    val model = AnnOps.cachedIvf(spark, s"$Sf0001/embeddings.parquet",
-      emb, "vec_id", "embedding", nlist = 8)
-    // nprobe = nlist ⇒ the candidate set is the whole corpus ⇒ the
-    // composition must reproduce mmrTopK byte for byte
-    val full = AnnOps.ivfMmrTopK(emb, queries, "vec_id", "embedding",
-      model, k = 10, nprobe = 8).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .toSet
-    val plain = AnnOps.mmrTopK(emb, queries, "vec_id", "embedding",
-      k = 10).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .toSet
-    assert(full == plain)
-    // at nprobe = 3, every pick must live in one of the query's
-    // probed cells
-    val cells = AnnOps.assignCells(emb, "vec_id", "embedding", model)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val got = SparkEntry.queries("ann_ivf_mmr")(spark, Sf0001).collect()
-      .map(r => (r.getLong(0), r.getLong(2)))
-    assert(got.nonEmpty)
-    // probe cells per query: 3 most cosine-similar centroids
-    def cosD(a: Seq[Float], b: Seq[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) {
-        val x = a(i).toDouble; val y = b(i).toDouble
-        dot += x * y; na += x * x; nb += y * y; i += 1
-      }
-      dot / (math.sqrt(na) * math.sqrt(nb))
-    }
-    val qvecs = queries.select(col("vec_id"), col("embedding")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    val probed = qvecs.view.mapValues { qv =>
-      model.centroids.indices
-        .sortBy(i => (-cosD(qv, model.centroids(i).toSeq), i))
-        .take(3).toSet
-    }.toMap
-    got.foreach { case (q, n) =>
-      assert(probed(q).contains(cells(n)),
-        s"pick $n for query $q is outside the probed cells")
-    }
   }
 
   test("graph_ppr: driver fixed-point replay is exact; teleport mass " +
@@ -466,45 +315,6 @@ class Round10cSpec extends SparkSpec {
         assert(got(u)._3 >= vs.min - 0.01 && got(u)._3 <= vs.max + 0.01)
       }
     }
-  }
-
-  test("ann_filtered: label constraint holds, driver recompute is " +
-      "exact, and the filter actually binds vs unfiltered search") {
-    val emb = spark.read.parquet(s"$Sf0001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"), col("label")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1), r.getInt(2)))
-    def cos(a: Seq[Float], b: Seq[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) {
-        val x = a(i).toDouble; val y = b(i).toDouble
-        dot += x * y; na += x * x; nb += y * y; i += 1
-      }
-      dot / (math.sqrt(na) * math.sqrt(nb))
-    }
-    val byId = emb.map(e => e._1 -> e).toMap
-    val expected = (0L until 5L).flatMap { qid =>
-      val (_, qv, ql) = byId(qid)
-      emb.filter(e => e._1 != qid && e._3 == ql)
-        .map(e => (e._1, e._3, cos(qv, e._2)))
-        .sortBy(e => (-e._3, e._1)).take(10).zipWithIndex
-        .map { case ((nid, lb, s), i) =>
-          (qid, (i + 1).toLong, nid, lb,
-            BigDecimal(s).setScale(4,
-              BigDecimal.RoundingMode.HALF_UP).toDouble)
-        }
-    }.toSet
-    val got = SparkEntry.queries("ann_filtered")(spark, Sf0001).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3),
-        r.getDouble(4))).toSet
-    assert(got == expected)
-    got.foreach { case (q, _, _, lb, _) =>
-      assert(lb == byId(q)._3, s"query $q neighbor label mismatch") }
-    // the constraint must actually change results vs plain top-k
-    val brute = SparkEntry.queries("ann_brute")(spark, Sf0001).collect()
-      .map(r => (r.getLong(0), r.getLong(2))).groupBy(_._1)
-      .view.mapValues(_.map(_._2).toSet).toMap
-    val filt = got.groupBy(_._1).view.mapValues(_.map(_._3).toSet).toMap
-    assert(filt.exists { case (q, s) => s != brute(q) })
   }
 
   test("q_release_diff: driver recompute of the derived release and " +

@@ -78,51 +78,6 @@ class Round7Spec extends SparkSpec {
     assert(viaSql == viaCol)
   }
 
-  test("dedup_semantic: planted clones dropped, originals kept, one row/vec") {
-    import spark.implicits._
-    val emb = graft.Tables.embeddings(spark, Sf0001)
-    // same deterministic 3%-perturbation planting as RecallGatesSpec:
-    // the raw embeddings are near-uniform (no pair reaches cosine 0.95),
-    // so planted clones ARE the operating point
-    val base = emb.limit(50)
-      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-      .collect()
-    var seed = 0x9a17edL
-    val planted = base.map { case (id, v) =>
-      val w = v.map { x =>
-        seed = seed * 6364136223846793005L + 1442695040888963407L
-        val u = ((seed >>> 40).toInt.toDouble / (1 << 24)) * 2.0 - 1.0
-        (x * (1.0 + 0.03 * u)).toFloat
-      }
-      (id + 100000L, w)
-    }
-    val corpus = emb.select(col("vec_id"), col("embedding"))
-      .union(planted.toSeq.toDF("vec_id", "embedding"))
-    val res = ops.AnnOps.semanticDedupSummary(corpus, "vec_id", "embedding")
-      .collect()
-      .map(r => r.getLong(0) -> (r.getLong(2), r.getDouble(3), r.getLong(4)))
-      .toMap
-    assert(res.size == 550, "one row per vector, always")
-    // clone recall: a clone is dropped iff k-means put it in its
-    // original's cluster (near-identical vectors virtually always are)
-    val dropped = base.map(_._1).count(id => res(id + 100000L)._3 == 0L)
-    info(f"semantic-dedup planted-clone drop rate = ${dropped / 50.0}%.2f")
-    assert(dropped >= 45, s"only $dropped/50 planted clones dropped")
-    // keep-lowest policy: an original is NEVER dropped on account of
-    // its (higher-id) clone; any base vector with a detected dup stays
-    base.map(_._1).foreach { id =>
-      val (nDups, _, kept) = res(id)
-      if (nDups > 0) assert(kept == 1L, s"original $id wrongly dropped")
-    }
-    // unplanted vectors (beyond the 50 clones) have no partner at 0.95:
-    // every drop must involve a planted pair
-    val extraDropped = res.collect {
-      case (id, (_, _, 0L)) if id < 100000L && !base.exists(_._1 == id) => id
-    }
-    assert(extraDropped.isEmpty,
-      s"near-uniform vectors wrongly dropped: $extraDropped")
-  }
-
   test("q_powerlaw_alpha: scan reads only (source, n_chars), filter pushed") {
     val df = SparkEntry.queries("q_powerlaw_alpha")(spark, Sf0001)
     val plan = df.queryExecution.executedPlan.toString

@@ -42,54 +42,6 @@ class Round7bSpec extends SparkSpec {
     }
   }
 
-  // ---- AnnOps.retrievalEval ---------------------------------------
-
-  test("retrievalEval: hand-checkable 2-D case") {
-    import spark.implicits._
-    val corpus = Seq(
-      (0L, Array(1f, 0f), 0),      // the query
-      (1L, Array(1f, 0.01f), 0),   // rel, rank 1
-      (2L, Array(0.9f, 0.1f), 1),  // rank 2
-      (3L, Array(0f, 1f), 0),      // rel, rank 4 (outside top-3)
-      (4L, Array(-1f, 0f), 1),     // rank 5
-      (5L, Array(0.7f, 0.7f), 1)   // rank 3
-    ).toDF("vec_id", "embedding", "label")
-    val r = ops.AnnOps.retrievalEval(corpus,
-      corpus.filter(col("vec_id") === 0L),
-      "vec_id", "embedding", "label", k = 3).head
-    assert(r.getLong(1) == 2L, "n_rel: two other label-0 rows")
-    assert(r.getLong(2) == 1L, "hits: only id 1 in the top-3")
-    assert(r.getDouble(3) == 0.5, "recall = 1 / min(3, 2)")
-    assert(r.getDouble(4) == 1.0, "mrr: first relevant at rank 1")
-    // dcg = 1/log2(2) = 1; idcg = 1/log2(2) + round12(1/log2(3))
-    val idcg = BigDecimal(1) +
-      BigDecimal(1.0 / (math.log(3) / math.log(2)))
-        .setScale(12, BigDecimal.RoundingMode.HALF_UP)
-    val want = math.rint(1.0 / idcg.toDouble * 1e6) / 1e6
-    assert(r.getDouble(5) == want, s"ndcg got=${r.getDouble(5)}")
-  }
-
-  test("retrievalEval: invariants + partitioning-invariance on sf0.001") {
-    val emb = Tables.embeddings(spark, Sf0001)
-    val out = ops.AnnOps.retrievalEval(emb,
-      emb.filter(col("vec_id") < 8), "vec_id", "embedding", "label", 10)
-    val rows = out.collect()
-    assert(rows.length == 8)
-    rows.foreach { r =>
-      val (nRel, hits) = (r.getLong(1), r.getLong(2))
-      val (rec, mrr, ndcg) =
-        (r.getDouble(3), r.getDouble(4), r.getDouble(5))
-      assert(hits >= 0 && hits <= math.min(10L, nRel))
-      assert(rec >= 0 && rec <= 1 && ndcg >= 0 && ndcg <= 1)
-      assert(mrr == 0.0 || (mrr >= 0.1 && mrr <= 1.0))
-      assert((hits == 0) == (mrr == 0.0))
-    }
-    val rows2 = ops.AnnOps.retrievalEval(emb.repartition(13),
-      emb.filter(col("vec_id") < 8), "vec_id", "embedding", "label", 10)
-      .collect()
-    assert(rows.toSeq == rows2.toSeq, "partitioning must not matter")
-  }
-
   // ---- SelectionOps.dsirTopK --------------------------------------
 
   test("dsirTopK: target-vocabulary docs outweigh raw-only docs") {

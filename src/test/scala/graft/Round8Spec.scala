@@ -109,18 +109,6 @@ class Round8Spec extends SparkSpec {
     assert(offs.forall(o => o >= 0 && o < 512))
   }
 
-  test("ann_class_stats: every vector audited, cosines in range") {
-    val rows = SparkEntry.queries("ann_class_stats")(spark, Sf0001)
-      .collect()
-    assert(rows.map(_.getLong(1)).sum ==
-      Tables.embeddings(spark, Sf0001).count())
-    rows.foreach { r =>
-      val (mean, min) = (r.getDouble(2), r.getDouble(3))
-      assert(mean >= -1.0 && mean <= 1.0 && min >= -1.0 && min <= 1.0)
-      assert(min <= mean)
-    }
-  }
-
   test("portable minhash: planted near-dup found, disjoint docs silent") {
     import org.apache.spark.sql.functions._
     import spark.implicits._

@@ -1,10 +1,5 @@
 package graft
 
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.metrics.source.CodegenMetrics
 
 /** What [[Tables.sessionConf]] must give every graft session. */
@@ -28,13 +23,9 @@ class SessionConfSpec extends SparkSpec {
 
   test("every SparkSession.builder() in src/main applies " +
       "Tables.sessionConf") {
-    val root = Paths.get("src/main")
-    assert(Files.isDirectory(root), s"run from the repository root: $root")
     val builder = "SparkSession.builder()"
-    val offenders = Files.walk(root).iterator().asScala
-      .filter(Files.isRegularFile(_))
-      .flatMap { (p: Path) =>
-        val text = new String(Files.readAllBytes(p), UTF_8)
+    val offenders = MainSources.files
+      .flatMap { case (p, text) =>
         Iterator.iterate(text.indexOf(builder))(i =>
           text.indexOf(builder, i + 1)).takeWhile(_ >= 0)
           .filterNot { i =>
@@ -42,7 +33,7 @@ class SessionConfSpec extends SparkSpec {
             end > i && text.substring(i, end).contains("Tables.sessionConf")
           }
           .map(i => s"$p:${text.take(i).count(_ == '\n') + 1}")
-      }.toSeq
+      }
     assert(offenders.isEmpty,
       "build sessions with .config(Tables.sessionConf) before " +
         "getOrCreate():\n" + offenders.mkString("\n"))

@@ -58,21 +58,6 @@ class KmvSpec extends SparkSpec {
     assert(math.abs(uni / 6000.0 - 1.0) <= 0.2, f"union $uni%.1f")
   }
 
-  test("N-way intersection tracks the planted 3-set overlap") {
-    // A=1..4000, B=2001..6000, C=3001..7000 → |A∩B∩C|=1000, |∪|=7000
-    val sk = Seq((1, 4000), (2001, 6000), (3001, 7000)).map { case (lo, hi) =>
-      sketch((lo to hi).map(i => s"x$i").toDF("v"), "v", 1024)
-    }
-    val inter = KmvBuffer.intersectionN(sk)
-    info(f"3-way intersection est=$inter%.1f (true 1000)")
-    assert(math.abs(inter / 1000.0 - 1.0) <= 0.25, f"est $inter%.1f")
-    // N=1 degenerates to the plain estimate; N=2 matches pairwise
-    assert(KmvBuffer.intersectionN(Seq(sk.head)) ==
-      KmvBuffer.estimate(sk.head))
-    assert(math.abs(KmvBuffer.intersectionN(sk.take(2)) -
-      KmvBuffer.intersection(sk(0), sk(1))) < 1e-9)
-  }
-
   test("declared query: estimates agree with its own exact columns") {
     val row = graft.SparkEntry.queries("q_kmv_overlap")(spark, Sf0001).head()
     val (nClick, nView, nCommon) =

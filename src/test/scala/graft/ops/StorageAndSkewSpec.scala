@@ -1,7 +1,7 @@
 package graft.ops
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
@@ -10,7 +10,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{MainSources, SparkSpec, Tables}
 
 class StorageAndSkewSpec extends SparkSpec {
 
@@ -332,17 +332,9 @@ class StorageAndSkewSpec extends SparkSpec {
 
   test("the artifact policy has one home: no ATOMIC_MOVE or " +
       "contentSignature( in src/main outside StorageOps.scala") {
-    val root = Paths.get("src/main")
-    assert(Files.isDirectory(root), s"run from the repository root: $root")
-    val offenders = Files.walk(root).iterator().asScala
-      .filter(p => Files.isRegularFile(p) &&
-        p.getFileName.toString != "StorageOps.scala")
-      .flatMap { (p: Path) =>
-        Files.readAllLines(p, UTF_8).asScala.zipWithIndex.collect {
-          case (line, i) if line.contains("ATOMIC_MOVE") ||
-              line.contains("contentSignature(") => s"$p:${i + 1}: $line"
-        }
-      }.toSeq
+    val offenders = MainSources.lines((p, line) =>
+      p.getFileName.toString != "StorageOps.scala" &&
+        (line.contains("ATOMIC_MOVE") || line.contains("contentSignature(")))
     assert(offenders.isEmpty,
       "key and publish artifacts through StorageOps:\n" +
         offenders.mkString("\n"))
@@ -350,17 +342,9 @@ class StorageAndSkewSpec extends SparkSpec {
 
   test("one way to open parquet: no read.parquet( in src/main outside " +
       "StorageOps.scala") {
-    val root = Paths.get("src/main")
-    assert(Files.isDirectory(root), s"run from the repository root: $root")
-    val offenders = Files.walk(root).iterator().asScala
-      .filter(p => Files.isRegularFile(p) &&
-        p.getFileName.toString != "StorageOps.scala")
-      .flatMap { (p: Path) =>
-        Files.readAllLines(p, UTF_8).asScala.zipWithIndex.collect {
-          case (line, i) if line.contains("read.parquet(") =>
-            s"$p:${i + 1}: $line"
-        }
-      }.toSeq
+    val offenders = MainSources.lines((p, line) =>
+      p.getFileName.toString != "StorageOps.scala" &&
+        line.contains("read.parquet("))
     assert(offenders.isEmpty,
       "open parquet sources through StorageOps.parquet:\n" +
         offenders.mkString("\n"))

@@ -181,7 +181,7 @@ class EventStreamsSpec extends SparkSpec {
       }.start()
     try {
       q.processAllAvailable()
-      rows(1000).toDF().write.mode("append").parquet(dir)
+      rows(1000).toDF().coalesce(1).write.mode("append").parquet(dir)
       q.processAllAvailable()
       // last emission per group vs the batch aggregate over ALL rows:
       // CMS merge is exact, so the bytes must be EQUAL
@@ -289,7 +289,7 @@ class EventStreamsSpec extends SparkSpec {
       // (60 > 110/(k+1) = 22) but was absent from batch 1
       ((0 until 60).map(_ => GroupItem("g", "late_hot")) ++
         (0 until 10).map(i => GroupItem("g", s"tail2_$i")))
-        .toDF().write.mode("append").parquet(dir)
+        .toDF().coalesce(1).write.mode("append").parquet(dir)
       q.processAllAvailable()
       val last = captured.maxBy(_._1)._2
       assert(last.candidates.contains("late_hot"),
@@ -333,7 +333,7 @@ class EventStreamsSpec extends SparkSpec {
       // batch 2: only b stays active, 10 hours later — the watermark
       // moves past a's last item + 30 min idle → a times out
       ((0 until 5).map(_ => gi("b", "hot_b", 600)))
-        .toDF().write.mode("append").parquet(dir)
+        .toDF().coalesce(1).write.mode("append").parquet(dir)
       q.processAllAvailable()
       q.processAllAvailable() // timeout evaluated against new watermark
       val aEmissions = captured.filter(_._2.group == "a")
@@ -356,7 +356,7 @@ class EventStreamsSpec extends SparkSpec {
       assert(bFinal.candidates.contains("hot_b") && !bFinal.evicted)
       // batch 3: a reappears — its sketch restarted from empty
       ((0 until 3).map(_ => gi("a", "a_new", 601)))
-        .toDF().write.mode("append").parquet(dir)
+        .toDF().coalesce(1).write.mode("append").parquet(dir)
       q.processAllAvailable()
       val aBack = captured.filter(_._2.group == "a").maxBy(_._1)._2
       assert(aBack.candidates.toSeq == Seq("a_new"),
