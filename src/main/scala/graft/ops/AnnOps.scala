@@ -688,12 +688,12 @@ object AnnOps {
         .as("book"))
   }
 
-  /** (id, mi, sub) rows: each vector split into its m subvector
+  /** (keys…, mi, sub) rows: each vector split into its m subvector
     * slices. */
-  private def subvecs(corpus: DataFrame, idCol: String, vecCol: String,
+  private def subvecs(corpus: DataFrame, keys: Seq[String], vecCol: String,
       m: Int, dsub: Int): DataFrame =
-    corpus.select(col(idCol), posexplode(array((0 until m).map(mi =>
-        slice(col(vecCol), mi * dsub + 1, dsub)): _*)))
+    corpus.select(keys.map(col) :+ posexplode(array((0 until m).map(mi =>
+        slice(col(vecCol), mi * dsub + 1, dsub)): _*)): _*)
       .withColumnRenamed("pos", "mi")
       .withColumnRenamed("col", "sub")
 
@@ -725,7 +725,7 @@ object AnnOps {
       .map(_.getSeq[Float](0).toArray)
     var books = Array.tabulate(m)(mi =>
       seeds.map(_.slice(mi * dsub, (mi + 1) * dsub)))
-    val sv = subvecs(corpus, idCol, vecCol, m, dsub)
+    val sv = subvecs(corpus, Seq(idCol), vecCol, m, dsub)
     (0 until iters).foreach { _ =>
       val dims = sv
         .join(broadcast(booksDf(corpus, PqModel(dsub, books))), Seq("mi"))
@@ -751,11 +751,18 @@ object AnnOps {
     * One broadcast join + one shuffle on id. */
   def pqEncode(corpus: DataFrame, idCol: String, vecCol: String,
       model: PqModel): DataFrame =
-    subvecs(corpus, idCol, vecCol, model.m, model.dsub)
-      .join(broadcast(booksDf(corpus, model)), Seq("mi"))
-      .select(col(idCol), col("mi"),
-        nearestInBook(col("sub"), col("book")).as("cid"))
-      .groupBy(col(idCol))
+    pqCodes(corpus, Seq(idCol), vecCol, model)
+
+  /** (keys…, codes) rows: [[pqEncode]] grouped on every key column, so
+    * per-vector columns computed before the subvector split (the IVF
+    * cell) ride along without a second corpus read. */
+  private def pqCodes(rows: DataFrame, keys: Seq[String], vecCol: String,
+      model: PqModel): DataFrame =
+    subvecs(rows, keys, vecCol, model.m, model.dsub)
+      .join(broadcast(booksDf(rows, model)), Seq("mi"))
+      .select(keys.map(col) ++ Seq(col("mi"),
+        nearestInBook(col("sub"), col("book")).as("cid")): _*)
+      .groupBy(keys.map(col): _*)
       .agg(transform(array_sort(collect_list(struct(col("mi"),
         col("cid")))), s => s.getField("cid")).as("codes"))
 
@@ -779,13 +786,14 @@ object AnnOps {
 
   /** (neighbor_id, codes, cid) rows: each vector's PQ codes under its
     * IVF cell — what the IVF-PQ probes scan and the IVF-PQ index
-    * stores. */
+    * stores. The cell is computed in the same pass as the subvectors,
+    * so the corpus is read once. */
   private def ivfPqRows(corpus: DataFrame, idCol: String, vecCol: String,
       ivf: IvfModel, pq: PqModel): DataFrame =
-    pqEncode(corpus, idCol, vecCol, pq)
-      .select(col(idCol).as("neighbor_id"), col("codes"))
-      .join(corpus.select(col(idCol).as("neighbor_id"),
-        nearestCentroid(col(vecCol), ivf).as("cid")), Seq("neighbor_id"))
+    pqCodes(corpus.select(col(idCol).as("neighbor_id"),
+        nearestCentroid(col(vecCol), ivf).as("cell"), col(vecCol)),
+        Seq("neighbor_id", "cell"), vecCol, pq)
+      .select(col("neighbor_id"), col("codes"), col("cell").as("cid"))
 
   /** Shared ADC → shortlist → exact-re-rank tail of the IVF-PQ paths:
     * score (cid, codes) candidate rows against each probing query's
@@ -868,7 +876,7 @@ object AnnOps {
   private def pqQueryTables(queries: DataFrame, idCol: String,
       vecCol: String, model: PqModel): DataFrame =
     subvecs(queries.select(col(idCol).as("query_id"), col(vecCol)),
-        "query_id", vecCol, model.m, model.dsub)
+        Seq("query_id"), vecCol, model.m, model.dsub)
       .join(broadcast(booksDf(queries, model)), Seq("mi"))
       .select(col("query_id"), col("mi"),
         transform(col("book"), e =>

@@ -14,7 +14,7 @@ package graft.ops
   * accumulation to drift across engines.
   *
   * Scale note: decode + featurize is row-local, map-shaped work in
-  * the same `mapPartitions` slot as the image codecs; sample buffers
+  * the same kernel as the image codecs ([[Multimodal.kernel]]); sample buffers
   * never leave the task — only metadata / witness columns travel.
   *
   * Beyond-reference surface: the reference engine has no binary type

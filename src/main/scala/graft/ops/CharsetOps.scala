@@ -6,9 +6,6 @@ import java.nio.charset.{Charset, CharacterCodingException,
 import java.nio.charset.StandardCharsets.{UTF_8, UTF_16LE, UTF_16BE}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-
-import graft.ops.Multimodal.MediaRow
 
 /** Charset sniffing + transcoding to UTF-8 — the stage between raw
   * crawl bytes and every text gate. A real web corpus is NOT UTF-8:
@@ -36,7 +33,7 @@ import graft.ops.Multimodal.MediaRow
   * and MD5 from the original row, so a match certifies the full
   * encode → sniff → decode → UTF-8 round trip.
   *
-  * Scale shape: row-local, map-shaped work in the codec slot; raw and
+  * Scale shape: row-local, map-shaped work in the codec kernel; raw and
   * transcoded bytes never leave the task, only witness columns
   * travel.
   */
@@ -149,49 +146,34 @@ object CharsetOps {
     *
     * Corpus text is ASCII (TESTDATA), so every arm encodes losslessly
     * and the oracle replays the UTF-8 witnesses as text || marker. */
-  def charsetTable(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    StorageOps.fanOutForKernel(
-      docs.select(col("doc_id").cast("long"), col("text")))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val bytes = (id % 5) match {
-            case 0 =>
-              Array[Byte](0xef.toByte, 0xbb.toByte, 0xbf.toByte) ++
-                text.getBytes(UTF_8)
-            case 1 => (text + " café!").getBytes(Cp1252)
-            case 2 => (text + " 日本語").getBytes(Sjis)
-            case 3 =>
-              Array[Byte](0xff.toByte, 0xfe.toByte) ++
-                (text + " ★").getBytes(UTF_16LE)
-            case _ => (text + " ü").getBytes(UTF_8)
-          }
-          (id, bytes)
-        }
+  def charsetTable(spark: SparkSession, docs: DataFrame): DataFrame =
+    Multimodal.encodeDocs(StorageOps.fanOutForKernel(
+        Multimodal.docText(docs))) { (_, id, text) =>
+      (id % 5) match {
+        case 0 =>
+          Array[Byte](0xef.toByte, 0xbb.toByte, 0xbf.toByte) ++
+            text.getBytes(UTF_8)
+        case 1 => (text + " café!").getBytes(Cp1252)
+        case 2 => (text + " 日本語").getBytes(Sjis)
+        case 3 =>
+          Array[Byte](0xff.toByte, 0xfe.toByte) ++
+            (text + " ★").getBytes(UTF_16LE)
+        case _ => (text + " ü").getBytes(UTF_8)
       }
-      .toDF("doc_id", "content")
-  }
+    }
 
   /** One transcode outcome's witnesses: the detected charset, the
     * UTF-8 byte length, and the MD5 of the UTF-8 bytes. */
   final case class TranscodeMeta(doc_id: Long, detected: String,
       n_out: Long, out_md5: String)
 
-  /** Batch sniff + transcode: one partition-wise pass; only witness
-    * columns travel. */
+  /** Batch sniff + transcode: one kernel pass; only witness columns
+    * travel. */
   def transcodeAll(spark: SparkSession,
-      media: DataFrame): Dataset[TranscodeMeta] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      val md = java.security.MessageDigest.getInstance("MD5")
-      rows.map { r =>
-        val (detected, text) = sniffTranscode(r.content)
-        val out = text.getBytes(UTF_8)
-        md.reset()
-        val hex = md.digest(out).map("%02x".format(_)).mkString
-        TranscodeMeta(r.doc_id, detected, out.length.toLong, hex)
-      }
+      media: DataFrame): Dataset[TranscodeMeta] =
+    Multimodal.mapMedia(media) { (c, r) =>
+      val (detected, text) = sniffTranscode(r.content)
+      val out = text.getBytes(UTF_8)
+      TranscodeMeta(r.doc_id, detected, out.length.toLong, c.md5Hex(out))
     }
-  }
 }

@@ -26,8 +26,8 @@ import java.nio.charset.StandardCharsets.US_ASCII
   * standard classes without HTTP-specific handling.
   *
   * Scale shape: pure row-local byte parsing — it runs inside the same
-  * `mapPartitions` slot as the WARC member walk; bodies never leave
-  * the task, only witness columns travel.
+  * codec kernel as the WARC member walk ([[Multimodal.kernel]]);
+  * bodies never leave the task, only witness columns travel.
   *
   * Beyond-reference surface: the reference engine reads CSV only
   * (reference src/datasources/mod.rs:25-71 is its entire format

@@ -11,7 +11,7 @@ package graft.ops
   * extraction all run against actual encoded bytes inside the same
   * partition-wise batch slot (decode cost stays row-local and
   * map-shaped — nothing about the Spark plan changes at 100 TB, which
-  * is the point of keeping the codec inside `mapPartitions`).
+  * is the point of keeping the codec inside [[Multimodal.kernel]]).
   *
   * Decoded pixels are row-major top-down RGB, 3 bytes per pixel —
   * the layout both encoders take in, so encode→decode round-trips

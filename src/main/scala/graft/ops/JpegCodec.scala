@@ -27,8 +27,8 @@ package graft.ops
   * encoder.
   *
   * Scale note: like the other codecs this is row-local, map-shaped
-  * work inside `mapPartitions` — payloads and sample planes never
-  * leave the task; only witness columns travel.
+  * work inside [[Multimodal.kernel]] — payloads and sample planes
+  * never leave the task; only witness columns travel.
   *
   * Beyond-reference surface: the reference engine has no binary type
   * at all (SURVEY §1.2; reference src/datatypes/mod.rs:14-22).

@@ -1,6 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.zip.{CRC32, Deflater, Inflater}
+
+import scala.reflect.runtime.universe.TypeTag
+
+import com.github.luben.zstd.{ZstdCompressCtx, ZstdDecompressCtx}
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders,
+  SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: image/audio/video payloads travel as
@@ -10,33 +18,114 @@ import org.apache.spark.sql.functions._
   *
   * The Spark-side architecture is the real deliverable here:
   *   - payloads stay binary end-to-end (never stringified);
-  *   - decode/feature-extract runs batch-wise per partition via the
-  *     typed Dataset API (`mapPartitions` — the Scala analogue of
-  *     `mapInPandas`: one iterator per partition, so per-batch library
-  *     setup cost amortizes and memory stays bounded by partition size);
+  *   - every codec pass — this object's, and those of [[WarcOps]],
+  *     [[CompressedOps]], [[ZstdOps]], [[CharsetOps]],
+  *     [[QuarantineOps]] and the ingest loop's payload decode — runs
+  *     through ONE partition kernel, [[kernel]]: a per-row function
+  *     over a typed Dataset (one iterator per partition, the Scala
+  *     analogue of `mapInPandas`), given the task's [[Codecs]];
   *   - metadata is a proper struct column so Catalyst can prune it.
   *
-  * As of round 11 the image decode/resize path is a REAL pure-JVM
-  * codec ([[ImageCodec]]: binary PPM + 24-bit BMP — header parse, row
+  * The kernel's contract: a [[Codecs]] handle is created inside each
+  * partition and never shared between tasks. Each native object on it
+  * (raw and zlib `Deflater` at `BEST_SPEED`, raw and zlib `Inflater`,
+  * a level-3 checksummed zstd compress context, a zstd decompress
+  * context) is created the first time a row uses it and released
+  * when the task completes; `CRC32` and the MD5 digest behind
+  * [[Codecs.md5Hex]] are reset per use. Row functions never allocate
+  * or release native codec state themselves. Two row shapes sit on
+  * the kernel: docs → `(doc_id, content)` ([[encodeDocs]]) and
+  * [[MediaRow]] → typed rows ([[mapMedia]], [[flatMapMedia]]). The
+  * kernel never repartitions: the doc-side callers that fan out call
+  * [[StorageOps.fanOutForKernel]] on the projected [[docText]] frame
+  * themselves.
+  *
+  * The image decode/resize path is a REAL pure-JVM codec
+  * ([[ImageCodec]]: binary PPM + 24-bit BMP — header parse, row
   * padding, bottom-up order, actual pixel extraction and
   * nearest-neighbor resampling), fed by [[imageTable]]'s real encoded
   * payloads. The payload-agnostic operators (perceptual hash, feature
   * extraction, frame sampling) still accept ANY binary payload — an
-  * embedding model or A/V codec would swap into the same
-  * partition-wise slots.
+  * embedding model or A/V codec would swap into the same kernel.
   */
 object Multimodal {
 
   /** One media row: id + opaque payload. */
   case class MediaRow(doc_id: Long, content: Array[Byte])
 
-  /** Release native resources when the task finishes: zlib state is
-    * ~270 KB off-heap per Deflater/Inflater, and leaving it to
-    * finalization accumulates un-freed allocations on a long-lived
-    * executor. No-op outside a task (driver-side unit-test calls). */
-  private[graft] def endOnTaskCompletion(end: () => Unit): Unit =
+  /** One task's codec state, handed to every row of a [[kernel]] pass.
+    * zlib state is ~270 KB off-heap per Deflater/Inflater: each native
+    * object is created on first use and ended when the task completes
+    * (leaving it to finalization accumulates un-freed allocations on a
+    * long-lived executor). Created inside the partition, never shared,
+    * so no row sees another task's state. */
+  final class Codecs private[Multimodal] () {
+    lazy val rawDeflater: Deflater =
+      owned(new Deflater(Deflater.BEST_SPEED, true))(_.end())
+    lazy val zlibDeflater: Deflater =
+      owned(new Deflater(Deflater.BEST_SPEED, false))(_.end())
+    lazy val rawInflater: Inflater = owned(new Inflater(true))(_.end())
+    lazy val zlibInflater: Inflater = owned(new Inflater(false))(_.end())
+    lazy val zstdCompress: ZstdCompressCtx = owned(
+      new ZstdCompressCtx().setLevel(3).setChecksum(true))(_.close())
+    lazy val zstdDecompress: ZstdDecompressCtx =
+      owned(new ZstdDecompressCtx())(_.close())
+    lazy val crc: CRC32 = new CRC32()
+    private lazy val md5 = java.security.MessageDigest.getInstance("MD5")
+    private val ends = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+
+    private def owned[T](obj: T)(end: T => Unit): T = {
+      ends += (() => end(obj)); obj
+    }
+
+    /** Lower-case hex MD5 of `bytes` — the one digest witness every
+      * codec reader emits (the oracle's `md5(...)`). */
+    def md5Hex(bytes: Array[Byte]): String = {
+      md5.reset()
+      md5.digest(bytes).map("%02x".format(_)).mkString
+    }
+
+    private[Multimodal] def end(): Unit = ends.foreach(_())
+  }
+
+  /** Release `codecs` when the task finishes — the only place native
+    * codec state is released. */
+  private def endOnTaskCompletion(codecs: Codecs): Unit =
     Option(org.apache.spark.TaskContext.get())
-      .foreach(_.addTaskCompletionListener[Unit](_ => end()))
+      .foreach(_.addTaskCompletionListener[Unit](_ => codecs.end()))
+
+  /** The partition kernel every codec pass runs through: `f` maps one
+    * row to its output rows, given the task's [[Codecs]]. */
+  private[graft] def kernel[T, U <: Product : TypeTag](rows: Dataset[T])(
+      f: (Codecs, T) => IterableOnce[U]): Dataset[U] =
+    rows.mapPartitions { it =>
+      val codecs = new Codecs
+      endOnTaskCompletion(codecs)
+      it.flatMap(f(codecs, _))
+    }(Encoders.product[U])
+
+  /** The `(doc_id, text)` projection every doc-side pass reads. */
+  private[graft] def docText(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id").cast("long"), col("text"))
+
+  /** Docs → `(doc_id, content)`: `f` encodes one doc. `docs` is a
+    * [[docText]] frame, fanned out or not by the caller. */
+  private[graft] def encodeDocs(docs: DataFrame)(
+      f: (Codecs, Long, String) => Array[Byte]): DataFrame =
+    kernel(docs.as(Encoders.product[(Long, String)])) {
+      case (c, (id, text)) => Iterator.single((id, f(c, id, text)))
+    }.toDF("doc_id", "content")
+
+  /** [[MediaRow]] → one typed row per payload. */
+  private[graft] def mapMedia[U <: Product : TypeTag](media: DataFrame)(
+      f: (Codecs, MediaRow) => U): Dataset[U] =
+    flatMapMedia(media)((c, r) => Iterator.single(f(c, r)))
+
+  /** [[MediaRow]] → any number of typed rows per payload. */
+  private[graft] def flatMapMedia[U <: Product : TypeTag](
+      media: DataFrame)(f: (Codecs, MediaRow) => IterableOnce[U])
+      : Dataset[U] =
+    kernel(media.as(Encoders.product[MediaRow]))(f)
 
   /** The first two codepoints of a doc's text — the shared seed of
     * every deterministic payload generator (and of every DuckDB
@@ -79,6 +168,18 @@ object Multimodal {
       i += 1
     }
     (cp0, w, h, rgb)
+  }
+
+  /** The mixed-format picture: [[genImage]]'s picture encoded as PPM /
+    * BMP / PNG by cp0 mod 3 — [[mixedImageTable]]'s payload and the
+    * clean arm of [[QuarantineOps.corruptImageTable]]. */
+  private[ops] def mixedPicture(c: Codecs, text: String): Array[Byte] = {
+    val (cp0, w, h, rgb) = genImage(text)
+    cp0 % 3 match {
+      case 0 => ImageCodec.encodePpm(w, h, rgb)
+      case 1 => ImageCodec.encodeBmp(w, h, rgb)
+      case _ => PngCodec.encodeWith(w, h, rgb, c.zlibDeflater)
+    }
   }
 
   /** Decoded metadata + the pixel-content witness (`px_sum` = sum of
@@ -131,19 +232,11 @@ object Multimodal {
     * [[decodeAll]] gets the pixels back by a full general baseline
     * decode (entropy scan, dequant, IDCT, upsample, color convert),
     * not by trusting the generator. */
-  def jpegImageTable(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    StorageOps.fanOutForKernel(
-      docs.select(col("doc_id").cast("long"), col("text")))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val (_, w, h, blocks) = genBlockImage(text)
-          (id, JpegCodec.encodeGrayBlocks(w, h, blocks))
-        }
-      }
-      .toDF("doc_id", "content")
-  }
+  def jpegImageTable(spark: SparkSession, docs: DataFrame): DataFrame =
+    encodeDocs(StorageOps.fanOutForKernel(docText(docs))) { (_, _, text) =>
+      val (_, w, h, blocks) = genBlockImage(text)
+      JpegCodec.encodeGrayBlocks(w, h, blocks)
+    }
 
   /** Build a media table of PROGRESSIVE (SOF2) JPEGs from documents:
     * the same constant-block picture as [[jpegImageTable]], encoded
@@ -153,19 +246,11 @@ object Multimodal {
     * real web JPEGs ship in. Same lossless-witness contract: the DC
     * quantizer folds out exactly, so the oracle replays every pixel. */
   def progressiveJpegTable(spark: SparkSession,
-      docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    StorageOps.fanOutForKernel(
-      docs.select(col("doc_id").cast("long"), col("text")))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val (_, w, h, blocks) = genBlockImage(text)
-          (id, JpegCodec.encodeGrayProgressive(w, h, blocks))
-        }
-      }
-      .toDF("doc_id", "content")
-  }
+      docs: DataFrame): DataFrame =
+    encodeDocs(StorageOps.fanOutForKernel(docText(docs))) { (_, _, text) =>
+      val (_, w, h, blocks) = genBlockImage(text)
+      JpegCodec.encodeGrayProgressive(w, h, blocks)
+    }
 
   /** The FOUR-format heterogeneous corpus (cp0 mod 4 → PPM / BMP /
     * PNG / JPEG) over the constant-block picture — the realistic
@@ -173,29 +258,17 @@ object Multimodal {
     * shared pixel witness because constant blocks survive JPEG
     * exactly. The decode stage dispatches per row by MAGIC BYTES
     * through the same sniffer as [[mixedImageTable]]. */
-  def mixed4ImageTable(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    StorageOps.fanOutForKernel(
-      docs.select(col("doc_id").cast("long"), col("text")))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        val defl = new java.util.zip.Deflater(
-          java.util.zip.Deflater.BEST_SPEED, false)
-        endOnTaskCompletion(() => defl.end())
-        rows.map { case (id, text) =>
-          val (cp0, w, h, blocks) = genBlockImage(text)
-          val bytes = cp0 % 4 match {
-            case 0 => ImageCodec.encodePpm(w, h, blocksToRgb(w, h, blocks))
-            case 1 => ImageCodec.encodeBmp(w, h, blocksToRgb(w, h, blocks))
-            case 2 => PngCodec.encodeWith(w, h,
-              blocksToRgb(w, h, blocks), defl)
-            case _ => JpegCodec.encodeGrayBlocks(w, h, blocks)
-          }
-          (id, bytes)
-        }
+  def mixed4ImageTable(spark: SparkSession, docs: DataFrame): DataFrame =
+    encodeDocs(StorageOps.fanOutForKernel(docText(docs))) { (c, _, text) =>
+      val (cp0, w, h, blocks) = genBlockImage(text)
+      cp0 % 4 match {
+        case 0 => ImageCodec.encodePpm(w, h, blocksToRgb(w, h, blocks))
+        case 1 => ImageCodec.encodeBmp(w, h, blocksToRgb(w, h, blocks))
+        case 2 => PngCodec.encodeWith(w, h, blocksToRgb(w, h, blocks),
+          c.zlibDeflater)
+        case _ => JpegCodec.encodeGrayBlocks(w, h, blocks)
       }
-      .toDF("doc_id", "content")
-  }
+    }
 
   /** Build a media table from documents: the UTF-8 text bytes stand in
     * for an OPAQUE payload (perceptual hash / feature extraction /
@@ -219,24 +292,14 @@ object Multimodal {
     * The payloads are REAL format bytes: [[decodeAll]] gets its
     * dimensions back by parsing headers, not by trusting the
     * generator, and the planted-image specs cross-check the codec on
-    * hand-built goldens. Runs in the same partition-wise batch slot
-    * as decode (encode cost is row-local, map-shaped at any scale). */
-  def imageTable(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    StorageOps.fanOutForKernel(
-      docs.select(col("doc_id").cast("long"), col("text")))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val (cp0, w, h, rgb) = genImage(text)
-          val bytes =
-            if (cp0 % 2 == 0) ImageCodec.encodePpm(w, h, rgb)
-            else ImageCodec.encodeBmp(w, h, rgb)
-          (id, bytes)
-        }
-      }
-      .toDF("doc_id", "content")
-  }
+    * hand-built goldens. Runs in the same kernel as decode (encode
+    * cost is row-local, map-shaped at any scale). */
+  def imageTable(spark: SparkSession, docs: DataFrame): DataFrame =
+    encodeDocs(StorageOps.fanOutForKernel(docText(docs))) { (_, _, text) =>
+      val (cp0, w, h, rgb) = genImage(text)
+      if (cp0 % 2 == 0) ImageCodec.encodePpm(w, h, rgb)
+      else ImageCodec.encodeBmp(w, h, rgb)
+    }
 
   /** [[imageTable]]'s sibling for the COMPRESSED format: the same
     * deterministic picture per doc (identical dims / pixel-byte
@@ -246,126 +309,66 @@ object Multimodal {
     * filter's reconstruction arithmetic. An oracle match on the
     * decoded `px_sum` therefore certifies chunk framing + CRC +
     * inflate + all five unfilter paths, not just header math. */
-  def pngImageTable(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    StorageOps.fanOutForKernel(
-      docs.select(col("doc_id").cast("long"), col("text")))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        // one ~270 KB native zlib state per PARTITION, not per row
-        val defl = new java.util.zip.Deflater(
-          java.util.zip.Deflater.BEST_SPEED, false)
-        endOnTaskCompletion(() => defl.end())
-        rows.map { case (id, text) =>
-          val (_, w, h, rgb) = genImage(text)
-          (id, PngCodec.encodeWith(w, h, rgb, defl))
-        }
-      }
-      .toDF("doc_id", "content")
-  }
+  def pngImageTable(spark: SparkSession, docs: DataFrame): DataFrame =
+    encodeDocs(StorageOps.fanOutForKernel(docText(docs))) { (c, _, text) =>
+      val (_, w, h, rgb) = genImage(text)
+      PngCodec.encodeWith(w, h, rgb, c.zlibDeflater)
+    }
 
   /** The HETEROGENEOUS-corpus variant: format varies PER ROW
-    * (cp0 mod 3 → PPM / BMP / PNG), which is what a real 100-TB
-    * media crawl looks like — the decode stage must dispatch by
-    * magic, not by a per-table format column. Same dims / pixel
-    * arithmetic as [[imageTable]], so the oracle replay is shared;
-    * a match certifies the sniffer routes every row to the right
-    * parser (a PPM byte plane mis-read as BMP's padded bottom-up
-    * BGR rows would shift px_sum immediately). */
-  def mixedImageTable(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    StorageOps.fanOutForKernel(
-      docs.select(col("doc_id").cast("long"), col("text")))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        val defl = new java.util.zip.Deflater(
-          java.util.zip.Deflater.BEST_SPEED, false)
-        endOnTaskCompletion(() => defl.end())
-        rows.map { case (id, text) =>
-          val (cp0, w, h, rgb) = genImage(text)
-          val bytes = cp0 % 3 match {
-            case 0 => ImageCodec.encodePpm(w, h, rgb)
-            case 1 => ImageCodec.encodeBmp(w, h, rgb)
-            case _ => PngCodec.encodeWith(w, h, rgb, defl)
-          }
-          (id, bytes)
-        }
-      }
-      .toDF("doc_id", "content")
-  }
+    * (cp0 mod 3 → PPM / BMP / PNG, [[mixedPicture]]), which is what a
+    * real 100-TB media crawl looks like — the decode stage must
+    * dispatch by magic, not by a per-table format column. Same dims /
+    * pixel arithmetic as [[imageTable]], so the oracle replay is
+    * shared; a match certifies the sniffer routes every row to the
+    * right parser (a PPM byte plane mis-read as BMP's padded
+    * bottom-up BGR rows would shift px_sum immediately). */
+  def mixedImageTable(spark: SparkSession, docs: DataFrame): DataFrame =
+    encodeDocs(StorageOps.fanOutForKernel(docText(docs)))(
+      (c, _, text) => mixedPicture(c, text))
 
-  /** Decoded PNG metadata: `raw_len` is the INFLATED scanline-stream
-    * length `h·(1 + 3w)` — a witness of the decompressed
-    * serialization (the compressed container length is
-    * implementation-defined and deliberately NOT exposed to the
-    * oracle), `px_sum` the full unfiltered pixel plane. */
-  case class PngMeta(doc_id: Long, width: Int, height: Int,
-      format: String, raw_len: Long, px_sum: Long)
-
-  /** Batch PNG decode: the same partition-wise slot as [[decodeAll]],
-    * but over genuinely COMPRESSED payloads — sniffed and decoded by
-    * the shared [[ImageCodec.decode]] front door (so the magic
-    * dispatch is on the tested path), witnessed by the inflated
-    * stream length and the full decoded plane. */
-  def decodePngAll(spark: SparkSession,
-      media: DataFrame): Dataset[PngMeta] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      val infl = new java.util.zip.Inflater(false)
-      endOnTaskCompletion(() => infl.end())
-      rows.map { r =>
-        val img = ImageCodec.decode(r.content, infl)
-        PngMeta(r.doc_id, img.width, img.height, img.format,
-          (1L + img.width * 3L) * img.height,
-          ImageCodec.pixelSum(img.rgb))
-      }
+  /** Batch decode: one kernel pass over binary payloads → typed
+    * metadata rows via the REAL [[ImageCodec]] (PPM / BMP / PNG / JPEG
+    * magic sniffing, header parse, full pixel extraction — `px_sum`
+    * witnesses every decoded byte; PNG inflates through the task's
+    * zlib Inflater). */
+  def decodeAll(spark: SparkSession, media: DataFrame): Dataset[DecodedMeta] =
+    mapMedia(media) { (c, r) =>
+      val img = ImageCodec.decode(r.content, c.zlibInflater)
+      DecodedMeta(r.doc_id, img.width, img.height, img.format,
+        r.content.length.toLong, ImageCodec.pixelSum(img.rgb))
     }
-  }
-
-  /** Batch decode: partition-wise iteration over binary payloads →
-    * typed metadata rows via the REAL [[ImageCodec]] (PPM/BMP magic
-    * sniffing, header parse, full pixel extraction — `px_sum`
-    * witnesses every decoded byte). This is the `mapInPandas`-shaped
-    * step: per-partition setup happens once, rows stream through. */
-  def decodeAll(spark: SparkSession, media: DataFrame): Dataset[DecodedMeta] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      val infl = new java.util.zip.Inflater(false)
-      endOnTaskCompletion(() => infl.end())
-      rows.map { r =>
-        val img = ImageCodec.decode(r.content, infl)
-        DecodedMeta(r.doc_id, img.width, img.height, img.format,
-          r.content.length.toLong, ImageCodec.pixelSum(img.rgb))
-      }
-    }
-  }
 
   // ---- tar shards: the WebDataset container ---------------------------
 
+  /** One doc's WebDataset member pair: `<id>.txt` (the UTF-8 text) and
+    * `<id>.ppm` (the shared deterministic picture, PPM-encoded). */
+  private[ops] def tarMembers(id: Long,
+      text: String): Seq[(String, Array[Byte])] = {
+    val (_, w, h, rgb) = genImage(text)
+    Seq(s"$id.txt" -> text.getBytes(UTF_8),
+      s"$id.ppm" -> ImageCodec.encodePpm(w, h, rgb))
+  }
+
+  /** (key, members) rows: each key's `(id, text)` pairs sorted by id —
+    * how a container's members meet in ONE task to be serialized (the
+    * one payload shuffle a container requires). */
+  private[ops] def groupMembers(rows: DataFrame, key: Column, id: Column,
+      text: Column): Dataset[(Long, Seq[(Long, String)])] =
+    rows.groupBy(key.as("_1"))
+      .agg(sort_array(collect_list(struct(id.as("_1"), text.as("_2"))))
+        .as("_2"))
+      .as(Encoders.product[(Long, Seq[(Long, String)])])
+
   /** Build a table of REAL TAR SHARDS ([[TarCodec]]): each doc
     * becomes a POSIX ustar archive holding the WebDataset member
-    * pair — `<id>.txt` (the UTF-8 text) and `<id>.ppm` (the shared
-    * deterministic picture, PPM-encoded). Decoding must walk real
-    * 512-byte headers, verify checksums, honor padding, and then
-    * decode the INNER image codec — the two-layer composition a
-    * multimodal shard reader actually performs. */
-  def tarShardTable(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    StorageOps.fanOutForKernel(
-      docs.select(col("doc_id").cast("long"), col("text")))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val (_, w, h, rgb) = genImage(text)
-          val tar = TarCodec.encode(Seq(
-            s"$id.txt" ->
-              text.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-            s"$id.ppm" -> ImageCodec.encodePpm(w, h, rgb)))
-          (id, tar)
-        }
-      }
-      .toDF("doc_id", "content")
-  }
+    * pair ([[tarMembers]]). Decoding must walk real 512-byte headers,
+    * verify checksums, honor padding, and then decode the INNER image
+    * codec — the two-layer composition a multimodal shard reader
+    * actually performs. */
+  def tarShardTable(spark: SparkSession, docs: DataFrame): DataFrame =
+    encodeDocs(StorageOps.fanOutForKernel(docText(docs)))(
+      (_, id, text) => TarCodec.encode(tarMembers(id, text)))
 
   /** One decoded shard's witnesses: member count, total archive
     * bytes (headers + 512-padding + end blocks — the layout
@@ -374,52 +377,41 @@ object Multimodal {
   case class TarMeta(doc_id: Long, n_members: Long, tar_bytes: Long,
       txt_md5: String, img_px: Long)
 
-  /** Batch shard decode: tar walk + inner PPM decode in one
-    * partition-wise pass; member bytes never leave the task. */
-  def decodeTarAll(spark: SparkSession,
-      media: DataFrame): Dataset[TarMeta] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      val md = java.security.MessageDigest.getInstance("MD5")
-      rows.map { r =>
-        val members = TarCodec.decode(r.content)
-        val txt = members.collectFirst {
-          case (n, d) if n.endsWith(".txt") => d }
-          .getOrElse(throw new IllegalArgumentException(
-            s"shard ${r.doc_id}: no .txt member"))
-        val img = members.collectFirst {
-          case (n, d) if n.endsWith(".ppm") => d }
-          .getOrElse(throw new IllegalArgumentException(
-            s"shard ${r.doc_id}: no .ppm member"))
-        md.reset()
-        val hex = md.digest(txt).map("%02x".format(_)).mkString
-        TarMeta(r.doc_id, members.length.toLong,
-          r.content.length.toLong, hex,
-          ImageCodec.pixelSum(ImageCodec.decode(img).rgb))
-      }
-    }
-  }
+  /** The `.ppm` member of a decoded shard. */
+  private def ppmMember(r: MediaRow,
+      members: Seq[(String, Array[Byte])]): Array[Byte] =
+    members.collectFirst { case (n, d) if n.endsWith(".ppm") => d }
+      .getOrElse(throw new IllegalArgumentException(
+        s"shard ${r.doc_id}: no .ppm member"))
 
-  /** Shard → perceptual hash in ONE partition pass: tar walk, inner
+  /** Batch shard decode: tar walk + inner PPM decode in one kernel
+    * pass; member bytes never leave the task. */
+  def decodeTarAll(spark: SparkSession,
+      media: DataFrame): Dataset[TarMeta] =
+    mapMedia(media) { (c, r) =>
+      val members = TarCodec.decode(r.content)
+      val txt = members.collectFirst {
+        case (n, d) if n.endsWith(".txt") => d }
+        .getOrElse(throw new IllegalArgumentException(
+          s"shard ${r.doc_id}: no .txt member"))
+      val img = ppmMember(r, members)
+      TarMeta(r.doc_id, members.length.toLong, r.content.length.toLong,
+        c.md5Hex(txt), ImageCodec.pixelSum(ImageCodec.decode(img).rgb))
+    }
+
+  /** Shard → perceptual hash in ONE kernel pass: tar walk, inner
     * PPM decode, 8×8 average-hash — the front of a shard-corpus
     * image-dedup pipeline (member and pixel buffers never leave the
     * task; 16 hex chars per shard travel). */
   def ahashTarAll(spark: SparkSession,
-      media: DataFrame): Dataset[MediaAhash] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.map { r =>
-        val img = TarCodec.decode(r.content).collectFirst {
-          case (n, d) if n.endsWith(".ppm") => d }
-          .getOrElse(throw new IllegalArgumentException(
-            s"shard ${r.doc_id}: no .ppm member"))
-        val h = ImageCodec.averageHash(ImageCodec.decode(img))
-        MediaAhash(r.doc_id, h,
-          java.lang.Long.bitCount(
-            java.lang.Long.parseUnsignedLong(h, 16)).toLong)
-      }
+      media: DataFrame): Dataset[MediaAhash] =
+    mapMedia(media) { (_, r) =>
+      val h = ImageCodec.averageHash(ImageCodec.decode(
+        ppmMember(r, TarCodec.decode(r.content))))
+      MediaAhash(r.doc_id, h,
+        java.lang.Long.bitCount(
+          java.lang.Long.parseUnsignedLong(h, 16)).toLong)
     }
-  }
 
   /** One assembled shard's witnesses: member/doc counts, the BUILT
     * archive's byte length (certified against the oracle's layout
@@ -445,30 +437,15 @@ object Multimodal {
     import spark.implicits._
     // no fan-out here: the groupBy below is the required payload
     // shuffle and already spreads the per-shard build across nShards
-    docs.select(col("doc_id").cast("long"), col("text"))
-      .withColumn("shard_id", pmod(col("doc_id"), lit(nShards))
-        .cast("long"))
-      .groupBy(col("shard_id"))
-      // struct fields named _1/_2 so the tuple encoder resolves;
-      // sort_array orders by the first field = doc_id (deterministic
-      // member order inside the shard)
-      .agg(sort_array(collect_list(struct(col("doc_id").as("_1"),
-        col("text").as("_2")))).as("members"))
-      .select(col("shard_id").as("_1"), col("members").as("_2"))
-      .as[(Long, Seq[(Long, String)])]
+    groupMembers(docText(docs),
+        pmod(col("doc_id"), lit(nShards)).cast("long"), col("doc_id"),
+        col("text"))
       .map { case (sid, members) =>
-        val entries = members.flatMap { case (id, text) =>
-          val (_, w, h, rgb) = genImage(text)
-          Seq(
-            s"$id.txt" ->
-              text.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-            s"$id.ppm" -> ImageCodec.encodePpm(w, h, rgb))
-        }
+        val entries = members.flatMap { case (id, t) => tarMembers(id, t) }
         val tar = TarCodec.encode(entries)
         ShardMeta(sid, members.size.toLong, entries.size.toLong,
           tar.length.toLong,
-          members.map(_._2.getBytes(
-            java.nio.charset.StandardCharsets.UTF_8).length.toLong).sum,
+          members.map(_._2.getBytes(UTF_8).length.toLong).sum,
           TarCodec.decode(tar).length.toLong)
       }
   }
@@ -516,24 +493,17 @@ object Multimodal {
     // 1. narrow manifest: the member-pair footprint from the SAME
     // generator arithmetic the build step uses (byte-exact by
     // construction, since both call genImage)
-    val manifest = StorageOps.fanOutForKernel(
-      docs.select(col("doc_id").cast("long"), col("text")))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          // dims-only: the manifest never touches pixels, so don't
-          // materialize genImage's w·h·3 array just to read (w, h)
-          val (w, h) = genDims(text)
-          val txt = text.getBytes(
-            java.nio.charset.StandardCharsets.UTF_8).length.toLong
-          val ppm = 9L + w.toString.length + h.toString.length +
-            w.toLong * h * 3
-          val mb = 512L + (txt + 511) / 512 * 512 +
-            512L + (ppm + 511) / 512 * 512
-          (id, mb)
-        }
-      }
-      .toDF("id", "mb")
+    val manifest = kernel(StorageOps.fanOutForKernel(docText(docs))
+        .as[(Long, String)]) { case (_, (id, text)) =>
+      // dims-only: the manifest never touches pixels, so don't
+      // materialize genImage's w·h·3 array just to read (w, h)
+      val (w, h) = genDims(text)
+      val txt = text.getBytes(UTF_8).length.toLong
+      val ppm = 9L + w.toString.length + h.toString.length +
+        w.toLong * h * 3
+      Iterator.single((id,
+        512L + (txt + 511) / 512 * 512 + 512L + (ppm + 511) / 512 * 512))
+    }.toDF("id", "mb")
     // 2. the per-bucket sequential walk (mirrors PackOps.nextFitPack's
     // accumulator shape, without the spanning arm — shards never
     // split a member pair)
@@ -573,28 +543,17 @@ object Multimodal {
       .select((col("base") + col("shard_rel")).as("shard_id"), col("id"))
     // 4. members meet their shard (the one payload shuffle), build +
     // self-check the archive, certify against the budget
-    withSid
-      .join(docs.select(col("doc_id").cast("long").as("id"), col("text")),
-        Seq("id"))
-      .groupBy(col("shard_id"))
-      .agg(sort_array(collect_list(struct(col("id").as("_1"),
-        col("text").as("_2")))).as("members"))
-      .select(col("shard_id").as("_1"), col("members").as("_2"))
-      .as[(Long, Seq[(Long, String)])]
+    groupMembers(
+        withSid.join(docs.select(col("doc_id").cast("long").as("id"),
+          col("text")), Seq("id")),
+        col("shard_id"), col("id"), col("text"))
       .map { case (sid, members) =>
-        val entries = members.flatMap { case (id, text) =>
-          val (_, w, h, rgb) = genImage(text)
-          Seq(
-            s"$id.txt" ->
-              text.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-            s"$id.ppm" -> ImageCodec.encodePpm(w, h, rgb))
-        }
+        val entries = members.flatMap { case (id, t) => tarMembers(id, t) }
         val tar = TarCodec.encode(entries)
         require(TarCodec.decode(tar).length == entries.length,
           s"shard $sid: decode-back member count mismatch")
         BudgetShardMeta(sid, members.size.toLong, entries.size.toLong,
-          members.map(_._2.getBytes(
-            java.nio.charset.StandardCharsets.UTF_8).length.toLong).sum,
+          members.map(_._2.getBytes(UTF_8).length.toLong).sum,
           tar.length.toLong,
           tar.length <= budgetBytes || members.size == 1)
       }
@@ -613,25 +572,17 @@ object Multimodal {
     * non-trivial) — encoded as canonical RIFF/WAVE PCM16 by
     * [[AudioCodec.encodeWav]]. [[decodeAudioAll]] gets everything
     * back by PARSING the container, not by trusting the generator. */
-  def audioTable(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    StorageOps.fanOutForKernel(
-      docs.select(col("doc_id").cast("long"), col("text")))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val (cp0, cp1) = genCodepoints(text)
-          val n = (cp0 % 768 + 256) * 2
-          val rate = 8000 + (cp1 % 4) * 4000
-          val channels = cp1 % 2 + 1
-          val s0 = (cp0 * 7 + cp1 * 13) % 256
-          val samples = Array.tabulate(n)(i =>
-            (((s0 + 37L * i * i + 11L * i) % 4001) - 2000).toShort)
-          (id, AudioCodec.encodeWav(rate, channels, samples))
-        }
-      }
-      .toDF("doc_id", "content")
-  }
+  def audioTable(spark: SparkSession, docs: DataFrame): DataFrame =
+    encodeDocs(StorageOps.fanOutForKernel(docText(docs))) { (_, _, text) =>
+      val (cp0, cp1) = genCodepoints(text)
+      val n = (cp0 % 768 + 256) * 2
+      val rate = 8000 + (cp1 % 4) * 4000
+      val channels = cp1 % 2 + 1
+      val s0 = (cp0 * 7 + cp1 * 13) % 256
+      val samples = Array.tabulate(n)(i =>
+        (((s0 + 37L * i * i + 11L * i) % 4001) - 2000).toShort)
+      AudioCodec.encodeWav(rate, channels, samples)
+    }
 
   /** Decoded-clip metadata + the integer-exact signal features the
     * oracle replays: `sq_sum` (energy), `n_zc` (strict sign
@@ -641,24 +592,20 @@ object Multimodal {
       n_samples: Long, dur_ms: Long, sq_sum: Long, n_zc: Long,
       peak: Long)
 
-  /** Batch WAV decode + featurize: one partition-wise pass, the
-    * decoded sample buffer never leaves the task — only the witness
-    * columns travel. */
+  /** Batch WAV decode + featurize: one kernel pass, the decoded sample
+    * buffer never leaves the task — only the witness columns
+    * travel. */
   def decodeAudioAll(spark: SparkSession,
-      media: DataFrame): Dataset[AudioMeta] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.map { r =>
-        val a = AudioCodec.decodeWav(r.content)
-        AudioMeta(r.doc_id, a.sampleRate, a.channels,
-          a.samples.length.toLong,
-          (a.samples.length / a.channels) * 1000L / a.sampleRate,
-          AudioCodec.squareSum(a.samples),
-          AudioCodec.zeroCrossings(a.samples),
-          AudioCodec.peak(a.samples).toLong)
-      }
+      media: DataFrame): Dataset[AudioMeta] =
+    mapMedia(media) { (_, r) =>
+      val a = AudioCodec.decodeWav(r.content)
+      AudioMeta(r.doc_id, a.sampleRate, a.channels,
+        a.samples.length.toLong,
+        (a.samples.length / a.channels) * 1000L / a.sampleRate,
+        AudioCodec.squareSum(a.samples),
+        AudioCodec.zeroCrossings(a.samples),
+        AudioCodec.peak(a.samples).toLong)
     }
-  }
 
   /** One resampled clip: `n_in` input frames, `n_out` output samples
     * at the target rate, `r_sq_sum` the integer energy of the
@@ -673,27 +620,23 @@ object Multimodal {
     * n_out = frames·targetRate div rate (floor, so downsampling
     * never reads past the end), output j samples input frame
     * j·frames div n_out, channel-0 value = interleaved[frame·ch].
-    * Same partition-wise slot; buffers never leave the task. */
+    * Same kernel; buffers never leave the task. */
   def resampleAudioAll(spark: SparkSession, media: DataFrame,
-      targetRate: Int): Dataset[AudioResampled] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.map { r =>
-        val a = AudioCodec.decodeWav(r.content)
-        val frames = a.samples.length / a.channels
-        val nOut = (frames.toLong * targetRate / a.sampleRate).toInt
-        var sq = 0L
-        var j = 0
-        while (j < nOut) {
-          val src = (j.toLong * frames / nOut).toInt
-          val v = a.samples(src * a.channels).toLong
-          sq += v * v
-          j += 1
-        }
-        AudioResampled(r.doc_id, frames.toLong, nOut.toLong, sq)
+      targetRate: Int): Dataset[AudioResampled] =
+    mapMedia(media) { (_, r) =>
+      val a = AudioCodec.decodeWav(r.content)
+      val frames = a.samples.length / a.channels
+      val nOut = (frames.toLong * targetRate / a.sampleRate).toInt
+      var sq = 0L
+      var j = 0
+      while (j < nOut) {
+        val src = (j.toLong * frames / nOut).toInt
+        val v = a.samples(src * a.channels).toLong
+        sq += v * v
+        j += 1
       }
+      AudioResampled(r.doc_id, frames.toLong, nOut.toLong, sq)
     }
-  }
 
   /** One fixed-length analysis frame: `f_n` samples (the tail frame
     * may be short), `f_sq_sum` its energy. */
@@ -704,21 +647,17 @@ object Multimodal {
     * speech pipeline runs before VAD/segmentation: consecutive
     * `frameLen`-sample frames of the interleaved stream, each with
     * its integer energy. Decode and framing share the row (flatMap in
-    * the same partition-wise slot), so per-clip sample buffers never
-    * shuffle; output is the small (id, frame, n, energy) table. */
+    * the same kernel), so per-clip sample buffers never shuffle;
+    * output is the small (id, frame, n, energy) table. */
   def audioFramesAll(spark: SparkSession, media: DataFrame,
-      frameLen: Int = 256): Dataset[AudioFrame] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        val a = AudioCodec.decodeWav(r.content)
-        a.samples.grouped(frameLen).zipWithIndex.map { case (fr, idx) =>
-          AudioFrame(r.doc_id, idx.toLong, fr.length.toLong,
-            AudioCodec.squareSum(fr))
-        }
+      frameLen: Int = 256): Dataset[AudioFrame] =
+    flatMapMedia(media) { (_, r) =>
+      val a = AudioCodec.decodeWav(r.content)
+      a.samples.grouped(frameLen).zipWithIndex.map { case (fr, idx) =>
+        AudioFrame(r.doc_id, idx.toLong, fr.length.toLong,
+          AudioCodec.squareSum(fr))
       }
     }
-  }
 
   // ---- video: real Y4M payloads --------------------------------------
 
@@ -730,28 +669,19 @@ object Multimodal {
     * mod 256, encoded by [[VideoCodec.encodeY4m]].
     * [[videoFramesAll]] gets everything back by PARSING the
     * container (header tokens, FRAME markers, plane layout). */
-  def videoTable(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    StorageOps.fanOutForKernel(
-      docs.select(col("doc_id").cast("long"), col("text")))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val (cp0, cp1) = genCodepoints(text)
-          val w = (cp0 % 12) * 2 + 8
-          val h = (cp1 % 12) * 2 + 8
-          val nf = (cp0 + cp1) % 5 + 2
-          val (fn, fd) = if (cp0 % 2 == 0) (25, 1) else (30, 1)
-          val s0 = (cp0 * 7 + cp1 * 13) % 256
-          val sz = VideoCodec.frameSize(w, h)
-          val frames = (0 until nf).map(f =>
-            Array.tabulate(sz)(i =>
-              ((s0 + 11L * f + 31L * i) % 256).toByte))
-          (id, VideoCodec.encodeY4m(w, h, fn, fd, frames))
-        }
-      }
-      .toDF("doc_id", "content")
-  }
+  def videoTable(spark: SparkSession, docs: DataFrame): DataFrame =
+    encodeDocs(StorageOps.fanOutForKernel(docText(docs))) { (_, _, text) =>
+      val (cp0, cp1) = genCodepoints(text)
+      val w = (cp0 % 12) * 2 + 8
+      val h = (cp1 % 12) * 2 + 8
+      val nf = (cp0 + cp1) % 5 + 2
+      val (fn, fd) = if (cp0 % 2 == 0) (25, 1) else (30, 1)
+      val s0 = (cp0 * 7 + cp1 * 13) % 256
+      val sz = VideoCodec.frameSize(w, h)
+      val frames = (0 until nf).map(f =>
+        Array.tabulate(sz)(i => ((s0 + 11L * f + 31L * i) % 256).toByte))
+      VideoCodec.encodeY4m(w, h, fn, fd, frames)
+    }
 
   /** One decoded frame row: stream metadata + the integer plane
     * witnesses (`y_sum` luma, `c_sum` both chroma planes). */
@@ -759,27 +689,22 @@ object Multimodal {
       fps_num: Int, n_frames: Long, frame_idx: Long, y_sum: Long,
       c_sum: Long)
 
-  /** Batch Y4M decode + per-frame featurize: one partition-wise
-    * flatMap — frame buffers never leave the task, only the
-    * (frame, witness) rows travel. This is the video analogue of
-    * [[decodeAll]]: real container parsing feeding per-frame
-    * signals a curation pipeline thresholds (brightness, scene
-    * change, sampling). */
+  /** Batch Y4M decode + per-frame featurize: one kernel flatMap —
+    * frame buffers never leave the task, only the (frame, witness)
+    * rows travel. This is the video analogue of [[decodeAll]]: real
+    * container parsing feeding per-frame signals a curation pipeline
+    * thresholds (brightness, scene change, sampling). */
   def videoFramesAll(spark: SparkSession,
-      media: DataFrame): Dataset[VideoFrame] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        val v = VideoCodec.decodeY4m(r.content)
-        v.frames.iterator.zipWithIndex.map { case (f, idx) =>
-          VideoFrame(r.doc_id, v.width, v.height, v.fpsNum,
-            v.frames.length.toLong, idx.toLong,
-            VideoCodec.lumaSum(v.width, v.height, f),
-            VideoCodec.chromaSum(v.width, v.height, f))
-        }
+      media: DataFrame): Dataset[VideoFrame] =
+    flatMapMedia(media) { (_, r) =>
+      val v = VideoCodec.decodeY4m(r.content)
+      v.frames.iterator.zipWithIndex.map { case (f, idx) =>
+        VideoFrame(r.doc_id, v.width, v.height, v.fpsNum,
+          v.frames.length.toLong, idx.toLong,
+          VideoCodec.lumaSum(v.width, v.height, f),
+          VideoCodec.chromaSum(v.width, v.height, f))
       }
     }
-  }
 
   /** One clip's fingerprint: energy-delta bits as zero-padded hex,
     * the frame count, and the exact-match group size. */
@@ -790,30 +715,27 @@ object Multimodal {
     * primitive (the sign of successive frame-energy deltas survives
     * volume scaling and mild noise): decode → 64-sample frame
     * energies → bit j set iff e(j+1) > e(j) (strict, integer) →
-    * packed hex. One partition-wise pass; only (id, hex, counts)
-    * travel. Composes with exact-match grouping exactly like
-    * [[ahashTarAll]] + pipeline_media_dedup. */
+    * packed hex. One kernel pass; only (id, hex, counts) travel.
+    * Composes with exact-match grouping exactly like [[ahashTarAll]]
+    * + pipeline_media_dedup. */
   def audioFingerprintAll(spark: SparkSession, media: DataFrame,
       frameLen: Int = 64): Dataset[AudioFingerprint] = {
-    import spark.implicits._
     require(frameLen > 0, "frameLen must be positive")
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.map { r =>
-        val a = AudioCodec.decodeWav(r.content)
-        val energies = a.samples.grouped(frameLen)
-          .map(AudioCodec.squareSum).toArray
-        var fp = 0L
-        var j = 0
-        // the fingerprint holds 64 delta bits; JVM Long shifts wrap
-        // mod 64, so an uncapped loop would fold frame 64's bit onto
-        // frame 0's (and diverge from the oracle's shift semantics)
-        while (j + 1 < energies.length && j < 64) {
-          if (energies(j + 1) > energies(j)) fp |= 1L << j
-          j += 1
-        }
-        AudioFingerprint(r.doc_id, f"$fp%016x",
-          energies.length.toLong, java.lang.Long.bitCount(fp).toLong)
+    mapMedia(media) { (_, r) =>
+      val a = AudioCodec.decodeWav(r.content)
+      val energies = a.samples.grouped(frameLen)
+        .map(AudioCodec.squareSum).toArray
+      var fp = 0L
+      var j = 0
+      // the fingerprint holds 64 delta bits; JVM Long shifts wrap
+      // mod 64, so an uncapped loop would fold frame 64's bit onto
+      // frame 0's (and diverge from the oracle's shift semantics)
+      while (j + 1 < energies.length && j < 64) {
+        if (energies(j + 1) > energies(j)) fp |= 1L << j
+        j += 1
       }
+      AudioFingerprint(r.doc_id, f"$fp%016x",
+        energies.length.toLong, java.lang.Long.bitCount(fp).toLong)
     }
   }
 
@@ -830,35 +752,31 @@ object Multimodal {
     * two zero-padded 32-bit hex halves. Decode + hash share the row;
     * frame buffers never leave the task. */
   def videoFrameHashAll(spark: SparkSession,
-      media: DataFrame): Dataset[VideoFrameHash] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        val v = VideoCodec.decodeY4m(r.content)
-        v.frames.iterator.zipWithIndex.map { case (f, idx) =>
-          // 8x8 luma grid -> the SHARED aHash packing
-          // (ImageCodec.packGridHash), so image and video hashes can
-          // never drift apart
-          val grays = new Array[Long](64)
-          var y = 0
-          while (y < 8) {
-            val iy = (y.toLong * v.height / 8).toInt
-            var x = 0
-            while (x < 8) {
-              val ix = (x.toLong * v.width / 8).toInt
-              grays(y * 8 + x) = f(iy * v.width + ix) & 0xff
-              x += 1
-            }
-            y += 1
+      media: DataFrame): Dataset[VideoFrameHash] =
+    flatMapMedia(media) { (_, r) =>
+      val v = VideoCodec.decodeY4m(r.content)
+      v.frames.iterator.zipWithIndex.map { case (f, idx) =>
+        // 8x8 luma grid -> the SHARED aHash packing
+        // (ImageCodec.packGridHash), so image and video hashes can
+        // never drift apart
+        val grays = new Array[Long](64)
+        var y = 0
+        while (y < 8) {
+          val iy = (y.toLong * v.height / 8).toInt
+          var x = 0
+          while (x < 8) {
+            val ix = (x.toLong * v.width / 8).toInt
+            grays(y * 8 + x) = f(iy * v.width + ix) & 0xff
+            x += 1
           }
-          val hex = ImageCodec.packGridHash(grays)
-          VideoFrameHash(r.doc_id, idx.toLong, hex,
-            java.lang.Long.bitCount(
-              java.lang.Long.parseUnsignedLong(hex, 16)).toLong)
+          y += 1
         }
+        val hex = ImageCodec.packGridHash(grays)
+        VideoFrameHash(r.doc_id, idx.toLong, hex,
+          java.lang.Long.bitCount(
+            java.lang.Long.parseUnsignedLong(hex, 16)).toLong)
       }
     }
-  }
 
   /** Deterministic frame-offset sampling for a "video" payload: every
     * `stride`-th byte offset, capped at `maxFrames` — pure column math,
@@ -878,25 +796,20 @@ object Multimodal {
   case class MediaAhash(doc_id: Long, ahash: String, n_bright: Long)
 
   /** Batch average-hash: decode + 8×8 grid sample + integer
-    * mean-threshold per payload, one partition-wise pass (the decoded
-    * pixel buffer never leaves the task — only 16 hex chars travel).
-    * This is the REAL-pixel upgrade of [[phashBytes]] (which hashes
-    * raw payload bytes and stays the payload-AGNOSTIC tool for
-    * arbitrary media): identical images collide exactly, and small
-    * pixel edits flip few grid cells, so [[graft.ops.DedupOps
+    * mean-threshold per payload, one kernel pass (the decoded pixel
+    * buffer never leaves the task — only 16 hex chars travel). This
+    * is the REAL-pixel upgrade of [[phashBytes]] (which hashes raw
+    * payload bytes and stays the payload-AGNOSTIC tool for arbitrary
+    * media): identical images collide exactly, and small pixel edits
+    * flip few grid cells, so [[graft.ops.DedupOps
     * .hammingNearDupSummary]] composes on the hex-decoded bits. */
   def averageHashAll(spark: SparkSession,
-      media: DataFrame): Dataset[MediaAhash] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.map { r =>
-        val h = ImageCodec.averageHash(ImageCodec.decode(r.content))
-        val bits = java.lang.Long.bitCount(
-          java.lang.Long.parseUnsignedLong(h, 16))
-        MediaAhash(r.doc_id, h, bits.toLong)
-      }
+      media: DataFrame): Dataset[MediaAhash] =
+    mapMedia(media) { (_, r) =>
+      val h = ImageCodec.averageHash(ImageCodec.decode(r.content))
+      MediaAhash(r.doc_id, h, java.lang.Long.bitCount(
+        java.lang.Long.parseUnsignedLong(h, 16)).toLong)
     }
-  }
 
   /** Near-dup summary over REAL decoded pixels: one decode+aHash pass
     * ([[averageHashAll]]'s kernel), then the shared 4×16-bit banded
@@ -910,12 +823,9 @@ object Multimodal {
     * never reach an Exchange. */
   def ahashDupSummary(spark: SparkSession, media: DataFrame,
       maxHamming: Int = 3, maxBucket: Int = 1000): DataFrame = {
-    import spark.implicits._
-    val withH = media.as[MediaRow].mapPartitions { rows =>
-      rows.map { r =>
-        val hx = ImageCodec.averageHash(ImageCodec.decode(r.content))
-        (r.doc_id, hx, java.lang.Long.parseUnsignedLong(hx, 16))
-      }
+    val withH = mapMedia(media) { (_, r) =>
+      val hx = ImageCodec.averageHash(ImageCodec.decode(r.content))
+      (r.doc_id, hx, java.lang.Long.parseUnsignedLong(hx, 16))
     }.toDF("doc_id", "ahash", "h64").localCheckpoint(true)
     DedupOps.hammingNearDupSummary(
         withH.select(col("doc_id"), col("h64")),
@@ -928,6 +838,7 @@ object Multimodal {
       .select(col("doc_id"), col("ahash"), col("n_near"))
   }
 
+
   /** Resized metadata: the aspect-preserving fit of decoded dimensions
     * into a `maxSide` bounding box, plus the resized pixel witness
     * (`px_sum` = unsigned byte sum of the RESAMPLED RGB plane). */
@@ -937,29 +848,25 @@ object Multimodal {
   /** REAL thumbnail pass: decode ([[ImageCodec.decode]]) + aspect-
     * preserving nearest-neighbor resample
     * ([[ImageCodec.resizeNearest]]) of the actual pixels, in one
-    * partition-wise batch (decode and resize share the row, so the
+    * kernel pass (decode and resize share the row, so the
     * full-size pixel buffer never leaves the task). Deterministic and
     * oracle-checked down to the resampled bytes: out dims =
     * max(1, round(dim · maxSide/longest)) never upscaled, sampling
     * grid by integer division, `px_sum` over the output plane. */
   def resizeAll(spark: SparkSession, media: DataFrame,
-      maxSide: Int): Dataset[ResizedMeta] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.map { r =>
-        val img = ImageCodec.decode(r.content)
-        val out = ImageCodec.resizeNearest(img, maxSide)
-        ResizedMeta(r.doc_id, img.width, img.height,
-          out.width, out.height, ImageCodec.pixelSum(out.rgb))
-      }
+      maxSide: Int): Dataset[ResizedMeta] =
+    mapMedia(media) { (_, r) =>
+      val img = ImageCodec.decode(r.content)
+      val out = ImageCodec.resizeNearest(img, maxSide)
+      ResizedMeta(r.doc_id, img.width, img.height,
+        out.width, out.height, ImageCodec.pixelSum(out.rgb))
     }
-  }
 
   /** STUB feature extractor — stands in for an image/audio embedding
     * model: a deterministic `dim`-float signature derived from payload
     * bytes (FNV-hash per lane, normalized to unit length so downstream
     * cosine ANN composes). Real deployments swap the body for an ONNX/
-    * JNI model call; the per-partition batch shape (amortized model
+    * JNI model call; the kernel's per-partition shape (amortized model
     * load), the output schema (array<float>), and the unit-norm
     * contract survive unchanged. */
   case class MediaFeatures(doc_id: Long, feature: Array[Float])
@@ -975,15 +882,11 @@ object Multimodal {
     * flips few sampled pixels, so near-identical images land within a
     * small Hamming distance — the property the banded blocking in
     * [[phashDupSummary]] exploits. A real deployment swaps the pixel
-    * source for a codec call inside the same partition-wise batch;
+    * source for a codec call inside the same kernel;
     * the packing, banding, and verification are unchanged. */
   def perceptualHashAll(spark: SparkSession,
-      media: DataFrame): Dataset[MediaHash] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.map(r => MediaHash(r.doc_id, phashBytes(r.content)))
-    }
-  }
+      media: DataFrame): Dataset[MediaHash] =
+    mapMedia(media)((_, r) => MediaHash(r.doc_id, phashBytes(r.content)))
 
   /** The stub average-hash kernel on one payload, applied row by row
     * in [[perceptualHashAll]]. */
@@ -1031,23 +934,18 @@ object Multimodal {
   }
 
   def featureExtractAll(spark: SparkSession, media: DataFrame,
-      dim: Int = 16): Dataset[MediaFeatures] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      // per-partition model load would happen here, once
-      rows.map { r =>
-        val v = new Array[Float](dim)
-        var lane = 0
-        while (lane < dim) {
-          v(lane) = (graft.functions.Hash64.hashBytes(r.content, lane + 1L)
-            .toDouble / Long.MaxValue.toDouble).toFloat
-          lane += 1
-        }
-        val norm = math.sqrt(v.map(x => x.toDouble * x).sum)
-        val unit =
-          if (norm == 0.0) v else v.map(x => (x / norm).toFloat)
-        MediaFeatures(r.doc_id, unit)
+      dim: Int = 16): Dataset[MediaFeatures] =
+    mapMedia(media) { (_, r) =>
+      val v = new Array[Float](dim)
+      var lane = 0
+      while (lane < dim) {
+        v(lane) = (graft.functions.Hash64.hashBytes(r.content, lane + 1L)
+          .toDouble / Long.MaxValue.toDouble).toFloat
+        lane += 1
       }
+      val norm = math.sqrt(v.map(x => x.toDouble * x).sum)
+      val unit =
+        if (norm == 0.0) v else v.map(x => (x / norm).toFloat)
+      MediaFeatures(r.doc_id, unit)
     }
-  }
 }

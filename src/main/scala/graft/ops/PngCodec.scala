@@ -19,9 +19,9 @@ import java.util.zip.{CRC32, Deflater, Inflater}
   * reconstruction arithmetic, including Paeth's three-way predictor.
   *
   * Scale note: like the other codecs this is row-local, map-shaped
-  * work that lives inside the same `mapPartitions` slot — compressed
-  * payload bytes and decoded pixel buffers never leave the task; only
-  * metadata / witness columns travel. Nothing about the Spark plan
+  * work that runs inside the codec kernel ([[Multimodal.kernel]]) —
+  * compressed payload bytes and decoded pixel buffers never leave the
+  * task; only metadata / witness columns travel. Nothing about the Spark plan
   * changes at 100 TB.
   *
   * Beyond-reference surface: the reference engine has no binary type

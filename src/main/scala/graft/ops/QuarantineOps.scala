@@ -1,9 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-
-import graft.ops.Multimodal.MediaRow
 
 /** Corrupt-payload QUARANTINE lane — the production counterpart of the
   * codec family's fail-loud contract. Every codec in this library
@@ -28,12 +25,12 @@ import graft.ops.Multimodal.MediaRow
   * therefore the classes.
   *
   * Scale shape: identical to the codecs themselves — row-local,
-  * map-shaped `mapPartitions` work; a quarantined row costs one
-  * exception unwind instead of a task failure + stage retry + job
-  * abort. Payload bytes never leave the task either way; only witness
-  * or (doc_id, error_class) columns travel. The quarantined table is
-  * as partitioned as the corpus — there is no skew trap because the
-  * lane adds no shuffle at all.
+  * map-shaped work in the one [[Multimodal.kernel]]; a quarantined
+  * row costs one exception unwind instead of a task failure + stage
+  * retry + job abort. Payload bytes never leave the task either way;
+  * only witness or (doc_id, error_class) columns travel. The
+  * quarantined table is as partitioned as the corpus — there is no
+  * skew trap because the lane adds no shuffle at all.
   *
   * Beyond-reference surface: the reference engine panics on malformed
   * input at best (SURVEY §2.6; reference src/datasources/mod.rs:281 is
@@ -77,33 +74,27 @@ object QuarantineOps {
       error_class: Option[String], width: Option[Int],
       height: Option[Int], format: Option[String], px_sum: Option[Long])
 
-  /** The quarantine-lane image decode: the same partition-wise pass
-    * as [[Multimodal.decodeAll]] (shared magic sniffer, one native
-    * Inflater per partition for the PNG arm), but corruption yields a
+  /** The quarantine-lane image decode: the same kernel pass as
+    * [[Multimodal.decodeAll]] (shared magic sniffer, the task's zlib
+    * Inflater for the PNG arm), but corruption yields a
     * quarantined ROW instead of a dead STAGE. Good rows carry exactly
     * the witnesses the fail-loud path produces. */
   def tryDecodeImageAll(spark: SparkSession,
-      media: DataFrame): Dataset[TriedImage] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      val infl = new java.util.zip.Inflater(false)
-      Multimodal.endOnTaskCompletion(() => infl.end())
-      rows.map { r =>
-        attempt(ImageCodec.decode(r.content, infl)) match {
-          case Right(img) =>
-            TriedImage(r.doc_id, "ok", None, Some(img.width),
-              Some(img.height), Some(img.format),
-              Some(ImageCodec.pixelSum(img.rgb)))
-          case Left(cls) =>
-            TriedImage(r.doc_id, "quarantined", Some(cls), None, None,
-              None, None)
-        }
+      media: DataFrame): Dataset[TriedImage] =
+    Multimodal.mapMedia(media) { (c, r) =>
+      attempt(ImageCodec.decode(r.content, c.zlibInflater)) match {
+        case Right(img) =>
+          TriedImage(r.doc_id, "ok", None, Some(img.width),
+            Some(img.height), Some(img.format),
+            Some(ImageCodec.pixelSum(img.rgb)))
+        case Left(cls) =>
+          TriedImage(r.doc_id, "quarantined", Some(cls), None, None,
+            None, None)
       }
     }
-  }
 
   /** The PLANTED-corruption image corpus the quarantine oracle runs
-    * over: the clean [[Multimodal.mixedImageTable]] payload (PPM /
+    * over: the clean [[Multimodal.mixedPicture]] payload (PPM /
     * BMP / PNG by cp0 mod 3) for most docs, with one corruption class
     * planted per `doc_id mod 8` — each chosen so the decoder's OWN
     * diagnosis is deterministic:
@@ -123,50 +114,63 @@ object QuarantineOps {
     * The planting rules are pure arithmetic on (doc_id, text), so the
     * DuckDB oracle replays status + class + clean-row witnesses
     * without ever seeing a payload byte. */
-  def corruptImageTable(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    StorageOps.fanOutForKernel(
-      docs.select(col("doc_id").cast("long"), col("text")))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        val defl = new java.util.zip.Deflater(
-          java.util.zip.Deflater.BEST_SPEED, false)
-        Multimodal.endOnTaskCompletion(() => defl.end())
-        rows.map { case (id, text) =>
-          val (cp0, w, h, rgb) = Multimodal.genImage(text)
-          def clean: Array[Byte] = cp0 % 3 match {
-            case 0 => ImageCodec.encodePpm(w, h, rgb)
-            case 1 => ImageCodec.encodeBmp(w, h, rgb)
-            case _ => PngCodec.encodeWith(w, h, rgb, defl)
-          }
-          val bytes = (id % 8) match {
-            case 0 =>
-              val b = clean
-              b(0) = 'Z'.toByte; b(1) = 'Z'.toByte; b
-            case 1 =>
-              "P6\n16777216 16777216\n255\nxx".getBytes(
-                java.nio.charset.StandardCharsets.US_ASCII)
-            case 2 =>
-              val b = ImageCodec.encodePpm(w, h, rgb)
-              java.util.Arrays.copyOf(b, b.length - 1)
-            case 3 =>
-              val b = PngCodec.encodeWith(w, h, rgb, defl)
-              // last 12 bytes are IEND; byte -13 is the final byte of
-              // the IDAT chunk's stored CRC-32
-              b(b.length - 13) = (b(b.length - 13) ^ 0x01).toByte; b
-            case 4 =>
-              val (_, bw, bh, blocks) = Multimodal.genBlockImage(text)
-              val b = JpegCodec.encodeGrayBlocks(bw, bh, blocks)
-              // drop EOI + two entropy bytes: always inside the scan
-              // (the smallest constant-block file still carries >= 7
-              // entropy bytes), never into the SOS header — so the
-              // diagnosis is deterministically `truncated`
-              java.util.Arrays.copyOf(b, b.length - 4)
-            case _ => clean
-          }
-          (id, bytes)
-        }
+  def corruptImageTable(spark: SparkSession, docs: DataFrame): DataFrame =
+    Multimodal.encodeDocs(StorageOps.fanOutForKernel(
+        Multimodal.docText(docs))) { (c, id, text) =>
+      (id % 8) match {
+        case 0 =>
+          val b = Multimodal.mixedPicture(c, text)
+          b(0) = 'Z'.toByte; b(1) = 'Z'.toByte; b
+        case 1 =>
+          "P6\n16777216 16777216\n255\nxx".getBytes(
+            java.nio.charset.StandardCharsets.US_ASCII)
+        case 2 =>
+          val (_, w, h, rgb) = Multimodal.genImage(text)
+          val b = ImageCodec.encodePpm(w, h, rgb)
+          java.util.Arrays.copyOf(b, b.length - 1)
+        case 3 =>
+          val (_, w, h, rgb) = Multimodal.genImage(text)
+          val b = PngCodec.encodeWith(w, h, rgb, c.zlibDeflater)
+          // last 12 bytes are IEND; byte -13 is the final byte of
+          // the IDAT chunk's stored CRC-32
+          b(b.length - 13) = (b(b.length - 13) ^ 0x01).toByte; b
+        case 4 =>
+          val (_, bw, bh, blocks) = Multimodal.genBlockImage(text)
+          val b = JpegCodec.encodeGrayBlocks(bw, bh, blocks)
+          // drop EOI + two entropy bytes: always inside the scan
+          // (the smallest constant-block file still carries >= 7
+          // entropy bytes), never into the SOS header — so the
+          // diagnosis is deterministically `truncated`
+          java.util.Arrays.copyOf(b, b.length - 4)
+        case _ => Multimodal.mixedPicture(c, text)
       }
-      .toDF("doc_id", "content")
-  }
+    }
+
+  /** The crawl payload mix the ingest loop's quarantine lane reads:
+    * every third doc's UTF-8 text as one checksummed zstd frame, the
+    * rest as one gzip member — the loop's decode stage dispatches per
+    * row by magic. Corruption is planted per doc_id and is
+    * codec-agnostic: `doc_id % 10 == 2` overwrites the magic
+    * (`bad_magic` either way), `doc_id % 10 == 7` flips a bit of the
+    * final byte, which lands in the gzip ISIZE trailer or the zstd
+    * frame checksum (`integrity` by both decoders' own diagnosis).
+    * Not fanned out (measured r14): the ingest loop's ~80 per-batch
+    * jobs inherit this table's partitioning, and 32-way batches turn
+    * every tiny per-batch stage into 32 tasks — wall went 4.1 s ->
+    * 5.4 s when the projection was fanned out. */
+  def corruptPayloadTable(spark: SparkSession, docs: DataFrame): DataFrame =
+    Multimodal.encodeDocs(Multimodal.docText(docs)) { (c, id, text) =>
+      val raw = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val b =
+        if (id % 3 == 0) c.zstdCompress.compress(raw)
+        else {
+          val out = new java.io.ByteArrayOutputStream()
+          CompressedOps.gzipMember(raw, c.rawDeflater, c.crc, out)
+          out.toByteArray
+        }
+      if (id % 10 == 2) { b(0) = 'Z'.toByte; b(1) = 'Z'.toByte }
+      else if (id % 10 == 7)
+        b(b.length - 1) = (b(b.length - 1) ^ 0x10).toByte
+      b
+    }
 }

@@ -14,8 +14,8 @@ package graft.ops
   * and names are untrusted input.
   *
   * Scale note: shard decode is row-local, map-shaped work in the same
-  * `mapPartitions` slot as the media codecs; member bytes never leave
-  * the task — only witness columns travel.
+  * kernel as the media codecs ([[Multimodal.kernel]]); member bytes
+  * never leave the task — only witness columns travel.
   *
   * Beyond-reference surface: the reference engine has no binary type
   * at all (SURVEY §1.2; reference src/datatypes/mod.rs:14-22).

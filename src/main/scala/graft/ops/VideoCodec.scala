@@ -16,8 +16,9 @@ package graft.ops
   * them from the deterministic frame generator.
   *
   * Scale note: decode + per-frame featurize is row-local, map-shaped
-  * work in the same `mapPartitions` slot as the other codecs; frame
-  * buffers never leave the task — only (frame, witness) rows travel.
+  * work in the same kernel as the other codecs
+  * ([[Multimodal.kernel]]); frame buffers never leave the task — only
+  * (frame, witness) rows travel.
   *
   * Beyond-reference surface: the reference engine has no binary type
   * at all (SURVEY §1.2; reference src/datatypes/mod.rs:14-22).

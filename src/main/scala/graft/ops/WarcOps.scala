@@ -1,12 +1,10 @@
 package graft.ops
 
 import java.nio.charset.StandardCharsets.{US_ASCII, UTF_8}
-import java.util.zip.{CRC32, Deflater, Inflater}
+import java.util.zip.Inflater
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-
-import graft.ops.Multimodal.MediaRow
 
 /** WARC ingestion — the container Common Crawl (the canonical public
   * LLM corpus) actually ships: `.warc.gz` files where each WARC/1.1
@@ -35,7 +33,7 @@ import graft.ops.Multimodal.MediaRow
   * not just skipped over.
   *
   * Scale shape: identical to the other codecs — row-local, map-shaped
-  * `mapPartitions` work with ONE native Inflater per partition;
+  * work in [[Multimodal.kernel]] with the task's ONE native Inflater;
   * payloads and record blocks never leave the task, only witness
   * columns travel. At a real 100 TB crawl the unit of work is one
   * WARC file per task (the scan splits on files), which is exactly
@@ -85,46 +83,31 @@ object WarcOps {
     * `emit(recordBytes, flipCrc)` compresses the record as its own
     * gzip member; `flipCrc` flips the stored CRC-32's low bit (the
     * planted-integrity-corruption hook — framing stays intact, the
-    * trailer lies). One Deflater per partition. */
+    * trailer lies). */
   private def buildWarcFiles(spark: SparkSession, docs: DataFrame,
       docsPerFile: Int)(
       render: (Long, String, (Array[Byte], Boolean) => Unit) => Unit)
-      : DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id").cast("long"), col("text"))
-      .withColumn("file_id",
-        DedupOps.idiv(col("doc_id"), lit(docsPerFile.toLong)))
-      .groupBy(col("file_id"))
-      .agg(sort_array(collect_list(struct(col("doc_id").as("_1"),
-        col("text").as("_2")))).as("members"))
-      .select(col("file_id").as("_1"), col("members").as("_2"))
-      .as[(Long, Seq[(Long, String)])]
-      .mapPartitions { rows =>
-        val defl = new Deflater(Deflater.BEST_SPEED, true)
-        Multimodal.endOnTaskCompletion(() => defl.end())
-        val crc = new CRC32()
-        rows.map { case (fid, members) =>
-          val out = new java.io.ByteArrayOutputStream(
-            members.map(_._2.length).sum / 2 + 1024)
-          def emit(rec: Array[Byte], flipCrc: Boolean): Unit =
-            if (!flipCrc) CompressedOps.gzipMember(rec, defl, crc, out)
-            else {
-              val one = new java.io.ByteArrayOutputStream(
-                rec.length / 2 + 64)
-              CompressedOps.gzipMember(rec, defl, crc, one)
-              val b = one.toByteArray
-              b(b.length - 8) = (b(b.length - 8) ^ 0x01).toByte
-              out.write(b, 0, b.length)
-            }
-          emit(record("warcinfo", Seq(
-            "WARC-Record-ID" -> s"<urn:uuid:file-$fid>",
-            "WARC-Date" -> WarcDate), InfoBlock), false)
-          members.foreach { case (id, text) => render(id, text, emit) }
-          (fid, out.toByteArray)
+      : DataFrame =
+    Multimodal.kernel(Multimodal.groupMembers(Multimodal.docText(docs),
+        DedupOps.idiv(col("doc_id"), lit(docsPerFile.toLong)),
+        col("doc_id"), col("text"))) { case (c, (fid, members)) =>
+      val out = new java.io.ByteArrayOutputStream(
+        members.map(_._2.length).sum / 2 + 1024)
+      def emit(rec: Array[Byte], flipCrc: Boolean): Unit =
+        if (!flipCrc) CompressedOps.gzipMember(rec, c.rawDeflater, c.crc, out)
+        else {
+          val one = new java.io.ByteArrayOutputStream(rec.length / 2 + 64)
+          CompressedOps.gzipMember(rec, c.rawDeflater, c.crc, one)
+          val b = one.toByteArray
+          b(b.length - 8) = (b(b.length - 8) ^ 0x01).toByte
+          out.write(b, 0, b.length)
         }
-      }
-      .toDF("file_id", "content")
-  }
+      emit(record("warcinfo", Seq(
+        "WARC-Record-ID" -> s"<urn:uuid:file-$fid>",
+        "WARC-Date" -> WarcDate), InfoBlock), false)
+      members.foreach { case (id, text) => render(id, text, emit) }
+      Iterator.single((fid, out.toByteArray))
+    }.toDF("file_id", "content")
 
   /** Serialize one WARC/1.1 record: version line, headers (with
     * Content-Length appended), blank line, block, two CRLFs. */
@@ -167,37 +150,23 @@ object WarcOps {
     * UTF-8 text; every field is deterministic (no timestamps — the
     * WARC-Date is a fixed epoch and the record id derives from
     * doc_id), so the DuckDB oracle replays all witnesses from the
-    * original row. One Deflater per partition. */
-  def warcTable(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    StorageOps.fanOutForKernel(
-      docs.select(col("doc_id").cast("long"), col("text")))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        val defl = new Deflater(Deflater.BEST_SPEED, true)
-        Multimodal.endOnTaskCompletion(() => defl.end())
-        val crc = new CRC32()
-        rows.map { case (id, text) =>
-          val uri = s"https://example.com/doc/$id"
-          val date = "2020-01-01T00:00:00Z"
-          def common(n: Int) = Seq(
-            "WARC-Record-ID" -> s"<urn:uuid:0000-$id-$n>",
-            "WARC-Date" -> date)
-          val info = record("warcinfo", common(0), InfoBlock)
-          val req = record("request",
-            common(1) :+ ("WARC-Target-URI" -> uri), requestBlock(id))
-          val resp = record("response",
-            common(2) :+ ("WARC-Target-URI" -> uri),
-            text.getBytes(UTF_8))
-          val out = new java.io.ByteArrayOutputStream(
-            resp.length / 2 + 256)
-          CompressedOps.gzipMember(info, defl, crc, out)
-          CompressedOps.gzipMember(req, defl, crc, out)
-          CompressedOps.gzipMember(resp, defl, crc, out)
-          (id, out.toByteArray)
-        }
-      }
-      .toDF("doc_id", "content")
+    * original row. */
+  def warcTable(spark: SparkSession, docs: DataFrame): DataFrame =
+    Multimodal.encodeDocs(StorageOps.fanOutForKernel(
+        Multimodal.docText(docs)))(
+      (c, id, text) => docWarc(c, id, text.getBytes(UTF_8)))
+
+  /** One doc's `.warc.gz` file: its warcinfo, request and response
+    * records, each compressed as its own gzip member with the task's
+    * raw Deflater. */
+  private def docWarc(c: Multimodal.Codecs, id: Long,
+      respBlock: Array[Byte]): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream(respBlock.length / 2 + 512)
+    Seq(record("warcinfo", pairHeaders(id, 0).take(2), InfoBlock),
+      record("request", pairHeaders(id, 1), requestBlock(id)),
+      record("response", pairHeaders(id, 2), respBlock))
+      .foreach(CompressedOps.gzipMember(_, c.rawDeflater, c.crc, out))
+    out.toByteArray
   }
 
   /** One parsed record: type, headers, block bytes. */
@@ -366,65 +335,52 @@ object WarcOps {
     * CERTIFICATION reader; [[tryReadWarcFiles]] is the production
     * quarantine lane). */
   def readWarcFilesAll(spark: SparkSession, media: DataFrame,
-      memberCap: Int = 1 << 26): Dataset[WarcCapture] = {
-    import spark.implicits._
-    media.select(col("file_id").cast("long").as("doc_id"),
-      col("content")).as[MediaRow].mapPartitions { rows =>
-      val infl = new Inflater(true)
-      Multimodal.endOnTaskCompletion(() => infl.end())
-      val md = java.security.MessageDigest.getInstance("MD5")
-      rows.flatMap { r =>
-        // a zero-byte file is data loss, not an empty capture set —
-        // the certification reader keeps the old gunzip fail-loud
-        // posture the streaming walk would otherwise skip past
-        require(r.content.nonEmpty, s"WARC: file ${r.doc_id} is empty")
-        val out = scala.collection.mutable.ArrayBuffer
-          .empty[(Long, Long, String)] // (doc_id, resp_len, resp_md5)
-        var n = 0L
-        var pendingReq: Option[WarcRecord] = None
-        walkRecordMembers(r.content, infl, memberCap).foreach { step =>
-          val rec = step.result match {
-            case Right(rc) => rc
-            case Left(e) => throw e // fail-loud reader
-          }
-          if (step.idx == 0) {
-            require(rec.warcType == "warcinfo",
-              s"WARC: file ${r.doc_id} does not start with a " +
-                "warcinfo record")
-          } else rec.warcType match {
-            case "request" =>
-              require(pendingReq.isEmpty,
-                s"WARC: file ${r.doc_id} breaks the request/response " +
-                  "pair discipline")
-              pendingReq = Some(rec)
-            case "response" =>
-              val req = pendingReq.getOrElse(
-                throw new IllegalArgumentException(
-                  s"WARC: file ${r.doc_id} breaks the " +
-                    "request/response pair discipline"))
-              pendingReq = None
-              val id = docIdFromUri(rec)
-              require(req.headers.get("WARC-Target-URI")
-                  .contains(s"$UriPrefix$id"),
-                s"WARC: request/response URI mismatch in file " +
-                  s"${r.doc_id}")
-              md.reset()
-              val hex = md.digest(rec.block).map("%02x".format(_))
-                .mkString
-              out += ((id, rec.block.length.toLong, hex))
-            case t => throw new IllegalArgumentException(
-              s"WARC: unexpected $t record in file ${r.doc_id}")
-          }
-          n += 1
+      memberCap: Int = 1 << 26): Dataset[WarcCapture] =
+    Multimodal.flatMapMedia(files(media)) { (c, r) =>
+      // a zero-byte file is data loss, not an empty capture set —
+      // the certification reader keeps the old gunzip fail-loud
+      // posture the streaming walk would otherwise skip past
+      require(r.content.nonEmpty, s"WARC: file ${r.doc_id} is empty")
+      val out = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Long, String)] // (doc_id, resp_len, resp_md5)
+      var n = 0L
+      var pendingReq: Option[WarcRecord] = None
+      walkRecordMembers(r.content, c.rawInflater, memberCap)
+        .foreach { step =>
+        val rec = step.result.toTry.get // fail-loud reader
+        if (step.idx == 0) {
+          require(rec.warcType == "warcinfo",
+            s"WARC: file ${r.doc_id} does not start with a " +
+              "warcinfo record")
+        } else rec.warcType match {
+          case "request" =>
+            require(pendingReq.isEmpty,
+              s"WARC: file ${r.doc_id} breaks the request/response " +
+                "pair discipline")
+            pendingReq = Some(rec)
+          case "response" =>
+            val req = pendingReq.getOrElse(
+              throw new IllegalArgumentException(
+                s"WARC: file ${r.doc_id} breaks the " +
+                  "request/response pair discipline"))
+            pendingReq = None
+            val id = docIdFromUri(rec)
+            require(req.headers.get("WARC-Target-URI")
+                .contains(s"$UriPrefix$id"),
+              s"WARC: request/response URI mismatch in file " +
+                s"${r.doc_id}")
+            out += ((id, rec.block.length.toLong, c.md5Hex(rec.block)))
+          case t => throw new IllegalArgumentException(
+            s"WARC: unexpected $t record in file ${r.doc_id}")
         }
-        require(pendingReq.isEmpty,
-          s"WARC: file ${r.doc_id} ends with an unpaired request")
-        out.iterator.map { case (id, len, hex) =>
-          WarcCapture(id, r.doc_id, n, len, hex)
-        }
+        n += 1
+      }
+      require(pendingReq.isEmpty,
+        s"WARC: file ${r.doc_id} ends with an unpaired request")
+      out.iterator.map { case (id, len, hex) =>
+        WarcCapture(id, r.doc_id, n, len, hex)
       }
     }
-  }
 
   /** One member's outcome under the quarantine contract: `ok` rows are
     * response captures with their byte-exact witnesses; `quarantined`
@@ -447,43 +403,33 @@ object WarcOps {
     * Zero added shuffle — the same map-shaped slot as the fail-loud
     * reader. */
   def tryReadWarcFiles(spark: SparkSession, media: DataFrame,
-      memberCap: Int = 1 << 26): Dataset[TriedCapture] = {
-    import spark.implicits._
-    media.select(col("file_id").cast("long").as("doc_id"),
-      col("content")).as[MediaRow].mapPartitions { rows =>
-      val infl = new Inflater(true)
-      Multimodal.endOnTaskCompletion(() => infl.end())
-      val md = java.security.MessageDigest.getInstance("MD5")
-      rows.flatMap { r =>
-        // a zero-byte file quarantines as ONE row — the production
-        // lane's analogue of the certification reader's fail-loud
-        if (r.content.isEmpty)
-          Iterator.single(TriedCapture(r.doc_id, 0, "quarantined",
-            Some("truncated"), None, None, None))
-        else walkRecordMembers(r.content, infl, memberCap)
-          .flatMap { step =>
-          step.result match {
-            case Left(e) =>
-              Some(TriedCapture(r.doc_id, step.idx, "quarantined",
-                Some(QuarantineOps.classify(e)), None, None, None))
-            case Right(rec) if rec.warcType == "response" =>
-              QuarantineOps.attempt(docIdFromUri(rec)) match {
-                case Right(id) =>
-                  md.reset()
-                  val hex = md.digest(rec.block).map("%02x".format(_))
-                    .mkString
-                  Some(TriedCapture(r.doc_id, step.idx, "ok", None,
-                    Some(id), Some(rec.block.length.toLong), Some(hex)))
-                case Left(cls) =>
-                  Some(TriedCapture(r.doc_id, step.idx, "quarantined",
-                    Some(cls), None, None, None))
-              }
-            case Right(_) => None // intact warcinfo / request
-          }
+      memberCap: Int = 1 << 26): Dataset[TriedCapture] =
+    Multimodal.flatMapMedia(files(media)) { (c, r) =>
+      // a zero-byte file quarantines as ONE row — the production
+      // lane's analogue of the certification reader's fail-loud
+      if (r.content.isEmpty)
+        Iterator.single(TriedCapture(r.doc_id, 0, "quarantined",
+          Some("truncated"), None, None, None))
+      else walkRecordMembers(r.content, c.rawInflater, memberCap)
+        .flatMap { step =>
+        step.result match {
+          case Left(e) =>
+            Some(TriedCapture(r.doc_id, step.idx, "quarantined",
+              Some(QuarantineOps.classify(e)), None, None, None))
+          case Right(rec) if rec.warcType == "response" =>
+            QuarantineOps.attempt(docIdFromUri(rec)) match {
+              case Right(id) =>
+                Some(TriedCapture(r.doc_id, step.idx, "ok", None,
+                  Some(id), Some(rec.block.length.toLong),
+                  Some(c.md5Hex(rec.block))))
+              case Left(cls) =>
+                Some(TriedCapture(r.doc_id, step.idx, "quarantined",
+                  Some(cls), None, None, None))
+            }
+          case Right(_) => None // intact warcinfo / request
         }
       }
     }
-  }
 
   /** The PLANTED-corruption multi-document corpus the member-granular
     * quarantine oracle runs over: [[warcFileTable]]'s exact layout,
@@ -523,43 +469,13 @@ object WarcOps {
     * Content-Length; `doc_id % 10 == 9` captures are 404s (status
     * dispatch is part of the contract); every body is the doc's UTF-8
     * text and every header is replayable arithmetic. */
-  def warcHttpTable(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    StorageOps.fanOutForKernel(
-      docs.select(col("doc_id").cast("long"), col("text")))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        val defl = new Deflater(Deflater.BEST_SPEED, true)
-        Multimodal.endOnTaskCompletion(() => defl.end())
-        val crc = new CRC32()
-        rows.map { case (id, text) =>
-          val uri = s"https://example.com/doc/$id"
-          val date = "2020-01-01T00:00:00Z"
-          def common(n: Int) = Seq(
-            "WARC-Record-ID" -> s"<urn:uuid:0000-$id-$n>",
-            "WARC-Date" -> date)
-          val (status, reason) =
-            if (id % 10 == 9) (404, "Not Found") else (200, "OK")
-          val http = HttpOps.encodeResponse(status, reason, Seq(
-            "Content-Type" -> "text/html; charset=utf-8",
-            "X-Doc" -> id.toString),
-            text.getBytes(UTF_8),
-            chunkSize = if (id % 2 == 0) 100 else 0)
-          val info = record("warcinfo", common(0), InfoBlock)
-          val req = record("request",
-            common(1) :+ ("WARC-Target-URI" -> uri), requestBlock(id))
-          val resp = record("response",
-            common(2) :+ ("WARC-Target-URI" -> uri), http)
-          val out = new java.io.ByteArrayOutputStream(
-            resp.length / 2 + 256)
-          CompressedOps.gzipMember(info, defl, crc, out)
-          CompressedOps.gzipMember(req, defl, crc, out)
-          CompressedOps.gzipMember(resp, defl, crc, out)
-          (id, out.toByteArray)
-        }
-      }
-      .toDF("doc_id", "content")
-  }
+  def warcHttpTable(spark: SparkSession, docs: DataFrame): DataFrame =
+    Multimodal.encodeDocs(StorageOps.fanOutForKernel(
+        Multimodal.docText(docs))) { (c, id, text) =>
+      val (status, reason) = crawlStatus(id)
+      docWarc(c, id, httpResponse(id, text.getBytes(UTF_8), status, reason,
+        "utf-8", chunked = id % 2 == 0))
+    }
 
   /** One HTTP-parsed capture's witnesses: status code, header count,
     * media type + charset from Content-Type, the transfer framing
@@ -573,34 +489,25 @@ object WarcOps {
   /** Read a per-doc `.warc.gz` corpus and parse each response block
     * as a full HTTP message: gzip member walk → WARC record framing →
     * [[HttpOps.parseResponse]] (status line, header block, chunked or
-    * identity body) in one partition-wise pass. A body digest match
+    * identity body) in one kernel pass. A body digest match
     * certifies the DECODED body equals the original text through the
     * WARC framing AND the HTTP transfer coding. */
   def readWarcHttpAll(spark: SparkSession,
-      media: DataFrame): Dataset[WarcHttpMeta] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      val infl = new Inflater(true)
-      Multimodal.endOnTaskCompletion(() => infl.end())
-      val md = java.security.MessageDigest.getInstance("MD5")
-      rows.map { r =>
-        val records = parseRecords(
-          CompressedOps.gunzipWith(r.content, infl))
-        val of = records.filter(_.warcType == "response")
-        require(of.length == 1,
-          s"WARC: expected one response record, got ${of.length}")
-        val http = HttpOps.parseResponse(of.head.block)
-        md.reset()
-        val hex = md.digest(http.body).map("%02x".format(_)).mkString
-        WarcHttpMeta(r.doc_id, http.status.toLong,
-          http.headers.length.toLong,
-          http.contentType.getOrElse(""),
-          http.charset.getOrElse(""),
-          http.chunked, http.nChunks.toLong,
-          http.body.length.toLong, hex)
-      }
+      media: DataFrame): Dataset[WarcHttpMeta] =
+    Multimodal.mapMedia(media) { (c, r) =>
+      val records = parseRecords(
+        CompressedOps.gunzipWith(r.content, c.rawInflater))
+      val of = records.filter(_.warcType == "response")
+      require(of.length == 1,
+        s"WARC: expected one response record, got ${of.length}")
+      val http = HttpOps.parseResponse(of.head.block)
+      WarcHttpMeta(r.doc_id, http.status.toLong,
+        http.headers.length.toLong,
+        http.contentType.getOrElse(""),
+        http.charset.getOrElse(""),
+        http.chunked, http.nChunks.toLong,
+        http.body.length.toLong, c.md5Hex(http.body))
     }
-  }
 
   /** The HTML wrap the crawl generator serves (the same markup
     * text_html_strip certifies): paragraphs split at sentence
@@ -613,6 +520,21 @@ object WarcOps {
       "<div class=\"footer\">&amp;copy; 2026 &lt;corp&gt;</div>" +
       "</body></html>"
 
+  /** One capture's HTTP/1.1 response: HTML content type with the
+    * given charset, the `X-Doc` id header, chunked in 100-byte chunks
+    * or identity-coded. */
+  private def httpResponse(id: Long, body: Array[Byte], status: Int,
+      reason: String, charset: String, chunked: Boolean,
+      extraHeaders: Seq[(String, String)] = Nil): Array[Byte] =
+    HttpOps.encodeResponse(status, reason, Seq(
+      "Content-Type" -> s"text/html; charset=$charset",
+      "X-Doc" -> id.toString) ++ extraHeaders,
+      body, chunkSize = if (chunked) 100 else 0)
+
+  /** The crawl generators' status arm: 404 for `doc_id % 10 == 9`. */
+  private def crawlStatus(id: Long): (Int, String) =
+    if (id % 10 == 9) (404, "Not Found") else (200, "OK")
+
   /** Emit one HTTP-over-WARC capture (request + response members)
     * through the shared builder's `emit` — the common tail of the
     * crawl generators. */
@@ -620,13 +542,10 @@ object WarcOps {
       status: Int, reason: String, charset: String, chunked: Boolean,
       emit: (Array[Byte], Boolean) => Unit,
       extraHeaders: Seq[(String, String)] = Nil): Unit = {
-    val http = HttpOps.encodeResponse(status, reason, Seq(
-      "Content-Type" -> s"text/html; charset=$charset",
-      "X-Doc" -> id.toString) ++ extraHeaders,
-      body, chunkSize = if (chunked) 100 else 0)
     emit(record("request", pairHeaders(id, 1), requestBlock(id)),
       false)
-    emit(record("response", pairHeaders(id, 2), http), false)
+    emit(record("response", pairHeaders(id, 2), httpResponse(id, body,
+      status, reason, charset, chunked, extraHeaders)), false)
   }
 
   /** Build MULTI-DOCUMENT `.warc.gz` files whose response blocks are
@@ -639,8 +558,7 @@ object WarcOps {
   def warcCrawlTable(spark: SparkSession, docs: DataFrame,
       docsPerFile: Int = 50): DataFrame =
     buildWarcFiles(spark, docs, docsPerFile) { (id, text, emit) =>
-      val (status, reason) =
-        if (id % 10 == 9) (404, "Not Found") else (200, "OK")
+      val (status, reason) = crawlStatus(id)
       emitHttpCapture(id, htmlWrap(text).getBytes(UTF_8), status,
         reason, "utf-8", chunked = id % 2 == 0, emit)
     }
@@ -758,33 +676,17 @@ object WarcOps {
     * meta-robots regex, soft-404 template regex — so the curation
     * logic is declarative and the payload never leaves the task. */
   def readWarcCrawlRobots(spark: SparkSession, media: DataFrame,
-      memberCap: Int = 1 << 26): Dataset[RobotsCapture] = {
-    import spark.implicits._
-    media.select(col("file_id").cast("long").as("doc_id"),
-      col("content")).as[MediaRow].mapPartitions { rows =>
-      val infl = new Inflater(true)
-      Multimodal.endOnTaskCompletion(() => infl.end())
-      rows.flatMap { r =>
-        require(r.content.nonEmpty, s"WARC: file ${r.doc_id} is empty")
-        walkRecordMembers(r.content, infl, memberCap).flatMap { step =>
-          val rec = step.result match {
-            case Right(rc) => rc
-            case Left(e) => throw e
-          }
-          if (rec.warcType != "response") None
-          else {
-            val http = HttpOps.parseResponse(rec.block)
-            val xRobots = http.headers.collectFirst {
-              case (k, v) if k.equalsIgnoreCase("X-Robots-Tag") => v
-            }.getOrElse("")
-            Some(RobotsCapture(docIdFromUri(rec), r.doc_id,
-              http.status.toLong, xRobots,
-              new String(http.body, UTF_8)))
-          }
-        }
+      memberCap: Int = 1 << 26): Dataset[RobotsCapture] =
+    Multimodal.flatMapMedia(files(media)) { (c, r) =>
+      responses(c, r, memberCap).map { rec =>
+        val http = HttpOps.parseResponse(rec.block)
+        val xRobots = http.headers.collectFirst {
+          case (k, v) if k.equalsIgnoreCase("X-Robots-Tag") => v
+        }.getOrElse("")
+        RobotsCapture(docIdFromUri(rec), r.doc_id, http.status.toLong,
+          xRobots, new String(http.body, UTF_8))
       }
     }
-  }
 
   /** One crawl capture after WARC + HTTP decoding: id from the
     * record's own URI, the HTTP status, and the decoded (de-chunked)
@@ -794,35 +696,20 @@ object WarcOps {
 
   /** Read a multi-document crawl container end-to-end: streaming
     * member-at-a-time walk → WARC record framing → HTTP message parse
-    * → decoded body, one partition-wise pass (payloads never leave
+    * → decoded body, one kernel pass (payloads never leave
     * the task; the downstream strip/gate stages are pure column work
     * over the emitted rows). Fail-loud certification reader; route a
     * production run through the member-granular quarantine shape of
     * [[tryReadWarcFiles]]. */
   def readWarcCrawl(spark: SparkSession, media: DataFrame,
-      memberCap: Int = 1 << 26): Dataset[CrawlCapture] = {
-    import spark.implicits._
-    media.select(col("file_id").cast("long").as("doc_id"),
-      col("content")).as[MediaRow].mapPartitions { rows =>
-      val infl = new Inflater(true)
-      Multimodal.endOnTaskCompletion(() => infl.end())
-      rows.flatMap { r =>
-        require(r.content.nonEmpty, s"WARC: file ${r.doc_id} is empty")
-        walkRecordMembers(r.content, infl, memberCap).flatMap { step =>
-          val rec = step.result match {
-            case Right(rc) => rc
-            case Left(e) => throw e
-          }
-          if (rec.warcType != "response") None
-          else {
-            val http = HttpOps.parseResponse(rec.block)
-            Some(CrawlCapture(docIdFromUri(rec), r.doc_id,
-              http.status.toLong, new String(http.body, UTF_8)))
-          }
-        }
+      memberCap: Int = 1 << 26): Dataset[CrawlCapture] =
+    Multimodal.flatMapMedia(files(media)) { (c, r) =>
+      responses(c, r, memberCap).map { rec =>
+        val http = HttpOps.parseResponse(rec.block)
+        CrawlCapture(docIdFromUri(rec), r.doc_id, http.status.toLong,
+          new String(http.body, UTF_8))
       }
     }
-  }
 
   /** The per-arm charset of the mixed-encoding crawl corpus (doc_id
     * mod 3) and the non-ASCII marker that PROVES the right decoder
@@ -905,53 +792,40 @@ object WarcOps {
     * undecodable body costs ONE capture; siblings survive with their
     * transcoded UTF-8 witnesses. Zero added shuffle. */
   def tryReadWarcCrawlHttp(spark: SparkSession, media: DataFrame,
-      memberCap: Int = 1 << 26): Dataset[CrawlTried] = {
-    import spark.implicits._
-    media.select(col("file_id").cast("long").as("doc_id"),
-      col("content")).as[MediaRow].mapPartitions { rows =>
-      val infl = new Inflater(true)
-      Multimodal.endOnTaskCompletion(() => infl.end())
-      val md = java.security.MessageDigest.getInstance("MD5")
-      rows.flatMap { r =>
-        if (r.content.isEmpty)
-          // zero-byte file: ONE quarantine row carrying the FILE id
-          // as its identity (r.doc_id is the file_id in this lane —
-          // the tryReadWarcFiles contract), so an empty file traces
-          // to its source and two empty files stay distinguishable
-          Iterator.single(CrawlTried(r.doc_id, "quarantined",
-            "truncated", "", -1L, ""))
-        else walkRecordMembers(r.content, infl, memberCap)
-          .flatMap { step =>
-          val rec = step.result match {
-            case Right(rc) => rc
-            case Left(e) => throw e // member corruption: not this lane
-          }
-          if (rec.warcType != "response") None
-          else QuarantineOps.attempt(docIdFromUri(rec)) match {
-            // a capture whose own URI is defective quarantines — it
-            // must never kill the stage (the per-capture contract)
-            case Left(cls) =>
-              Some(CrawlTried(-1L, "quarantined", cls, "", -1L, ""))
-            case Right(id) =>
-              QuarantineOps.attempt {
-                val http = HttpOps.parseResponse(rec.block)
-                CharsetOps.transcodeDeclared(http.body, http.charset)
-              } match {
-                case Right((detected, text)) =>
-                  val utf8 = text.getBytes(UTF_8)
-                  md.reset()
-                  val hex = md.digest(utf8).map("%02x".format(_))
-                    .mkString
-                  Some(CrawlTried(id, "ok", "", detected,
-                    utf8.length.toLong, hex))
-                case Left(cls) =>
-                  Some(CrawlTried(id, "quarantined", cls, "", -1L, ""))
-              }
-          }
+      memberCap: Int = 1 << 26): Dataset[CrawlTried] =
+    Multimodal.flatMapMedia(files(media)) { (c, r) =>
+      if (r.content.isEmpty)
+        // zero-byte file: ONE quarantine row carrying the FILE id
+        // as its identity (r.doc_id is the file_id in this lane —
+        // the tryReadWarcFiles contract), so an empty file traces
+        // to its source and two empty files stay distinguishable
+        Iterator.single(CrawlTried(r.doc_id, "quarantined",
+          "truncated", "", -1L, ""))
+      else walkRecordMembers(r.content, c.rawInflater, memberCap)
+        .flatMap { step =>
+        // member corruption: not this lane
+        val rec = step.result.toTry.get
+        if (rec.warcType != "response") None
+        else QuarantineOps.attempt(docIdFromUri(rec)) match {
+          // a capture whose own URI is defective quarantines — it
+          // must never kill the stage (the per-capture contract)
+          case Left(cls) =>
+            Some(CrawlTried(-1L, "quarantined", cls, "", -1L, ""))
+          case Right(id) =>
+            QuarantineOps.attempt {
+              val http = HttpOps.parseResponse(rec.block)
+              CharsetOps.transcodeDeclared(http.body, http.charset)
+            } match {
+              case Right((detected, text)) =>
+                val utf8 = text.getBytes(UTF_8)
+                Some(CrawlTried(id, "ok", "", detected,
+                  utf8.length.toLong, c.md5Hex(utf8)))
+              case Left(cls) =>
+                Some(CrawlTried(id, "quarantined", cls, "", -1L, ""))
+            }
         }
       }
     }
-  }
 
   /** One WARC file's witnesses: record count, per-type block lengths,
     * the response body's MD5, and the response's target URI — all
@@ -961,35 +835,41 @@ object WarcOps {
       target_uri: String)
 
   /** Batch WARC read: gzip member walk + record framing + WARC-Type
-    * dispatch in one partition-wise pass (one Inflater per
-    * partition); record blocks never leave the task. Fail-loud by
+    * dispatch in one kernel pass; record blocks never leave the
+    * task. Fail-loud by
     * contract — route through [[QuarantineOps.attempt]] for the
     * production lane. */
   def readWarcAll(spark: SparkSession,
-      media: DataFrame): Dataset[WarcMeta] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      val infl = new Inflater(true)
-      Multimodal.endOnTaskCompletion(() => infl.end())
-      val md = java.security.MessageDigest.getInstance("MD5")
-      rows.map { r =>
-        val records = parseRecords(
-          CompressedOps.gunzipWith(r.content, infl))
-        def one(t: String): WarcRecord = {
-          val of = records.filter(_.warcType == t)
-          require(of.length == 1,
-            s"WARC: expected one $t record, got ${of.length}")
-          of.head
-        }
-        val resp = one("response")
-        md.reset()
-        val hex = md.digest(resp.block).map("%02x".format(_)).mkString
-        WarcMeta(r.doc_id, records.length.toLong,
-          one("warcinfo").block.length.toLong,
-          one("request").block.length.toLong,
-          resp.block.length.toLong, hex,
-          resp.headers.getOrElse("WARC-Target-URI", ""))
+      media: DataFrame): Dataset[WarcMeta] =
+    Multimodal.mapMedia(media) { (c, r) =>
+      val records = parseRecords(
+        CompressedOps.gunzipWith(r.content, c.rawInflater))
+      def one(t: String): WarcRecord = {
+        val of = records.filter(_.warcType == t)
+        require(of.length == 1,
+          s"WARC: expected one $t record, got ${of.length}")
+        of.head
       }
+      val resp = one("response")
+      WarcMeta(r.doc_id, records.length.toLong,
+        one("warcinfo").block.length.toLong,
+        one("request").block.length.toLong,
+        resp.block.length.toLong, c.md5Hex(resp.block),
+        resp.headers.getOrElse("WARC-Target-URI", ""))
     }
+
+  /** Multi-document file rows as [[Multimodal.MediaRow]]s keyed by
+    * file id. */
+  private def files(media: DataFrame): DataFrame =
+    media.select(col("file_id").cast("long").as("doc_id"), col("content"))
+
+  /** The fail-loud streaming walk of one file's response records: an
+    * empty file or a corrupt member fails the stage. */
+  private def responses(c: Multimodal.Codecs, r: Multimodal.MediaRow,
+      memberCap: Int): Iterator[WarcRecord] = {
+    require(r.content.nonEmpty, s"WARC: file ${r.doc_id} is empty")
+    walkRecordMembers(r.content, c.rawInflater, memberCap)
+      .map(_.result.toTry.get)
+      .filter(_.warcType == "response")
   }
 }

@@ -1,11 +1,8 @@
 package graft.ops
 
-import com.github.luben.zstd.{Zstd, ZstdCompressCtx, ZstdDecompressCtx, ZstdException}
+import com.github.luben.zstd.{Zstd, ZstdDecompressCtx, ZstdException}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-
-import graft.ops.Multimodal.MediaRow
 
 /** Zstandard-blob text ingestion — the format modern public corpora
   * actually ship in (Dolma / RedPajama distribute `.jsonl.zst`; RFC
@@ -27,9 +24,9 @@ import graft.ops.Multimodal.MediaRow
   *     decompression boundary;
   *   - a declared size past the `cap` is an error, not an allocation
   *     (hostile-frame defense);
-  *   - ONE native compression/decompression context per PARTITION
+  *   - ONE native compression/decompression context per TASK
   *     (zstd contexts are native allocations like zlib's ~270 KB
-  *     state), released via the TaskContext completion listener.
+  *     state), owned and released by [[Multimodal.Codecs]].
   *
   * The witnesses (decompressed byte length + MD5) are replayed by the
   * oracle from the ORIGINAL text, so a match certifies byte-exact
@@ -41,34 +38,18 @@ object ZstdOps {
   /** Build a table of zstd-compressed documents: the UTF-8 text bytes
     * of each doc as ONE frame for odd ids and TWO concatenated frames
     * (split at the byte midpoint) for even ids. Level 3 (the zstd
-    * default), checksummed. One context per partition. */
-  def zstdTable(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    StorageOps.fanOutForKernel(
-      docs.select(col("doc_id").cast("long"), col("text")))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        val ctx = new ZstdCompressCtx().setLevel(3).setChecksum(true)
-        Multimodal.endOnTaskCompletion(() => ctx.close())
-        rows.map { case (id, text) =>
-          val raw = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val bytes =
-            if (id % 2 == 0 && raw.length >= 2) {
-              val mid = raw.length / 2
-              val a = ctx.compress(
-                java.util.Arrays.copyOfRange(raw, 0, mid))
-              val b = ctx.compress(
-                java.util.Arrays.copyOfRange(raw, mid, raw.length))
-              val out = new Array[Byte](a.length + b.length)
-              System.arraycopy(a, 0, out, 0, a.length)
-              System.arraycopy(b, 0, out, a.length, b.length)
-              out
-            } else ctx.compress(raw)
-          (id, bytes)
-        }
-      }
-      .toDF("doc_id", "content")
-  }
+    * default), checksummed: the task's [[Multimodal.Codecs]] context. */
+  def zstdTable(spark: SparkSession, docs: DataFrame): DataFrame =
+    Multimodal.encodeDocs(StorageOps.fanOutForKernel(
+        Multimodal.docText(docs))) { (c, id, text) =>
+      val raw = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val ctx = c.zstdCompress
+      if (id % 2 == 0 && raw.length >= 2) {
+        val mid = raw.length / 2
+        ctx.compress(java.util.Arrays.copyOfRange(raw, 0, mid)) ++
+          ctx.compress(java.util.Arrays.copyOfRange(raw, mid, raw.length))
+      } else ctx.compress(raw)
+    }
 
   /** The multi-frame walk with a CALLER-owned context: per frame, the
     * library parses the compressed frame size (corrupt headers fail
@@ -123,21 +104,12 @@ object ZstdOps {
   }
 
   /** Batch decompress + witness (the [[CompressedOps.gunzipAll]]
-    * shape): one context/digest per partition, decompressed buffers
-    * never leave the task. */
+    * shape): one kernel pass, decompressed buffers never leave the
+    * task. */
   def unzstdAll(spark: SparkSession,
-      media: DataFrame): Dataset[CompressedOps.GunzipMeta] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      val ctx = new ZstdDecompressCtx()
-      Multimodal.endOnTaskCompletion(() => ctx.close())
-      val md = java.security.MessageDigest.getInstance("MD5")
-      rows.map { r =>
-        val raw = unzstdWith(r.content, ctx)
-        md.reset()
-        val hex = md.digest(raw).map("%02x".format(_)).mkString
-        CompressedOps.GunzipMeta(r.doc_id, raw.length.toLong, hex)
-      }
+      media: DataFrame): Dataset[CompressedOps.GunzipMeta] =
+    Multimodal.mapMedia(media) { (c, r) =>
+      val raw = unzstdWith(r.content, c.zstdDecompress)
+      CompressedOps.GunzipMeta(r.doc_id, raw.length.toLong, c.md5Hex(raw))
     }
-  }
 }

@@ -26,6 +26,18 @@ object EventQueries {
       .withColumn("pred_lang", TextOps.langId(col("text")))
       .filter(col("quality_score") >= 0.3)
 
+  /** The packing manifest `(doc_id, n_tok)`: each doc's token count
+    * under the trained 64-merge BPE model, plus one end-of-doc token —
+    * the input of every block-packing query. */
+  private def bpeManifest(s: SparkSession, d: String): DataFrame = {
+    val docs = t(s, d, "documents")
+    val bpe = BpeOps.cachedTrain(s, s"$d/documents.parquet", docs,
+      col("text"), numMerges = 64)
+    docs.select(col("doc_id"),
+      (size(BpeOps.encode(col("text"), bpe)) + 1).cast("long")
+        .as("n_tok"))
+  }
+
   /** The quality-curriculum block schedule shared by
     * `pipeline_curriculum` (which emits it directly) and
     * `pipeline_curriculum_anneal` (which uses its rank as epoch 0):
@@ -36,12 +48,7 @@ object EventQueries {
     * no global window. Columns: block_id, fill, score_micro,
     * cur_rank (unordered). */
   private def curriculumBlocks(s: SparkSession, d: String): DataFrame = {
-    val docs = t(s, d, "documents")
-    val bpe = BpeOps.cachedTrain(s, s"$d/documents.parquet", docs,
-      col("text"), numMerges = 64)
-    val manifest = docs.select(col("doc_id"),
-      (size(BpeOps.encode(col("text"), bpe)) + 1).cast("long")
-        .as("n_tok"))
+    val manifest = bpeManifest(s, d)
     val contrib = ops.PackOps.blockContributions(
       ops.PackOps.blockSpans(
         ops.PackOps.withGlobalOffset(manifest, "doc_id", "n_tok",
@@ -50,7 +57,7 @@ object EventQueries {
       "tok_start", "n_tok", 128L)
       .select(col("doc_id"), col("block_id"), col("block_tokens"))
     val feats = graft.ops.QualityClassifierOps
-      .featurize(docs, col("text")).localCheckpoint()
+      .featurize(t(s, d, "documents"), col("text")).localCheckpoint()
     // consumer of the classifier, not its trainer: the persisted
     // beta artifact (bit-identical to a fresh IRLS run — see
     // cachedTrain scaladoc) skips the 8 training scans here while
@@ -2092,12 +2099,7 @@ object EventQueries {
     // trained-tokenizer counts (codegen'd BPE encode), so the oracle
     // re-derives them from the raw corpus via the merge-table replay.
     Query("pipeline_pack_global", (s, d) => {
-      val docs = t(s, d, "documents")
-      val bpe = BpeOps.cachedTrain(s, s"$d/documents.parquet", docs,
-        col("text"), numMerges = 64)
-      val manifest = docs.select(col("doc_id"),
-        (size(BpeOps.encode(col("text"), bpe)) + 1).cast("long")
-          .as("n_tok"))
+      val manifest = bpeManifest(s, d)
       ops.PackOps.blockSpans(
         ops.PackOps.withGlobalOffset(manifest, "doc_id", "n_tok",
           "tok_start"),
@@ -2121,12 +2123,7 @@ object EventQueries {
     // every block's fill must reconstruct to exactly 128 tokens
     // (except the final partial), or the hash check dies.
     Query("pipeline_pack_blocks", (s, d) => {
-      val docs = t(s, d, "documents")
-      val bpe = BpeOps.cachedTrain(s, s"$d/documents.parquet", docs,
-        col("text"), numMerges = 64)
-      val manifest = docs.select(col("doc_id"),
-        (size(BpeOps.encode(col("text"), bpe)) + 1).cast("long")
-          .as("n_tok"))
+      val manifest = bpeManifest(s, d)
       val spans = ops.PackOps.blockSpans(
         ops.PackOps.withGlobalOffset(manifest, "doc_id", "n_tok",
           "tok_start"),
@@ -2153,12 +2150,7 @@ object EventQueries {
     // sort at any scale. Block count comes from ONE total-token
     // scalar through the driver (the bounded-exchange discipline).
     Query("pipeline_epoch_shuffle", (s, d) => {
-      val docs = t(s, d, "documents")
-      val bpe = BpeOps.cachedTrain(s, s"$d/documents.parquet", docs,
-        col("text"), numMerges = 64)
-      val manifest = docs.select(col("doc_id"),
-        (size(BpeOps.encode(col("text"), bpe)) + 1).cast("long")
-          .as("n_tok"))
+      val manifest = bpeManifest(s, d)
       val total = manifest.agg(sum(col("n_tok"))).collect()(0).getLong(0)
       val nBlocks = (total + 127L) / 128L
       ops.PackOps.epochOrder(
@@ -2556,12 +2548,7 @@ object EventQueries {
     // past millions of buckets because the driver only ever sees one
     // row per PARTITION of the bucket-totals frame.
     Query("pipeline_pack_greedy", (s, d) => {
-      val docs = t(s, d, "documents")
-      val bpe = BpeOps.cachedTrain(s, s"$d/documents.parquet", docs,
-        col("text"), numMerges = 64)
-      val manifest = docs.select(col("doc_id"),
-        (size(BpeOps.encode(col("text"), bpe)) + 1).cast("long")
-          .as("n_tok"))
+      val manifest = bpeManifest(s, d)
       ops.PackOps.nextFitPack(manifest, "doc_id", "n_tok",
         blockLen = 128L, bucketSize = 64L)
         .select(col("bucket"), col("id").as("doc_id"),
@@ -2579,12 +2566,7 @@ object EventQueries {
     // manifest; certifies the walk's block accounting independently
     // of the per-doc rows.
     Query("pipeline_pack_padding", (s, d) => {
-      val docs = t(s, d, "documents")
-      val bpe = BpeOps.cachedTrain(s, s"$d/documents.parquet", docs,
-        col("text"), numMerges = 64)
-      val manifest = docs.select(col("doc_id"),
-        (size(BpeOps.encode(col("text"), bpe)) + 1).cast("long")
-          .as("n_tok"))
+      val manifest = bpeManifest(s, d)
       ops.PackOps.nextFitPack(manifest, "doc_id", "n_tok",
         blockLen = 128L, bucketSize = 64L)
         .groupBy(col("bucket"))

@@ -184,10 +184,11 @@ object MultimodalQueries {
       |ORDER BY doc_id""".stripMargin
 
   val all: Seq[Query] = Seq(
-    // Batch decode over a binary media column (Dataset mapPartitions —
-    // the Scala analogue of mapInPandas). As of round 11 the decode is
-    // a REAL pure-JVM codec (graft.ops.ImageCodec: binary PPM + 24-bit
-    // BMP) over imageTable's real encoded payloads; the oracle replays
+    // Batch decode over a binary media column (the codec kernel, a
+    // Dataset mapPartitions — the Scala analogue of mapInPandas). As
+    // of round 11 the decode is a REAL pure-JVM codec
+    // (graft.ops.ImageCodec: binary PPM + 24-bit BMP) over
+    // imageTable's real encoded payloads; the oracle replays
     // the deterministic image generator and certifies the parsed
     // headers, container framing (n_bytes) and full pixel plane
     // (px_sum) cross-engine.
@@ -1091,7 +1092,7 @@ object MultimodalQueries {
     // (even ids are two concatenated frames — the pzstd layout a
     // first-frame-stops decoder silently truncates), declared
     // content sizes gating allocation, per-frame xxhash64 checksums
-    // verified, one native context per partition. Witnesses replayed
+    // verified, the task's one native context. Witnesses replayed
     // from the ORIGINAL text, certifying byte-exact recovery.
     Query("source_zstd", (s, d) => {
       ops.ZstdOps.unzstdAll(s,
@@ -1427,12 +1428,13 @@ object MultimodalQueries {
     // (deflate output) length is implementation-defined and stays out
     // of the contract.
     Query("multimodal_png", (s, d) => {
-      ops.Multimodal.decodePngAll(s,
+      ops.Multimodal.decodeAll(s,
         ops.Multimodal.pngImageTable(s, t(s, d, "documents")))
         .toDF()
         .select(col("doc_id"), col("width").cast("int").as("width"),
           col("height").cast("int").as("height"), col("format"),
-          col("raw_len"), col("px_sum"))
+          ((lit(1L) + col("width") * 3L) * col("height")).as("raw_len"),
+          col("px_sum"))
         .orderBy(col("doc_id"))
     },
       // Replays the shared image generator for the PNG variant: same
@@ -2580,53 +2582,15 @@ object MultimodalQueries {
     // artifact rows — batch, doc_id, and the decoder's own error
     // class — without seeing a payload byte.
     Query("pipeline_ingest_quarantine", (s, d) => {
-      import s.implicits._
       val docs = t(s, d, "documents")
       val run = java.util.UUID.randomUUID().toString.take(12)
       val key = s"ingq_$run"
       ops.IngestOps.buildInventory(s, key,
         docs.filter(lit(false)), "text")
       val qdir = ops.StorageOps.scratchPath(s"ingq_quar_$run")
-      // heterogeneous blobs, the real crawl mix: every third doc a
-      // checksummed zstd frame, the rest gzip members — the loop's
-      // decode stage dispatches per row by magic. Corruption rules
-      // are codec-agnostic: a magic overwrite is bad_magic either
-      // way; a flipped final byte lands in the gzip ISIZE trailer or
-      // the zstd frame checksum — both integrity by the decoders'
-      // own diagnosis.
-      // NO fan-out here (measured r14): the loop's ~80 per-batch jobs
-      // inherit the generator's partitioning, and 32-way batches turn
-      // every tiny per-batch stage into 32 tasks — wall went 4.1 s ->
-      // 5.4 s when this projection was fanned out. The 1-task encode
-      // is cheaper than widening the whole loop.
-      val payloads = docs
-        .select(col("doc_id").cast("long"), col("text"))
-        .as[(Long, String)]
-        .mapPartitions { rows =>
-          val defl = new java.util.zip.Deflater(
-            java.util.zip.Deflater.BEST_SPEED, true)
-          val zc = new com.github.luben.zstd.ZstdCompressCtx()
-            .setLevel(3).setChecksum(true)
-          ops.Multimodal.endOnTaskCompletion { () =>
-            defl.end(); zc.close()
-          }
-          val crc = new java.util.zip.CRC32()
-          rows.map { case (id, text) =>
-            val raw = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            val b =
-              if (id % 3 == 0) zc.compress(raw)
-              else {
-                val out = new java.io.ByteArrayOutputStream()
-                ops.CompressedOps.gzipMember(raw, defl, crc, out)
-                out.toByteArray
-              }
-            if (id % 10 == 2) { b(0) = 'Z'.toByte; b(1) = 'Z'.toByte }
-            else if (id % 10 == 7)
-              b(b.length - 1) = (b(b.length - 1) ^ 0x10).toByte
-            (id, b)
-          }
-        }
-        .toDF("doc_id", "content")
+      // the gzip/zstd crawl mix with planted corruption, not fanned
+      // out (see corruptPayloadTable)
+      val payloads = ops.QuarantineOps.corruptPayloadTable(s, docs)
         .localCheckpoint(true)
       val loop = new graft.streaming.IngestLoop(s, key, "doc_id",
         "text", None, 16, None, None, None,

@@ -106,7 +106,7 @@ final class IngestLoop(spark: SparkSession, key: String, idCol: String,
     driftBuf.filterInPlace(_._1 != tag)
     acceptedInputFiles.filterInPlace(_._1 != tag)
     // QUARANTINE LANE (payload mode): decode compressed blobs ONCE
-    // per batch (shared native Inflater per partition), route corrupt
+    // per batch (the task's one native Inflater), route corrupt
     // payloads into the quarantine artifact under the SAME
     // exactly-once tagged-overwrite discipline as the pack manifest
     // (a redelivery REPLACES the tag's quarantine files), and gate
@@ -325,39 +325,29 @@ final class IngestLoop(spark: SparkSession, key: String, idCol: String,
     * [[graft.ops.CompressedOps]] discipline); unknown magic and
     * corrupt streams yield a classed `__err` instead of a dead
     * stage. */
-  private def decodePayloads(batch: DataFrame, pc: String): DataFrame = {
-    import spark.implicits._
-    batch.select(col(idCol).cast("long"), col(pc))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        val infl = new java.util.zip.Inflater(true)
-        val zctx = new com.github.luben.zstd.ZstdDecompressCtx()
-        graft.ops.Multimodal.endOnTaskCompletion { () =>
-          infl.end(); zctx.close()
-        }
-        rows.map { case (id, content) =>
-          graft.ops.QuarantineOps.attempt {
-            val raw =
-              if (content.length >= 2 && (content(0) & 0xff) == 0x1f &&
-                  (content(1) & 0xff) == 0x8b)
-                graft.ops.CompressedOps.gunzipWith(content, infl)
-              else if (content.length >= 4 &&
-                  (content(0) & 0xff) == 0x28 &&
-                  (content(1) & 0xff) == 0xb5 &&
-                  (content(2) & 0xff) == 0x2f &&
-                  (content(3) & 0xff) == 0xfd)
-                graft.ops.ZstdOps.unzstdWith(content, zctx)
-              else throw new IllegalArgumentException(
-                "payload: unsupported compression magic")
-            new String(raw, java.nio.charset.StandardCharsets.UTF_8)
-          } match {
-            case Right(txt) => (id, txt, Option.empty[String])
-            case Left(cls)  => (id, "", Option(cls))
-          }
-        }
+  private def decodePayloads(batch: DataFrame, pc: String): DataFrame =
+    graft.ops.Multimodal.mapMedia(batch.select(col(idCol).cast("long")
+        .as("doc_id"), col(pc).as("content"))) { (c, r) =>
+      val content = r.content
+      graft.ops.QuarantineOps.attempt {
+        val raw =
+          if (content.length >= 2 && (content(0) & 0xff) == 0x1f &&
+              (content(1) & 0xff) == 0x8b)
+            graft.ops.CompressedOps.gunzipWith(content, c.rawInflater)
+          else if (content.length >= 4 &&
+              (content(0) & 0xff) == 0x28 &&
+              (content(1) & 0xff) == 0xb5 &&
+              (content(2) & 0xff) == 0x2f &&
+              (content(3) & 0xff) == 0xfd)
+            graft.ops.ZstdOps.unzstdWith(content, c.zstdDecompress)
+          else throw new IllegalArgumentException(
+            "payload: unsupported compression magic")
+        new String(raw, java.nio.charset.StandardCharsets.UTF_8)
+      } match {
+        case Right(txt) => (r.doc_id, txt, Option.empty[String])
+        case Left(cls)  => (r.doc_id, "", Option(cls))
       }
-      .toDF(idCol, textCol, "__err")
-  }
+    }.toDF(idCol, textCol, "__err")
 
   /** The persisted quarantine artifact (batch, doc_id, error_class) —
     * empty frame if the loop ran without payload mode or quarantined

@@ -182,23 +182,6 @@ class Round10cSpec extends SparkSpec {
     }
   }
 
-  test("multimodal_framesample: stride arithmetic replayed per doc") {
-    val docs = spark.read.parquet(s"$Sf0001/documents.parquet")
-      .select(col("doc_id"), col("text")).collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-    val expected = docs.flatMap { case (id, text) =>
-      val nBytes = text.getBytes("UTF-8").length
-      (0 until nBytes by 64).take(8).zipWithIndex.map {
-        case (off, idx) => (id, nBytes.toLong, idx.toLong, off.toLong)
-      }
-    }.toSet
-    val got = SparkEntry.queries("multimodal_framesample")(spark, Sf0001)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSet
-    assert(got == expected)
-  }
-
   test("graph_link_predict: driver recompute of edges, capped-center " +
       "common neighbors, and Jaccard is exact for the top-50") {
     val ev = Tables.events(spark, Sf0001)

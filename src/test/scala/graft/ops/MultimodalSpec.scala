@@ -1,8 +1,19 @@
 package graft.ops
 
+import java.util.zip.{Deflater, Inflater}
+
+import com.github.luben.zstd.{ZstdCompressCtx, ZstdDecompressCtx}
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{MainSources, SparkEntry, SparkSpec, Tables}
+
+/** The native objects the codec-kernel case's rows saw, as
+  * (partition, object name, instance) — local mode runs every task in
+  * this JVM, so the spec can inspect them after the job. */
+object KernelProbe {
+  val held = new java.util.concurrent.ConcurrentLinkedQueue[
+    (Int, String, AnyRef)]()
+}
 
 class MultimodalSpec extends SparkSpec {
 
@@ -290,5 +301,122 @@ class MultimodalSpec extends SparkSpec {
     val top = AnnOps.bruteForceTopK(df, df.filter(col("vec_id") < 2),
       "vec_id", "embedding", 5)
     assert(top.count() == 10)
+  }
+
+  test("multimodal_framesample: stride arithmetic replayed per doc") {
+    val docs = spark.read.parquet(s"$Sf0001/documents.parquet")
+      .select(col("doc_id"), col("text")).collect()
+      .map(r => (r.getLong(0), r.getString(1)))
+    val expected = docs.flatMap { case (id, text) =>
+      val nBytes = text.getBytes("UTF-8").length
+      (0 until nBytes by 64).take(8).zipWithIndex.map {
+        case (off, idx) => (id, nBytes.toLong, idx.toLong, off.toLong)
+      }
+    }.toSet
+    val got = SparkEntry.queries("multimodal_framesample")(spark, Sf0001)
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toSet
+    assert(got == expected)
+  }
+
+  test("codec kernel: each task creates each native object at most " +
+      "once, never shares it, and ends every one when it completes") {
+    KernelProbe.held.clear()
+    val media = spark.range(0, 40, 1, 4).select(col("id").as("doc_id"),
+      concat(lit("kernel row "), col("id").cast("string"))
+        .cast("binary").as("content"))
+    val got = Multimodal.mapMedia(media) { (c, r) =>
+      val pid = org.apache.spark.TaskContext.getPartitionId()
+      Seq("rawDeflater" -> c.rawDeflater, "zlibDeflater" -> c.zlibDeflater,
+        "rawInflater" -> c.rawInflater, "zlibInflater" -> c.zlibInflater,
+        "zstdCompress" -> c.zstdCompress,
+        "zstdDecompress" -> c.zstdDecompress).foreach { case (n, o) =>
+        KernelProbe.held.add((pid, n, o))
+      }
+      val gz = new java.io.ByteArrayOutputStream()
+      CompressedOps.gzipMember(r.content, c.rawDeflater, c.crc, gz)
+      val rgb = r.content.take(3)
+      val png = PngCodec.encodeWith(1, 1, rgb, c.zlibDeflater)
+      (r.doc_id, pid,
+        CompressedOps.gunzipWith(gz.toByteArray, c.rawInflater)
+          .sameElements(r.content),
+        PngCodec.decodeWith(png, c.zlibInflater).rgb.sameElements(rgb),
+        ZstdOps.unzstdWith(c.zstdCompress.compress(r.content),
+          c.zstdDecompress).sameElements(r.content),
+        c.md5Hex(r.content))
+    }.collect()
+    assert(got.length == 40)
+    assert(got.map(_._2).toSet == Set(0, 1, 2, 3))
+    got.foreach { case (id, _, gz, png, zstd, md5) =>
+      assert(gz && png && zstd, s"row $id: codec round trip failed")
+      val want = java.security.MessageDigest.getInstance("MD5")
+        .digest(s"kernel row $id".getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString
+      assert(md5 == want, s"row $id")
+    }
+    val held = KernelProbe.held.toArray(Array.empty[(Int, String, AnyRef)])
+    assert(held.length == 40 * 6)
+    // at most one instance per (task, object) …
+    held.groupBy(h => (h._1, h._2)).foreach { case (k, hs) =>
+      assert(hs.forall(_._3 eq hs.head._3), s"$k created more than once")
+    }
+    // … and no instance seen by two tasks
+    held.groupBy(_._2).foreach { case (n, hs) =>
+      val perTask = hs.groupBy(_._1).values.map(_.head._3).toSeq
+      assert(perTask.size == 4)
+      perTask.combinations(2).foreach { case Seq(a, b) =>
+        assert(!(a eq b), s"$n shared between tasks")
+      }
+    }
+    // every instance was ended when its task completed: using it throws
+    held.groupBy(h => (h._1, h._2)).values.map(_.head).foreach {
+      case (pid, n, o) =>
+        intercept[RuntimeException] {
+          o match {
+            case d: Deflater =>
+              d.setInput(Array[Byte](1)); d.finish()
+              d.deflate(new Array[Byte](64))
+            case i: Inflater =>
+              i.setInput(Array[Byte](1)); i.inflate(new Array[Byte](64))
+            case z: ZstdCompressCtx => z.compress(Array[Byte](1))
+            case z: ZstdDecompressCtx => z.decompress(Array[Byte](1), 1)
+          }
+        }
+    }
+  }
+
+  test("each codec pass runs through the one kernel: no partition " +
+      "pass, task-completion hook or native codec allocation outside it") {
+    val pass = """\.mapPartitions\s*[{(]""".r
+    val hook = """endOnTaskCompletion\(""".r
+    val alloc = ("""new\s+(java\.util\.zip\.)?(Deflater|Inflater)\(|""" +
+      """new\s+(com\.github\.luben\.zstd\.)?Zstd\w*Ctx\(""").r
+    // the kernel itself, and the one-shot `try … finally end()` codec
+    // entry points (a fresh object per call, ended before it returns)
+    val allowed = Set("Multimodal.scala" -> "Codecs",
+      "Multimodal.scala" -> "endOnTaskCompletion",
+      "Multimodal.scala" -> "kernel",
+      "PngCodec.scala" -> "encode", "PngCodec.scala" -> "decode",
+      "CompressedOps.scala" -> "gunzip")
+    val definition = """\b(?:def|class|object)\s+(\w+)""".r
+    val hits = MainSources.files.flatMap { case (p, text) =>
+      val lines = text.linesIterator.toIndexedSeq
+      lines.indices.collect {
+        case i if !lines(i).trim.startsWith("*") &&
+            !lines(i).trim.startsWith("//") &&
+            Seq(pass, hook, alloc).exists(_.findFirstIn(lines(i)).nonEmpty) =>
+          val owner = (i to 0 by -1).iterator
+            .flatMap(j => definition.findFirstMatchIn(lines(j)))
+            .map(_.group(1)).nextOption().getOrElse("")
+          (p.getFileName.toString -> owner, s"$p:${i + 1}: ${lines(i)}")
+      }
+    }
+    val outside = hits.filterNot(h => allowed(h._1)).map(_._2)
+    assert(outside.isEmpty,
+      "run the pass through Multimodal.kernel and take the codec " +
+        "from its Codecs handle:\n" + outside.mkString("\n"))
+    // the rule is live: the kernel's own pass is found
+    assert(hits.exists(_._1 == ("Multimodal.scala" -> "kernel")))
   }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.ops.{CompressedOps, IngestOps, Multimodal, StorageOps}
+import graft.ops.{IngestOps, QuarantineOps, StorageOps}
 
 /** Gates for the quarantine lane THREADED THROUGH THE INGEST LOOP
   * (payload mode): per-batch accounting reconciles exactly
@@ -23,35 +23,10 @@ class IngestQuarantineSpec extends SparkSpec {
     * per doc_id rule (mod 10 = 2 → magic overwrite, = 7 → final-byte
     * flip: gzip ISIZE trailer or zstd frame checksum, both
     * integrity). */
-  private def payloadTable() = {
-    graft.Tables.documents(spark, Sf001)
-      .select(col("doc_id").cast("long"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        val defl = new java.util.zip.Deflater(
-          java.util.zip.Deflater.BEST_SPEED, true)
-        val zc = new com.github.luben.zstd.ZstdCompressCtx()
-          .setLevel(3).setChecksum(true)
-        Multimodal.endOnTaskCompletion { () => defl.end(); zc.close() }
-        val crc = new java.util.zip.CRC32()
-        rows.map { case (id, text) =>
-          val raw = text.getBytes("UTF-8")
-          val b =
-            if (id % 3 == 0) zc.compress(raw)
-            else {
-              val out = new java.io.ByteArrayOutputStream()
-              CompressedOps.gzipMember(raw, defl, crc, out)
-              out.toByteArray
-            }
-          if (id % 10 == 2) { b(0) = 'Z'.toByte; b(1) = 'Z'.toByte }
-          else if (id % 10 == 7)
-            b(b.length - 1) = (b(b.length - 1) ^ 0x10).toByte
-          (id, b)
-        }
-      }
-      .toDF("doc_id", "content")
+  private def payloadTable() =
+    QuarantineOps.corruptPayloadTable(spark,
+      graft.Tables.documents(spark, Sf001))
       .localCheckpoint(true)
-  }
 
   private def freshLoop(run: String): (IngestLoop, String, String) = {
     val key = s"ingqspec_$run"
